@@ -393,11 +393,11 @@ def _q_spatial_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
     dist = (point_in_polygon_join_distributed(docs_geo, polys_df)
             .select(F.lit("dist").alias("part"), "poly_id", "doc_id"))
     # spherical parts: same lat/lon corpus mapping as the geo_* gates;
-    # 'geo' = driver-planned broadcast PNPOLY, 'geo_dist' = celled
-    # distributed twin — both against the unrolled-literal PNPOLY
-    # predicate recomputed in DuckDB (incl. the antimeridian quad)
-    from mbrngq_spark.operators.geodetic import (
-        geodetic_point_in_polygon, geodetic_point_in_polygon_distributed)
+    # 'geo' = pandas polygons (celled cover broadcast), 'geo_dist' = the
+    # same function over a polygon DataFrame — both against the
+    # unrolled-literal PNPOLY predicate recomputed in DuckDB (incl. the
+    # antimeridian quad)
+    from mbrngq_spark.operators.geodetic import geodetic_point_in_polygon
     docs_ll = docs_geo.select(
         "doc_id",
         (F.col("y") * 1.8 - 90.0).alias("lat"),
@@ -410,8 +410,7 @@ def _q_spatial_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select(F.lit("geo").alias("part"), "poly_id", "doc_id"))
     gpolys_df = spark.createDataFrame(
         gpolys, "poly_id long, vlat array<double>, vlon array<double>")
-    geo_dist = (geodetic_point_in_polygon_distributed(docs_ll, gpolys_df,
-                                                      res=5)
+    geo_dist = (geodetic_point_in_polygon(docs_ll, gpolys_df)
                 .select(F.lit("geo_dist").alias("part"), "poly_id",
                         "doc_id"))
     # part 'overlay' (r6): polygon×polygon intersects join

@@ -108,9 +108,11 @@ def bounded_shuffle(spark: SparkSession, n: int = 8):
 def spread_small_input(df, min_parts: int | None = None):
     """Round-robin-repartition ``df`` ONLY when its scan parallelism is
     below the session's core count (a tiny table often arrives as one
-    file split, serializing every map-side kernel downstream). Large
-    inputs — the 100 TB case — already scan with thousands of splits and
-    are returned untouched: no corpus-sized shuffle is ever added."""
+    file split, serializing every map-side kernel downstream). The gate
+    is the split count alone, not the size: inputs that scan with enough
+    splits (the usual 100 TB case) are returned untouched, but a large
+    input arriving in few splits (e.g. unsplittable files) pays a
+    corpus-sized shuffle."""
     n = min_parts or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < n:
         return df.repartition(n)

@@ -209,7 +209,3 @@ def load_docs_geo(spark: SparkSession, sf_dir: str,
                   cfg: EngineConfig = CFG) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return derive.with_geometry(docs, cfg).select("doc_id", "x", "y", "category")
-
-
-def tile_id_col():
-    return grid.row_major_tile_id(F.col("x"), F.col("y"), TILE_RES, CFG)

@@ -19,8 +19,10 @@ The ``spans`` payload column rides along untouched; ``span_ck`` lets every
 later stage assert the sequence survived (input_hint invariant).
 
 At 100 TB: the only shuffle is the partitionBy write (which AQE balances);
-stats are a bounded-size aggregate (≤ 4^res rows). Hot-cell detection reads
-the stats table, never the raw data twice.
+stats are a bounded-size aggregate (≤ 4^res rows). Hot-cell detection is a
+separate eager counts-only aggregate over the docs (bounded output, small
+reduce-partition count), so build_index reads the raw data once more before
+the main pass.
 """
 
 from __future__ import annotations

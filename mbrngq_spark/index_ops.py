@@ -25,16 +25,6 @@ from mbrngq_spark.config import DEFAULT, EngineConfig
 from mbrngq_spark.index import IndexLayout, build_index
 
 
-def _dynamic_overwrite(df: DataFrame, path: str) -> None:
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy("cell_coarse").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
 def insert_docs(spark: SparkSession, path: str, new_docs_geo: DataFrame,
                 layout: IndexLayout = IndexLayout(),
                 cfg: EngineConfig = DEFAULT) -> int:
@@ -71,7 +61,11 @@ def delete_docs(spark: SparkSession, path: str, ids: DataFrame,
                  # pin rows before the dynamic overwrite clobbers the files
                  # they are lazily read from
                  .localCheckpoint(eager=True))
-    _dynamic_overwrite(survivors, path)
+    # per-write dynamic overwrite: only the touched partitions are
+    # replaced, and the session conf is never changed
+    (survivors.write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy("cell_coarse").parquet(path))
     # dynamic overwrite only rewrites partitions PRESENT in the written data:
     # a partition whose every row was a victim is absent from `survivors`, so
     # its old files would silently remain — clear those directories explicitly

@@ -24,11 +24,13 @@ The same exact-bounds machinery powers the whole spherical tier:
 cell-PAIR candidate table — the planar 3×3 neighborhood is wrong on a
 lat/lon grid), ``geodetic_nearest_group`` (the flagship NGQ with the
 haversine metric), and ``geodetic_point_in_polygon`` (wrap-normalized
-PNPOLY). Every planner has a DRIVER-planned path (pandas queries,
-candidates broadcast) and a DISTRIBUTED twin (queries/probe cells stay
-DataFrames; planning runs per Arrow batch in mapInPandas with the
-≤ 4^res-row stats broadcast as slim numpy arrays) — equality-pytested
-against each other.
+PNPOLY). Each is ONE function over one candidate pipeline (bounded
+stats collect → planner → candidate join → rounded haversine), and
+each takes its queries (or polygons) as either a pandas frame — planned
+on the driver, candidates broadcast — or a Spark DataFrame — planned per
+Arrow batch in mapInPandas with the ≤ 4^res-row stats broadcast as slim
+numpy arrays (knn.plan_in_executors), joins left to AQE. Both forms give
+identical rows (pytest).
 
 Distances are rounded to 2 dp (centimeter grain) BEFORE ranking: sin/
 cos/asin differ by ~1 ulp across libms, which is ~1e-8 m at earth
@@ -47,6 +49,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mbrngq_spark.config import bounded_shuffle, refine_partitions
+from mbrngq_spark.operators.knn import covering_box, plan_in_executors
 
 R_EARTH = 6_371_000.0
 
@@ -202,27 +205,7 @@ def plan_geo_cells(stats: pd.DataFrame, queries: pd.DataFrame, k: int,
     else:
         cy = np.clip(((qlat + 90.0) / dlat).astype(np.int64), 0, n - 1)
         cx = np.clip(((qlon + 180.0) / dlon).astype(np.int64), 0, n - 1)
-        lo = np.zeros(nq, dtype=np.int64)
-        hi = np.full(nq, n, dtype=np.int64)
-        while True:                     # lock-step smallest k-covering box
-            act = lo < hi
-            if not act.any():
-                break
-            mid = (lo + hi) // 2
-            x0 = np.maximum(cx - mid, 0)
-            y0 = np.maximum(cy - mid, 0)
-            x1 = np.minimum(cx + mid, n - 1)
-            y1 = np.minimum(cy + mid, n - 1)
-            cnt = (sat[y1 + 1, x1 + 1] - sat[y0, x1 + 1]
-                   - sat[y1 + 1, x0] + sat[y0, x0])
-            ok = cnt >= k
-            hi = np.where(act & ok, mid, hi)
-            lo = np.where(act & ~ok, mid + 1, lo)
-        h = lo
-        bx0 = np.maximum(cx - h, 0)
-        by0 = np.maximum(cy - h, 0)
-        bx1 = np.minimum(cx + h, n - 1)
-        by1 = np.minimum(cy + h, n - 1)
+        bx0, by0, bx1, by1 = covering_box(sat, cx, cy, n, k)
         radius = _rect_haversine_bounds(
             qlat, qlon,
             -90.0 + by0 * dlat, -90.0 + (by1 + 1) * dlat,
@@ -255,12 +238,73 @@ def geo_cell_col(res: int) -> Column:
     return F.least(iy, F.lit(n - 1)) * n + F.least(ix, F.lit(n - 1))
 
 
+def _geo_stats(d: DataFrame, *keys: str) -> pd.DataFrame:
+    """The geodetic tier's one bounded stats collect: per-(keys, cell)
+    doc counts (≤ 4^res·m rows) to the driver — the planner input."""
+    with bounded_shuffle(d.sparkSession):
+        return d.groupBy(*keys, "cell").count().toPandas()
+
+
+def _dist_m() -> Column:
+    """Doc-to-query great-circle meters, rounded to 2 dp before ranking."""
+    return F.round(haversine_col(F.col("lat"), F.col("lon"),
+                                 F.col("qlat"), F.col("qlon")), 2)
+
+
+def _query_df(spark: SparkSession, queries: pd.DataFrame) -> DataFrame:
+    return spark.createDataFrame(queries[["query_id", "qlat", "qlon"]],
+                                 "query_id long, qlat double, qlon double")
+
+
+def _geo_candidates(spark: SparkSession, docs_ll: DataFrame,
+                    queries: pd.DataFrame | DataFrame, res: int, plan,
+                    by_category: bool = False) -> DataFrame:
+    """The candidate pipeline shared by knn, range and NGQ: the bounded
+    stats collect (per cell, and per category when ``by_category``) →
+    ``plan(stats, queries)`` → (query_id, cell[, category]) pairs → docs
+    join the pairs on those keys, queries re-join by query_id → docs
+    with ``qlat``/``qlon`` and the rounded haversine ``dist_m``.
+
+    Pandas queries are planned on the driver and both small tables are
+    broadcast, so the corpus is never shuffled. A DataFrame's plan runs
+    per Arrow batch (knn.plan_in_executors) and AQE picks both joins."""
+    d = docs_ll.withColumn("cell", geo_cell_col(res))
+    stats = _geo_stats(d, *(["category"] if by_category else []))
+    keys = ["cell", "category"] if by_category else ["cell"]
+    schema = "query_id long, cell long" + (", category int" if by_category
+                                           else "")
+    if isinstance(queries, DataFrame):
+        qdf = queries.select("query_id", "qlat", "qlon")
+        joined = (d.join(plan_in_executors(spark, stats, qdf, plan, schema),
+                         keys)
+                  .join(qdf, "query_id"))
+    else:
+        cand = spark.createDataFrame(plan(stats, queries), schema)
+        joined = (d.join(F.broadcast(cand), keys)
+                  .join(F.broadcast(_query_df(spark, queries)), "query_id"))
+    return joined.withColumn("dist_m", _dist_m())
+
+
+def _rank_knn(df: DataFrame, k: int, id_col: str,
+              max_dist_m: float | None) -> DataFrame:
+    """Top-k rows per query by (dist_m, id), beyond-cap rows dropped."""
+    if max_dist_m is not None:
+        df = df.filter(F.col("dist_m") <= max_dist_m)
+    w = Window.partitionBy("query_id").orderBy(F.col("dist_m").asc(),
+                                               F.col(id_col).asc())
+    return (df.withColumn("rnk", F.row_number().over(w))
+            .filter(F.col("rnk") <= k)
+            .select("query_id", id_col, "dist_m",
+                    F.col("rnk").cast("long").alias("rnk")))
+
+
 def geodetic_knn(spark: SparkSession, docs_ll: DataFrame,
-                 queries: pd.DataFrame, k: int = 10,
+                 queries: pd.DataFrame | DataFrame, k: int = 10,
                  res: int = 6, id_col: str = "doc_id",
                  max_dist_m: float | None = None) -> DataFrame:
     """Top-k nearest docs per query point by great-circle distance.
-    ``docs_ll``: (id_col, lat, lon); ``queries``: (query_id, qlat, qlon).
+    ``docs_ll``: (id_col, lat, lon); ``queries``: (query_id, qlat, qlon),
+    a pandas frame or a Spark DataFrame (see the module doc).
     Returns (query_id, doc_id, dist_m, rnk) — dist_m rounded to 2 dp,
     ties by doc_id. ``max_dist_m`` is the radius cap (the spherical twin
     of the planar furthestDistance contract): answers beyond it are
@@ -268,29 +312,10 @@ def geodetic_knn(spark: SparkSession, docs_ll: DataFrame,
     prunes cells past the cap. Pruning is lossless: pytest asserts
     equality with the exhaustive scan; the gate's DuckDB oracle IS the
     exhaustive scan."""
-    d = docs_ll.withColumn("cell", geo_cell_col(res))
-
-    # tiny counts table to the driver (≤ 4^res rows) — the planner input
-    with bounded_shuffle(spark):
-        stats = d.groupBy("cell").count().toPandas()
-    plan = plan_geo_cells(stats, queries, k, res, max_dist_m)
-    cand = spark.createDataFrame(plan, "query_id long, cell long")
-    qdf = spark.createDataFrame(
-        queries[["query_id", "qlat", "qlon"]],
-        "query_id long, qlat double, qlon double")
-    joined = (d.join(F.broadcast(cand), "cell")
-              .join(F.broadcast(qdf), "query_id"))
-    dist = F.round(haversine_col(F.col("lat"), F.col("lon"),
-                                 F.col("qlat"), F.col("qlon")), 2)
-    w = Window.partitionBy("query_id").orderBy(F.col("dist_m").asc(),
-                                               F.col(id_col).asc())
-    out = joined.withColumn("dist_m", dist)
-    if max_dist_m is not None:
-        out = out.filter(F.col("dist_m") <= max_dist_m)
-    return (out.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("query_id", id_col, "dist_m",
-                    F.col("rnk").cast("long").alias("rnk")))
+    cands = _geo_candidates(
+        spark, docs_ll, queries, res,
+        lambda st, q: plan_geo_cells(st, q, k, res, max_dist_m))
+    return _rank_knn(cands, k, id_col, max_dist_m)
 
 
 def geodetic_knn_bruteforce(spark: SparkSession, docs_ll: DataFrame,
@@ -298,29 +323,17 @@ def geodetic_knn_bruteforce(spark: SparkSession, docs_ll: DataFrame,
                             id_col: str = "doc_id",
                             max_dist_m: float | None = None) -> DataFrame:
     """Exhaustive reference twin (broadcast cross join + rank)."""
-    qdf = spark.createDataFrame(
-        queries[["query_id", "qlat", "qlon"]],
-        "query_id long, qlat double, qlon double")
-    dist = F.round(haversine_col(F.col("lat"), F.col("lon"),
-                                 F.col("qlat"), F.col("qlon")), 2)
-    w = Window.partitionBy("query_id").orderBy(F.col("dist_m").asc(),
-                                               F.col(id_col).asc())
-    bf = docs_ll.crossJoin(F.broadcast(qdf)).withColumn("dist_m", dist)
-    if max_dist_m is not None:
-        bf = bf.filter(F.col("dist_m") <= max_dist_m)
-    return (bf
-            .withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("query_id", id_col, "dist_m",
-                    F.col("rnk").cast("long").alias("rnk")))
+    bf = docs_ll.crossJoin(F.broadcast(_query_df(spark, queries)))
+    return _rank_knn(bf.withColumn("dist_m", _dist_m()), k, id_col,
+                     max_dist_m)
 
 
 def plan_geo_range_cells(stats: pd.DataFrame, queries: pd.DataFrame,
                          radius_m: float, res: int) -> pd.DataFrame:
     """Range-query planner: (query_id, cell) pairs for every non-empty
     cell whose EXACT rect MINDIST ≤ radius (+ rounding half-grain) —
-    one (Q, C) bounds matrix, no per-query loop. Shared verbatim by the
-    driver-planned and distributed paths."""
+    one (Q, C) bounds matrix, no per-query loop. Runs on the driver for
+    pandas queries and per Arrow batch for a DataFrame."""
     n = 1 << res
     dlat, dlon = 180.0 / n, 360.0 / n
     cells = stats["cell"].to_numpy(np.int64)
@@ -340,124 +353,38 @@ def plan_geo_range_cells(stats: pd.DataFrame, queries: pd.DataFrame,
 
 
 def geodetic_range(spark: SparkSession, docs_ll: DataFrame,
-                   queries: pd.DataFrame, radius_m: float,
+                   queries: pd.DataFrame | DataFrame, radius_m: float,
                    res: int = 6, id_col: str = "doc_id") -> DataFrame:
     """All docs within ``radius_m`` great-circle meters of each query
-    point — the spherical range query. Candidate cells are the non-empty
-    cells whose EXACT rect MINDIST ≤ radius (same lossless bound as
-    geodetic_knn); the exact haversine filter finishes. Returns
+    point — the spherical range query; ``queries`` is a pandas frame or
+    a Spark DataFrame (see the module doc). Candidate cells are the
+    non-empty cells whose EXACT rect MINDIST ≤ radius (same lossless
+    bound as geodetic_knn); the exact haversine filter finishes. Returns
     (query_id, doc_id, dist_m) with dist_m rounded to 2 dp."""
-    d = docs_ll.withColumn("cell", geo_cell_col(res))
-    with bounded_shuffle(spark):
-        stats = d.groupBy("cell").count().toPandas()
-    cand = spark.createDataFrame(
-        plan_geo_range_cells(stats, queries, radius_m, res),
-        "query_id long, cell long")
-    qdf = spark.createDataFrame(
-        queries[["query_id", "qlat", "qlon"]],
-        "query_id long, qlat double, qlon double")
-    dist = F.round(haversine_col(F.col("lat"), F.col("lon"),
-                                 F.col("qlat"), F.col("qlon")), 2)
-    return (d.join(F.broadcast(cand), "cell")
-            .join(F.broadcast(qdf), "query_id")
-            .withColumn("dist_m", dist)
+    return (_geo_candidates(
+                spark, docs_ll, queries, res,
+                lambda st, q: plan_geo_range_cells(st, q, radius_m, res))
             .filter(F.col("dist_m") <= radius_m)
             .select("query_id", id_col, "dist_m"))
 
 
-def geodetic_range_distributed(spark: SparkSession, docs_ll: DataFrame,
-                               queries_df: DataFrame, radius_m: float,
-                               res: int = 6,
-                               id_col: str = "doc_id") -> DataFrame:
-    """geodetic_range for LARGE query batches (r4 verdict item 4):
-    queries stay a Spark DataFrame end-to-end — plan_geo_range_cells
-    runs per Arrow batch inside mapInPandas with the (≤ 4^res-row)
-    counts table broadcast as slim numpy arrays (the
-    plan_geo_cells_distributed discipline); the candidate pairs join
-    docs by cell and queries re-join by query_id, both keyed shuffles
-    bounded by |candidates|. Same result contract as geodetic_range
-    (pytest asserts equality at 10k+ queries)."""
-    d = docs_ll.withColumn("cell", geo_cell_col(res))
-    with bounded_shuffle(spark):
-        stats = d.groupBy("cell").count().toPandas()
-    bc = spark.sparkContext.broadcast(
-        {c: stats[c].to_numpy() for c in ("cell", "count")})
-
-    def plan_batches(batches):
-        st = pd.DataFrame(dict(bc.value))
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = plan_geo_range_cells(st, pdf, radius_m, res)
-            if len(out):
-                yield out.astype({"query_id": "int64", "cell": "int64"})
-
-    cand = (queries_df.select("query_id", "qlat", "qlon")
-            .mapInPandas(plan_batches, schema="query_id long, cell long"))
-    dist = F.round(haversine_col(F.col("lat"), F.col("lon"),
-                                 F.col("qlat"), F.col("qlon")), 2)
-    return (d.join(cand, "cell")
-            .join(queries_df.select("query_id", "qlat", "qlon"), "query_id")
-            .withColumn("dist_m", dist)
-            .filter(F.col("dist_m") <= radius_m)
-            .select("query_id", id_col, "dist_m"))
+def _top_per_category(df: DataFrame, L: int, id_col: str) -> DataFrame:
+    """Exactly L rows per (query, category) by (dist_m, id)."""
+    w = Window.partitionBy("query_id", "category") \
+              .orderBy(F.col("dist_m").asc(), F.col(id_col).asc())
+    return (df.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") <= L)
+            .select("query_id", "category", id_col, "lat", "lon", "dist_m"))
 
 
-def plan_geo_cells_distributed(spark: SparkSession, stats: pd.DataFrame,
-                               queries_df: DataFrame, k: int,
-                               res: int) -> DataFrame:
-    """Large-Q geodetic planner: plan_geo_cells per Arrow batch inside
-    mapInPandas over a DISTRIBUTED query table, the (≤ 4^res-row)
-    counts table broadcast as slim numpy arrays (the planar
-    plan_cells_distributed discipline — no driver loop, no pandas-pickle
-    per-task unpickle floor)."""
-    bc = spark.sparkContext.broadcast(
-        {c: stats[c].to_numpy() for c in ("cell", "count")})
-
-    def plan_batches(batches):
-        st = pd.DataFrame(dict(bc.value))
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = plan_geo_cells(st, pdf, k, res)
-            if len(out):
-                yield out.astype({"query_id": "int64", "cell": "int64"})
-
-    return (queries_df.select("query_id", "qlat", "qlon")
-            .mapInPandas(plan_batches, schema="query_id long, cell long"))
-
-
-def geodetic_knn_distributed(spark: SparkSession, docs_ll: DataFrame,
-                             queries_df: DataFrame, k: int = 10,
-                             res: int = 6,
-                             id_col: str = "doc_id") -> DataFrame:
-    """geodetic_knn for LARGE query batches: queries stay a Spark
-    DataFrame end-to-end — planning runs on executors, the candidate
-    pairs join docs by cell, queries re-join by query_id (both keyed
-    shuffles bounded by |candidates|). Same result contract as
-    geodetic_knn (pytest asserts equality)."""
-    d = docs_ll.withColumn("cell", geo_cell_col(res))
-    with bounded_shuffle(spark):
-        stats = d.groupBy("cell").count().toPandas()
-    cand = plan_geo_cells_distributed(spark, stats, queries_df, k, res)
-    dist = F.round(haversine_col(F.col("lat"), F.col("lon"),
-                                 F.col("qlat"), F.col("qlon")), 2)
-    w = Window.partitionBy("query_id").orderBy(F.col("dist_m").asc(),
-                                               F.col(id_col).asc())
-    return (d.join(cand, "cell")
-            .join(queries_df.select("query_id", "qlat", "qlon"), "query_id")
-            .withColumn("dist_m", dist)
-            .withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("query_id", id_col, "dist_m",
-                    F.col("rnk").cast("long").alias("rnk")))
-
-
-def _geo_group_refine(m: int, k: int, id_col: str = "doc_id"):
-    """Per-query exact group enumeration with the great-circle metric —
-    the spherical twin of ngq._make_refine's dense kernel: every
-    combination of one member per category is scored with
-    max-pairwise-rounded-haversine + min member dq (GetGroupMinDist,
+def _geo_group_refine(cands: DataFrame, m: int, k: int,
+                      id_col: str = "doc_id") -> DataFrame:
+    """Top-L candidates (query_id, category, id, lat, lon, dist_m) → one
+    query_id exchange (explicit partition count) → per-query exact group
+    enumeration with the great-circle metric — the spherical twin of
+    ngq._make_refine's dense kernel: every combination of one member per
+    category is scored with max-pairwise-rounded-haversine + min member
+    dist_m (GetGroupMinDist,
     RTree.cs:938-966), top-k by the (score, id-tuple) total order.
     Fixed-L inputs keep L^m bounded (the gate's oracle enumerates the
     same product); each pairwise distance is rounded to 2 dp BEFORE
@@ -481,7 +408,7 @@ def _geo_group_refine(m: int, k: int, id_col: str = "doc_id"):
         lats = [s["lat"].to_numpy(np.float64) for s in per_cat]
         lons = [s["lon"].to_numpy(np.float64) for s in per_cat]
         ids = [s[id_col].to_numpy() for s in per_cat]
-        dqs = [s["dq"].to_numpy(np.float64) for s in per_cat]
+        dqs = [s["dist_m"].to_numpy(np.float64) for s in per_cat]
         sizes = [len(i) for i in ids]
 
         def expand(a, axis):
@@ -510,25 +437,30 @@ def _geo_group_refine(m: int, k: int, id_col: str = "doc_id"):
             "members": members,
             "min_dist": np.round(score[order], 2)})
 
-    return refine
+    return (cands.repartition(refine_partitions(cands.sparkSession),
+                              "query_id")
+            .groupBy("query_id")
+            .applyInPandas(refine, schema="query_id long, group_rank long, "
+                                          "members string, min_dist double"))
 
 
 def geodetic_nearest_group(spark: SparkSession, docs_ll: DataFrame,
-                           queries: pd.DataFrame, m: int, k: int = 5,
-                           L: int = 8, res: int = 5,
+                           queries: pd.DataFrame | DataFrame, m: int,
+                           k: int = 5, L: int = 8, res: int = 5,
                            id_col: str = "doc_id") -> DataFrame:
     """NGQ on the SPHERE — the flagship group query with great-circle
     metric (r4 verdict item 5): top-k groups of one member per category
     0..m-1 minimizing max-pairwise-member-distance + min-member-to-query
     distance (GetGroupMinDist semantics, RTree.cs:938-966, with
-    np_haversine replacing the euclidean kernel).
+    np_haversine replacing the euclidean kernel). ``queries`` is a
+    pandas frame or a Spark DataFrame (see the module doc).
 
     Phase 1 reuses the planar NGQ shape on the geodetic planner: per
     (query, category) the counts-only SAT box + EXACT analytic rect
     bounds retrieve the top-L nearest docs per category (lossless — the
     same argument as geodetic_knn with k=L, rounding half-grain
-    included); candidate cells broadcast-join the docs, so the corpus is
-    never shuffled. Phase 2 is one query_id-keyed shuffle into an Arrow
+    included); one plan covers every category, so a DataFrame's stats
+    broadcast once. Phase 2 is one query_id-keyed shuffle into an Arrow
     refine that enumerates the dense cross-category product with
     np_haversine (m is small by definition; L^m is the oracle's own
     enumeration bound).
@@ -543,35 +475,15 @@ def geodetic_nearest_group(spark: SparkSession, docs_ll: DataFrame,
     Returns (query_id, group_rank, members, min_dist): members =
     comma-joined member ids in category order (array-valued gate columns
     hash unreliably across engines)."""
-    d = docs_ll.withColumn("cell", geo_cell_col(res))
-    with bounded_shuffle(spark):
-        stats = d.groupBy("category", "cell").count().toPandas()
-    plans = []
-    for c in range(m):
-        st_c = stats[stats["category"] == c][["cell", "count"]]
-        p = plan_geo_cells(st_c.reset_index(drop=True), queries, L, res)
-        p["category"] = c
-        plans.append(p)
-    cand = spark.createDataFrame(
-        pd.concat(plans, ignore_index=True),
-        "query_id long, cell long, category int")
-    qdf = spark.createDataFrame(
-        queries[["query_id", "qlat", "qlon"]],
-        "query_id long, qlat double, qlon double")
-    dist = F.round(haversine_col(F.col("lat"), F.col("lon"),
-                                 F.col("qlat"), F.col("qlon")), 2)
-    w = Window.partitionBy("query_id", "category") \
-              .orderBy(F.col("dq").asc(), F.col(id_col).asc())
-    cands = (d.join(F.broadcast(cand), ["cell", "category"])
-             .join(F.broadcast(qdf), "query_id")
-             .withColumn("dq", dist)
-             .withColumn("rn", F.row_number().over(w))
-             .filter(F.col("rn") <= L)
-             .select("query_id", "category", id_col, "lat", "lon", "dq"))
-    return (cands.repartition(refine_partitions(spark), "query_id").groupBy("query_id")
-            .applyInPandas(_geo_group_refine(m, k, id_col),
-                           schema="query_id long, group_rank long, "
-                                  "members string, min_dist double"))
+    def plan(st: pd.DataFrame, q: pd.DataFrame) -> pd.DataFrame:
+        return pd.concat(
+            [plan_geo_cells(st[st["category"] == c], q, L, res)
+             .assign(category=c) for c in range(m)], ignore_index=True)
+
+    cands = _geo_candidates(spark, docs_ll, queries, res, plan,
+                            by_category=True)
+    return _geo_group_refine(_top_per_category(cands, L, id_col), m, k,
+                             id_col)
 
 
 def geodetic_nearest_group_bruteforce(spark: SparkSession,
@@ -582,22 +494,9 @@ def geodetic_nearest_group_bruteforce(spark: SparkSession,
     """Exhaustive fixed-L twin for pytest: same truncation and scoring
     with the candidate stage replaced by a full crossJoin rank — pruning
     must be invisible."""
-    qdf = spark.createDataFrame(
-        queries[["query_id", "qlat", "qlon"]],
-        "query_id long, qlat double, qlon double")
-    dist = F.round(haversine_col(F.col("lat"), F.col("lon"),
-                                 F.col("qlat"), F.col("qlon")), 2)
-    w = Window.partitionBy("query_id", "category") \
-              .orderBy(F.col("dq").asc(), F.col(id_col).asc())
-    cands = (docs_ll.crossJoin(F.broadcast(qdf))
-             .withColumn("dq", dist)
-             .withColumn("rn", F.row_number().over(w))
-             .filter(F.col("rn") <= L))
-    return (cands.select("query_id", "category", id_col, "lat", "lon", "dq")
-            .repartition(refine_partitions(spark), "query_id").groupBy("query_id")
-            .applyInPandas(_geo_group_refine(m, k, id_col),
-                           schema="query_id long, group_rank long, "
-                                  "members string, min_dist double"))
+    bf = docs_ll.crossJoin(F.broadcast(_query_df(spark, queries))) \
+        .withColumn("dist_m", _dist_m())
+    return _geo_group_refine(_top_per_category(bf, L, id_col), m, k, id_col)
 
 
 def plan_geo_pair_cells(probe_cells: np.ndarray, all_cells: np.ndarray,
@@ -609,9 +508,8 @@ def plan_geo_pair_cells(probe_cells: np.ndarray, all_cells: np.ndarray,
     any point of its own cell (the [1] bound applied to the cell
     itself), so mind − pad lower-bounds the true rect-to-rect distance —
     lossless, pole- and wrap-safe. (r4 used the full corner-to-corner
-    diagonal as the pad — still lossless but ~2× looser.) Shared by the
-    driver path (probe = all) and the distributed planner (probe = one
-    Arrow batch)."""
+    diagonal as the pad — still lossless but ~2× looser.) geodetic_pairs
+    calls it per Arrow batch of probe cells against all cells."""
     n = 1 << res
     dlat, dlon = 180.0 / n, 360.0 / n
     if len(probe_cells) == 0 or len(all_cells) == 0:
@@ -639,66 +537,24 @@ def geodetic_pairs(spark: SparkSession, docs_ll: DataFrame, eps_m: float,
     The planar 3×3-neighborhood trick is WRONG on a lat/lon grid (cell
     width in meters shrinks toward the poles, and the antimeridian
     wraps), so the candidate structure is a cell-PAIR table instead:
-    the (C × C) exact rect-MINDIST matrix over non-empty cells keeps
-    every ordered cell pair with bound ≤ eps — lossless by construction,
-    pole- and wrap-safe, and C ≤ 4^res keeps it driver-tiny. Both doc
-    sides then shuffle once by cell (or arrive pre-bucketed), the pair
-    table broadcasts, and the exact haversine predicate finishes."""
+    every ordered pair of non-empty cells whose exact bound ≤ eps —
+    lossless by construction, pole- and wrap-safe. At fine resolutions
+    the (C × C) bounds matrix outgrows the driver (res 8 → 65k²
+    entries), so plan_geo_pair_cells runs per Arrow batch of PROBE cells
+    in mapInPandas, the full cell list (from the bounded stats collect)
+    broadcast as slim numpy. Both doc sides then join the pair table by
+    cell — AQE picks the strategies — and the exact haversine predicate
+    finishes."""
     d = docs_ll.withColumn("cell", geo_cell_col(res))
-    with bounded_shuffle(spark):
-        stats = d.groupBy("cell").count().toPandas()
-    if len(stats) == 0:
-        return spark.createDataFrame(
-            [], "a_id long, b_id long, dist_m double")
-    pairs = spark.createDataFrame(
-        plan_geo_pair_cells(stats["cell"].to_numpy(np.int64),
-                            stats["cell"].to_numpy(np.int64), eps_m, res),
+    cells = _geo_stats(d)[["cell"]]
+    probe = spark.createDataFrame(cells, "cell long") \
+        .repartition(max(2, len(cells) // 4096))
+    pairs = plan_in_executors(
+        spark, cells, probe,
+        lambda st, p: plan_geo_pair_cells(p["cell"].to_numpy(np.int64),
+                                          st["cell"].to_numpy(np.int64),
+                                          eps_m, res),
         "ca long, cb long")
-    a = d.select(F.col(id_col).alias("a_id"), F.col("lat").alias("alat"),
-                 F.col("lon").alias("alon"), F.col("cell").alias("ca"))
-    b = d.select(F.col(id_col).alias("b_id"), F.col("lat").alias("blat"),
-                 F.col("lon").alias("blon"), F.col("cell").alias("cb"))
-    dist = F.round(haversine_col(F.col("alat"), F.col("alon"),
-                                 F.col("blat"), F.col("blon")), 2)
-    return (a.join(F.broadcast(pairs), "ca").join(b, "cb")
-            .withColumn("dist_m", dist)
-            .filter((F.col("dist_m") <= eps_m)
-                    & (F.col("a_id") < F.col("b_id")))
-            .select("a_id", "b_id", "dist_m"))
-
-
-def geodetic_pairs_distributed(spark: SparkSession, docs_ll: DataFrame,
-                               eps_m: float, res: int = 5,
-                               id_col: str = "doc_id") -> DataFrame:
-    """geodetic_pairs with the cell-PAIR planning itself distributed
-    (r4 verdict item 4): at fine resolutions the (C × C) bounds matrix
-    outgrows the driver (res 8 → 65k² entries), so plan_geo_pair_cells
-    runs per Arrow batch of PROBE cells inside mapInPandas over the
-    non-empty-cells table, the full cell list broadcast as one slim
-    numpy array. The join shape is identical to geodetic_pairs (both
-    doc sides keyed by cell, pair table joined in); pytest asserts
-    result equality with the driver-planned path."""
-    d = docs_ll.withColumn("cell", geo_cell_col(res))
-    cells_df = d.select("cell").distinct()
-    all_cells = np.sort(np.array(
-        [r.cell for r in cells_df.collect()], dtype=np.int64))
-    if len(all_cells) == 0:
-        return spark.createDataFrame(
-            [], "a_id long, b_id long, dist_m double")
-    bc = spark.sparkContext.broadcast(all_cells)
-
-    def plan_batches(batches):
-        ac = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = plan_geo_pair_cells(
-                pdf["cell"].to_numpy(np.int64), ac, eps_m, res)
-            if len(out):
-                yield out.astype({"ca": "int64", "cb": "int64"})
-
-    pairs = cells_df.repartition(max(2, len(all_cells) // 4096)) \
-        .mapInPandas(plan_batches, schema="ca long, cb long")
     a = d.select(F.col(id_col).alias("a_id"), F.col("lat").alias("alat"),
                  F.col("lon").alias("alon"), F.col("cell").alias("ca"))
     b = d.select(F.col(id_col).alias("b_id"), F.col("lat").alias("blat"),
@@ -712,46 +568,14 @@ def geodetic_pairs_distributed(spark: SparkSession, docs_ll: DataFrame,
             .select("a_id", "b_id", "dist_m"))
 
 
-def geodetic_nearest_group_distributed(spark: SparkSession,
-                                       docs_ll: DataFrame,
-                                       queries_df: DataFrame, m: int,
-                                       k: int = 5, L: int = 8,
-                                       res: int = 5,
-                                       id_col: str = "doc_id") -> DataFrame:
-    """geodetic_nearest_group for LARGE query batches: queries stay a
-    Spark DataFrame end-to-end — the per-category planners run per Arrow
-    batch inside mapInPandas (plan_geo_cells_distributed per category,
-    each category's counts broadcast as slim numpy arrays), candidates
-    join docs by (cell, category), queries re-join by query_id, then the
-    same fixed-L haversine refine. Result contract identical to the
-    driver-planned path (pytest asserts equality)."""
-    d = docs_ll.withColumn("cell", geo_cell_col(res))
-    with bounded_shuffle(spark):
-        stats = d.groupBy("category", "cell").count().toPandas()
-    cands = None
-    for c in range(m):
-        st_c = stats[stats["category"] == c][["cell", "count"]] \
-            .reset_index(drop=True)
-        p = plan_geo_cells_distributed(spark, st_c, queries_df, L, res) \
-            .withColumn("category", F.lit(c).cast("int"))
-        cands = p if cands is None else cands.unionByName(p)
-    dist = F.round(haversine_col(F.col("lat"), F.col("lon"),
-                                 F.col("qlat"), F.col("qlon")), 2)
-    w = Window.partitionBy("query_id", "category") \
-              .orderBy(F.col("dq").asc(), F.col(id_col).asc())
-    topL = (d.join(cands, ["cell", "category"])
-            .join(queries_df.select("query_id", "qlat", "qlon"), "query_id")
-            .withColumn("dq", dist)
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= L)
-            .select("query_id", "category", id_col, "lat", "lon", "dq"))
-    return (topL.repartition(refine_partitions(spark), "query_id").groupBy("query_id")
-            .applyInPandas(_geo_group_refine(m, k, id_col),
-                           schema="query_id long, group_rank long, "
-                                  "members string, min_dist double"))
+# celled-cover resolution of geodetic_point_in_polygon: the cover only
+# prunes (the bbox + PNPOLY refine decides), so every res gives the same
+# rows; 6 keeps covers small for continent-sized polygons
+_PIP_RES = 6
 
 
-def geodetic_point_in_polygon(docs_ll: DataFrame, polys: pd.DataFrame,
+def geodetic_point_in_polygon(docs_ll: DataFrame,
+                              polys: pd.DataFrame | DataFrame,
                               id_col: str = "doc_id") -> DataFrame:
     """Point-in-polygon on the lat/lon sphere — the spherical analog of
     pip.point_in_polygon_join, completing the geodetic tier's parity
@@ -769,33 +593,29 @@ def geodetic_point_in_polygon(docs_ll: DataFrame, polys: pd.DataFrame,
     spanning a pole or ≥ 180° of longitude are out of contract (as rect
     query windows are for the planar engine).
 
-    ``polys``: pandas (poly_id, vlat: list, vlon: list). The polygon
-    table is broadcast (map-only for the corpus); a bbox prefilter in
-    the normalized frame cuts the PNPOLY work to candidate rows."""
-    spark = docs_ll.sparkSession
-    rows = []
-    for r in polys.itertuples(index=False):
-        anchor = float(r.vlon[0])
-        nlon = [((v - anchor + 540.0) % 360.0) - 180.0 for v in r.vlon]
-        rows.append((int(r.poly_id), anchor,
-                     [float(v) for v in r.vlat], nlon,
-                     min(r.vlat), max(r.vlat), min(nlon), max(nlon)))
-    pdf = pd.DataFrame(rows, columns=["poly_id", "anchor", "vlat", "vlon",
-                                      "lat0", "lat1", "lon0", "lon1"])
-    pdf_schema = ("poly_id long, anchor double, vlat array<double>, "
-                  "vlon array<double>, lat0 double, lat1 double, "
-                  "lon0 double, lon1 double")
-    p = F.broadcast(spark.createDataFrame(pdf, pdf_schema))
-    d = docs_ll.crossJoin(p)
-    nlon = F.pmod(F.col("lon") - F.col("anchor") + 540.0,
-                  F.lit(360.0)) - 180.0
-    cand = d.withColumn("nlon", nlon).filter(
-        (F.col("lat") >= F.col("lat0")) & (F.col("lat") <= F.col("lat1"))
-        & (F.col("nlon") >= F.col("lon0"))
-        & (F.col("nlon") <= F.col("lon1")))
-
-    return (cand.withColumn("__in", F.pmod(_pnpoly_flips(), F.lit(2)) == 1)
-            .filter(F.col("__in"))
+    ``polys``: (poly_id, vlat, vlon) vertex lists — a pandas frame (its
+    celled cover is broadcast, so the corpus is never shuffled) or a
+    DataFrame of arbitrary size (AQE picks the cover join). Every
+    per-polygon derivation (anchor, wrap normalization, bbox, covering
+    cells — _geo_poly_cover) is a Column expression; docs join the cover
+    on their one cell (_wrap_cell_col), then the wrap-normalized bbox
+    filter and the PNPOLY fold (``_pnpoly_flips``) decide — no Python
+    anywhere in the plan."""
+    small = not isinstance(polys, DataFrame)
+    if small:
+        polys = docs_ll.sparkSession.createDataFrame(
+            polys[["poly_id", "vlat", "vlon"]],
+            "poly_id long, vlat array<double>, vlon array<double>")
+    cover = _geo_poly_cover(polys, _PIP_RES).drop("__iy", "__ux")
+    cand = (docs_ll.withColumn("cell", _wrap_cell_col(_PIP_RES))
+            .join(F.broadcast(cover) if small else cover, "cell")
+            .withColumn("nlon", F.pmod(F.col("lon") - F.col("anchor")
+                                       + 540.0, F.lit(360.0)) - 180.0)
+            .filter((F.col("lat") >= F.col("lat0"))
+                    & (F.col("lat") <= F.col("lat1"))
+                    & (F.col("nlon") >= F.col("lon0"))
+                    & (F.col("nlon") <= F.col("lon1"))))
+    return (cand.filter(F.pmod(_pnpoly_flips(), F.lit(2)) == 1)
             .select("poly_id", id_col))
 
 
@@ -823,6 +643,19 @@ def _pnpoly_flips() -> Column:
 
     return F.aggregate(F.sequence(F.lit(0), n_expr - 1), F.lit(0),
                        lambda acc, i: acc + edge_flip(i))
+
+
+def _wrap_cell_col(res: int) -> Column:
+    """Doc-side cell id for the celled covers (polygons, polyline
+    segments): geo_cell_col's binning with the lon column pmod-wrapped,
+    the formula the covers map their unwrapped lon columns through — a
+    point at lon exactly ±180 lands in column 0 on BOTH sides, where
+    geo_cell_col would clamp it to n−1."""
+    n = 1 << res
+    iy = F.least(F.floor((F.col("lat") + 90.0) / (180.0 / n)).cast("long"),
+                 F.lit(n - 1))
+    ix = F.floor((F.col("lon") + 180.0) / (360.0 / n)).cast("long")
+    return iy * n + F.pmod(ix, F.lit(n))
 
 
 def _geo_poly_cover(polygons_df: DataFrame, res: int) -> DataFrame:
@@ -889,56 +722,6 @@ def geodetic_polygon_cover(polygons_df: DataFrame, res: int = 6
     return (c.filter(F.pmod(_pnpoly_flips(), F.lit(2)) == 1)
             .select("poly_id", "cell", F.col("__iy").alias("iy"),
                     ix.alias("ix")))
-
-
-def geodetic_point_in_polygon_distributed(docs_ll: DataFrame,
-                                          polygons_df: DataFrame,
-                                          res: int = 6,
-                                          id_col: str = "doc_id",
-                                          broadcast_cover: bool = True
-                                          ) -> DataFrame:
-    """Distributed twin of :func:`geodetic_point_in_polygon` for LARGE
-    polygon tables: ``polygons_df`` is a DataFrame (poly_id, vlat
-    array<double>, vlon array<double>) of arbitrary size — the driver
-    path's per-polygon pandas loop and crossJoin are replaced by a
-    celled candidate join, with every per-polygon derivation (anchor,
-    wrap normalization, bbox, covering cells) as Column expressions.
-
-    Covering cells on the row-major lat/lon grid at ``res``: lat rows
-    from the vertex-lat extremes; lon columns enumerated in the
-    polygon's UNWRAPPED window (anchor + normalized bbox, which is
-    contiguous by the wrap contract) and mapped into [0, n) by pmod —
-    an antimeridian-crossing polygon thereby covers both boundary
-    columns without special-casing. Both sides of the join key use the
-    same pmod column formula (a point at lon exactly ±180 wraps to
-    column 0 on BOTH sides, where geo_cell_col would clamp it to n−1).
-
-    The refine is the exact same wrap-normalized bbox filter + PNPOLY
-    fold as the driver path (``_pnpoly_flips``) — no Python anywhere.
-    Same contract: pole-spanning / ≥ 180°-wide polygons excluded."""
-    n = 1 << res
-    wlat, wlon = 180.0 / n, 360.0 / n
-
-    def lat_row(lat):
-        return F.least(F.floor((lat + 90.0) / wlat).cast("long"),
-                       F.lit(n - 1))
-
-    cover = _geo_poly_cover(polygons_df, res).drop("__iy", "__ux")
-
-    doc_cell = (lat_row(F.col("lat")) * n
-                + F.pmod(F.floor((F.col("lon") + 180.0) / wlon).cast("long"),
-                         F.lit(n)))
-    docs_c = docs_ll.withColumn("cell", doc_cell)
-    cand = (docs_c.join(F.broadcast(cover) if broadcast_cover else cover,
-                        "cell")
-            .withColumn("nlon", F.pmod(F.col("lon") - F.col("anchor")
-                                       + 540.0, F.lit(360.0)) - 180.0)
-            .filter((F.col("lat") >= F.col("lat0"))
-                    & (F.col("lat") <= F.col("lat1"))
-                    & (F.col("nlon") >= F.col("lon0"))
-                    & (F.col("nlon") <= F.col("lon1"))))
-    return (cand.filter(F.pmod(_pnpoly_flips(), F.lit(2)) == 1)
-            .select("poly_id", id_col))
 
 
 def np_geodetic_pip(lat, lon, vlat, vlon):
@@ -1194,13 +977,8 @@ def geodetic_polyline_join(docs_ll: DataFrame, lines_df: DataFrame,
                          + F.pmod(F.col("__ux"), F.lit(n)))
              .select("line_id", "alat", "alon", "blat", "blon", "cell"))
 
-    lat_row = F.least(F.floor((F.col("lat") + 90.0) / wlat).cast("long"),
-                      F.lit(n - 1))
-    doc_cell = (lat_row * n
-                + F.pmod(F.floor((F.col("lon") + 180.0) / wlon).cast("long"),
-                         F.lit(n)))
     docs_c = docs_ll.select(F.col(id_col).alias("doc_id"), "lat", "lon") \
-        .withColumn("cell", doc_cell)
+        .withColumn("cell", _wrap_cell_col(res))
     d = geodetic_segment_dist_m(F.col("lat"), F.col("lon"),
                                 F.col("alat"), F.col("alon"),
                                 F.col("blat"), F.col("blon"))

@@ -35,22 +35,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mbrngq_spark import geom, grid
-from mbrngq_spark.config import DEFAULT, EngineConfig
-
-
-def cell_stats(docs_geo: DataFrame, res: int,
-               cfg: EngineConfig = DEFAULT) -> DataFrame:
-    """Per-(cell, category) aggregates — the distributed index metadata.
-
-    Equivalent to the reference's per-node bookkeeping: count + MBR
-    (Node.cs:137-148) + category bitmap (RTree.cs:209-247 CalculateBitArray,
-    here one row per category; ``bit_or`` masks are built in index.py)."""
-    return (docs_geo
-            .withColumn("cell", grid.cell_encode_named(res, cfg))
-            .groupBy("cell", "category")
-            .agg(F.count("*").alias("n"),
-                 F.min("x").alias("xmin"), F.min("y").alias("ymin"),
-                 F.max("x").alias("xmax"), F.max("y").alias("ymax")))
+from mbrngq_spark.config import DEFAULT, EngineConfig, bounded_shuffle, \
+    refine_partitions
 
 
 def rollup_stats(stats: pd.DataFrame, from_res: int, to_res: int) -> pd.DataFrame:
@@ -63,22 +49,6 @@ def rollup_stats(stats: pd.DataFrame, from_res: int, to_res: int) -> pd.DataFram
     out = stats.assign(cell=stats["cell"].to_numpy() >> (2 * (from_res - to_res)))
     keys = [c for c in ("cell", "category") if c in out.columns]
     return out.groupby(keys, as_index=False)["n"].sum()
-
-
-def choose_planner_res(n_per_group: int, k: int, cfg: EngineConfig = DEFAULT,
-                       lo: int = 3, hi: int | None = None) -> int:
-    """Resolution where a cell holds ≈ k docs of one group (category), so
-    the candidate join ships O(k·rings) rows per query instead of whole
-    coarse cells — the analog of the R-tree's bounded node fan-out
-    (maxNodeEntries=10, RTree.cs:72). Cells are computed on the fly from
-    (x, y), so the planner is free to pick any resolution per query batch."""
-    import math
-
-    if hi is None:
-        hi = cfg.planner_base_res
-    target_cells = max(n_per_group / max(k, 1), 1.0)
-    res = round(math.log(target_cells, 4))
-    return max(lo, min(hi, res))
 
 
 _BATCH_WIN = 16          # max window side handled by the batched planner
@@ -185,6 +155,34 @@ def _half_width_radius_scalar(sat: np.ndarray, cx: int, cy: int,
         cfg.min_x + (bx1 + 1) * wx, cfg.min_y + (by1 + 1) * wy))
 
 
+def covering_box(sat: np.ndarray, cx: np.ndarray, cy: np.ndarray, n: int,
+                 k: int) -> tuple[np.ndarray, ...]:
+    """Per query, the smallest square cell box around its cell (cx, cy),
+    clipped to the n×n grid, holding ≥ k docs by the summed-area table
+    ``sat`` → its (x0, y0, x1, y1) cell bounds. One lock-step binary
+    search over all queries: log2(n) iterations of O(Q) fancy-indexed box
+    counts, instead of Q interpreted per-query loops. Counts are
+    metric-free, so the planar and geodetic planners share it."""
+    lo = np.zeros(len(cx), dtype=np.int64)
+    hi = np.full(len(cx), n, dtype=np.int64)
+    while True:
+        act = lo < hi
+        if not act.any():
+            break
+        mid = (lo + hi) // 2
+        x0 = np.maximum(cx - mid, 0)
+        y0 = np.maximum(cy - mid, 0)
+        x1 = np.minimum(cx + mid, n - 1)
+        y1 = np.minimum(cy + mid, n - 1)
+        cnt = (sat[y1 + 1, x1 + 1] - sat[y0, x1 + 1]
+               - sat[y1 + 1, x0] + sat[y0, x0])
+        ok = cnt >= k
+        hi = np.where(act & ok, mid, hi)
+        lo = np.where(act & ~ok, mid + 1, lo)
+    return (np.maximum(cx - lo, 0), np.maximum(cy - lo, 0),
+            np.minimum(cx + lo, n - 1), np.minimum(cy + lo, n - 1))
+
+
 def plan_candidate_cells(stats: pd.DataFrame, queries: pd.DataFrame,
                          k: int, res: int, cfg: EngineConfig = DEFAULT,
                          per_category: bool = False,
@@ -238,11 +236,7 @@ def plan_candidate_cells(stats: pd.DataFrame, queries: pd.DataFrame,
         sat[1:, 1:] = g.cumsum(0).cumsum(1)
 
         # --- per-query radius bounds, BATCHED over all queries ----------
-        # every query shares the summed-area table, so the smallest-box
-        # binary search runs as one lock-step vector loop: log2(n)
-        # iterations of O(Q) fancy-indexed box counts, instead of Q
-        # interpreted per-query loops (the one per-row Python loop the r3
-        # verdict flagged).
+        # every query shares the summed-area table (covering_box)
         cxs = np.clip(((qxs - cfg.min_x) / wx).astype(np.int64), 0, n - 1)
         cys = np.clip(((qys - cfg.min_y) / wy).astype(np.int64), 0, n - 1)
         if total < k:
@@ -252,27 +246,7 @@ def plan_candidate_cells(stats: pd.DataFrame, queries: pd.DataFrame,
                 sat, int(cxs[qi]), int(cys[qi]), qxs[qi], qys[qi],
                 n, k, wx, wy, cfg) for qi in range(len(qids))])
         else:
-            lo = np.zeros(len(qids), dtype=np.int64)
-            hi = np.full(len(qids), n, dtype=np.int64)
-            while True:
-                act = lo < hi
-                if not act.any():
-                    break
-                mid = (lo + hi) // 2
-                x0 = np.maximum(cxs - mid, 0)
-                y0 = np.maximum(cys - mid, 0)
-                x1 = np.minimum(cxs + mid, n - 1)
-                y1 = np.minimum(cys + mid, n - 1)
-                cnt = (sat[y1 + 1, x1 + 1] - sat[y0, x1 + 1]
-                       - sat[y1 + 1, x0] + sat[y0, x0])
-                ok = cnt >= k
-                hi = np.where(act & ok, mid, hi)
-                lo = np.where(act & ~ok, mid + 1, lo)
-            h = lo
-            bx0 = np.maximum(cxs - h, 0)
-            by0 = np.maximum(cys - h, 0)
-            bx1 = np.minimum(cxs + h, n - 1)
-            by1 = np.minimum(cys + h, n - 1)
+            bx0, by0, bx1, by1 = covering_box(sat, cxs, cys, n, k)
             # ≥ k docs inside the box ⇒ kth distance ≤ MAXDIST(q, box)
             radii = geom.np_maxdist_point_rect(
                 qxs, qys,
@@ -373,49 +347,48 @@ def with_cell(docs_geo: DataFrame, res: int, cfg: EngineConfig = DEFAULT) -> Dat
     return docs_geo.withColumn("cell", grid.cell_encode_named(res, cfg))
 
 
+def plan_in_executors(spark: SparkSession, stats: pd.DataFrame,
+                      queries_df: DataFrame, plan, schema: str) -> DataFrame:
+    """Run ``plan(stats, batch)`` per Arrow batch of ``queries_df`` inside
+    mapInPandas — the one place any planner (planar or geodetic) ships
+    its bounded (≤ 4^res·m rows) stats table to executors.
+
+    The broadcast carries only ``stats``'s columns, as raw numpy arrays,
+    and each task rebuilds the frame ONCE: broadcasts are unpickled per
+    task, and a full pandas pickle (MBR columns included) showed up as a
+    fixed, core-count-independent term in scaling runs. Empty batches
+    and empty plans emit nothing."""
+    bc = spark.sparkContext.broadcast(
+        {c: stats[c].to_numpy() for c in stats.columns})
+
+    def run(batches):
+        st = pd.DataFrame(dict(bc.value))
+        for pdf in batches:
+            out = plan(st, pdf) if len(pdf) else ()
+            if len(out):
+                yield out
+
+    return queries_df.mapInPandas(run, schema=schema)
+
+
 def plan_cells_distributed(spark: SparkSession, stats: pd.DataFrame,
                            queries_df: DataFrame, k: int, res: int,
                            cfg: EngineConfig = DEFAULT,
                            per_category: bool = False,
                            max_dist: float | None = None) -> DataFrame:
-    """Large-Q planner: runs plan_candidate_cells per Arrow batch inside
-    mapInPandas over a DISTRIBUTED query table, with the (bounded, ≤4^res·m
-    rows) stats table broadcast to executors. Driver work is O(1) in Q —
-    no per-query Python loop on the driver, no driver-side candidate
+    """Large-Q planner: plan_candidate_cells per Arrow batch of a
+    DISTRIBUTED query table (plan_in_executors). Driver work is O(1) in
+    Q — no per-query Python loop on the driver, no driver-side candidate
     materialization. Each batch rebuilds the summed-area grid (O(4^res),
-    amortized over the ~10k queries per Arrow batch).
-
-    The broadcast carries ONLY the columns the planner reads, as raw numpy
-    arrays — a full cell_stats pandas pickle (MBR columns included) made
-    every task pay a multi-second unpickle, which showed up as a fixed,
-    core-count-independent term in scaling runs."""
-    cols = [c for c in ("cell", "category", "n") if c in stats.columns]
-    bc = spark.sparkContext.broadcast(
-        {c: stats[c].to_numpy() for c in cols})
+    amortized over the ~10k queries per Arrow batch)."""
     schema = "query_id long, cell long, radius double"
     if per_category:
         schema += ", category int"
-
-    def plan_batches(batches):
-        # rebuild the frame from raw arrays ONCE per task — unpickling
-        # numpy arrays is far cheaper than a pandas block pickle, and the
-        # cost must not repeat per Arrow batch
-        st = pd.DataFrame(dict(bc.value))
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = plan_candidate_cells(st, pdf, k, res, cfg,
-                                       per_category, max_dist)
-            if not len(out):
-                continue
-            out = out.astype({"query_id": "int64", "cell": "int64",
-                              "radius": "float64"})
-            if per_category:
-                out = out.astype({"category": "int32"})
-            yield out
-
-    return (queries_df.select("query_id", "qx", "qy")
-            .mapInPandas(plan_batches, schema=schema))
+    return plan_in_executors(
+        spark, stats, queries_df.select("query_id", "qx", "qy"),
+        lambda st, q: plan_candidate_cells(st, q, k, res, cfg,
+                                           per_category, max_dist),
+        schema)
 
 
 def planner_stats(docs_geo: DataFrame, res: int | None, k_per_group: int,
@@ -431,7 +404,6 @@ def planner_stats(docs_geo: DataFrame, res: int | None, k_per_group: int,
         # proportional to what is actually consumed. The output is bounded
         # (≤ 4^res·m rows), so the exchange runs with a small constant
         # reduce-partition count (config.bounded_shuffle).
-        from mbrngq_spark.config import bounded_shuffle
         df = (docs_geo
               .withColumn("cell", grid.cell_encode_named(at_res, cfg))
               .groupBy("cell", "category")
@@ -504,18 +476,10 @@ def certifying_L_distributed(spark: SparkSession, stats: pd.DataFrame,
     fraction of a 100k-query batch inexact after round 1, and pulling that
     frame to the driver was a memory cliff inside the 'no driver loop'
     mode. ``bad_q``: (query_id, qx, qy, kth)."""
-    cols = [c for c in ("cell", "category", "n") if c in stats.columns]
-    bc = spark.sparkContext.broadcast({c: stats[c].to_numpy() for c in cols})
-
-    def run(batches):
-        st = pd.DataFrame(dict(bc.value))
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            yield pd.DataFrame({"L": [certifying_L(st, pdf, res, cfg)]})
-
-    out = (bad_q.select("query_id", "qx", "qy", "kth")
-           .mapInPandas(run, schema="L long"))
+    out = plan_in_executors(
+        spark, stats, bad_q.select("query_id", "qx", "qy", "kth"),
+        lambda st, q: pd.DataFrame({"L": [certifying_L(st, q, res, cfg)]}),
+        "L long")
     top = out.agg(F.max("L")).first()[0]
     return int(top) if top is not None else 1
 
@@ -557,7 +521,6 @@ def knn_join(spark: SparkSession, docs_geo: DataFrame,
     # AQE-coalesced ENSURE_REQUIREMENTS shuffle ran the sort+rank on ~1
     # task and added a re-optimization stage (interleaved A/B: full knn
     # 1.46 s → 1.00 s); REPARTITION_BY_NUM keeps it parallel
-    from mbrngq_spark.config import refine_partitions
     return (joined
             .repartition(refine_partitions(spark), "query_id")
             .withColumn("rank", rank_fn.over(w))
@@ -575,26 +538,43 @@ def knn_candidates(spark: SparkSession, docs_geo: DataFrame,
     MEASURE shuffle volume (assert ≤ O(k·Q)) instead of only reading plan
     shapes."""
     stats, res = planner_stats(docs_geo, res, k, cfg)
-    docs_c = with_cell(docs_geo, res, cfg)
+    return _join_candidates(spark, docs_geo, queries, stats, k, res, cfg,
+                            max_dist=max_dist)
 
+
+def _join_candidates(spark: SparkSession, docs_geo: DataFrame,
+                     queries: pd.DataFrame | DataFrame, stats: pd.DataFrame,
+                     k: int, res: int, cfg: EngineConfig,
+                     per_category: bool = False,
+                     max_dist: float | None = None,
+                     dist: str = "dist") -> DataFrame:
+    """The planar candidate stage shared by knn_candidates and
+    ngq.candidate_topL: plan cells per query (on the driver for pandas
+    queries, per Arrow batch for a DataFrame), join the docs on the cell
+    keys, and keep only rows within their plan row's provable radius.
+
+    Pandas queries get (qx, qy) attached driver-side, so ONE broadcast +
+    ONE join carries the plan (no second broadcast exchange + join), and
+    an explicit schema (an empty-corpus plan yields an empty frame,
+    where pandas schema inference would fail); the doc side is never
+    shuffled. A DataFrame's plan and query re-join are left to AQE."""
+    docs_c = with_cell(docs_geo, res, cfg)
+    keys = ["cell", "category"] if per_category else ["cell"]
     if isinstance(queries, DataFrame):
         cand_df = plan_cells_distributed(spark, stats, queries, k, res, cfg,
-                                         max_dist=max_dist)
-        joined = (docs_c.join(cand_df, "cell")
+                                         per_category, max_dist)
+        joined = (docs_c.join(cand_df, keys)
                   .join(queries.select("query_id", "qx", "qy"), "query_id"))
     else:
         cand = plan_candidate_cells(stats, queries, k, res, cfg,
-                                    max_dist=max_dist)
-        # attach (qx, qy) driver-side: ONE broadcast + ONE join instead
-        # of a second broadcast exchange + join (see ngq.candidate_topL)
+                                    per_category, max_dist)
         cand = cand.merge(queries[["query_id", "qx", "qy"]], on="query_id")
-        # explicit schema: an empty-corpus plan yields an empty frame,
-        # where pandas schema inference would fail
-        cand_df = spark.createDataFrame(
-            cand, "query_id long, cell long, radius double, "
-                  "qx double, qy double")
-        joined = docs_c.join(F.broadcast(cand_df), "cell")
+        schema = ("query_id long, cell long, radius double"
+                  + (", category int" if per_category else "")
+                  + ", qx double, qy double")
+        joined = docs_c.join(F.broadcast(spark.createDataFrame(cand, schema)),
+                             keys)
     return (joined
-            .withColumn("dist", geom.dist_point(F.col("x"), F.col("y"),
-                                                F.col("qx"), F.col("qy")))
-            .filter(F.col("dist") <= F.col("radius")))
+            .withColumn(dist, geom.dist_point(F.col("x"), F.col("y"),
+                                              F.col("qx"), F.col("qy")))
+            .filter(F.col(dist) <= F.col("radius")))

@@ -58,51 +58,28 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mbrngq_spark import geom
-from mbrngq_spark.config import DEFAULT, EngineConfig
-from mbrngq_spark.operators.knn import cell_stats, plan_candidate_cells, \
-    plan_cells_distributed, planner_stats, with_cell
+from mbrngq_spark.config import DEFAULT, EngineConfig, refine_partitions
+from mbrngq_spark.operators.knn import _join_candidates, certifying_L, \
+    certifying_L_distributed, planner_stats
 
 
 def candidate_topL(spark: SparkSession, docs_geo: DataFrame,
                    queries: pd.DataFrame | DataFrame, L: int, res: int,
                    cfg: EngineConfig = DEFAULT,
-                   id_col: str = "doc_id",
-                   stats: pd.DataFrame | None = None) -> DataFrame:
+                   id_col: str = "doc_id", *,
+                   stats: pd.DataFrame) -> DataFrame:
     """Phase 1: top-L nearest docs per (query, category).
 
     Returns (query_id, category, doc_id, x, y, dq, rn) with rn ≤ L ordered
-    by (dq, doc_id). With pandas ``queries`` the doc side is only
-    broadcast-joined on cell id — never shuffled; with a Spark-DataFrame
-    ``queries`` (large batches) the planner runs distributed per Arrow
-    batch (plan_cells_distributed) and AQE picks the join strategy."""
-    if stats is None:
-        stats = cell_stats(docs_geo, res, cfg).toPandas()
-    docs_c = with_cell(docs_geo, res, cfg)
-    if isinstance(queries, DataFrame):
-        cand_df = plan_cells_distributed(spark, stats, queries, L, res, cfg,
-                                         per_category=True)
-        joined = (docs_c.join(cand_df, ["cell", "category"])
-                  .join(queries.select("query_id", "qx", "qy"), "query_id"))
-    else:
-        cand = plan_candidate_cells(stats, queries, L, res, cfg,
-                                    per_category=True)
-        # attach (qx, qy) driver-side: ONE broadcast + ONE join instead
-        # of a second broadcast exchange + join per round (the query
-        # coordinates are a pandas merge away; identical join graph)
-        cand = cand.merge(queries[["query_id", "qx", "qy"]], on="query_id")
-        # explicit schema: an empty-corpus plan yields an empty frame,
-        # where pandas schema inference would fail
-        cand_df = spark.createDataFrame(
-            cand, "query_id long, cell long, radius double, category int, "
-                  "qx double, qy double")
-        joined = docs_c.join(F.broadcast(cand_df), ["cell", "category"])
-    joined = (joined
-              .withColumn("dq", geom.dist_point(F.col("x"), F.col("y"),
-                                                F.col("qx"), F.col("qy")))
-              # provably-sufficient per-(query, category) radius: prune
-              # BEFORE the rank shuffle (≡ theta prune, RTree.cs:1391-1469)
-              .filter(F.col("dq") <= F.col("radius")))
+    by (dq, doc_id). ``stats`` is planner_stats' table at ``res``. With
+    pandas ``queries`` the doc side is only broadcast-joined on cell id —
+    never shuffled; with a Spark-DataFrame ``queries`` (large batches)
+    the planner runs distributed per Arrow batch (plan_cells_distributed)
+    and AQE picks the join strategy. Every row is pruned by its
+    provably-sufficient per-(query, category) radius BEFORE the rank
+    shuffle (≡ theta prune, RTree.cs:1391-1469)."""
+    joined = _join_candidates(spark, docs_geo, queries, stats, L, res, cfg,
+                              per_category=True, dist="dq")
     # ONE exchange serves both the rank window and the downstream refine
     # groupBy: hashpartitioning(query_id) satisfies the window's clustered
     # distribution on (query_id, category) AND the refine's on (query_id),
@@ -110,7 +87,6 @@ def candidate_topL(spark: SparkSession, docs_geo: DataFrame,
     # keeps AQE from coalescing the CPU-heavy refine to ~1 task, and the
     # partial WindowGroupLimit still cuts per-map-partition input to L
     # below this exchange (the degenerate-density volume guard).
-    from mbrngq_spark.config import refine_partitions
     w = Window.partitionBy("query_id", "category") \
               .orderBy(F.col("dq").asc(), F.col(id_col).asc())
     return (joined
@@ -310,6 +286,16 @@ def _nearest_group_once(spark: SparkSession, docs_geo: DataFrame,
             .applyInPandas(refine, schema=_refine_schema(m, id_type)))
 
 
+def _next_L(L: int, cert: int, per_cap: int) -> int | None:
+    """The escalation step both NGQ loops share: jump to the certifying
+    depth (at least doubling), clamped at the refine budget's
+    per-category cap — past it the kernel truncates anyway, so deeper
+    retrieval cannot certify. None when no deeper L fits: the remaining
+    answers are as good as the budget allows and are final."""
+    nxt = min(max(cert, 2 * L), per_cap)
+    return nxt if nxt > L else None
+
+
 def nearest_group(spark: SparkSession, docs_geo: DataFrame,
                   queries: pd.DataFrame | DataFrame, k: int | None = None,
                   L: int | None = None, res: int | None = None,
@@ -336,8 +322,6 @@ def nearest_group(spark: SparkSession, docs_geo: DataFrame,
     exact=false, capped=true — deeper L cannot change them). This is the
     distributed analog of the reference widening its search until theta
     certifies the answer."""
-    from mbrngq_spark.operators.knn import certifying_L, \
-        certifying_L_distributed
     k = k or cfg.k
     L = L or cfg.ngq_candidates
     m = cfg.m
@@ -371,33 +355,24 @@ def nearest_group(spark: SparkSession, docs_geo: DataFrame,
                    .groupBy("query_id").agg(F.max("min_dist").alias("kth"))
                    .localCheckpoint(eager=True))
         bad_df = bad_kth.select("query_id")
-        none_bad = bad_kth.isEmpty()
-        good = out if none_bad else out.join(bad_df, "query_id", "left_anti")
+        if bad_kth.isEmpty():
+            return out if done is None else done.unionByName(out)
+        good = out.join(bad_df, "query_id", "left_anti")
         done = good if done is None else done.unionByName(good)
-        if none_bad:
-            return done
-        if rnd == max_rounds - 1:
-            break
         remaining = remaining.join(bad_df, "query_id", "left_semi")
-        # jump to the certifying depth; clamp at the budget's per-category
-        # cap — past it the kernel would truncate anyway, so deeper
-        # retrieval cannot certify and the round would be pure waste.
-        # Bookkeeping stays distributed: per-batch certifying_L in
+        # bookkeeping stays distributed: per-batch certifying_L in
         # mapInPandas (stats broadcast), driver receives ONE scalar —
         # no .toPandas() of the (possibly huge) bad-query set
-        bad_q = bad_kth.join(
-            remaining.select("query_id", "qx", "qy"), "query_id")
-        cert = certifying_L_distributed(spark, stats, bad_q, res, cfg)
-        next_L = min(max(cert, 2 * L), per_cap)
-        if next_L <= L:
-            # no useful depth left under the budget: results for these
-            # queries are already as good as the budget allows
+        nxt = rnd + 1 < max_rounds and _next_L(L, certifying_L_distributed(
+            spark, stats, bad_kth.join(
+                remaining.select("query_id", "qx", "qy"), "query_id"),
+            res, cfg), per_cap)
+        if not nxt:
+            # rounds or budget exhausted: the rest is returned with
+            # exact=False visible
             return done.unionByName(
                 out.join(bad_df, "query_id", "left_semi"))
-        L = next_L
-    # rounds exhausted: whatever is left is returned with exact=False visible
-    last = out.join(bad_df, "query_id", "left_semi")
-    return done.unionByName(last) if done is not None else last
+        L = nxt
 
 
 def _nearest_group_pandas(spark: SparkSession, docs_geo: DataFrame,
@@ -412,41 +387,27 @@ def _nearest_group_pandas(spark: SparkSession, docs_geo: DataFrame,
     kth bound, certifying depth) runs in pandas. The localCheckpoint +
     per-round aggregate jobs of the distributed loop would cost 2-3 extra
     job rounds here for data that fits in one collect."""
-    from mbrngq_spark.operators.knn import certifying_L
-
-    m = cfg.m
-    id_type = docs_geo.schema["doc_id"].dataType
-    schema = _refine_schema(m, id_type)
+    schema = _refine_schema(cfg.m, docs_geo.schema["doc_id"].dataType)
     remaining = queries
     parts: list[pd.DataFrame] = []
-
-    def finish(extra: pd.DataFrame | None = None) -> DataFrame:
-        all_parts = parts + ([extra] if extra is not None else [])
-        final = pd.concat(all_parts, ignore_index=True) if all_parts \
-            else pd.DataFrame()
-        if len(final) == 0:
-            return spark.createDataFrame([], schema)
-        return spark.createDataFrame(final, schema)
-
     for rnd in range(max_rounds):
         out = _nearest_group_once(spark, docs_geo, remaining, k, L, res,
                                   cfg, stats, refine_budget).toPandas()
-        bad_mask = ~out["exact"] & ~out["capped"]
-        parts.append(out[~bad_mask])
-        if not bad_mask.any():
-            return finish()
-        if rnd == max_rounds - 1:
-            return finish(out[bad_mask])
-        bad_rows = out[bad_mask]
+        bad = ~out["exact"] & ~out["capped"]
+        parts.append(out[~bad])
+        if not bad.any():
+            break
+        bad_rows = out[bad]
         remaining = remaining[remaining["query_id"]
                               .isin(bad_rows["query_id"].unique())]
         kth = (bad_rows.groupby("query_id", as_index=False)["min_dist"]
                .max().rename(columns={"min_dist": "kth"}))
-        cert = certifying_L(
+        nxt = rnd + 1 < max_rounds and _next_L(L, certifying_L(
             stats, kth.merge(remaining[["query_id", "qx", "qy"]],
-                             on="query_id"), res, cfg)
-        next_L = min(max(cert, 2 * L), per_cap)
-        if next_L <= L:
-            return finish(bad_rows)
-        L = next_L
-    return finish()
+                             on="query_id"), res, cfg), per_cap)
+        if not nxt:
+            parts.append(bad_rows)
+            break
+        L = nxt
+    final = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame()
+    return spark.createDataFrame(final if len(final) else [], schema)

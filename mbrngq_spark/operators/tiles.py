@@ -22,7 +22,7 @@ from mbrngq_spark.config import DEFAULT, EngineConfig
 
 def assign_tiles(docs_geo: DataFrame, res: int | None = None,
                  cfg: EngineConfig = DEFAULT) -> DataFrame:
-    res = res or cfg.tile_res
+    res = cfg.tile_res if res is None else res
     return docs_geo.withColumn(
         "tile_id", grid.row_major_tile_id_named(res, cfg))
 
@@ -33,7 +33,7 @@ def tile_rollup(docs_geo: DataFrame, res: int | None = None,
 
     catmask = bit_or(1 << category) ≡ the reference's per-node BitArray
     (Node.cs:37-47); n/min/max ≡ entry-count + MBR (Node.cs:137-148)."""
-    res = res or cfg.tile_res
+    res = cfg.tile_res if res is None else res
     return (assign_tiles(docs_geo, res, cfg)
             .groupBy("tile_id")
             .agg(F.count("*").alias("n_docs"),
@@ -56,7 +56,7 @@ def tile_cover(spark: SparkSession, rects: pd.DataFrame,
     [min_x, min_x+width] × [min_y, min_y+height] emit ZERO rows (the
     quantize clamp would otherwise pin them to boundary tiles — false
     coverage); the oracle SQL mirrors the same WHERE."""
-    res = res or cfg.tile_res
+    res = cfg.tile_res if res is None else res
     r = spark.createDataFrame(rects).filter(
         (F.col("xmax") >= F.lit(cfg.min_x))
         & (F.col("xmin") <= F.lit(cfg.min_x + cfg.width))
@@ -83,7 +83,7 @@ def tile_vector_assignment(spark: SparkSession, docs_geo: DataFrame,
     in the tile — PIP join then tile rollup (north_rule 'tile assignments')."""
     from mbrngq_spark.operators.pip import point_in_polygon_join
 
-    res = res or cfg.tile_res
+    res = cfg.tile_res if res is None else res
     inside = point_in_polygon_join(spark, docs_geo, polygons, cfg=cfg)
     return (inside
             .withColumn("tile_id",
@@ -109,7 +109,7 @@ def polygon_cover(spark: SparkSession, polygons: pd.DataFrame,
 
     from mbrngq_spark.operators.pip import _pip_kernel
 
-    res = res or cfg.tile_res
+    res = cfg.tile_res if res is None else res
     bboxes = pd.DataFrame({
         "rect_id": polygons["poly_id"],
         "xmin": [min(v) for v in polygons["vx"]],

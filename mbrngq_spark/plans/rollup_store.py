@@ -68,15 +68,21 @@ class RollupStore:
             "bucket", F.pmod(F.col("cell"),
                              F.lit(self.n_buckets)).cast("int"))
 
-    def _write(self, df: DataFrame, mode: str) -> None:
+    def _write(self, df: DataFrame, partitions: str) -> None:
+        """Overwrite the whole table (``partitions="static"``) or only
+        the partitions present in ``df`` ("dynamic") — a per-write
+        option, so no session-wide conf changes under concurrent
+        callers."""
         (df.repartition("res", "bucket")
-         .write.mode(mode).partitionBy("res", "bucket")
+         .write.mode("overwrite")
+         .option("partitionOverwriteMode", partitions)
+         .partitionBy("res", "bucket")
          .parquet(self.path))
 
     # --- API -----------------------------------------------------------------
 
     def create(self, docs_geo: DataFrame) -> None:
-        self._write(self._pyramid(docs_geo), "overwrite")
+        self._write(self._pyramid(docs_geo), "static")
 
     def dirty_merge(self, new_docs: DataFrame) -> tuple[DataFrame, DataFrame]:
         """(delta pyramid of the new rows, merged rows for the dirty
@@ -111,15 +117,7 @@ class RollupStore:
         _, merged = self.dirty_merge(new_docs)
         if merged.isEmpty():
             return
-        prev = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                                   "static")
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                            "dynamic")
-        try:
-            self._write(merged, "overwrite")
-        finally:
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                                prev)
+        self._write(merged, "dynamic")
 
     def read(self) -> DataFrame:
         return self.spark.read.parquet(self.path) \

@@ -1,3 +1,5 @@
+import os
+
 import pytest
 from pyspark.sql import SparkSession
 
@@ -6,7 +8,9 @@ from pyspark.sql import SparkSession
 def spark() -> SparkSession:
     from mbrngq_spark.config import session
 
-    s = session(app="mbrngq-tests", cores=8, shuffle_partitions=8)
+    # sized from the host: SPARK_GRAFT_CPUS when set, else every core
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+    s = session(app="mbrngq-tests", cores=cores, shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -141,23 +141,51 @@ def test_geodetic_range_equals_exhaustive(spark, kind):
     assert got == exp
 
 
-def test_distributed_geo_knn_equals_driver_planned(spark):
-    """Large-Q path (queries as a Spark DataFrame, planner in
-    mapInPandas) must produce exactly the driver-planned results."""
-    from mbrngq_spark.operators.geodetic import geodetic_knn_distributed
+def _both_forms(spark, fn, qpd, key, n_parts=7):
+    """``fn(queries)`` with pandas and with DataFrame queries (planned
+    per Arrow batch in mapInPandas) → the two sorted row lists."""
+    a = sorted(key(r) for r in fn(qpd).collect())
+    qdf = spark.createDataFrame(qpd).repartition(n_parts)
+    b = sorted(key(r) for r in fn(qdf).collect())
+    return a, b
 
+
+def _knn_key(r):
+    return (r.query_id, r.rnk, r.doc_id, r.dist_m)
+
+
+def test_distributed_geo_knn_equals_driver_planned(spark):
+    """geodetic_knn with DataFrame queries (planner in mapInPandas) must
+    produce exactly the rows of the same call with pandas queries."""
     rng = np.random.default_rng(19)
     docs = spark.createDataFrame(_corpus(rng, "uniform", n=5000))
     qpd = pd.DataFrame({
         "query_id": np.arange(300),
         "qlat": rng.uniform(-90, 90, 300),
         "qlon": rng.uniform(-180, 180, 300)})
-    a = geodetic_knn(spark, docs, qpd, k=5, res=5).collect()
-    qdf = spark.createDataFrame(qpd).repartition(7)
-    b = geodetic_knn_distributed(spark, docs, qdf, k=5, res=5).collect()
-    ka = sorted((r.query_id, r.rnk, r.doc_id, r.dist_m) for r in a)
-    kb = sorted((r.query_id, r.rnk, r.doc_id, r.dist_m) for r in b)
-    assert ka == kb
+    a, b = _both_forms(
+        spark, lambda q: geodetic_knn(spark, docs, q, k=5, res=5), qpd,
+        _knn_key)
+    assert a == b and len(a) == 5 * 300
+
+
+def test_geodetic_knn_dataframe_queries_radius_capped(spark):
+    """The radius cap holds for DataFrame queries too: the distributed
+    planner prunes past the cap, and the rows equal the exhaustive
+    capped scan."""
+    rng = np.random.default_rng(23)
+    docs = spark.createDataFrame(_corpus(rng, "antimeridian", n=2500))
+    qpd = pd.DataFrame({              # around the cluster and beyond
+        "query_id": np.arange(40),
+        "qlat": rng.normal(10, 10, 40),
+        "qlon": np.mod(rng.normal(180, 10, 40) + 180, 360) - 180})
+    cap = 600_000.0
+    got = geodetic_knn(spark, docs, spark.createDataFrame(qpd).repartition(3),
+                       k=7, res=5, max_dist_m=cap).collect()
+    exp = geodetic_knn_bruteforce(spark, docs, qpd, k=7,
+                                  max_dist_m=cap).collect()
+    assert sorted(map(_knn_key, got)) == sorted(map(_knn_key, exp))
+    assert 0 < len(got) < 7 * 40          # the cap really bites
 
 
 def test_geodetic_empty_and_tiny_corpora(spark):
@@ -235,11 +263,9 @@ def test_geo_ngq_empty_category(spark):
 
 
 def test_distributed_geo_range_equals_driver_planned(spark):
-    """r4 verdict item 4: large-Q parity for the spherical range query —
-    10k distributed queries must match the driver-planned path row for
-    row."""
-    from mbrngq_spark.operators.geodetic import (
-        geodetic_range, geodetic_range_distributed)
+    """Large-Q parity for the spherical range query: 10k DataFrame
+    queries must match the same call with pandas queries row for row."""
+    from mbrngq_spark.operators.geodetic import geodetic_range
 
     rng = np.random.default_rng(1234)
     docs = spark.createDataFrame(_corpus(rng, "uniform", n=3000))
@@ -248,40 +274,42 @@ def test_distributed_geo_range_equals_driver_planned(spark):
         "query_id": np.arange(nq),
         "qlat": rng.uniform(-90, 90, nq),
         "qlon": rng.uniform(-180, 180, nq)})
-    radius = 300_000.0
-    a = geodetic_range(spark, docs, qpd, radius, res=4).collect()
-    qdf = spark.createDataFrame(qpd).repartition(9)
-    b = geodetic_range_distributed(spark, docs, qdf, radius, res=4).collect()
-    ka = sorted((r.query_id, r.doc_id, r.dist_m) for r in a)
-    kb = sorted((r.query_id, r.doc_id, r.dist_m) for r in b)
-    assert ka == kb
-    assert len(ka) > 0
+    a, b = _both_forms(
+        spark, lambda q: geodetic_range(spark, docs, q, 300_000.0, res=4),
+        qpd, lambda r: (r.query_id, r.doc_id, r.dist_m), n_parts=9)
+    assert a == b
+    assert len(a) > 0
 
 
 @pytest.mark.parametrize("kind", ["uniform", "polar"])
-def test_distributed_geo_pairs_equals_driver_planned(spark, kind):
-    """r4 verdict item 4: the ε-join with DISTRIBUTED cell-pair planning
-    (mapInPandas over probe-cell batches) equals the driver-planned
-    path."""
-    from mbrngq_spark.operators.geodetic import (
-        geodetic_pairs, geodetic_pairs_distributed)
+def test_distributed_geo_pairs_equals_driver_planned(kind):
+    """geodetic_pairs plans cell pairs per Arrow batch of probe cells in
+    mapInPandas: the union of per-batch plans must equal the one (C × C)
+    matrix planned at once (the join itself is checked against the
+    exhaustive scan by test_geodetic_pairs_equals_exhaustive)."""
+    from mbrngq_spark.operators.geodetic import plan_geo_pair_cells
 
     rng = np.random.default_rng(hash(kind) % 2**31 + 99)
-    docs = spark.createDataFrame(_corpus(rng, kind, n=600))
-    eps = 400_000.0
-    a = geodetic_pairs(spark, docs, eps, res=4).collect()
-    b = geodetic_pairs_distributed(spark, docs, eps, res=4).collect()
-    ka = sorted((r.a_id, r.b_id, r.dist_m) for r in a)
-    kb = sorted((r.a_id, r.b_id, r.dist_m) for r in b)
-    assert ka == kb
-    assert len(ka) > 0
+    docs_pd = _corpus(rng, kind, n=600)
+    eps, res = 400_000.0, 4
+    n = 1 << res
+    cells = np.unique(
+        np.minimum(((docs_pd.lat + 90) // (180 / n)).astype(np.int64), n - 1)
+        * n
+        + np.minimum(((docs_pd.lon + 180) // (360 / n)).astype(np.int64),
+                     n - 1))
+    whole = plan_geo_pair_cells(cells, cells, eps, res)
+    batched = pd.concat([plan_geo_pair_cells(b, cells, eps, res)
+                         for b in np.array_split(cells, 5)])
+    assert sorted(map(tuple, whole.to_numpy())) == \
+        sorted(map(tuple, batched.to_numpy()))
+    assert len(whole) > len(cells)
 
 
 def test_distributed_geo_ngq_equals_driver_planned(spark):
-    """Large-Q parity for the spherical NGQ: distributed planning must
-    match the driver-planned path row for row."""
-    from mbrngq_spark.operators.geodetic import (
-        geodetic_nearest_group, geodetic_nearest_group_distributed)
+    """Large-Q parity for the spherical NGQ: DataFrame queries must match
+    the same call with pandas queries row for row."""
+    from mbrngq_spark.operators.geodetic import geodetic_nearest_group
 
     rng = np.random.default_rng(4242)
     docs_pd = _corpus(rng, "uniform", n=1200)
@@ -292,16 +320,11 @@ def test_distributed_geo_ngq_equals_driver_planned(spark):
         "query_id": np.arange(nq),
         "qlat": rng.uniform(-90, 90, nq),
         "qlon": rng.uniform(-180, 180, nq)})
-    a = geodetic_nearest_group(spark, docs, qpd, m=3, k=3, L=4,
-                               res=4).collect()
-    qdf = spark.createDataFrame(qpd).repartition(7)
-    b = geodetic_nearest_group_distributed(spark, docs, qdf, m=3, k=3,
-                                           L=4, res=4).collect()
-    ka = sorted((r.query_id, r.group_rank, r.members, r.min_dist)
-                for r in a)
-    kb = sorted((r.query_id, r.group_rank, r.members, r.min_dist)
-                for r in b)
-    assert ka == kb
+    a, b = _both_forms(
+        spark, lambda q: geodetic_nearest_group(spark, docs, q, m=3, k=3,
+                                                L=4, res=4),
+        qpd, lambda r: (r.query_id, r.group_rank, r.members, r.min_dist))
+    assert a == b and len(a) == 3 * nq
 
 
 def test_geodetic_pip_matches_numpy_twin(spark):
@@ -391,13 +414,14 @@ def test_geodetic_knn_radius_capped(spark, kind):
     assert all(r.dist_m <= cap for r in a)
 
 
-def test_geodetic_pip_distributed_equals_driver(spark):
-    """Distributed spherical PIP (celled cover, Column-only derivations)
-    ≡ the driver-planned broadcast path, on a corpus straddling the
-    antimeridian with a crossing and a non-crossing polygon, at two
-    grid resolutions and both join strategies."""
+def test_geodetic_pip_polygon_forms_equal_twin(spark):
+    """Spherical PIP takes its polygons as a pandas frame (cover
+    broadcast) or a DataFrame (AQE picks the cover join): both give the
+    rows of the NumPy twin, on a corpus straddling the antimeridian with
+    a crossing quad, a plain triangle and a concave arrow with a
+    horizontal edge (ANSI try_divide stress)."""
     from mbrngq_spark.operators.geodetic import (
-        geodetic_point_in_polygon, geodetic_point_in_polygon_distributed)
+        geodetic_point_in_polygon, np_geodetic_pip)
 
     rng = np.random.default_rng(47)
     docs_pd = pd.DataFrame({
@@ -406,24 +430,24 @@ def test_geodetic_pip_distributed_equals_driver(spark):
         "lon": rng.uniform(-180, 180, 3000)})
     polys = pd.DataFrame({
         "poly_id": [0, 1, 2],
-        # 0: antimeridian-crossing quad; 1: plain triangle; 2: a concave
-        # arrow with a horizontal edge (ANSI try_divide stress)
         "vlat": [[-20.0, -20.0, 25.0, 25.0], [10.0, 40.0, 25.0],
                  [-50.0, -50.0, -30.0, -45.0, -25.0]],
         "vlon": [[170.0, -170.0, -165.0, 172.0], [-30.0, -20.0, 5.0],
                  [40.0, 80.0, 60.0, 55.0, 45.0]]})
     docs = spark.createDataFrame(docs_pd)
-    exp = {(r.poly_id, r.doc_id) for r in
-           geodetic_point_in_polygon(docs, polys).collect()}
+    exp = set()
+    for r in polys.itertuples(index=False):
+        mask = np_geodetic_pip(docs_pd.lat.to_numpy(),
+                               docs_pd.lon.to_numpy(),
+                               list(r.vlat), list(r.vlon))
+        exp |= {(r.poly_id, int(d))
+                for d in docs_pd.doc_id.to_numpy()[mask]}
     polys_df = spark.createDataFrame(
         polys, "poly_id long, vlat array<double>, vlon array<double>")
-    for res in (4, 6):
-        for bc in (True, False):
-            got = {(r.poly_id, r.doc_id) for r in
-                   geodetic_point_in_polygon_distributed(
-                       docs, polys_df, res=res,
-                       broadcast_cover=bc).collect()}
-            assert got == exp, (res, bc)
+    for form in (polys, polys_df):
+        got = {(r.poly_id, r.doc_id) for r in
+               geodetic_point_in_polygon(docs, form).collect()}
+        assert got == exp, type(form)
     assert len(exp) > 50
 
 

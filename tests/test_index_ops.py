@@ -50,6 +50,39 @@ def test_insert_then_delete_roundtrip(spark, index_path):
     assert stats.agg(F.sum("n")).collect()[0][0] == n0 + 300 - 5
 
 
+def test_writes_leave_partition_overwrite_conf_alone(spark, index_path,
+                                                    tmp_path, monkeypatch):
+    """Dynamic partition overwrite is a per-write option: inserting,
+    deleting and appending to a RollupStore never set the session-wide
+    partitionOverwriteMode, which would race any concurrent writer on
+    the same session."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from mbrngq_spark.plans.rollup_store import RollupStore
+
+    keys = []
+    real_set = RuntimeConfig.set
+
+    def record(self, key, value):
+        keys.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", record)
+    docs = with_geometry_spans(documents_spans(spark, 1600)) \
+        .withColumn("doc_id", F.substring("doc_id", 5, 8).cast("long"))
+    new = docs.filter(F.col("doc_id") >= 1500)
+    assert insert_docs(spark, index_path, new) == 100
+    ids = spark.createDataFrame(pd.DataFrame({"doc_id": [0, 1500]}))
+    assert delete_docs(spark, index_path, ids) == 2
+    store = RollupStore(spark, str(tmp_path / "rollup"))
+    geo = docs.select("doc_id", "x", "y", "category")
+    store.create(geo.filter(F.col("doc_id") < 1500))
+    store.append(new.select("doc_id", "x", "y", "category"))
+    assert store.read().filter(F.col("res") == 2) \
+        .agg(F.sum("n_docs")).first()[0] == 1600
+    assert not [k for k in keys if "partitionOverwriteMode" in k], keys
+
+
 def test_delete_entire_partition(spark, index_path):
     """Deleting EVERY row of a coarse-cell partition must clear its files:
     dynamic partition overwrite alone leaves a fully-emptied partition's

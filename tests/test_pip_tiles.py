@@ -109,6 +109,16 @@ def test_tile_assignment_deterministic_total(spark, docs_geo):
     assert 0 <= mx < 4096
 
 
+def test_tile_rollup_res_zero_is_one_tile(spark, docs_geo):
+    """res=0 is a real resolution (one tile for the whole space), not
+    "use the configured default"."""
+    from mbrngq_spark.operators.tiles import tile_rollup
+
+    rows = tile_rollup(docs_geo, res=0).collect()
+    assert [r.tile_id for r in rows] == [0]
+    assert rows[0].n_docs == docs_geo.count()
+
+
 def test_tile_cover_matches_halfopen_bruteforce(spark):
     """tile_cover's quantized corner-bin ranges must equal the geometric
     truth: tile [x0, x0+w) × [y0, y0+w) overlaps the closed rect."""

@@ -236,30 +236,28 @@ def main() -> int:
           len(geo_ex) >= 1 and all("query_id" in e for e in geo_ex),
           f"exchanges={geo_ex}")
 
-    # --- geodetic distributed range / ε-join ---------------------------------
-    # large-Q twins: planning must run on executors (ArrowEvalPython /
+    # --- geodetic range (DataFrame queries) / ε-join -------------------------
+    # large-Q forms: planning must run on executors (ArrowEvalPython /
     # MapInPandas stage), and every row shuffle stays keyed by the
     # candidate keys (cell / query_id for range; ca / cb for the ε-join)
-    from mbrngq_spark.operators.geodetic import (
-        geodetic_pairs_distributed, geodetic_range_distributed)
+    from mbrngq_spark.operators.geodetic import geodetic_pairs, \
+        geodetic_range
     qdf_geo = spark.createDataFrame(pd.DataFrame({
         "query_id": list(range(40)),
         "qlat": [(i * 7) % 160 - 80.0 for i in range(40)],
         "qlon": [(i * 37) % 360 - 180.0 for i in range(40)]}))
-    gr = geodetic_range_distributed(spark, docs_ll, qdf_geo, 500_000.0,
-                                    res=5)
+    gr = geodetic_range(spark, docs_ll, qdf_geo, 500_000.0, res=5)
     p = plan_of(gr, execute=True)
-    sections.append(("geodetic range (distributed)", p))
+    sections.append(("geodetic range (DataFrame queries)", p))
     check("geo range dist: planner runs on executors (mapInPandas)",
           "MapInPandas" in p)
     gr_ex = re.findall(r"Exchange hashpartitioning\(([^)]+)\)", p)
     check("geo range dist: every row shuffle keyed by cell/query_id",
           all(("cell" in e) or ("query_id" in e) for e in gr_ex),
           f"exchanges={gr_ex}")
-    gp = geodetic_pairs_distributed(spark, docs_ll.limit(400), 600_000.0,
-                                    res=4)
+    gp = geodetic_pairs(spark, docs_ll.limit(400), 600_000.0, res=4)
     p = plan_of(gp, execute=True)
-    sections.append(("geodetic pairs (distributed)", p))
+    sections.append(("geodetic pairs", p))
     check("geo pairs dist: cell-pair planning on executors (mapInPandas)",
           "MapInPandas" in p)
     gp_ex = re.findall(r"Exchange hashpartitioning\(([^)]+)\)", p)
