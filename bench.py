@@ -22,8 +22,10 @@ import os
 import sys
 import time
 
+from mbrngq_spark.config import default_cores
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cores()
 
 # synthetic doc count per sf dir (≥ sf0.1 → 600k docs, the FIXTURES bench scale)
 N_DOCS = {"sf0.001": 6_000, "sf0.01": 60_000, "sf0.1": 600_000}

@@ -7,7 +7,8 @@ see SURVEY.md), re-expressed Spark-first:
 - the mbR-tree is replaced by a distributed hierarchical Z-order cell-grid
   index (``grid.py`` + ``index.py``) carried as ordinary bigint columns;
 - range / kNN / nearest-group queries become broadcast cell-candidate joins
-  plus exact refinement (native Column math or ``applyInPandas``);
+  plus exact refinement (native Column math, or an ``applyInArrow``
+  per-query NumPy kernel for the group queries);
 - the per-node category BitArray ("mb") becomes a per-cell ``bit_or`` mask;
 - everything runs on parquet/Iceberg-style tables of interleaved documents
   whose span payloads survive every shuffle untouched.

@@ -119,15 +119,37 @@ def spread_small_input(df, min_parts: int | None = None):
     return df
 
 
+# driver heap ceiling as a share of the host's physical memory when
+# SPARK_DRIVER_MEM is unset; only a ceiling — the heap grows with use
+DRIVER_MEM_FRACTION = 0.5
+
+
+def default_cores() -> int:
+    """Session cores: SPARK_GRAFT_CPUS when set, else every host CPU."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
+def default_driver_mem() -> str:
+    """Driver heap: SPARK_DRIVER_MEM when set, else DRIVER_MEM_FRACTION
+    of the host's physical memory (MemTotal), at least 1 GiB."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    total_mb = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+                >> 20)
+    return f"{max(1024, int(total_mb * DRIVER_MEM_FRACTION))}m"
+
+
 def session(app: str = "mbrngq_spark", cores: int | None = None,
             shuffle_partitions: int | None = None) -> SparkSession:
     """Build the engine SparkSession.
 
-    local[N] here; on a real cluster the same code runs under spark-submit
-    --py-files with these configs in spark-defaults. AQE stays on so skewed
-    cell joins get runtime-split (SURVEY.md §4).
+    local[N] here, sized from the host (default_cores, default_driver_mem);
+    on a real cluster the same code runs under spark-submit --py-files
+    with these configs in spark-defaults. AQE stays on so skewed cell
+    joins get runtime-split (SURVEY.md §4).
     """
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or default_cores()
     shuffle_partitions = shuffle_partitions or max(2 * cores, 32)
     return (
         SparkSession.builder
@@ -139,7 +161,7 @@ def session(app: str = "mbrngq_spark", cores: int | None = None,
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", default_driver_mem())
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

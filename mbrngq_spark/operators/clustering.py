@@ -42,7 +42,7 @@ def dbscan_geodetic(spark, docs_ll: DataFrame, eps_m: float, min_pts: int,
     ranking discipline)."""
     from mbrngq_spark.operators.geodetic import geodetic_pairs
     pairs = geodetic_pairs(spark, docs_ll, eps_m, res=res, id_col=id_col)
-    return _dbscan_from_pairs(pairs, min_pts, id_col)
+    return _dbscan_from_pairs(pairs, docs_ll.select(id_col), min_pts, id_col)
 
 
 def dbscan(docs_geo: DataFrame, eps: float, min_pts: int,
@@ -56,19 +56,25 @@ def dbscan(docs_geo: DataFrame, eps: float, min_pts: int,
     their core neighbors."""
     pairs = distance_join(docs_geo, docs_geo, eps, cfg=cfg,
                           self_join=True, id_col=id_col)
-    return _dbscan_from_pairs(pairs, min_pts, id_col)
+    return _dbscan_from_pairs(pairs, docs_geo.select(id_col), min_pts, id_col)
 
 
-def _dbscan_from_pairs(pairs: DataFrame, min_pts: int,
+def _dbscan_from_pairs(pairs: DataFrame, ids: DataFrame, min_pts: int,
                        id_col: str) -> DataFrame:
     """Shared clustering algebra over an unordered (a_id, b_id)
-    ε-neighbor pair set (each pair once, a_id < b_id)."""
+    ε-neighbor pair set (each pair once, a_id < b_id) of the points
+    ``ids`` (one ``id_col`` column)."""
     sym = (pairs.select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
            .union(pairs.select(F.col("b_id").alias("u"),
                                F.col("a_id").alias("v"))))
-    deg = sym.groupBy("u").agg((F.count(F.lit(1)) + 1).alias("deg"))
-    cores = deg.filter(F.col("deg") >= F.lit(int(min_pts))) \
-        .select(F.col("u").alias("id"))
+    if min_pts <= 1:
+        # every closed ε-ball holds its own point, so every point is core
+        # — including isolated ones, which appear in no pair
+        cores = ids.select(F.col(id_col).alias("id"))
+    else:
+        deg = sym.groupBy("u").agg((F.count(F.lit(1)) + 1).alias("deg"))
+        cores = deg.filter(F.col("deg") >= F.lit(int(min_pts))) \
+            .select(F.col("u").alias("id"))
 
     core_edges = (sym
                   .join(cores.select(F.col("id").alias("u")), "u")

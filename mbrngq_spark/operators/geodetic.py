@@ -41,15 +41,19 @@ the rounding half-grain (_ROUND_PAD_M).
 
 from __future__ import annotations
 
+import itertools
 import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from mbrngq_spark.config import bounded_shuffle, refine_partitions
 from mbrngq_spark.operators.knn import covering_box, plan_in_executors
+from mbrngq_spark.operators.ngq import _by_category, group_topk
 
 R_EARTH = 6_371_000.0
 
@@ -377,71 +381,52 @@ def _top_per_category(df: DataFrame, L: int, id_col: str) -> DataFrame:
             .select("query_id", "category", id_col, "lat", "lon", "dist_m"))
 
 
+_GEO_NGQ_SCHEMA = pa.schema([("query_id", pa.int64()),
+                             ("group_rank", pa.int64()),
+                             ("members", pa.string()),
+                             ("min_dist", pa.float64())])
+
+
 def _geo_group_refine(cands: DataFrame, m: int, k: int,
                       id_col: str = "doc_id") -> DataFrame:
     """Top-L candidates (query_id, category, id, lat, lon, dist_m) → one
     query_id exchange (explicit partition count) → per-query exact group
-    enumeration with the great-circle metric — the spherical twin of
-    ngq._make_refine's dense kernel: every combination of one member per
-    category is scored with max-pairwise-rounded-haversine + min member
-    dist_m (GetGroupMinDist,
-    RTree.cs:938-966), top-k by the (score, id-tuple) total order.
-    Fixed-L inputs keep L^m bounded (the gate's oracle enumerates the
-    same product); each pairwise distance is rounded to 2 dp BEFORE
-    max/min/+, so the score is reproducible across libms."""
-    import itertools
-
-    _empty = pd.DataFrame(
-        {"query_id": pd.Series([], dtype="int64"),
-         "group_rank": pd.Series([], dtype="int64"),
-         "members": pd.Series([], dtype="object"),
-         "min_dist": pd.Series([], dtype="float64")})
-
-    def refine(pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = int(pdf["query_id"].iloc[0])
-        per_cat = []
-        for c in range(m):
-            sub = pdf[pdf["category"] == c]
-            if len(sub) == 0:
-                return _empty          # a category is empty → no groups
-            per_cat.append(sub)
-        lats = [s["lat"].to_numpy(np.float64) for s in per_cat]
-        lons = [s["lon"].to_numpy(np.float64) for s in per_cat]
-        ids = [s[id_col].to_numpy() for s in per_cat]
-        dqs = [s["dist_m"].to_numpy(np.float64) for s in per_cat]
-        sizes = [len(i) for i in ids]
-
-        def expand(a, axis):
-            shape = [1] * m
-            shape[axis] = -1
-            return a.reshape(shape)
-
-        inner = np.zeros(tuple(sizes))
-        for i, j in itertools.combinations(range(m), 2):
-            D = np.round(np_haversine(expand(lats[i], i), expand(lons[i], i),
-                                      expand(lats[j], j), expand(lons[j], j)),
-                         2)
-            np.maximum(inner, D, out=inner)
-        inter = np.full(tuple(sizes), np.inf)
-        for i in range(m):
-            np.minimum(inter, expand(dqs[i], i), out=inter)
-        score = (inner + inter).ravel()
-        idx = np.unravel_index(np.arange(score.size), tuple(sizes))
-        keys = tuple(ids[c][idx[c]] for c in range(m))
-        order = np.lexsort(keys[::-1] + (score,))[:k]
-        members = [",".join(str(ids[c][idx[c][o]]) for c in range(m))
-                   for o in order]
-        return pd.DataFrame({
-            "query_id": np.full(len(order), qid, dtype=np.int64),
-            "group_rank": np.arange(1, len(order) + 1, dtype=np.int64),
-            "members": members,
-            "min_dist": np.round(score[order], 2)})
+    enumeration with the great-circle metric in Arrow: the 2-dp-rounded
+    haversine matrix of every category pair goes to ngq.group_topk, the
+    planar refine's enumeration core — every combination of one member
+    per category is scored with max-pairwise-rounded-haversine + min
+    member dist_m (GetGroupMinDist, RTree.cs:938-966), top-k by the
+    (score, id-tuple) total order. Fixed-L inputs keep L^m bounded (the
+    gate's oracle enumerates the same product); each pairwise distance is
+    rounded to 2 dp BEFORE max/min/+, so the score is reproducible across
+    libms."""
+    def refine(tbl):
+        per_cat = _by_category(tbl, m)
+        if per_cat is None:
+            return _GEO_NGQ_SCHEMA.empty_table()   # a category is empty
+        col = {n: tbl.column(n).to_numpy()
+               for n in ("lat", "lon", "dist_m", id_col)}
+        lats, lons, dqs, ids = ([col[n][r] for r in per_cat]
+                                for n in ("lat", "lon", "dist_m", id_col))
+        D = {(i, j): np.round(np_haversine(lats[i][:, None], lons[i][:, None],
+                                           lats[j][None, :], lons[j][None, :]),
+                              2)
+             for i, j in itertools.combinations(range(m), 2)}
+        top_ids, score = group_topk(D, dqs, ids, k)
+        n_out = len(score)
+        return pa.Table.from_arrays(
+            [pa.array(np.full(n_out, tbl.column("query_id")[0].as_py(),
+                              dtype=np.int64)),
+             pa.array(np.arange(1, n_out + 1, dtype=np.int64)),
+             pa.array([",".join(str(t[o]) for t in top_ids)
+                       for o in range(n_out)], type=pa.string()),
+             pa.array(np.round(score, 2))],
+            schema=_GEO_NGQ_SCHEMA)
 
     return (cands.repartition(refine_partitions(cands.sparkSession),
                               "query_id")
             .groupBy("query_id")
-            .applyInPandas(refine, schema="query_id long, group_rank long, "
-                                          "members string, min_dist double"))
+            .applyInArrow(refine, schema=from_arrow_schema(_GEO_NGQ_SCHEMA)))
 
 
 def geodetic_nearest_group(spark: SparkSession, docs_ll: DataFrame,
@@ -461,9 +446,9 @@ def geodetic_nearest_group(spark: SparkSession, docs_ll: DataFrame,
     same argument as geodetic_knn with k=L, rounding half-grain
     included); one plan covers every category, so a DataFrame's stats
     broadcast once. Phase 2 is one query_id-keyed shuffle into an Arrow
-    refine that enumerates the dense cross-category product with
-    np_haversine (m is small by definition; L^m is the oracle's own
-    enumeration bound).
+    refine that enumerates the cross-category product over np_haversine
+    pairwise matrices with the planar kernel's blocked sweep (m is small
+    by definition; L^m is the oracle's own enumeration bound).
 
     FIXED-L contract (the gate semantics, ≡ planar max_rounds=1): each
     category truncates at exactly L by (dist_m, doc_id) — the DuckDB

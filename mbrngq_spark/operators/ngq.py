@@ -23,15 +23,18 @@ re-expression (SURVEY.md §3.1) is two-phase:
            the refine step verifies it and flags each query row `exact`.
 
   phase 2  exact refine — one shuffle keyed by query_id, then
-           groupBy(query_id).applyInPandas: cross-category enumeration
-           with NumPy broadcasting — semantically the reference's ORACLE
-           (CheckNearGroup enumeration, RTree.cs:1505-1556), which its own
-           search must equal, so it is the unambiguous ground truth
-           (SURVEY.md §7.4). Before enumerating, the kernel prunes with the
-           theta machinery (greedy-anchor upper bound T + per-candidate
-           innerDist lower bounds — see theta_bounds), selects the top-k by
-           an O(N) partition, and bounds total work by ``refine_budget``
-           cells, flagging budget-capped queries in a ``capped`` column.
+           groupBy(query_id).applyInArrow: an Arrow table per query in and
+           out (no pandas), exact cross-category enumeration in NumPy —
+           semantically the reference's ORACLE (CheckNearGroup
+           enumeration, RTree.cs:1505-1556), which its own search must
+           equal, so it is the unambiguous ground truth (SURVEY.md §7.4).
+           The kernel builds one pairwise distance matrix per category
+           pair, prunes with the theta machinery (greedy-anchor upper
+           bound T + per-candidate innerDist lower bounds — see
+           _theta_bounds), bounds total work by ``refine_budget`` cells,
+           flagging budget-capped queries in a ``capped`` column, and
+           enumerates in cache-sized blocks against a running k-th-score
+           threshold (group_topk) instead of materializing the product.
 
 Adaptivity (nearest_group): queries whose L-truncation bound fails are
 re-run ONCE per round at the CERTIFYING depth computed from the stats grid
@@ -54,9 +57,11 @@ import itertools
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from mbrngq_spark.config import DEFAULT, EngineConfig, refine_partitions
 from mbrngq_spark.operators.knn import _join_candidates, certifying_L, \
@@ -110,161 +115,228 @@ def _refine_schema(m: int, id_type: T.DataType | None = None) -> T.StructType:
     return T.StructType(fields)
 
 
+# cells per step of the blocked enumeration sweep: each step's few
+# float64 work arrays (256 KiB apiece) stay cache-resident
+_BLOCK_CELLS = 1 << 15
+
+
+def _by_category(tbl: pa.Table, m: int, *order: str) -> list[np.ndarray] | None:
+    """Row indices of each category 0..m-1 in one Arrow group, each sorted
+    by the ``order`` columns (one lexsort + searchsorted, no per-category
+    filter). None when a category is empty: no group exists then."""
+    cat = tbl.column("category").to_numpy()
+    rows = np.lexsort(tuple(tbl.column(c).to_numpy() for c in order[::-1])
+                      + (cat,))
+    cuts = np.searchsorted(cat[rows], np.arange(m + 1))
+    if (np.diff(cuts) == 0).any():
+        return None
+    return [rows[cuts[c]:cuts[c + 1]] for c in range(m)]
+
+
+def _pair_dists(xs: list[np.ndarray], ys: list[np.ndarray]
+                ) -> dict[tuple[int, int], np.ndarray]:
+    """Planar member-to-member distance matrix of every category pair i<j
+    (rows = category i) — the innerDist terms (RTree.cs:946-956)."""
+    out = {}
+    for i, j in itertools.combinations(range(len(xs)), 2):
+        dx = xs[i][:, None] - xs[j][None, :]
+        dy = ys[i][:, None] - ys[j][None, :]
+        out[(i, j)] = np.sqrt(dx * dx + dy * dy)
+    return out
+
+
+def group_topk(D: dict[tuple[int, int], np.ndarray], dqs: list[np.ndarray],
+               ids: list[np.ndarray], k: int
+               ) -> tuple[list[np.ndarray], np.ndarray]:
+    """Exact top-k groups (one member per category) under the (score,
+    id-tuple) total order, score = max over pairs i<j of D[i, j][a_i, a_j]
+    + min over c of dqs[c][a_c] — GetGroupMinDist (RTree.cs:938-966) over
+    the whole cross-category product, i.e. the reference oracle's
+    CheckNearGroup enumeration (RTree.cs:1505-1556). Metric-agnostic: the
+    caller supplies the pairwise matrices.
+
+    Blocked sweep, never the full product cube: the inner/inter parts of
+    the "rest" cells — one per member combination of categories 1..m-1 —
+    are built once; category-0 members are swept in blocks of
+    ~_BLOCK_CELLS cells, each block adding its category-0 terms and
+    keeping only cells ≤ a running threshold (the k-th best score seen so
+    far, re-tightened by np.partition as survivors accumulate — it never
+    drops below the true k-th, so every score tie survives). Each
+    re-tightening also drops the rest cells whose lower bound over every
+    category-0 member (the same max/min terms, category 0 at its nearest)
+    exceeds the threshold. Each cell's score is the max of the same
+    values, the min of the same dq and one add, and survivors stay in
+    row-major product order, so the final lexsort over survivors returns
+    exactly the rows of a dense enumeration."""
+    m = len(dqs)
+    sizes = tuple(len(d) for d in dqs)
+    rest = sizes[1:]
+
+    def expand(a: np.ndarray, *axes: int) -> np.ndarray:
+        shape = [1] * len(rest)
+        for ax, n in zip(axes, a.shape):
+            shape[ax - 1] = n
+        return a.reshape(shape)
+
+    rest_inner = np.zeros(rest)
+    for (i, j), Dij in D.items():
+        if i > 0:
+            np.maximum(rest_inner, expand(Dij, i, j), out=rest_inner)
+    rest_inter = np.full(rest, np.inf)
+    for c in range(1, m):
+        np.minimum(rest_inter, expand(dqs[c], c), out=rest_inter)
+    # lower bound of each rest cell's score over all category-0 members:
+    # max/min are exact and the add is monotone, so a cell whose bound is
+    # > thr holds no score ≤ thr
+    rest_lb = rest_inner.copy()
+    for j in range(1, m):
+        np.maximum(rest_lb, expand(D[(0, j)].min(axis=0), j), out=rest_lb)
+    rest_lb += np.minimum(rest_inter, dqs[0].min())
+    rest_inner, rest_inter, rest_lb = (a.ravel() for a in
+                                       (rest_inner, rest_inter, rest_lb))
+    n_rest = rest_inner.size
+
+    live = np.arange(n_rest)           # rest cells that can still beat thr
+    thr, step = np.inf, 1              # one row per block until thr exists
+    kept_s: list[np.ndarray] = []      # surviving scores ...
+    kept_i: list[np.ndarray] = []      # ... and their flat product index
+    n_kept = n_head = 0
+    s, narrowed = 0, True
+    while s < sizes[0]:
+        if narrowed:
+            inner, inter = rest_inner[live], rest_inter[live]
+            cols = np.unravel_index(live, rest) if rest else ()
+        e = min(s + step, sizes[0])
+        blk = np.repeat(inner[None, :], e - s, axis=0)
+        for j in range(1, m):
+            np.maximum(blk, D[(0, j)][s:e, cols[j - 1]], out=blk)
+        blk += np.minimum(inter, dqs[0][s:e, None])
+        flat = blk.ravel()
+        sel = np.flatnonzero(flat <= thr)
+        kept_s.append(flat[sel])
+        kept_i.append((s + sel // live.size) * n_rest + live[sel % live.size])
+        n_kept += sel.size
+        s = e
+        narrowed = n_kept > max(k, n_head)
+        if narrowed:   # re-tighten on the survivors, then drop dead cells
+            sc, ix = np.concatenate(kept_s), np.concatenate(kept_i)
+            thr = np.partition(sc, k - 1)[k - 1]
+            head = sc <= thr
+            kept_s, kept_i = [sc[head]], [ix[head]]
+            n_kept = n_head = int(head.sum())
+            live = live[rest_lb[live] <= thr]
+            step = max(1, _BLOCK_CELLS // live.size)
+
+    score = np.concatenate(kept_s)
+    idx = np.unravel_index(np.concatenate(kept_i), sizes)
+    head_ids = [ids[c][idx[c]] for c in range(m)]
+    order = np.lexsort(tuple(head_ids[::-1]) + (score,))[:k]
+    return [h[order] for h in head_ids], score[order]
+
+
+def _theta_bounds(D: dict[tuple[int, int], np.ndarray], dqs: list[np.ndarray],
+                  k: int) -> tuple[float, list[np.ndarray]]:
+    """(T, LBs): T = a kth-best-score upper bound from k distinct greedy
+    anchor groups (anchor in the largest category; other members = its
+    nearest candidate per category — ≡ the reference seeding a theta pool
+    with feasible groups, RTree.cs:1961-1970); LBs[c][i] = max over other
+    categories of the min distance from candidate i to that category's
+    candidate set — a lower bound on innerDist of ANY enumerable group
+    containing i. Prune i when dq_i > T or LB_i > T: score ≥ dq_i
+    (triangle) and score ≥ LB_i, both strict → safe even under (score,
+    id) tie-breaking."""
+    m = len(dqs)
+    sizes = [len(d) for d in dqs]
+    LBs = [np.zeros(s) for s in sizes]
+    for (i, j), Dij in D.items():
+        np.maximum(LBs[i], Dij.min(axis=1), out=LBs[i])
+        np.maximum(LBs[j], Dij.min(axis=0), out=LBs[j])
+    a = int(np.argmax(sizes))
+    if sizes[a] < k:
+        return np.inf, LBs
+    # greedy groups anchored at every candidate of category a
+    sel = [np.arange(sizes[a]) if c == a else
+           np.argmin(D[(a, c)] if a < c else D[(c, a)].T, axis=1)
+           for c in range(m)]
+    inner = np.zeros(sizes[a])
+    for (i, j), Dij in D.items():
+        np.maximum(inner, Dij[sel[i], sel[j]], out=inner)
+    greedy = inner + np.min(np.stack([dqs[c][sel[c]] for c in range(m)]),
+                            axis=0)
+    return float(np.partition(greedy, k - 1)[k - 1]), LBs
+
+
 def _make_refine(m: int, k: int, L: int, cat_totals: dict[int, int],
-                 budget: int = 1 << 22):
-    """Build the per-query exact enumeration kernel (vectorized NumPy).
+                 budget: int, schema: pa.Schema):
+    """Build the per-query exact refine kernel: one Arrow table (a
+    query's top-L candidates per category) in, its top-k groups as one
+    Arrow table of ``schema`` out — no pandas anywhere.
 
-    Semantics = the reference oracle's partial-group expansion collapsed to a
-    dense cross-category enumeration (RTree.cs:1505-1556): every combination
-    of one member per category is scored with GetGroupMinDist
-    (RTree.cs:938-966) and the top-k by (score, id-tuple) are kept."""
+    Per group: one pairwise distance matrix per category pair, shared by
+    the theta bounds and the enumeration; theta pruning (≡
+    RTree.cs:1961-1970) and the ``budget`` cap select each category's
+    surviving members; group_topk enumerates their product exactly."""
+    id_types = [schema.field(f"c{c}_id").type for c in range(m)]
 
-    def enumerate_topk(xs, ys, ids, dqs):
-        """Dense cross-category enumeration → (top_ids per category,
-        top_scores) under the deterministic (score, id-tuple) total order.
-        The id gather + lexsort run only on the ≤k-score head selected by
-        an O(N) partition — materializing member-id arrays for the full
-        product was the kernel's dominant cost at large L."""
-        sizes = [len(i) for i in ids]
-
-        def expand(a: np.ndarray, axis: int) -> np.ndarray:
-            shape = [1] * m
-            shape[axis] = -1
-            return a.reshape(shape)
-
-        # innerDist: max pairwise distance (skips i==j pairs exactly like the
-        # reference skipping same-element pairs, RTree.cs:946-956)
-        inner = np.zeros(tuple(sizes), dtype=np.float64)
-        for i, j in itertools.combinations(range(m), 2):
-            dx = expand(xs[i], i) - expand(xs[j], j)
-            dy = expand(ys[i], i) - expand(ys[j], j)
-            np.maximum(inner, np.sqrt(dx * dx + dy * dy), out=inner)
-        # interDist: min distance from q to any member (RTree.cs:958-962)
-        inter = np.full(tuple(sizes), np.inf)
-        for i in range(m):
-            np.minimum(inter, expand(dqs[i], i), out=inter)
-        score = (inner + inter).ravel()
-
-        if score.size > k:
-            kth = np.partition(score, k - 1)[k - 1]
-            head = np.nonzero(score <= kth)[0]   # ≥ k rows incl. score ties
-        else:
-            head = np.arange(score.size)
-        idx = np.unravel_index(head, tuple(sizes))
-        head_ids = [ids[c][idx[c]] for c in range(m)]
-        order = np.lexsort(tuple(head_ids[::-1]) + (score[head],))[:k]
-        return [hid[order] for hid in head_ids], score[head][order]
-
-    def theta_bounds(xs, ys, dqs):
-        """(T, LBs): T = a kth-best-score upper bound from k distinct
-        greedy anchor groups (anchor in the largest category; other members
-        = its nearest candidate per category — ≡ the reference seeding a
-        theta pool with feasible groups, RTree.cs:1961-1970); LBs[c][i] =
-        max over other categories of the min distance from candidate i to
-        that category's candidate set — a lower bound on innerDist of ANY
-        enumerable group containing i. Prune i when dq_i > T or LB_i > T:
-        score ≥ dq_i (triangle) and score ≥ LB_i, both strict-> safe even
-        under (score, id) tie-breaking."""
+    def refine(tbl):
+        per_cat = _by_category(tbl, m, "rn")
+        if per_cat is None:
+            return schema.empty_table()  # a category is empty → no groups
+        col = {n: tbl.column(n).to_numpy()
+               for n in ("x", "y", "dq", "doc_id")}
+        # rn order = (dq, doc_id) order; no id cast: int64 for long ids,
+        # object for string ids — np.lexsort only needs orderable keys
+        xs, ys, dqs, ids = ([col[n][r] for r in per_cat]
+                            for n in ("x", "y", "dq", "doc_id"))
         sizes = [len(d) for d in dqs]
-        pair_min = {}
-        LBs = [np.zeros(s) for s in sizes]
-        for i, j in itertools.combinations(range(m), 2):
-            dx = xs[i][:, None] - xs[j][None, :]
-            dy = ys[i][:, None] - ys[j][None, :]
-            D = np.sqrt(dx * dx + dy * dy)
-            pair_min[(i, j)] = D
-            np.maximum(LBs[i], D.min(axis=1), out=LBs[i])
-            np.maximum(LBs[j], D.min(axis=0), out=LBs[j])
-        a = int(np.argmax(sizes))
-        if sizes[a] < k:
-            return np.inf, LBs
-        # greedy groups anchored at every candidate of category a
-        sel = {}
-        for c in range(m):
-            if c == a:
-                continue
-            D = pair_min[(min(a, c), max(a, c))]
-            D = D if a < c else D.T            # rows = anchor axis
-            sel[c] = np.argmin(D, axis=1)
-        members_x = [xs[a] if c == a else xs[c][sel[c]] for c in range(m)]
-        members_y = [ys[a] if c == a else ys[c][sel[c]] for c in range(m)]
-        members_dq = [dqs[a] if c == a else dqs[c][sel[c]] for c in range(m)]
-        inner = np.zeros(sizes[a])
-        for i, j in itertools.combinations(range(m), 2):
-            dx = members_x[i] - members_x[j]
-            dy = members_y[i] - members_y[j]
-            np.maximum(inner, np.sqrt(dx * dx + dy * dy), out=inner)
-        greedy = inner + np.min(np.stack(members_dq), axis=0)
-        return float(np.partition(greedy, k - 1)[k - 1]), LBs
+        D = _pair_dists(xs, ys)
 
-    def refine(pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = int(pdf["query_id"].iloc[0])
-        per_cat = []
-        for c in range(m):
-            sub = pdf[pdf["category"] == c].sort_values("rn")
-            if len(sub) == 0:
-                return pd.DataFrame()  # a category is empty → no groups exist
-            per_cat.append(sub)
-
-        xs = [s["x"].to_numpy(np.float64) for s in per_cat]
-        ys = [s["y"].to_numpy(np.float64) for s in per_cat]
-        # no dtype cast: int64 for long ids, object for string ids —
-        # np.lexsort only needs orderable keys
-        ids = [s["doc_id"].to_numpy() for s in per_cat]
-        dqs = [s["dq"].to_numpy(np.float64) for s in per_cat]
-        sizes = [len(i) for i in ids]
-
-        # theta tightening (≡ RTree.cs:1961-1970): prune candidates that
-        # provably cannot appear in any top-k group — see theta_bounds.
-        # Handles clustered data where dq alone prunes nothing (each
-        # category in its own distant blob → every score shares a large
-        # inter-blob innerDist; LB cuts the blob's far side).
+        # theta tightening: prune candidates that provably cannot appear in
+        # any top-k group — see _theta_bounds. Handles clustered data where
+        # dq alone prunes nothing (each category in its own distant blob →
+        # every score shares a large inter-blob innerDist; LB cuts the
+        # blob's far side).
+        take = [np.arange(s) for s in sizes]
         if int(np.prod(sizes)) > 4096:
-            T, LBs = theta_bounds(xs, ys, dqs)
+            T, LBs = _theta_bounds(D, dqs, k)
             if np.isfinite(T):
-                keep = [(dq <= T) & (lb <= T) for dq, lb in zip(dqs, LBs)]
-                xs = [a[kp] for a, kp in zip(xs, keep)]
-                ys = [a[kp] for a, kp in zip(ys, keep)]
-                ids = [a[kp] for a, kp in zip(ids, keep)]
-                dqs = [a[kp] for a, kp in zip(dqs, keep)]
+                take = [np.flatnonzero((dq <= T) & (lb <= T))
+                        for dq, lb in zip(dqs, LBs)]
 
-        # enumeration budget: the dense product is the exact kernel's cost;
-        # past the budget, truncate each list by dq order and SAY SO —
-        # `capped` marks results whose exactness cannot be certified by
-        # escalating L (the adaptive loop stops retrying those queries)
-        capped = False
-        cur = [len(i) for i in ids]
-        if int(np.prod(cur)) > budget:
-            capped = True
+        # enumeration budget: the product is the exact kernel's cost; past
+        # the budget, truncate each list by dq order and SAY SO — `capped`
+        # marks results whose exactness cannot be certified by escalating
+        # L (the adaptive loop stops retrying those queries)
+        capped = int(np.prod([len(t) for t in take])) > budget
+        if capped:
             per_cap = max(int(budget ** (1.0 / m)), k)
-            xs = [a[:per_cap] for a in xs]
-            ys = [a[:per_cap] for a in ys]
-            ids = [a[:per_cap] for a in ids]
-            dqs = [a[:per_cap] for a in dqs]
+            take = [t[:per_cap] for t in take]
 
-        top_ids, top_scores = enumerate_topk(xs, ys, ids, dqs)
+        top_ids, top_scores = group_topk(
+            {p: Dij[np.ix_(take[p[0]], take[p[1]])] for p, Dij in D.items()},
+            [d[t] for d, t in zip(dqs, take)],
+            [i[t] for i, t in zip(ids, take)], k)
 
         # exactness: kth best truncated score must not exceed the L-th
         # candidate distance of any truncated category (see module doc).
-        # NOTE: uses the ORIGINAL per-category lists' last dq (pre-pruning
-        # never drops anything the bound needs — pruning only removed
-        # candidates that cannot affect kth)
+        # Uses the ORIGINAL per-category lists' last dq (pruning only
+        # removed candidates that cannot affect kth)
         kth = top_scores[-1] if len(top_scores) else np.inf
         exact = not capped   # a budget-truncated enumeration can't certify
         for c in range(m):
             truncated = sizes[c] >= L and cat_totals.get(c, 0) > sizes[c]
-            if truncated and kth > per_cat[c]["dq"].iloc[-1]:
+            if truncated and kth > dqs[c][-1]:
                 exact = False
 
         n_out = len(top_scores)
-        out = {"query_id": np.full(n_out, qid, dtype=np.int64),
-               "group_rank": np.arange(1, n_out + 1, dtype=np.int32)}
-        for c in range(m):
-            out[f"c{c}_id"] = top_ids[c]
-        out["min_dist"] = top_scores
-        out["exact"] = np.full(n_out, exact)
-        out["capped"] = np.full(n_out, capped)
-        return pd.DataFrame(out)
+        qid = tbl.column("query_id")[0].as_py()
+        return pa.Table.from_arrays(
+            [pa.array(np.full(n_out, qid, dtype=np.int64)),
+             pa.array(np.arange(1, n_out + 1, dtype=np.int32))]
+            + [pa.array(t, type=ty) for t, ty in zip(top_ids, id_types)]
+            + [pa.array(top_scores), pa.array(np.full(n_out, exact)),
+               pa.array(np.full(n_out, capped))],
+            schema=schema)
 
     return refine
 
@@ -277,13 +349,12 @@ def _nearest_group_once(spark: SparkSession, docs_geo: DataFrame,
     cat_totals = {int(c): int(v) for c, v in
                   stats.groupby("category")["n"].sum().items()}
     cands = candidate_topL(spark, docs_geo, queries, L, res, cfg, stats=stats)
-    refine = _make_refine(m, k, L, cat_totals, refine_budget)
-    id_type = docs_geo.schema["doc_id"].dataType
+    schema = _refine_schema(m, docs_geo.schema["doc_id"].dataType)
+    refine = _make_refine(m, k, L, cat_totals, refine_budget,
+                          to_arrow_schema(schema))
     # no repartition here: cands is already hash(query_id)-partitioned
     # with an explicit (non-coalescible) count — see candidate_topL
-    return (cands
-            .groupBy("query_id")
-            .applyInPandas(refine, schema=_refine_schema(m, id_type)))
+    return cands.groupBy("query_id").applyInArrow(refine, schema=schema)
 
 
 def _next_L(L: int, cert: int, per_cap: int) -> int | None:

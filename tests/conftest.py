@@ -1,5 +1,3 @@
-import os
-
 import pytest
 from pyspark.sql import SparkSession
 
@@ -9,8 +7,7 @@ def spark() -> SparkSession:
     from mbrngq_spark.config import session
 
     # sized from the host: SPARK_GRAFT_CPUS when set, else every core
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
-    s = session(app="mbrngq-tests", cores=cores, shuffle_partitions=8)
+    s = session(app="mbrngq-tests", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

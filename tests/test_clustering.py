@@ -3,6 +3,7 @@ propagation) on the sf-dir corpus — exact set equality of (point,
 cluster-min-label, core flag), min-label border assignment pinned."""
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -103,3 +104,29 @@ def test_dbscan_geodetic_matches_numpy(spark, docs_geo):
             exp[int(ids[i])] = (min(cn), False)
     assert got == exp
     assert 0 < len(got) and len({c for c, _ in got.values()}) > 1
+
+
+def test_dbscan_min_pts_one_keeps_isolated_points(spark, docs_geo):
+    """min_pts=1: a point's closed ε-ball holds the point itself, so every
+    point is core and one with no ε-neighbour is its own cluster."""
+    eps = 2.0      # leaves most fixture points without an ε-neighbour
+    pdf = docs_geo.toPandas()
+    xy = pdf[["x", "y"]].to_numpy()
+    deg = (np.sqrt(((xy[:, None, :] - xy[None, :, :]) ** 2).sum(-1))
+           <= eps).sum(1)
+    assert (deg == 1).any() and (deg > 1).any()
+    got = {int(r.doc_id): (int(r.cluster), bool(r.is_core))
+           for r in dbscan(docs_geo, eps, 1).collect()}
+    assert got == _np_dbscan(pdf, eps, 1)
+    assert len(got) == len(pdf)
+
+
+def test_dbscan_geodetic_min_pts_one_keeps_isolated_points(spark):
+    from mbrngq_spark.operators.clustering import dbscan_geodetic
+
+    ll = spark.createDataFrame(pd.DataFrame({
+        "doc_id": [1, 2, 3], "lat": [10.0, 10.001, -40.0],
+        "lon": [20.0, 20.001, 100.0]}))
+    got = {(r.doc_id, r.cluster, r.is_core)
+           for r in dbscan_geodetic(spark, ll, 1000.0, 1).collect()}
+    assert got == {(1, 1, True), (2, 1, True), (3, 3, True)}

@@ -1,0 +1,151 @@
+"""The NGQ refine kernel without Spark: the blocked, Arrow-native refine
+(ngq._make_refine) and its enumeration core (ngq.group_topk) against the
+dense cross-category enumeration of oracle.ngq_bruteforce. Apart from the
+uniform case, which theta pruning cuts to one block, the candidate sets
+are large enough that the sweep runs many blocks and re-tightens its
+running threshold; exact float equality is required, because every cell
+is scored with the same operations as the dense product."""
+
+import itertools
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pytest
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from mbrngq_spark.operators import ngq
+from mbrngq_spark.oracle import ngq_bruteforce
+
+QX, QY = 50.0, 50.0
+
+
+def _cands(rng, sizes, *, blobs=False, ring=False, grid=None,
+           str_ids=False):
+    """One query's candidate table (query_id, category, doc_id, x, y, dq,
+    rn), rn in (dq, doc_id) order as candidate_topL emits it, rows
+    shuffled. ``blobs`` puts each category in its own cluster and
+    ``ring`` every doc on one circle around the query; theta pruning
+    removes little from either. ``grid`` snaps coordinates so that many
+    scores tie."""
+    parts = []
+    for c, n in enumerate(sizes):
+        if blobs:
+            cx, cy = rng.uniform(20, 80, 2)
+            x, y = rng.normal(cx, 3.0, n), rng.normal(cy, 3.0, n)
+        elif ring:
+            a = rng.uniform(0, 2 * np.pi, n)
+            x, y = QX + 30 * np.cos(a), QY + 30 * np.sin(a)
+        else:
+            x, y = rng.uniform(0, 100, n), rng.uniform(0, 100, n)
+        if grid:
+            x, y = np.round(x / grid) * grid, np.round(y / grid) * grid
+        ids = rng.choice(10 ** 6, n, replace=False) + c * 10 ** 6
+        p = pd.DataFrame({"category": c, "doc_id": ids, "x": x, "y": y,
+                          "dq": np.sqrt((x - QX) ** 2 + (y - QY) ** 2)})
+        p = p.sort_values(["dq", "doc_id"]).reset_index(drop=True)
+        p["rn"] = np.arange(1, n + 1, dtype=np.int32)
+        parts.append(p)
+    df = pd.concat(parts, ignore_index=True).sample(frac=1, random_state=0)
+    df.insert(0, "query_id", 7)
+    if str_ids:
+        df["doc_id"] = [f"d{v:08d}" for v in df["doc_id"]]
+    return df
+
+
+def _refine(df, m, k, L, budget=1 << 22, str_ids=False):
+    schema = to_arrow_schema(ngq._refine_schema(
+        m, T.StringType() if str_ids else T.LongType()))
+    f = ngq._make_refine(m, k, L, {c: 10 ** 9 for c in range(m)}, budget,
+                         schema)
+    out = f(pa.Table.from_pandas(df, preserve_index=False))
+    assert out.schema == schema
+    return out.to_pandas()
+
+
+def _assert_same_groups(got, exp, m):
+    assert len(got) == len(exp)
+    for c in range(m):
+        assert got[f"c{c}_id"].tolist() == exp[f"c{c}_id"].tolist()
+    assert np.array_equal(got["min_dist"].to_numpy(),
+                          exp["min_dist"].to_numpy())
+
+
+@pytest.mark.parametrize("m,n,k,kw", [
+    (2, 700, 10, {}),
+    (2, 600, 10, {"ring": True}),
+    (3, 90, 10, {"blobs": True}),
+    (3, 90, 10, {"blobs": True, "grid": 1.0}),
+    (3, 80, 25, {"ring": True, "grid": 2.0, "str_ids": True}),
+    (4, 28, 10, {"blobs": True, "grid": 0.5}),
+])
+def test_refine_equals_dense_bruteforce(m, n, k, kw):
+    rng = np.random.default_rng(m * 1000 + n + k)
+    df = _cands(rng, [n] * m, **kw)
+    got = _refine(df, m, k, L=n, str_ids=kw.get("str_ids", False))
+    exp = ngq_bruteforce(df, QX, QY, m, k)
+    _assert_same_groups(got, exp, m)
+    assert (got["group_rank"] == np.arange(1, k + 1)).all()
+    assert not got["capped"].any()
+    # exact iff the kth score is within every (truncated) list's L-th dq
+    last_dq = df.groupby("category")["dq"].max()
+    assert got["exact"].all() == bool((got["min_dist"].max()
+                                       <= last_dq).all())
+
+
+@pytest.mark.parametrize("m,sizes", [(2, (900, 700)), (3, (80, 70, 60)),
+                                     (4, (24, 30, 20, 26))])
+def test_group_topk_spans_blocks_with_ties(m, sizes):
+    """The enumeration core alone, with integer-valued pairwise matrices
+    (metric-agnostic; every score is tied with many others), over a
+    product of several _BLOCK_CELLS blocks."""
+    assert np.prod(sizes) > 4 * ngq._BLOCK_CELLS
+    rng = np.random.default_rng(sum(sizes))
+    D = {(i, j): rng.integers(0, 6, (sizes[i], sizes[j])).astype(float)
+         for i, j in itertools.combinations(range(m), 2)}
+    # unsorted dq (the geodetic refine passes arrival order); category 0
+    # nearest the query, so most inter terms come from the swept axis
+    dqs = [rng.integers(0 if c == 0 else 3, 6 if c == 0 else 9,
+                        s).astype(float) for c, s in enumerate(sizes)]
+    ids = [rng.choice(10 ** 6, s, replace=False) for s in sizes]
+    top_ids, top = ngq.group_topk(D, dqs, ids, 12)
+
+    def ax(a, *axes):
+        shape = [1] * m
+        for x, s in zip(axes, a.shape):
+            shape[x] = s
+        return a.reshape(shape)
+
+    inner = np.zeros(sizes)
+    for (i, j), Dij in D.items():
+        inner = np.maximum(inner, ax(Dij, i, j))
+    inter = np.full(sizes, np.inf)
+    for c in range(m):
+        inter = np.minimum(inter, ax(dqs[c], c))
+    score = (inner + inter).ravel()
+    idx = np.unravel_index(np.arange(score.size), sizes)
+    member = [ids[c][idx[c]] for c in range(m)]
+    order = np.lexsort(tuple(member[::-1]) + (score,))[:12]
+    assert np.array_equal(top, score[order])
+    for c in range(m):
+        assert top_ids[c].tolist() == member[c][order].tolist()
+
+
+def test_refine_empty_category_gives_no_groups():
+    df = _cands(np.random.default_rng(1), [40, 0, 30])
+    got = _refine(df, 3, 10, L=40)
+    assert len(got) == 0
+
+
+def test_refine_budget_cap_flags_capped_and_inexact():
+    """Past the budget each list is cut to its first budget^(1/m) members
+    by dq (the product stays under the theta threshold, so nothing else
+    prunes) and the answer is flagged capped and inexact."""
+    m, k, budget = 3, 5, 512
+    df = _cands(np.random.default_rng(2), [15, 15, 15])
+    got = _refine(df, m, k, L=15, budget=budget)
+    assert got["capped"].all() and not got["exact"].any()
+    per_cap = max(int(budget ** (1.0 / m)), k)
+    exp = ngq_bruteforce(df[df["rn"] <= per_cap], QX, QY, m, k)
+    _assert_same_groups(got, exp, m)

@@ -106,8 +106,8 @@ def main() -> int:
     p = plan_of(ngq)
     sections.append(("NGQ", p))
     check("ngq: candidate join is broadcast", "BroadcastHashJoin" in p)
-    check("ngq: refine runs in Arrow (FlatMapGroupsInPandas)",
-          "FlatMapGroupsInPandas" in p)
+    check("ngq: refine runs in Arrow (FlatMapGroupsInArrow)",
+          "FlatMapGroupsInArrow" in p)
     check("ngq: no doc-side sort-merge", "SortMergeJoin" not in p)
     ngq_exchanges = re.findall(r"Exchange hashpartitioning\(([^)]+)\)", p)
     check("ngq: every row shuffle is keyed by query_id (doc side never "
