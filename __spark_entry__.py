@@ -143,10 +143,10 @@ def _q_tile_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_poly_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Polygon rasterization (tiles.polygon_cover): every tile whose
-    CENTER is inside each fixture triangle, via the PNPOLY Arrow UDF
-    over bbox-cover candidates. The oracle replays PNPOLY edge-by-edge
-    with the SAME (i, j) operand order and division form, so the
-    even-odd decision is bit-identical — no convexity shortcut."""
+    CENTER is inside each fixture triangle, via the Column PNPOLY fold
+    (geom.pnpoly) over bbox-cover candidates. The oracle replays PNPOLY
+    edge-by-edge with the SAME (i, j) operand order and division form,
+    so the even-odd decision is bit-identical — no convexity shortcut."""
     import pandas as pd
 
     from mbrngq_spark.operators.geodetic import geodetic_polygon_cover
@@ -373,13 +373,12 @@ def _q_poly_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_spatial_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Part-tagged union: 'driver' = pandas-planned cover + Arrow-UDF
-    refine (pip.point_in_polygon_join); 'dist' = fully distributed twin
-    (JVM sequence/explode cover + Column PNPOLY fold,
-    pip.point_in_polygon_join_distributed) — same membership, both
-    value-checked against the cross-product triangle oracle."""
+    """Part-tagged union: pip.point_in_polygon_join (bbox cover +
+    Column PNPOLY fold) over 'driver' = pandas polygons (cover
+    broadcast) and 'dist' = a polygon DataFrame (AQE picks the cover
+    join) — same membership, both value-checked against the
+    cross-product triangle oracle."""
     import pandas as pd
-    from mbrngq_spark.operators.pip import point_in_polygon_join_distributed
     docs_geo = H.load_docs_geo(spark, sf_dir)
     polys = pd.DataFrame({
         "poly_id": [t[0] for t in H.TRIANGLES],
@@ -390,7 +389,7 @@ def _q_spatial_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select(F.lit("driver").alias("part"), "poly_id", "doc_id"))
     polys_df = spark.createDataFrame(
         polys, "poly_id long, vx array<double>, vy array<double>")
-    dist = (point_in_polygon_join_distributed(docs_geo, polys_df)
+    dist = (point_in_polygon_join(spark, docs_geo, polys_df)
             .select(F.lit("dist").alias("part"), "poly_id", "doc_id"))
     # spherical parts: same lat/lon corpus mapping as the geo_* gates;
     # 'geo' = pandas polygons (celled cover broadcast), 'geo_dist' = the
@@ -3745,8 +3744,8 @@ def oracle_sql() -> dict[str, str]:
         GROUP BY CUBE (l_returnflag, l_linestatus)
     """
 
-    # poly_cover: PNPOLY replayed edge-by-edge with the engine kernel's
-    # exact (i, j) pairs and division form (pip._pip_kernel) over the
+    # poly_cover: PNPOLY replayed edge-by-edge with the engine fold's
+    # exact (i, j) pairs and division form (geom.pnpoly) over the
     # same quantized bbox candidate tiles and center arithmetic
     n_tile = 1 << H.TILE_RES
     _wx = H.CFG.width / n_tile

@@ -3,7 +3,8 @@
 Every formula mirrors the reference exactly (SURVEY.md §2.3), expressed as
 native ``pyspark.sql.functions`` Column expressions so whole-stage codegen
 handles them JVM-side, plus NumPy twins for use inside the vectorized
-refine UDFs. No Python row-at-a-time UDFs anywhere.
+refine UDFs. No Python row-at-a-time UDFs anywhere. ``pnpoly`` is the one
+planar point-in-polygon test (PIP join, polygon rasterization, overlay).
 
 Reference semantics (file:line into /root/reference):
 - euclidean point distance, float64:            mbR-NGQ/Data/Point.cs:67-75
@@ -85,6 +86,32 @@ def point_in_rect(px: Column, py: Column,
 def diagonal(xmin: Column, ymin: Column, xmax: Column, ymax: Column) -> Column:
     """MBR diagonal length (RTree.cs:888-896)."""
     return dist_point(xmin, ymin, xmax, ymax)
+
+
+def pnpoly(px: Column, py: Column, vx: Column, vy: Column) -> Column:
+    """Even-odd containment of (px, py) in the ring (vx, vy) — PNPOLY as
+    one ``F.aggregate`` fold over edge indices; edge i pairs vertex i
+    with vertex (i-1+n)%n. The crossing x keeps the operand order of
+    ``oracle.point_in_polygon`` and the ``poly_cover`` oracle SQL,
+    (xj-xi)·(py-yi) / (yj-yi) + xi, so every decision is bit-identical
+    to them. ``try_divide`` keeps horizontal edges from raising under
+    ANSI; ``crosses`` is false for them, so the NULL crossing never
+    decides a flip (false & NULL → false)."""
+    n = F.size(vx)
+
+    def flip(i):
+        j = F.pmod(i - 1 + n, n)
+        xi = F.element_at(vx, (i + 1).cast("int"))
+        xj = F.element_at(vx, (j + 1).cast("int"))
+        yi = F.element_at(vy, (i + 1).cast("int"))
+        yj = F.element_at(vy, (j + 1).cast("int"))
+        crosses = (yi > py) != (yj > py)
+        xcut = F.try_divide((xj - xi) * (py - yi), yj - yi) + xi
+        return F.when(crosses & (px < xcut), 1).otherwise(0)
+
+    flips = F.aggregate(F.sequence(F.lit(0), n - 1), F.lit(0),
+                        lambda acc, i: acc + flip(i))
+    return F.pmod(flips, F.lit(2)) == 1
 
 
 # ---------------------------------------------------------------------------

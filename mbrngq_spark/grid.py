@@ -18,7 +18,7 @@ table) and in-UDF use.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mbrngq_spark.config import DEFAULT, EngineConfig
@@ -89,6 +89,31 @@ def cell_from_indices(ix: Column, iy: Column) -> Column:
     """(ix, iy) grid indices → Morton cell id (callers clip to [0, 2^res))."""
     return _spread_bits(ix).bitwiseOR(F.shiftleft(_spread_bits(iy), 1)) \
         .cast("long")
+
+
+def bbox_cover(polys: DataFrame, res: int, cfg: EngineConfig = DEFAULT,
+               prefix: str = "") -> DataFrame:
+    """Covering cells of each polygon row's vertex bbox: reads the vertex
+    arrays ``{prefix}vx``/``{prefix}vy``, adds the bbox as ``{prefix}x0``,
+    ``{prefix}x1``, ``{prefix}y0``, ``{prefix}y1`` and emits one row per
+    grid cell the closed bbox overlaps at ``res`` — ``ix``, ``iy`` and
+    the Morton ``cell``. Corner bins come from the clamped ``quantize``,
+    and the explode is bounded by the bbox area and stays JVM-side; the
+    vertex arrays ride along, so a refine needs no join back."""
+    x0, x1, y0, y1 = (f"{prefix}{c}" for c in ("x0", "x1", "y0", "y1"))
+    p = (polys.withColumn(x0, F.array_min(f"{prefix}vx"))
+         .withColumn(x1, F.array_max(f"{prefix}vx"))
+         .withColumn(y0, F.array_min(f"{prefix}vy"))
+         .withColumn(y1, F.array_max(f"{prefix}vy")))
+
+    def bins(lo, hi, origin, extent):
+        return F.explode(F.sequence(
+            quantize(F.col(lo), origin, extent, res),
+            quantize(F.col(hi), origin, extent, res)))
+
+    return (p.withColumn("ix", bins(x0, x1, cfg.min_x, cfg.width))
+            .withColumn("iy", bins(y0, y1, cfg.min_y, cfg.height))
+            .withColumn("cell", cell_from_indices(F.col("ix"), F.col("iy"))))
 
 
 def cell_parent(cell: Column, levels: int = 1) -> Column:

@@ -563,8 +563,7 @@ def geodetic_point_in_polygon(docs_ll: DataFrame,
                               polys: pd.DataFrame | DataFrame,
                               id_col: str = "doc_id") -> DataFrame:
     """Point-in-polygon on the lat/lon sphere — the spherical analog of
-    pip.point_in_polygon_join, completing the geodetic tier's parity
-    with the planar one.
+    pip.point_in_polygon_join.
 
     Contract: polygon edges are straight lines in (lat, lon') where
     lon' is the longitude WRAP-NORMALIZED to the polygon's own frame —
@@ -580,12 +579,14 @@ def geodetic_point_in_polygon(docs_ll: DataFrame,
 
     ``polys``: (poly_id, vlat, vlon) vertex lists — a pandas frame (its
     celled cover is broadcast, so the corpus is never shuffled) or a
-    DataFrame of arbitrary size (AQE picks the cover join). Every
-    per-polygon derivation (anchor, wrap normalization, bbox, covering
-    cells — _geo_poly_cover) is a Column expression; docs join the cover
-    on their one cell (_wrap_cell_col), then the wrap-normalized bbox
-    filter and the PNPOLY fold (``_pnpoly_flips``) decide — no Python
-    anywhere in the plan."""
+    DataFrame of arbitrary size (AQE picks the cover join) — the rule
+    pip.point_in_polygon_join follows too. Every per-polygon derivation
+    (anchor, wrap normalization, bbox, covering cells — _geo_poly_cover)
+    is a Column expression; docs join the cover on their one cell
+    (_wrap_cell_col), then the wrap-normalized bbox filter and the
+    PNPOLY fold (``_pnpoly_flips``, whose divide-first crossing the
+    ``_geo_pip_pred_sql`` oracle pins) decide — no Python anywhere in
+    the plan."""
     small = not isinstance(polys, DataFrame)
     if small:
         polys = docs_ll.sparkSession.createDataFrame(
@@ -688,9 +689,9 @@ def geodetic_polygon_cover(polygons_df: DataFrame, res: int = 6
     """Spherical vector→raster: one row per (polygon, tile) for every
     lat/lon-grid tile whose CENTER is inside the spherical polygon
     (even-odd in the polygon's wrap-normalized frame) — the geodetic
-    twin of tiles.polygon_cover, and fully distributed over the polygon
-    table (the planar one is driver-planned). Candidate tiles come from
-    the shared celled cover; the refine is the tile-CENTER PNPOLY fold.
+    twin of tiles.polygon_cover (which takes pandas polygons), fully
+    distributed over the polygon table. Candidate tiles come from the
+    shared celled cover; the refine is the tile-CENTER PNPOLY fold.
     Pure Column end to end — no UDF, no shuffle beyond the explode.
 
     Returns (poly_id, cell, iy, ix) with ix the wrapped grid column."""
@@ -894,8 +895,7 @@ def geodetic_segment_dist_m(plat: Column, plon: Column,
 
 def geodetic_polyline_join(docs_ll: DataFrame, lines_df: DataFrame,
                            radius_m: float, res: int = 5,
-                           id_col: str = "doc_id",
-                           broadcast_cover: bool = True) -> DataFrame:
+                           id_col: str = "doc_id") -> DataFrame:
     """Spherical corridor join: every doc within ``radius_m`` of each
     polyline — (line_id, doc_id, dist_m), dist_m = 2-dp-rounded min
     over the line's segments; the filter compares the ROUNDED value
@@ -967,8 +967,7 @@ def geodetic_polyline_join(docs_ll: DataFrame, lines_df: DataFrame,
     d = geodetic_segment_dist_m(F.col("lat"), F.col("lon"),
                                 F.col("alat"), F.col("alon"),
                                 F.col("blat"), F.col("blon"))
-    return (docs_c.join(F.broadcast(cover) if broadcast_cover else cover,
-                        "cell")
+    return (docs_c.join(F.broadcast(cover), "cell")
             .withColumn("__d", d)
             .groupBy("line_id", "doc_id")
             .agg(F.round(F.min("__d"), 2).alias("dist_m"))

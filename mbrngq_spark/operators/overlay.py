@@ -13,16 +13,16 @@ measure-zero assumption as the PNPOLY tier):
 (if no edges cross, one polygon inside the other ⇒ EVERY vertex inside
 ⇒ testing one suffices). Edge crossing is four orientation signs —
 pure multiply/subtract Column math, bit-identical across engines; the
-containment fallback is the PIP tier's even-odd fold.
+containment fallback is the PIP join's even-odd fold (``geom.pnpoly``).
 
 Shape at scale: both polygon tables explode to the covering cells of
-their bboxes (the `point_in_polygon_join_distributed` prune), one
-equi-join on the cell key, pair-dedup via min-cell (a bbox-overlapping
-pair meets in EVERY shared cover cell — the refine must run once, so
-pairs are kept only where the join cell equals the pair's minimum
-shared cell: pure arithmetic, no distinct pass), then the edge/PNPOLY
-refine as one nested fold. Vertex arrays ride the cover rows (small-
-polygon assumption, as in the PIP prune).
+their bboxes (``grid.bbox_cover``, the PIP join's prune), one
+equi-join on the cell key (the ``a`` cover broadcast), pair-dedup via
+min-cell (a bbox-overlapping pair meets in EVERY shared cover cell — the
+refine must run once, so pairs are kept only where the join cell equals
+the pair's minimum shared cell: pure arithmetic, no distinct pass), then
+the edge/PNPOLY refine as one nested fold. Vertex arrays ride the cover
+rows (small-polygon assumption, as in the PIP prune).
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mbrngq_spark import grid
+from mbrngq_spark import geom, grid
 from mbrngq_spark.config import DEFAULT, EngineConfig
 
 
@@ -65,26 +65,6 @@ def _edges_cross(avx: str, avy: str, bvx: str, bvy: str) -> Column:
         F.sequence(F.lit(0), na - 1),
         lambda i: F.exists(F.sequence(F.lit(0), nb - 1),
                            lambda j: cross_one(i, j)))
-
-
-def _pnpoly_arrays(px: Column, py: Column, vx: str, vy: str) -> Column:
-    """Even-odd containment of (px, py) in the (vx, vy) ring — the PIP
-    tier's fold (pip.py:123-134) parameterized by array column names."""
-    n = F.size(vx)
-
-    def flip(i):
-        j = F.pmod(i - 1 + n, n)
-        xi = F.element_at(F.col(vx), (i + 1).cast("int"))
-        xj = F.element_at(F.col(vx), (j + 1).cast("int"))
-        yi = F.element_at(F.col(vy), (i + 1).cast("int"))
-        yj = F.element_at(F.col(vy), (j + 1).cast("int"))
-        crosses = (yi > py) != (yj > py)
-        xcut = (xj - xi) * F.try_divide(py - yi, yj - yi) + xi
-        return F.when(crosses & (px < xcut), 1).otherwise(0)
-
-    flips = F.aggregate(F.sequence(F.lit(0), n - 1), F.lit(0),
-                        lambda acc, i: acc + flip(i))
-    return F.pmod(flips, F.lit(2)) == 1
 
 
 def polygon_measures(polys: DataFrame, id_col: str = "poly_id"
@@ -135,33 +115,22 @@ def polygon_measures(polys: DataFrame, id_col: str = "poly_id"
 def polygon_intersects_join(polys_a: DataFrame, polys_b: DataFrame,
                             res: int | None = None,
                             cfg: EngineConfig = DEFAULT,
-                            a_id: str = "a_id", b_id: str = "b_id",
-                            broadcast_a: bool = True) -> DataFrame:
+                            a_id: str = "a_id", b_id: str = "b_id"
+                            ) -> DataFrame:
     """(a_id, b_id) for every intersecting polygon pair. Inputs carry
     (<id>, vx array<double>, vy array<double>); both tables arbitrary
-    size and fully distributed."""
+    size and fully distributed (the ``a`` cover is broadcast)."""
     res = res or cfg.index_res
 
     def cover(df, idc, pre):
-        p = (df.select(F.col(idc), F.col("vx").alias(f"{pre}vx"),
-                       F.col("vy").alias(f"{pre}vy"))
-             .withColumn(f"{pre}x0", F.array_min(f"{pre}vx"))
-             .withColumn(f"{pre}x1", F.array_max(f"{pre}vx"))
-             .withColumn(f"{pre}y0", F.array_min(f"{pre}vy"))
-             .withColumn(f"{pre}y1", F.array_max(f"{pre}vy")))
-        ix0 = grid.quantize(F.col(f"{pre}x0"), cfg.min_x, cfg.width, res)
-        ix1 = grid.quantize(F.col(f"{pre}x1"), cfg.min_x, cfg.width, res)
-        iy0 = grid.quantize(F.col(f"{pre}y0"), cfg.min_y, cfg.height, res)
-        iy1 = grid.quantize(F.col(f"{pre}y1"), cfg.min_y, cfg.height, res)
-        return (p.withColumn("__ix", F.explode(F.sequence(ix0, ix1)))
-                .withColumn("__iy", F.explode(F.sequence(iy0, iy1)))
-                .withColumn("cell", grid.cell_from_indices(
-                    F.col("__ix"), F.col("__iy")))
-                .drop("__ix", "__iy"))
+        return grid.bbox_cover(
+            df.select(F.col(idc), F.col("vx").alias(f"{pre}vx"),
+                      F.col("vy").alias(f"{pre}vy")),
+            res, cfg, prefix=pre).drop("ix", "iy")
 
     ca = cover(polys_a, a_id, "a_")
     cb = cover(polys_b, b_id, "b_")
-    cand = (cb.join(F.broadcast(ca) if broadcast_a else ca, "cell")
+    cand = (cb.join(F.broadcast(ca), "cell")
             # exact bbox overlap, then refine each pair ONCE: only in the
             # pair's minimum SHARED cover cell (= cell of the overlap
             # bbox's min corner — both covers contain it by construction)
@@ -177,6 +146,8 @@ def polygon_intersects_join(polys_a: DataFrame, polys_b: DataFrame,
 
     first = lambda arr: F.element_at(F.col(arr), 1)  # noqa: E731
     hit = (_edges_cross("a_vx", "a_vy", "b_vx", "b_vy")
-           | _pnpoly_arrays(first("b_vx"), first("b_vy"), "a_vx", "a_vy")
-           | _pnpoly_arrays(first("a_vx"), first("a_vy"), "b_vx", "b_vy"))
+           | geom.pnpoly(first("b_vx"), first("b_vy"), F.col("a_vx"),
+                         F.col("a_vy"))
+           | geom.pnpoly(first("a_vx"), first("a_vy"), F.col("b_vx"),
+                         F.col("b_vy")))
     return cand.filter(hit).select(a_id, b_id)

@@ -13,11 +13,12 @@ groupBy instead of recursion).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mbrngq_spark import grid
+from mbrngq_spark import geom, grid
 from mbrngq_spark.config import DEFAULT, EngineConfig
+from mbrngq_spark.operators.pip import point_in_polygon_join, polygons_df
 
 
 def assign_tiles(docs_geo: DataFrame, res: int | None = None,
@@ -42,6 +43,12 @@ def tile_rollup(docs_geo: DataFrame, res: int | None = None,
                  F.max("x").alias("xmax"), F.max("y").alias("ymax")))
 
 
+def _tile_id(res: int) -> Column:
+    """Row-major ``tile_id`` of the grid-index columns ``ix``/``iy``."""
+    return F.shiftleft(F.col("iy"), res).bitwiseOR(F.col("ix")) \
+        .cast("long").alias("tile_id")
+
+
 def tile_cover(spark: SparkSession, rects: pd.DataFrame,
                res: int | None = None,
                cfg: EngineConfig = DEFAULT) -> DataFrame:
@@ -57,7 +64,9 @@ def tile_cover(spark: SparkSession, rects: pd.DataFrame,
     quantize clamp would otherwise pin them to boundary tiles — false
     coverage); the oracle SQL mirrors the same WHERE."""
     res = cfg.tile_res if res is None else res
-    r = spark.createDataFrame(rects).filter(
+    r = spark.createDataFrame(
+        rects, "rect_id long, xmin double, ymin double, xmax double, "
+        "ymax double").filter(
         (F.col("xmax") >= F.lit(cfg.min_x))
         & (F.col("xmin") <= F.lit(cfg.min_x + cfg.width))
         & (F.col("ymax") >= F.lit(cfg.min_y))
@@ -72,8 +81,7 @@ def tile_cover(spark: SparkSession, rects: pd.DataFrame,
                 F.explode(F.sequence("ix0", "ix1")).alias("ix"))
         .select("rect_id", "ix",
                 F.explode(F.sequence("iy0", "iy1")).alias("iy")))
-    tile = F.shiftleft(F.col("iy"), res).bitwiseOR(F.col("ix")).cast("long")
-    return out.select("rect_id", tile.alias("tile_id"), "ix", "iy")
+    return out.select("rect_id", _tile_id(res), "ix", "iy")
 
 
 def tile_vector_assignment(spark: SparkSession, docs_geo: DataFrame,
@@ -81,8 +89,6 @@ def tile_vector_assignment(spark: SparkSession, docs_geo: DataFrame,
                            cfg: EngineConfig = DEFAULT) -> DataFrame:
     """raster↔vector: per (polygon, tile), how many docs of the polygon fall
     in the tile — PIP join then tile rollup (north_rule 'tile assignments')."""
-    from mbrngq_spark.operators.pip import point_in_polygon_join
-
     res = cfg.tile_res if res is None else res
     inside = point_in_polygon_join(spark, docs_geo, polygons, cfg=cfg)
     return (inside
@@ -98,55 +104,20 @@ def polygon_cover(spark: SparkSession, polygons: pd.DataFrame,
     """Vector→raster for POLYGON geometries: one row per (polygon, tile)
     for every tile whose CENTER lies inside the polygon (even-odd rule —
     arbitrary concave polygons). Candidate tiles come from the polygon's
-    bbox through tile_cover (bounded JVM explode); the refine is the
-    same vectorized PNPOLY Arrow UDF the PIP join uses, over the tile
-    centers. Map-only end to end — no shuffle.
+    bbox cover (``grid.bbox_cover``, bounded JVM explode); the refine is
+    the PIP join's PNPOLY fold (``geom.pnpoly``) over the tile centers.
+    Map-only, pure Column end to end — no shuffle, no Python.
 
     ``polygons``: pandas (poly_id, vx: list[float], vy: list[float]).
     Returns (poly_id, tile_id, ix, iy)."""
-    import numpy as np
-    from pyspark.sql import types as T
-
-    from mbrngq_spark.operators.pip import _pip_kernel
-
     res = cfg.tile_res if res is None else res
-    bboxes = pd.DataFrame({
-        "rect_id": polygons["poly_id"],
-        "xmin": [min(v) for v in polygons["vx"]],
-        "ymin": [min(v) for v in polygons["vy"]],
-        "xmax": [max(v) for v in polygons["vx"]],
-        "ymax": [max(v) for v in polygons["vy"]],
-    })
-    cover = tile_cover(spark, bboxes, res, cfg) \
-        .withColumnRenamed("rect_id", "poly_id")
     n = 1 << res
     wx, wy = cfg.width / n, cfg.height / n
     cx = F.lit(cfg.min_x) + (F.col("ix") + 0.5) * F.lit(wx)
     cy = F.lit(cfg.min_y) + (F.col("iy") + 0.5) * F.lit(wy)
-
-    polys = {int(r.poly_id): (np.asarray(r.vx, dtype=np.float64),
-                              np.asarray(r.vy, dtype=np.float64))
-             for r in polygons.itertuples(index=False)}
-
-    @F.pandas_udf(T.BooleanType())
-    def center_in(poly_id: pd.Series, x: pd.Series,
-                  y: pd.Series) -> pd.Series:
-        px = x.to_numpy(np.float64)
-        py = y.to_numpy(np.float64)
-        pid = poly_id.to_numpy()
-        out = np.zeros(len(px), dtype=bool)
-        for p, (vx, vy) in polys.items():
-            mask = pid == p
-            if mask.any():
-                out[mask] = _pip_kernel(px[mask], py[mask], vx, vy)
-        return pd.Series(out)
-
-    return (cover.withColumn("__cx", cx).withColumn("__cy", cy)
-            .filter(center_in(F.col("poly_id"), F.col("__cx"),
-                              F.col("__cy")))
-            .select("poly_id", "tile_id",
-                    F.col("ix").cast("long").alias("ix"),
-                    F.col("iy").cast("long").alias("iy")))
+    return (grid.bbox_cover(polygons_df(spark, polygons), res, cfg)
+            .filter(geom.pnpoly(cx, cy, F.col("vx"), F.col("vy")))
+            .select("poly_id", _tile_id(res), "ix", "iy"))
 
 
 def tile_distinct_pyramid(docs_geo: DataFrame, item_col: str,

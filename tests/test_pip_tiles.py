@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from mbrngq_spark import grid
 from mbrngq_spark.functions import derive
-from mbrngq_spark.operators.pip import point_in_polygon_join
+from mbrngq_spark.operators.pip import point_in_polygon_join, polygons_df
 from mbrngq_spark.operators.tiles import assign_tiles, tile_vector_assignment
 from mbrngq_spark.oracle import point_in_polygon as np_pip
 from tests.conftest import SF_DIR
@@ -50,20 +50,20 @@ def test_pip_count_sanity(spark, docs_geo):
         assert 0 < k < n
 
 
-def test_pip_distributed_equals_driver(spark, docs_geo):
-    """Distributed twin (JVM cover + Column PNPOLY fold) ≡ driver-planned
-    path on the concave fixtures — poly 0's first edge is HORIZONTAL
-    (vy 40→40), so this also proves the try_divide guard under ANSI."""
-    from mbrngq_spark.operators.pip import point_in_polygon_join_distributed
+def _pairs(df):
+    return set(map(tuple, df[["poly_id", "doc_id"]].to_numpy()))
 
-    polys_df = spark.createDataFrame(
-        POLYS, "poly_id long, vx array<double>, vy array<double>")
+
+def test_pip_distributed_equals_driver(spark, docs_geo):
+    """Pandas polygons (cover broadcast) ≡ a polygon DataFrame (AQE picks
+    the cover join) on the concave fixtures — poly 0's first edge is
+    HORIZONTAL (vy 40→40), so this also proves the try_divide guard
+    under ANSI."""
     exp = point_in_polygon_join(spark, docs_geo, POLYS).toPandas()
-    for bc in (True, False):
-        got = point_in_polygon_join_distributed(
-            docs_geo, polys_df, broadcast_cover=bc).toPandas()
-        assert (set(map(tuple, got[["poly_id", "doc_id"]].to_numpy()))
-                == set(map(tuple, exp[["poly_id", "doc_id"]].to_numpy()))), bc
+    got = point_in_polygon_join(spark, docs_geo,
+                                polygons_df(spark, POLYS)).toPandas()
+    assert _pairs(got) == _pairs(exp)
+    assert len(exp) > 0
 
 
 def test_pip_distributed_axis_aligned_rectangle(spark, docs_geo):
@@ -71,20 +71,105 @@ def test_pip_distributed_axis_aligned_rectangle(spark, docs_geo):
     division; result must equal the plain closed/open rect membership the
     even-odd rule implies (left/bottom edges in, right/top out for a CCW
     rect traversed with strict < comparisons)."""
-    from mbrngq_spark.operators.pip import point_in_polygon_join_distributed
-
     x0, x1, y0, y1 = 20.0, 60.0, 30.0, 70.0
-    polys_df = spark.createDataFrame(
-        pd.DataFrame({"poly_id": [7],
-                      "vx": [[x0, x1, x1, x0]],
-                      "vy": [[y0, y0, y1, y1]]}),
-        "poly_id long, vx array<double>, vy array<double>")
-    got = point_in_polygon_join_distributed(docs_geo, polys_df).toPandas()
+    polys_df = polygons_df(spark, pd.DataFrame(
+        {"poly_id": [7], "vx": [[x0, x1, x1, x0]], "vy": [[y0, y0, y1, y1]]}))
+    got = point_in_polygon_join(spark, docs_geo, polys_df).toPandas()
     pdf = docs_geo.toPandas()
     exp_mask = np_pip(pdf.x.to_numpy(), pdf.y.to_numpy(),
                       np.array([x0, x1, x1, x0]), np.array([y0, y0, y1, y1]))
     assert set(got["doc_id"]) == set(pdf.doc_id[exp_mask])
     assert len(got) > 0
+
+
+def _rounding_split_points(n_per_edge: int, seed: int = 11):
+    """(poly_id, x, y) points on the harness triangle edges where the two
+    roundings of the PNPOLY crossing — (xj-xi)·(py-yi)/(yj-yi) + xi and
+    (xj-xi)·((py-yi)/(yj-yi)) + xi — differ, with x at the smaller one,
+    so the even-odd decision depends on which order an engine uses."""
+    from mbrngq_spark import harness as H
+
+    rng = np.random.default_rng(seed)
+    out = []
+    for pid, *v in H.TRIANGLES:
+        vx, vy = np.array(v[0::2]), np.array(v[1::2])
+        for i in range(3):
+            j = i - 1
+            got = 0
+            while got < n_per_edge:
+                py = rng.uniform(min(vy[i], vy[j]), max(vy[i], vy[j]))
+                mul = (vx[j] - vx[i]) * (py - vy[i]) / (vy[j] - vy[i]) + vx[i]
+                div = (vx[j] - vx[i]) * ((py - vy[i]) / (vy[j] - vy[i])) \
+                    + vx[i]
+                if mul != div and py != vy[i] and py != vy[j]:
+                    out.append((pid, min(mul, div), py))
+                    got += 1
+    return out
+
+
+def test_pip_and_cover_follow_oracle_association_order(spark):
+    """Points between the two roundings of the crossing x: pandas-form
+    PIP, DataFrame-form PIP and polygon_cover all decide them exactly as
+    oracle.point_in_polygon (multiply first, then divide) does."""
+    from mbrngq_spark import harness as H
+    from mbrngq_spark.config import EngineConfig
+    from mbrngq_spark.operators.tiles import polygon_cover
+
+    tris = pd.DataFrame({"poly_id": [t[0] for t in H.TRIANGLES],
+                         "vx": [[t[1], t[3], t[5]] for t in H.TRIANGLES],
+                         "vy": [[t[2], t[4], t[6]] for t in H.TRIANGLES]})
+    pts = _rounding_split_points(4)
+    xs, ys = np.array([p[1] for p in pts]), np.array([p[2] for p in pts])
+    docs = spark.createDataFrame(
+        pd.DataFrame({"doc_id": np.arange(len(pts)), "x": xs, "y": ys}))
+    exp = {(t.poly_id, int(k)) for t in tris.itertuples()
+           for k in np.flatnonzero(np_pip(xs, ys, np.array(t.vx),
+                                          np.array(t.vy)))}
+    own = {(pid, k) for k, (pid, _, _) in enumerate(pts)}
+    assert 0 < len(exp & own) < len(own)   # both decisions occur
+    for polys in (tris, polygons_df(spark, tris)):
+        got = point_in_polygon_join(spark, docs, polys).toPandas()
+        assert _pairs(got) == exp
+
+    # polygon_cover decides tile CENTERS: a one-tile grid centred
+    # exactly on the point (h is a power of two, so every step is exact)
+    h, covers = 2.0 ** -40, None
+    sub = pts[::3]
+    for k, (pid, x, y) in enumerate(sub):
+        cfg = EngineConfig(min_x=x - h, max_x=x + h, min_y=y - h, max_y=y + h)
+        c = polygon_cover(spark, tris.iloc[[pid]], res=0, cfg=cfg) \
+            .select(F.lit(k).alias("k"))
+        covers = c if covers is None else covers.unionByName(c)
+    got = {r.k for r in covers.collect()}
+    assert got == {k for k, (pid, _, _) in enumerate(sub)
+                   if (pid, 3 * k) in exp}
+    assert 0 < len(got) < len(sub)
+
+
+def test_pip_empty_polygons_returns_no_rows(spark, docs_geo):
+    assert point_in_polygon_join(spark, docs_geo, POLYS.iloc[:0]).count() == 0
+
+
+def test_polygon_cover_empty_polygons_returns_no_rows(spark):
+    from mbrngq_spark.operators.tiles import polygon_cover
+
+    assert polygon_cover(spark, POLYS.iloc[:0]).count() == 0
+
+
+def test_tile_cover_empty_rects_returns_no_rows(spark):
+    from mbrngq_spark import harness as H
+    from mbrngq_spark.operators.tiles import tile_cover
+
+    assert tile_cover(spark, H.rects_pdf().iloc[:0]).count() == 0
+
+
+def test_pip_and_polygon_cover_plans_have_no_python(spark, docs_geo):
+    from mbrngq_spark.operators.tiles import polygon_cover
+
+    for df in (point_in_polygon_join(spark, docs_geo, POLYS),
+               polygon_cover(spark, POLYS)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "EvalPython" not in plan
 
 
 def test_tile_vector_assignment(spark, docs_geo):
@@ -204,25 +289,6 @@ def test_polygon_cover_matches_numpy_center_oracle(spark):
                 if np_pip(np.array([cx]), np.array([cy]), vx, vy)[0]:
                     exp.add((ix, iy))
         assert got.get(p.poly_id, set()) == exp, p.poly_id
-
-
-def test_pip_distributed_salted_equals_unsalted(spark, docs_geo):
-    """The dense-cell skew guard: salt>1 on the shuffle path must not
-    change the result (cover replicated across salts, doc side hashed),
-    and the plan must key its exchanges by (cell, __salt)."""
-    from mbrngq_spark.operators.pip import point_in_polygon_join_distributed
-
-    polys_df = spark.createDataFrame(
-        POLYS, "poly_id long, vx array<double>, vy array<double>")
-    base = point_in_polygon_join_distributed(
-        docs_geo, polys_df, broadcast_cover=False).toPandas()
-    salted = point_in_polygon_join_distributed(
-        docs_geo, polys_df, broadcast_cover=False, salt=4)
-    plan = salted._jdf.queryExecution().executedPlan().toString()
-    assert "__salt" in plan
-    got = salted.toPandas()
-    assert (set(map(tuple, got[["poly_id", "doc_id"]].to_numpy()))
-            == set(map(tuple, base[["poly_id", "doc_id"]].to_numpy())))
 
 
 def test_compact_cover_roundtrip_and_reduction(spark):

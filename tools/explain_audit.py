@@ -292,16 +292,14 @@ def main() -> int:
     check("html extract: map-only (no Exchange anywhere)",
           "Exchange" not in p)
 
-    # --- distributed PIP: JVM cover + Column PNPOLY, zero Python ---------
+    # --- PIP: JVM cover + Column PNPOLY, zero Python ---------------------
     import pandas as pd
-    from mbrngq_spark.operators.pip import point_in_polygon_join_distributed
-    polys_df = spark.createDataFrame(
-        pd.DataFrame({"poly_id": [0], "vx": [[10.0, 50.0, 30.0]],
-                      "vy": [[10.0, 12.0, 50.0]]}),
-        "poly_id long, vx array<double>, vy array<double>")
-    pp = point_in_polygon_join_distributed(docs_geo, polys_df)
+    from mbrngq_spark.operators.pip import point_in_polygon_join
+    polys = pd.DataFrame({"poly_id": [0], "vx": [[10.0, 50.0, 30.0]],
+                          "vy": [[10.0, 12.0, 50.0]]})
+    pp = point_in_polygon_join(spark, docs_geo, polys)
     p = plan_of(pp, execute=True)
-    sections.append(("distributed point-in-polygon", p))
+    sections.append(("point-in-polygon (pandas polygons)", p))
     check("pip dist: cover + PNPOLY refine are pure Column math "
           "(no Python eval anywhere)", "EvalPython" not in p)
     check("pip dist: candidate join is broadcast (doc side never shuffled)",
@@ -331,6 +329,8 @@ def main() -> int:
     cc = compact_cover(pc, res=6, key_cols=["poly_id"])
     p = plan_of(cc, execute=True)
     sections.append(("cover compaction", p))
+    check("polygon cover: refine is pure Column (no Python eval)",
+          "EvalPython" not in p)
     check("compact cover: promotion is window-count only — no join "
           "anywhere in the 6-round plan", "Join" not in p)
     check("compact cover: every Exchange is keyed by (poly_id, parent)",
@@ -340,6 +340,7 @@ def main() -> int:
 
     # --- polygon overlay join: celled cover, min-cell dedup, Column refine --
     from mbrngq_spark.operators.overlay import polygon_intersects_join
+    from mbrngq_spark.operators.pip import polygons_df
     sq_s = F.lit(1.5)
     squares = docs_geo.select(
         F.col("doc_id").alias("b_id"),
@@ -347,7 +348,7 @@ def main() -> int:
                 F.col("x") - sq_s).alias("vx"),
         F.array(F.col("y") - sq_s, F.col("y") - sq_s, F.col("y") + sq_s,
                 F.col("y") + sq_s).alias("vy"))
-    ov = polygon_intersects_join(polys_df.withColumnRenamed(
+    ov = polygon_intersects_join(polygons_df(spark, polys).withColumnRenamed(
         "poly_id", "a_id"), squares)
     p = plan_of(ov, execute=True)
     sections.append(("polygon overlay join", p))
