@@ -13,6 +13,15 @@ Resolution r means 2^r bins per axis → cell ids in [0, 4^r). A cell's parent
 at resolution r-1 is ``cell >> 2`` (Morton property). Everything has a NumPy
 twin for driver-side planning (ring expansion over the small cell-stats
 table) and in-UDF use.
+
+"Which cells does this box cover" is decided in one place: ``box_cover``
+(index bounds, clipped to the grid) and its coordinate form
+``coord_box_cover`` (corner bins from the clamped ``quantize``) explode a
+row into one row per cell of its closed box, and an inverted box covers
+nothing. Range and tile covers, polygon bboxes (``bbox_cover``), KDE/IDW
+splats, 3×3 neighbourhoods and segment corridors all go through it — the
+replicate-to-every-overlapped-cell step of a grid spatial join. Its NumPy
+twin is ``range_query.covering_cells``.
 """
 
 from __future__ import annotations
@@ -91,29 +100,83 @@ def cell_from_indices(ix: Column, iy: Column) -> Column:
         .cast("long")
 
 
+Bound = str | Column  # a column name, or any Column expression
+CELLS = ("ix", "iy", "cell")
+
+
+def _box_cover(df: DataFrame, bounds: tuple[Bound, ...], res: int,
+               cfg: EngineConfig | None, names: tuple) -> DataFrame:
+    """The one grid box cover behind ``box_cover`` (``cfg`` None: index
+    bounds, clipped to the grid) and ``coord_box_cover`` (coordinate
+    bounds, binned by the clamped ``quantize``). Over named bounds the
+    Column expressions are memoized (``_memo_col``): range queries build
+    this cover on every call, and each build costs dozens of py4j calls."""
+    def build():
+        n = 1 << res
+        c = cfg or DEFAULT  # index bounds never read the domain
+
+        def axis(lo, hi, origin, extent):
+            lo, hi = (F.col(b) if isinstance(b, str) else b for b in (lo, hi))
+            if cfg is None:
+                lo, hi = F.greatest(lo, F.lit(0)), F.least(hi, F.lit(n - 1))
+            else:
+                lo, hi = (quantize(b, origin, extent, res) for b in (lo, hi))
+            # Spark's sequence counts DOWN when lo > hi: an inverted box
+            # must emit nothing, so explode a null array instead
+            return F.explode(F.when(lo <= hi, F.sequence(lo, hi)))
+
+        x0, y0, x1, y1 = bounds
+        ix, iy, cell = names
+        cols = [(ix, axis(x0, x1, c.min_x, c.width)),
+                (iy, axis(y0, y1, c.min_y, c.height))]
+        if cell:
+            cols.append((cell, cell_from_indices(F.col(ix), F.col(iy))))
+        return cols
+
+    if all(isinstance(b, str) for b in bounds):
+        cols = _memo_col(("box", bounds, res, cfg, names), build)
+    else:
+        cols = build()
+    for name, col in cols:
+        df = df.withColumn(name, col)
+    return df
+
+
+def box_cover(df: DataFrame, ix0: Bound, iy0: Bound, ix1: Bound,
+              iy1: Bound, res: int, names: tuple = CELLS) -> DataFrame:
+    """Every planar box→cells explode goes through here: one row per grid
+    cell of the CLOSED index box [ix0, ix1] × [iy0, iy1] of each row,
+    clipped to the 2^res grid. ``names`` are the output columns (ix, iy,
+    Morton cell; a None cell name skips the id). An inverted box (lo > hi
+    on either axis) or a box wholly off the grid emits no rows. The
+    explode is bounded by the box area and stays JVM-side."""
+    return _box_cover(df, (ix0, iy0, ix1, iy1), res, None, names)
+
+
+def coord_box_cover(df: DataFrame, x0: Bound, y0: Bound, x1: Bound,
+                    y1: Bound, res: int, cfg: EngineConfig = DEFAULT,
+                    names: tuple = CELLS) -> DataFrame:
+    """``box_cover`` of a coordinate box [x0, x1] × [y0, y1]: the corner
+    bins come from the clamped ``quantize`` (identical arithmetic to the
+    oracle SQL), so a box outside the domain is pinned to its boundary
+    cells; an inverted box emits no rows."""
+    return _box_cover(df, (x0, y0, x1, y1), res, cfg, names)
+
+
 def bbox_cover(polys: DataFrame, res: int, cfg: EngineConfig = DEFAULT,
                prefix: str = "") -> DataFrame:
     """Covering cells of each polygon row's vertex bbox: reads the vertex
     arrays ``{prefix}vx``/``{prefix}vy``, adds the bbox as ``{prefix}x0``,
-    ``{prefix}x1``, ``{prefix}y0``, ``{prefix}y1`` and emits one row per
-    grid cell the closed bbox overlaps at ``res`` — ``ix``, ``iy`` and
-    the Morton ``cell``. Corner bins come from the clamped ``quantize``,
-    and the explode is bounded by the bbox area and stays JVM-side; the
-    vertex arrays ride along, so a refine needs no join back."""
+    ``{prefix}x1``, ``{prefix}y0``, ``{prefix}y1`` and emits the
+    ``coord_box_cover`` rows of the closed bbox at ``res`` (``ix``, ``iy``,
+    ``cell``); the vertex arrays ride along, so a refine needs no join
+    back."""
     x0, x1, y0, y1 = (f"{prefix}{c}" for c in ("x0", "x1", "y0", "y1"))
     p = (polys.withColumn(x0, F.array_min(f"{prefix}vx"))
          .withColumn(x1, F.array_max(f"{prefix}vx"))
          .withColumn(y0, F.array_min(f"{prefix}vy"))
          .withColumn(y1, F.array_max(f"{prefix}vy")))
-
-    def bins(lo, hi, origin, extent):
-        return F.explode(F.sequence(
-            quantize(F.col(lo), origin, extent, res),
-            quantize(F.col(hi), origin, extent, res)))
-
-    return (p.withColumn("ix", bins(x0, x1, cfg.min_x, cfg.width))
-            .withColumn("iy", bins(y0, y1, cfg.min_y, cfg.height))
-            .withColumn("cell", cell_from_indices(F.col("ix"), F.col("iy"))))
+    return coord_box_cover(p, x0, y0, x1, y1, res, cfg)
 
 
 def cell_parent(cell: Column, levels: int = 1) -> Column:

@@ -46,7 +46,6 @@ def distance_join(docs_a: DataFrame, docs_b: DataFrame, eps: float,
     ``self_join=True`` joins a table with itself and returns each unordered
     pair once (a_id < b_id). Inputs carry (id_col, x, y)."""
     res = res or eps_join_res(eps, cfg)
-    n = 1 << res
 
     a = (docs_a.select(F.col(id_col).alias("a_id"),
                        F.col("x").alias("ax"), F.col("y").alias("ay"))
@@ -54,14 +53,10 @@ def distance_join(docs_a: DataFrame, docs_b: DataFrame, eps: float,
                                               res, cfg)))
     bx = grid.quantize(F.col("bx"), cfg.min_x, cfg.width, res)
     by = grid.quantize(F.col("by"), cfg.min_y, cfg.height, res)
-    neighbors = F.array(*[
-        F.when((bx + dx >= 0) & (bx + dx < n) & (by + dy >= 0) & (by + dy < n),
-               grid.cell_from_indices(bx + dx, by + dy))
-        for dx in (-1, 0, 1) for dy in (-1, 0, 1)])
-    b = (docs_b.select(F.col(id_col).alias("b_id"),
-                       F.col("x").alias("bx"), F.col("y").alias("by"))
-         .withColumn("cell", F.explode(F.filter(neighbors,
-                                                lambda c: c.isNotNull()))))
+    b = grid.box_cover(
+        docs_b.select(F.col(id_col).alias("b_id"),
+                      F.col("x").alias("bx"), F.col("y").alias("by")),
+        bx - 1, by - 1, bx + 1, by + 1, res)
 
     dist = geom.dist_point(F.col("ax"), F.col("ay"),
                            F.col("bx"), F.col("by"))

@@ -73,22 +73,12 @@ def polyline_distance_join(docs_geo: DataFrame, lines: DataFrame,
     ``lines``: DataFrame (line_id, vx: array<double>, vy: array<double>)
     — a distributed table, any size. ``docs_geo``: (id_col, x, y)."""
     res = res or eps_join_res(radius, cfg)
-    n = 1 << res
-
-    seg = polyline_segments(lines)
     r = F.lit(float(radius))
-    ix0 = grid.quantize(F.least("ax", "bx") - r, cfg.min_x, cfg.width, res)
-    ix1 = grid.quantize(F.greatest("ax", "bx") + r, cfg.min_x, cfg.width, res)
-    iy0 = grid.quantize(F.least("ay", "by") - r, cfg.min_y, cfg.height, res)
-    iy1 = grid.quantize(F.greatest("ay", "by") + r, cfg.min_y, cfg.height, res)
-    cover = (seg
-             .withColumn("ix0", ix0).withColumn("ix1", ix1)
-             .withColumn("iy0", iy0).withColumn("iy1", iy1)
-             .withColumn("ix", F.explode(F.sequence("ix0", "ix1")))
-             .withColumn("iy", F.explode(F.sequence("iy0", "iy1")))
-             .withColumn("cell", grid.cell_from_indices(F.col("ix"),
-                                                        F.col("iy")))
-             .select("line_id", "ax", "ay", "bx", "by", "cell"))
+    cover = grid.coord_box_cover(
+        polyline_segments(lines),
+        F.least("ax", "bx") - r, F.least("ay", "by") - r,
+        F.greatest("ax", "bx") + r, F.greatest("ay", "by") + r, res, cfg) \
+        .select("line_id", "ax", "ay", "bx", "by", "cell")
 
     docs = (docs_geo.select(F.col(id_col).alias("doc_id"), "x", "y")
             .withColumn("cell", grid.cell_encode(F.col("x"), F.col("y"),
@@ -148,46 +138,26 @@ def segment_crossing_join(tracks: DataFrame, lines: DataFrame,
 
     res = res or cfg.index_res
 
-    def q(col, lo, extent):
-        return grid.quantize(col, lo, extent, res)
+    def cover(df, pre):
+        """Segment rows × the cells of their bbox, kept as ``{pre}x0``…"""
+        x0, y0, x1, y1 = (f"{pre}{c}" for c in ("x0", "y0", "x1", "y1"))
+        box = (df.withColumn(x0, F.least("ax", "bx"))
+               .withColumn(y0, F.least("ay", "by"))
+               .withColumn(x1, F.greatest("ax", "bx"))
+               .withColumn(y1, F.greatest("ay", "by")))
+        return grid.coord_box_cover(box, x0, y0, x1, y1, res, cfg)
 
-    seg = polyline_segments(lines)
-    cov_l = (seg
-             .withColumn("__lx0", F.least("ax", "bx"))
-             .withColumn("__lx1", F.greatest("ax", "bx"))
-             .withColumn("__ly0", F.least("ay", "by"))
-             .withColumn("__ly1", F.greatest("ay", "by"))
-             .withColumn("__ix", F.explode(F.sequence(
-                 q(F.col("__lx0"), cfg.min_x, cfg.width),
-                 q(F.col("__lx1"), cfg.min_x, cfg.width))))
-             .withColumn("__iy", F.explode(F.sequence(
-                 q(F.col("__ly0"), cfg.min_y, cfg.height),
-                 q(F.col("__ly1"), cfg.min_y, cfg.height))))
-             .withColumn("cell", grid.cell_from_indices(F.col("__ix"),
-                                                        F.col("__iy")))
+    cov_l = (cover(polyline_segments(lines), "__l")
              .select("line_id", "seg_idx",
                      F.col("ax").alias("lax"), F.col("ay").alias("lay"),
                      F.col("bx").alias("lbx"), F.col("by").alias("lby"),
                      "__lx0", "__ly0", "cell"))
-    cov_t = (tracks
-             .withColumn("__tx0", F.least("ax", "bx"))
-             .withColumn("__tx1", F.greatest("ax", "bx"))
-             .withColumn("__ty0", F.least("ay", "by"))
-             .withColumn("__ty1", F.greatest("ay", "by"))
-             .withColumn("__ix", F.explode(F.sequence(
-                 q(F.col("__tx0"), cfg.min_x, cfg.width),
-                 q(F.col("__tx1"), cfg.min_x, cfg.width))))
-             .withColumn("__iy", F.explode(F.sequence(
-                 q(F.col("__ty0"), cfg.min_y, cfg.height),
-                 q(F.col("__ty1"), cfg.min_y, cfg.height))))
-             .withColumn("cell", grid.cell_from_indices(F.col("__ix"),
-                                                        F.col("__iy")))
-             .select(id_col, "ax", "ay", "bx", "by",
-                     "__tx0", "__ty0", "cell"))
+    cov_t = cover(tracks, "__t").select(id_col, "ax", "ay", "bx", "by",
+                                        "__tx0", "__ty0", "cell")
     cand = (cov_t.join(F.broadcast(cov_l), "cell")
-            .filter(F.col("cell") == grid.cell_from_indices(
-                q(F.greatest("__tx0", "__lx0"), cfg.min_x, cfg.width),
-                q(F.greatest("__ty0", "__ly0"), cfg.min_y, cfg.height))))
+            .filter(F.col("cell") == grid.cell_encode(
+                F.greatest("__tx0", "__lx0"), F.greatest("__ty0", "__ly0"),
+                res, cfg)))
 
     o1 = _orient(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by"),
                  F.col("lax"), F.col("lay"))

@@ -138,11 +138,9 @@ def polygon_intersects_join(polys_a: DataFrame, polys_b: DataFrame,
                     & (F.col("b_x0") <= F.col("a_x1"))
                     & (F.col("a_y0") <= F.col("b_y1"))
                     & (F.col("b_y0") <= F.col("a_y1")))
-            .filter(F.col("cell") == grid.cell_from_indices(
-                grid.quantize(F.greatest("a_x0", "b_x0"),
-                              cfg.min_x, cfg.width, res),
-                grid.quantize(F.greatest("a_y0", "b_y0"),
-                              cfg.min_y, cfg.height, res))))
+            .filter(F.col("cell") == grid.cell_encode(
+                F.greatest("a_x0", "b_x0"), F.greatest("a_y0", "b_y0"),
+                res, cfg)))
 
     first = lambda arr: F.element_at(F.col(arr), 1)  # noqa: E731
     hit = (_edges_cross("a_vx", "a_vy", "b_vx", "b_vy")

@@ -5,17 +5,22 @@ descent at :2469-2486, overlap predicate Rectangle.cs:187-199) and
 ``RTree.Contains`` (RTree.cs:2002-2070, stack traversal, containment
 predicate Rectangle.cs:209-219). Both collapse to ONE relational shape here:
 
-    docs ⋈_broadcast covering-cells(query rects)  →  exact predicate
+    docs ⋈_broadcast grid-box-cover(query rects)  →  exact predicate
 
 The cell join is the index prune (≡ subtree-intersection descent); the final
 WHERE is the exact leaf test. For point data, intersects ≡ contains ≡
 point-in-rect. Rect×rect variants are exposed for MBR inputs.
 
-Scale note: covering cells are enumerated per rect at the index resolution
-(≤ 4^res per rect, usually a handful); the doc side is never shuffled —
-pure broadcast-hash join + codegen'd filter, and the coarse-cell partition
-layout of the stored table (index.py) turns the cell filter into partition
-pruning at the scan.
+The cover is the engine's one box→cells explode (``grid.coord_box_cover``)
+over the rect frame, run JVM-side: each cover row carries its rect's
+bounds, so the exact filter needs no join back to the rects and the driver
+builds no per-rect cell list. ``covering_cells`` is its NumPy twin.
+
+Scale note: a rect covers ≤ 4^res cells at the index resolution (usually a
+handful); the doc side is never shuffled — pure broadcast-hash join +
+codegen'd filter (``tools/explain_audit.py`` asserts both), and the
+coarse-cell partition layout of the stored table (index.py) turns the cell
+filter into partition pruning at the scan.
 """
 
 from __future__ import annotations
@@ -29,10 +34,21 @@ from mbrngq_spark import geom, grid
 from mbrngq_spark.config import DEFAULT, EngineConfig
 from mbrngq_spark.operators.knn import with_cell
 
+RECT_SCHEMA = "rect_id long, xmin double, ymin double, xmax double, ymax double"
+
+
+def rects_df(spark: SparkSession, rects: pd.DataFrame) -> DataFrame:
+    """pandas (rect_id, xmin, ymin, xmax, ymax) → DataFrame with the
+    explicit ``RECT_SCHEMA`` (an empty frame gives zero rows)."""
+    return spark.createDataFrame(
+        rects[["rect_id", "xmin", "ymin", "xmax", "ymax"]], RECT_SCHEMA)
+
 
 def covering_cells(rects: pd.DataFrame, res: int,
                    cfg: EngineConfig = DEFAULT) -> pd.DataFrame:
-    """(rect_id, xmin, ymin, xmax, ymax) → exploded (rect_id, cell) covers."""
+    """(rect_id, xmin, ymin, xmax, ymax) → exploded (rect_id, cell) covers:
+    the NumPy twin of the ``grid.coord_box_cover`` rows ``range_query``
+    joins on (an inverted rect covers nothing)."""
     out_r, out_c = [], []
     n = 1 << res
     for row in rects.itertuples(index=False):
@@ -57,12 +73,10 @@ def range_query(spark: SparkSession, docs_geo: DataFrame, rects: pd.DataFrame,
 
     Returns (rect_id, doc_id, x, y)."""
     res = res or cfg.index_res
-    cover = spark.createDataFrame(covering_cells(rects, res, cfg))
-    rects_df = spark.createDataFrame(rects)
-    docs_c = with_cell(docs_geo, res, cfg)
-    return (docs_c
+    cover = grid.coord_box_cover(rects_df(spark, rects), "xmin", "ymin",
+                                 "xmax", "ymax", res, cfg).drop("ix", "iy")
+    return (with_cell(docs_geo, res, cfg)
             .join(F.broadcast(cover), "cell")
-            .join(F.broadcast(rects_df), "rect_id")
             .filter(geom.point_in_rect(F.col("x"), F.col("y"),
                                        F.col("xmin"), F.col("ymin"),
                                        F.col("xmax"), F.col("ymax")))

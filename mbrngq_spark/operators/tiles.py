@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from mbrngq_spark import geom, grid
 from mbrngq_spark.config import DEFAULT, EngineConfig
 from mbrngq_spark.operators.pip import point_in_polygon_join, polygons_df
+from mbrngq_spark.operators.range_query import rects_df
 
 
 def assign_tiles(docs_geo: DataFrame, res: int | None = None,
@@ -55,33 +56,24 @@ def tile_cover(spark: SparkSession, rects: pd.DataFrame,
     """Vector→raster coverage: one row per (rect, tile) for every tile the
     CLOSED rect overlaps — the rasterization half of raster↔vector
     assignment (tile_vector_assignment is the point-aggregation half).
-    Corner bins come from grid.quantize (clamped, identical arithmetic to
-    the SQL oracle); the explode is bounded by the coverage area, stays
-    JVM-side, and shuffles nothing.
+    The rows are the engine's one box cover (``grid.coord_box_cover``:
+    corner bins from the clamped ``quantize``, identical arithmetic to the
+    SQL oracle) over ``range_query.rects_df``; the explode is bounded by
+    the coverage area, stays JVM-side, and shuffles nothing. An inverted
+    rect (xmin > xmax or ymin > ymax) covers no tile.
 
     Rects that do not intersect the configured domain
     [min_x, min_x+width] × [min_y, min_y+height] emit ZERO rows (the
     quantize clamp would otherwise pin them to boundary tiles — false
     coverage); the oracle SQL mirrors the same WHERE."""
     res = cfg.tile_res if res is None else res
-    r = spark.createDataFrame(
-        rects, "rect_id long, xmin double, ymin double, xmax double, "
-        "ymax double").filter(
+    r = rects_df(spark, rects).filter(
         (F.col("xmax") >= F.lit(cfg.min_x))
         & (F.col("xmin") <= F.lit(cfg.min_x + cfg.width))
         & (F.col("ymax") >= F.lit(cfg.min_y))
         & (F.col("ymin") <= F.lit(cfg.min_y + cfg.height)))
-    out = (r.select(
-        "rect_id",
-        grid.quantize(F.col("xmin"), cfg.min_x, cfg.width, res).alias("ix0"),
-        grid.quantize(F.col("xmax"), cfg.min_x, cfg.width, res).alias("ix1"),
-        grid.quantize(F.col("ymin"), cfg.min_y, cfg.height, res).alias("iy0"),
-        grid.quantize(F.col("ymax"), cfg.min_y, cfg.height, res).alias("iy1"))
-        .select("rect_id", "iy0", "iy1",
-                F.explode(F.sequence("ix0", "ix1")).alias("ix"))
-        .select("rect_id", "ix",
-                F.explode(F.sequence("iy0", "iy1")).alias("iy")))
-    return out.select("rect_id", _tile_id(res), "ix", "iy")
+    return (grid.coord_box_cover(r, "xmin", "ymin", "xmax", "ymax", res, cfg)
+            .select("rect_id", _tile_id(res), "ix", "iy"))
 
 
 def tile_vector_assignment(spark: SparkSession, docs_geo: DataFrame,
@@ -176,6 +168,32 @@ def zonal_stats(spark: SparkSession, docs_geo: DataFrame,
                  F.max(nd).alias("max_docs")))
 
 
+def _radius_cover(docs_geo: DataFrame, r: float, res: int,
+                  cfg: EngineConfig) -> DataFrame:
+    """Each doc × the grid cells ``ix``/``iy`` of its box x ± r, y ± r."""
+    x, y, d = F.col("x"), F.col("y"), F.lit(r)
+    return grid.coord_box_cover(docs_geo, x - d, y - d, x + d, y + d, res,
+                                cfg, names=("ix", "iy", None))
+
+
+def _count_raster(docs_geo: DataFrame, res: int,
+                  cfg: EngineConfig) -> DataFrame:
+    """The doc-count raster: (ix, iy, n_docs) per nonempty cell."""
+    return (docs_geo
+            .select(grid.quantize(F.col("x"), cfg.min_x, cfg.width,
+                                  res).alias("ix"),
+                    grid.quantize(F.col("y"), cfg.min_y, cfg.height,
+                                  res).alias("iy"))
+            .groupBy("ix", "iy").agg(F.count(F.lit(1)).alias("n_docs")))
+
+
+def _splat3(base: DataFrame, res: int) -> DataFrame:
+    """Each raster row × its in-grid 3×3 neighbourhood ``tx``/``ty``."""
+    ix, iy = F.col("ix"), F.col("iy")
+    return grid.box_cover(base, ix - 1, iy - 1, ix + 1, iy + 1, res,
+                          names=("tx", "ty", None))
+
+
 def tile_heatmap(docs_geo: DataFrame, h: float, res: int,
                  cfg: EngineConfig = DEFAULT,
                  quant: float = 1e9) -> DataFrame:
@@ -189,8 +207,9 @@ def tile_heatmap(docs_geo: DataFrame, h: float, res: int,
     weight is quantized to int64 (round(w·quant), HALF_UP in both
     engines) BEFORE the sum, so the aggregate is exactly associative —
     shuffle order can't change it. Shape at scale: a doc emits the
-    ≤ (2h/cellw + 2)² cells of its bandwidth bbox (bounded JVM explode,
-    no Python), one map-side-combinable sum per cell — map-only + a
+    ≤ (2h/cellw + 2)² cells of its bandwidth bbox (the grid box cover,
+    ``grid.coord_box_cover``: bounded JVM explode, no Python), one
+    map-side-combinable sum per cell — map-only + a
     single keyed aggregation; per-cell int64 sums hold ~9·10^9 docs per
     cell before overflow (a per-CELL bound, not per-corpus).
 
@@ -199,19 +218,13 @@ def tile_heatmap(docs_geo: DataFrame, h: float, res: int,
     n = 1 << res
     wx, wy = cfg.width / n, cfg.height / n
     h2 = h * h  # Python-folded literal — the oracle embeds the same repr
-    qx0 = grid.quantize(F.col("x") - F.lit(h), cfg.min_x, cfg.width, res)
-    qx1 = grid.quantize(F.col("x") + F.lit(h), cfg.min_x, cfg.width, res)
-    qy0 = grid.quantize(F.col("y") - F.lit(h), cfg.min_y, cfg.height, res)
-    qy1 = grid.quantize(F.col("y") + F.lit(h), cfg.min_y, cfg.height, res)
     cx = F.lit(cfg.min_x) + (F.col("ix") + 0.5) * F.lit(wx)
     cy = F.lit(cfg.min_y) + (F.col("iy") + 0.5) * F.lit(wy)
     d2 = ((F.col("x") - F.col("__cx")) * (F.col("x") - F.col("__cx"))
           + (F.col("y") - F.col("__cy")) * (F.col("y") - F.col("__cy")))
     w = (F.lit(1.0) - F.col("__d2") / F.lit(h2)) \
         * (F.lit(1.0) - F.col("__d2") / F.lit(h2))
-    return (docs_geo
-            .withColumn("ix", F.explode(F.sequence(qx0, qx1)))
-            .withColumn("iy", F.explode(F.sequence(qy0, qy1)))
+    return (_radius_cover(docs_geo, h, res, cfg)
             .withColumn("__cx", cx).withColumn("__cy", cy)
             .withColumn("__d2", d2)
             .filter(F.col("__d2") <= F.lit(h2))
@@ -236,8 +249,9 @@ def focal_stats(docs_geo: DataFrame, res: int,
 
     Implemented as a SPLAT, not a join: the corpus collapses to the cell
     raster first (one keyed aggregation), then each nonempty cell emits
-    its ≤9 in-bounds neighbor targets via a bounded JVM sequence/explode
-    and ONE second keyed aggregation produces every focal stat — no
+    its ≤9 in-bounds neighbor targets (the grid box cover of its 3×3
+    neighbourhood, ``grid.box_cover``: a bounded JVM explode clipped to
+    the grid) and ONE second keyed aggregation produces every focal stat — no
     self-join, no driver loop. At 100 TB the first aggregation is the
     only corpus-sized stage; the splat is 9×|nonempty cells| rows.
     Empty cells inside a neighborhood contribute 0 (sum/max semantics);
@@ -246,21 +260,8 @@ def focal_stats(docs_geo: DataFrame, res: int,
     nobody reads).
 
     Returns (cell, ix, iy, focal_sum, focal_max, n_nonempty)."""
-    n = 1 << res
-    base = (docs_geo
-            .select(grid.quantize(F.col("x"), cfg.min_x, cfg.width,
-                                  res).alias("ix"),
-                    grid.quantize(F.col("y"), cfg.min_y, cfg.height,
-                                  res).alias("iy"))
-            .groupBy("ix", "iy").agg(F.count(F.lit(1)).alias("n_docs")))
-    splat = (base
-             .withColumn("tx", F.explode(F.sequence(F.col("ix") - 1,
-                                                    F.col("ix") + 1)))
-             .withColumn("ty", F.explode(F.sequence(F.col("iy") - 1,
-                                                    F.col("iy") + 1)))
-             .filter((F.col("tx") >= 0) & (F.col("tx") <= n - 1)
-                     & (F.col("ty") >= 0) & (F.col("ty") <= n - 1)))
-    return (splat.groupBy("tx", "ty")
+    return (_splat3(_count_raster(docs_geo, res, cfg), res)
+            .groupBy("tx", "ty")
             .agg(F.sum("n_docs").alias("focal_sum"),
                  F.max("n_docs").alias("focal_max"),
                  F.count(F.lit(1)).alias("n_nonempty"))
@@ -294,22 +295,11 @@ def hotspot_gi(docs_geo: DataFrame, res: int,
     Returns (cell, ix, iy, w_i, s_i, gi)."""
     n = 1 << res
     nn = float(n * n)
-    base = (docs_geo
-            .select(grid.quantize(F.col("x"), cfg.min_x, cfg.width,
-                                  res).alias("ix"),
-                    grid.quantize(F.col("y"), cfg.min_y, cfg.height,
-                                  res).alias("iy"))
-            .groupBy("ix", "iy").agg(F.count(F.lit(1)).alias("n_docs")))
+    base = _count_raster(docs_geo, res, cfg)
     glob = base.agg(
         F.sum("n_docs").cast("long").alias("total"),
         F.sum(F.col("n_docs") * F.col("n_docs")).cast("long").alias("sumsq"))
-    focal = (base
-             .withColumn("tx", F.explode(F.sequence(F.col("ix") - 1,
-                                                    F.col("ix") + 1)))
-             .withColumn("ty", F.explode(F.sequence(F.col("iy") - 1,
-                                                    F.col("iy") + 1)))
-             .filter((F.col("tx") >= 0) & (F.col("tx") <= n - 1)
-                     & (F.col("ty") >= 0) & (F.col("ty") <= n - 1))
+    focal = (_splat3(base, res)
              .groupBy("tx", "ty")
              .agg(F.sum("n_docs").cast("long").alias("s_i")))
     wx = (F.lit(3) - (F.col("tx") == 0).cast("int")
@@ -353,12 +343,7 @@ def moran_i(docs_geo: DataFrame, res: int,
     n = 1 << res
     nn = float(n * n)
     w_tot = (3 * n - 2) ** 2 - n * n
-    base = (docs_geo
-            .select(grid.quantize(F.col("x"), cfg.min_x, cfg.width,
-                                  res).alias("ix"),
-                    grid.quantize(F.col("y"), cfg.min_y, cfg.height,
-                                  res).alias("iy"))
-            .groupBy("ix", "iy").agg(F.count(F.lit(1)).alias("n_docs")))
+    base = _count_raster(docs_geo, res, cfg)
     wx = (F.lit(3) - (F.col("ix") == 0).cast("int")
           - (F.col("ix") == n - 1).cast("int"))
     wy = (F.lit(3) - (F.col("iy") == 0).cast("int")
@@ -368,15 +353,8 @@ def moran_i(docs_geo: DataFrame, res: int,
         F.sum(F.col("n_docs") * F.col("n_docs")).cast("long").alias("sumsq"),
         F.sum(F.col("n_docs") * (wx * wy - F.lit(1)).cast("long"))
         .cast("long").alias("sumxw"))
-    spl = (base
-           .withColumn("tx", F.explode(F.sequence(F.col("ix") - 1,
-                                                  F.col("ix") + 1)))
-           .withColumn("ty", F.explode(F.sequence(F.col("iy") - 1,
-                                                  F.col("iy") + 1)))
-           .filter((F.col("tx") >= 0) & (F.col("tx") <= n - 1)
-                   & (F.col("ty") >= 0) & (F.col("ty") <= n - 1)
-                   & ((F.col("tx") != F.col("ix"))
-                      | (F.col("ty") != F.col("iy")))))
+    spl = _splat3(base, res).filter((F.col("tx") != F.col("ix"))
+                                    | (F.col("ty") != F.col("iy")))
     tgt = base.select(F.col("ix").alias("tx"), F.col("iy").alias("ty"),
                       F.col("n_docs").alias("c_tgt"))
     cross = (spl.join(tgt, ["tx", "ty"])
@@ -407,7 +385,8 @@ def idw_interpolate(docs_geo: DataFrame, value_col: str, radius: float,
     overflow-free: per-cell sums hold ~2^63/(quant/smooth²) samples).
 
     Same splat shape as tile_heatmap: each doc emits the ≤(2r/cellw+2)²
-    cells of its radius bbox via bounded JVM explode — map-only plus ONE
+    cells of its radius bbox via the grid box cover
+    (``grid.coord_box_cover``, bounded JVM explode) — map-only plus ONE
     keyed aggregation, no join. Both wᵢ·vᵢ and wᵢ are quantized to int64
     (round·quant, HALF_UP both engines — weights and values are
     nonnegative) BEFORE the sums, so the aggregate is exactly
@@ -419,18 +398,12 @@ def idw_interpolate(docs_geo: DataFrame, value_col: str, radius: float,
     wx, wy = cfg.width / n, cfg.height / n
     r2 = radius * radius
     s2 = smooth * smooth
-    qx0 = grid.quantize(F.col("x") - F.lit(radius), cfg.min_x, cfg.width, res)
-    qx1 = grid.quantize(F.col("x") + F.lit(radius), cfg.min_x, cfg.width, res)
-    qy0 = grid.quantize(F.col("y") - F.lit(radius), cfg.min_y, cfg.height, res)
-    qy1 = grid.quantize(F.col("y") + F.lit(radius), cfg.min_y, cfg.height, res)
     cx = F.lit(cfg.min_x) + (F.col("ix") + 0.5) * F.lit(wx)
     cy = F.lit(cfg.min_y) + (F.col("iy") + 0.5) * F.lit(wy)
     d2 = ((F.col("x") - F.col("__cx")) * (F.col("x") - F.col("__cx"))
           + (F.col("y") - F.col("__cy")) * (F.col("y") - F.col("__cy")))
     w = F.lit(1.0) / (F.col("__d2") + F.lit(s2))
-    return (docs_geo
-            .withColumn("ix", F.explode(F.sequence(qx0, qx1)))
-            .withColumn("iy", F.explode(F.sequence(qy0, qy1)))
+    return (_radius_cover(docs_geo, radius, res, cfg)
             .withColumn("__cx", cx).withColumn("__cy", cy)
             .withColumn("__d2", d2)
             .filter(F.col("__d2") <= F.lit(r2))

@@ -120,7 +120,6 @@ def colocation_pairs(events_geo: DataFrame, eps: float, tau: int,
     from mbrngq_spark.operators.distance_join import eps_join_res
 
     res = res or eps_join_res(eps, cfg)
-    n = 1 << res
     base = (events_geo
             .select("user_id", "event_id", "te", "x", "y")
             .withColumn("__ix", grid.quantize(F.col("x"), cfg.min_x,
@@ -128,22 +127,15 @@ def colocation_pairs(events_geo: DataFrame, eps: float, tau: int,
             .withColumn("__iy", grid.quantize(F.col("y"), cfg.min_y,
                                               cfg.height, res))
             .withColumn("__tb", F.expr(f"te div {int(tau)}")))
-    a = (base
-         .withColumn("cix", F.explode(F.sequence(F.col("__ix") - 1,
-                                                 F.col("__ix") + 1)))
-         .withColumn("ciy", F.explode(F.sequence(F.col("__iy") - 1,
-                                                 F.col("__iy") + 1)))
+    ix, iy = F.col("__ix"), F.col("__iy")
+    a = (grid.box_cover(base, ix - 1, iy - 1, ix + 1, iy + 1, res)
          .withColumn("ctb", F.explode(F.sequence(F.col("__tb") - 1,
                                                  F.col("__tb") + 1)))
-         .filter((F.col("cix") >= 0) & (F.col("cix") <= n - 1)
-                 & (F.col("ciy") >= 0) & (F.col("ciy") <= n - 1))
          .select(F.col("user_id").alias("a_user"),
                  F.col("event_id").alias("a_event"),
                  F.col("te").alias("a_te"),
                  F.col("x").alias("ax"), F.col("y").alias("ay"),
-                 grid.cell_from_indices(F.col("cix"),
-                                        F.col("ciy")).alias("cell"),
-                 F.col("ctb").alias("tb")))
+                 "cell", F.col("ctb").alias("tb")))
     b = base.select(F.col("user_id").alias("b_user"),
                     F.col("event_id").alias("b_event"),
                     F.col("te").alias("b_te"),

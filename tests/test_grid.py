@@ -94,3 +94,28 @@ def test_row_major_tile_id(spark):
     got = df.select(grid.row_major_tile_id(F.col("x"), F.col("y"), res).alias("t")) \
             .toPandas()["t"].tolist()
     assert got == [0, 63]
+
+
+def test_box_cover_clips_and_drops_inverted(spark):
+    """Index-form box cover == Python enumeration of the closed box
+    clipped to the grid; inverted and off-grid boxes emit nothing."""
+    res, n = 3, 8
+    boxes = [(0, 0, 0, 2, 3), (1, -2, 5, 1, 9), (2, 7, 7, 12, 7),
+             (3, 4, 1, 2, 5), (4, 1, 6, 3, 5), (5, -4, -4, -1, 3),
+             (6, 8, 0, 9, 2), (7, -3, -3, 20, 20)]
+    df = spark.createDataFrame(
+        pd.DataFrame(boxes, columns=["b", "x0", "y0", "x1", "y1"]))
+    got = (grid.box_cover(df, "x0", "y0", "x1", "y1", res)
+           .select("b", "ix", "iy", "cell").toPandas())
+    exp = {(b, ix, iy, int(grid.np_spread_bits(np.array([ix]))[0]
+                           | (grid.np_spread_bits(np.array([iy]))[0] << 1)))
+           for b, x0, y0, x1, y1 in boxes
+           for ix in range(max(x0, 0), min(x1, n - 1) + 1)
+           for iy in range(max(y0, 0), min(y1, n - 1) + 1)}
+    assert len(got) == len(exp)
+    assert set(map(tuple, got.values.tolist())) == exp
+    # over named bounds the Column expressions are built once per session
+    cache = spark.sparkContext.__dict__["_mbrngq_colcache"]
+    size = len(cache)
+    grid.box_cover(df, "x0", "y0", "x1", "y1", res)
+    assert len(cache) == size

@@ -115,6 +115,36 @@ def test_range_query_matches_bruteforce(spark, docs_geo, docs_pdf):
         assert sorted(sub.doc_id) == sorted(exp.doc_id)
 
 
+def test_range_query_empty_rects_returns_no_rows(spark, docs_geo):
+    assert range_query(spark, docs_geo, RECTS.iloc[:0]).count() == 0
+
+
+@pytest.mark.parametrize("res", [3, 6])
+def test_range_cover_equals_numpy_twin(spark, res):
+    """The Column box cover range_query joins on == its NumPy twin
+    covering_cells (the cover perfbench's cells_per_rect probe counts),
+    including out-of-domain, straddling, zero-width and inverted rects."""
+    from mbrngq_spark import grid
+    from mbrngq_spark import harness as H
+    from mbrngq_spark.operators.range_query import covering_cells, rects_df
+
+    odd = pd.DataFrame({
+        "rect_id": [10, 11, 12, 13, 14, 15, 16],
+        "xmin": [120.0, -5.0, 33.0, 60.0, 10.0, -40.0, 0.0],
+        "ymin": [20.0, 40.0, 10.0, 10.0, 70.0, -40.0, 0.0],
+        "xmax": [130.0, 3.0, 33.0, 40.0, 20.0, 140.0, 100.0],
+        "ymax": [30.0, 45.0, 50.0, 20.0, 60.0, 140.0, 100.0],
+    })
+    rects = pd.concat([H.rects_pdf(), odd], ignore_index=True)
+    got = (grid.coord_box_cover(rects_df(spark, rects), "xmin", "ymin",
+                                "xmax", "ymax", res)
+           .select("rect_id", "cell").toPandas())
+    exp = covering_cells(rects, res)
+    assert len(got) == len(exp)
+    assert set(map(tuple, got.values)) == set(map(tuple, exp.values))
+    assert set(exp.rect_id) == set(rects.rect_id) - {13, 14}  # inverted
+
+
 @pytest.mark.parametrize("eps", [0.5, 2.0, 9.0])
 def test_distance_join_matches_bruteforce(spark, docs_geo, docs_pdf, eps):
     """Grid ε-join == quadratic filter; each unordered pair exactly once."""

@@ -267,6 +267,21 @@ def test_tile_cover_out_of_domain_rect_emits_zero_rows(spark):
     assert len(tile_cover(spark, straddle).toPandas()) > 0
 
 
+def test_tile_cover_inverted_rect_covers_nothing(spark):
+    """A rect with xmin > xmax (or ymin > ymax) covers no tile, as in the
+    oracle's generate_series(ix0, ix1) — Spark's sequence(ix0, ix1)
+    would count down and emit tiles."""
+    from mbrngq_spark.operators.tiles import tile_cover
+
+    rects = pd.DataFrame({
+        "rect_id": [0, 1, 2],
+        "xmin": [60.0, 10.0, 10.0], "ymin": [10.0, 60.0, 10.0],
+        "xmax": [40.0, 30.0, 30.0], "ymax": [30.0, 40.0, 30.0],
+    })
+    got = tile_cover(spark, rects).toPandas()
+    assert set(got["rect_id"]) == {2}
+
+
 def test_polygon_cover_matches_numpy_center_oracle(spark):
     """polygon_cover (concave polygons) == brute-force: every grid tile
     whose center the NumPy PNPOLY oracle puts inside."""

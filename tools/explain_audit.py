@@ -1,8 +1,8 @@
 """Physical-plan audit: assert the plans we claim are the plans we get.
 
 Checks, for each core operator at sf0.01:
-- kNN / NGQ candidate joins are BroadcastHashJoin (doc side never shuffled
-  before the rank window);
+- kNN / NGQ / range candidate joins are BroadcastHashJoin (doc side never
+  shuffled before the rank window);
 - the only Exchange hashing a big side is keyed by query_id(/category);
 - parquet scans carry PushedFilters / pruned ReadSchema where expected;
 - hot-path arithmetic sits inside WholeStageCodegen spans;
@@ -291,6 +291,15 @@ def main() -> int:
     sections.append(("html extraction", p))
     check("html extract: map-only (no Exchange anywhere)",
           "Exchange" not in p)
+
+    # --- range query: JVM box cover broadcast to the docs -----------------
+    from mbrngq_spark.operators.range_query import range_query
+    rq = range_query(spark, docs_geo, H.rects_pdf())
+    p = plan_of(rq, execute=True)
+    sections.append(("range query", p))
+    check("range: cover join is broadcast (doc side never shuffled)",
+          "BroadcastHashJoin" in p and "SortMergeJoin" not in p)
+    check("range: pure Column (no Python eval)", "EvalPython" not in p)
 
     # --- PIP: JVM cover + Column PNPOLY, zero Python ---------------------
     import pandas as pd
