@@ -163,7 +163,7 @@ def scaling_worker(cores: int, sf_dir: str) -> None:
         docs = spark.read.parquet(path)
         geo = docs.drop("spans")
         # queries as a DISTRIBUTED DataFrame: planning runs on executors
-        # (plan_cells_distributed) — the pandas mode's driver-side planner
+        # (knn.plan_in_executors) — the pandas mode's driver-side planner
         # loop is serial and would cap measured scaling at any core count
         qdf = query_points(spark, 20_000).repartition(4 * cores).cache()
         qdf.count()

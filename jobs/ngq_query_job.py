@@ -7,7 +7,7 @@
         --index /tmp/idx_out --n-queries 50000 --k 10 --out /tmp/ngq_out
 
 Queries are a DISTRIBUTED DataFrame: planning runs inside mapInPandas with
-the cell-stats broadcast (mbrngq_spark/operators/knn.plan_cells_distributed)
+the cell-stats broadcast (mbrngq_spark/operators/knn.plan_in_executors)
 — driver time is flat in query count, the query batch never lands on the
 driver. ``--index`` accepts either a plain parquet index directory (the
 build_index_job output) or a SnapshotTable root (``--snapshot-id`` then

@@ -4,33 +4,37 @@ next to the planar engine.
 The reference engine is planar ([0,100]², Config.cs:16-19) and so is the
 core grid; real geospatial corpora are WGS-ish lat/lon where euclidean
 degrees are wrong by cos(latitude). This module adds the spherical
-kernel and a cell-pruned kNN whose pruning is PROVABLY lossless:
+kernel and ``GEO``, the great-circle ``knn.Metric``:
 
 - ``haversine_col`` / ``np_haversine``: great-circle meters, Δλ
   normalized to [-180, 180] so the antimeridian wraps correctly.
-- ``geodetic_knn``: same two-phase shape as the planar knn_join —
-  a counts-only SAT search finds, per query, the smallest lat/lon cell
-  box holding ≥ k docs (counts are metric-free, so the planar trick
-  carries over verbatim); the per-query radius is the EXACT max
-  great-circle distance to that box (_rect_haversine_bounds — per-edge
-  analytic extremes of arccos(C·cos(φ−φ0)), antipode-inside → πR);
-  candidate cells are ALL non-empty cells whose exact rect MINDIST ≤
-  radius — evaluated over the full (C ≤ 4^res non-empty cells) × Q
-  matrix, so antimeridian neighbors are found without box-wrap logic.
-  Candidates broadcast-join the docs, exact haversine + rank finish.
+- ``plan_geo_cells``: the geodetic planner. A counts-only SAT search
+  finds, per query, the smallest lat/lon cell box holding ≥ k docs
+  (counts are metric-free, so the planar trick carries over verbatim);
+  the per-query radius is the EXACT max great-circle distance to that
+  box (_rect_haversine_bounds — per-edge analytic extremes of
+  arccos(C·cos(φ−φ0)), antipode-inside → πR), tightened per fine cell
+  from stats at the planar planner's base res (sorted by exact MINDIST,
+  the prefix holding ≥ k docs bounds the kth distance by its largest
+  exact MAXDIST); candidate cells are ALL non-empty cells whose exact
+  rect MINDIST ≤ radius — evaluated over the full (C ≤ 4^res non-empty
+  cells) × Q matrix, so antimeridian neighbors are found without
+  box-wrap logic. The radius is also the row filter before the rank
+  shuffle, so the tightening is what bounds its volume.
 
-The same exact-bounds machinery powers the whole spherical tier:
-``geodetic_range`` (radius query), ``geodetic_pairs`` (ε-self-join via a
-cell-PAIR candidate table — the planar 3×3 neighborhood is wrong on a
-lat/lon grid), ``geodetic_nearest_group`` (the flagship NGQ with the
-haversine metric), and ``geodetic_point_in_polygon`` (wrap-normalized
-PNPOLY). Each is ONE function over one candidate pipeline (bounded
-stats collect → planner → candidate join → rounded haversine), and
-each takes its queries (or polygons) as either a pandas frame — planned
-on the driver, candidates broadcast — or a Spark DataFrame — planned per
-Arrow batch in mapInPandas with the ≤ 4^res-row stats broadcast as slim
-numpy arrays (knn.plan_in_executors), joins left to AQE. Both forms give
-identical rows (pytest).
+``geodetic_knn``, ``geodetic_range`` and ``geodetic_nearest_group`` are
+the planar operators' stages run with GEO: the same bounded stats
+collect (knn.cell_counts), candidate builder (knn._join_candidates), kNN
+rank (knn._rank), top-L window and NGQ refine (ngq._nearest_group_once);
+only their column names and ``members`` string are adapted at the edge.
+Each takes its queries as either a pandas frame — planned on the driver,
+the plan broadcast — or a Spark DataFrame — planned per Arrow batch in
+mapInPandas with the ≤ 4^res-row stats broadcast as slim numpy arrays
+(knn.plan_in_executors), joins left to AQE. Both forms give identical
+rows (pytest). ``geodetic_pairs`` (ε-self-join via a cell-PAIR candidate
+table — the planar 3×3 neighborhood is wrong on a lat/lon grid) and
+``geodetic_point_in_polygon`` (wrap-normalized PNPOLY) have their own
+candidate structures.
 
 Distances are rounded to 2 dp (centimeter grain) BEFORE ranking: sin/
 cos/asin differ by ~1 ulp across libms, which is ~1e-8 m at earth
@@ -46,14 +50,13 @@ import math
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import from_arrow_schema
 
-from mbrngq_spark.config import bounded_shuffle, refine_partitions
-from mbrngq_spark.operators.knn import covering_box, plan_in_executors
-from mbrngq_spark.operators.ngq import _by_category, group_topk
+from mbrngq_spark.config import DEFAULT, EngineConfig
+from mbrngq_spark.operators.knn import Metric, _candidates, _rank, \
+    cell_counts, count_grid, covering_box, plan_in_executors
+from mbrngq_spark.operators.ngq import _nearest_group_once
 
 R_EARTH = 6_371_000.0
 
@@ -159,79 +162,96 @@ def _rect_haversine_bounds(qlat, qlon, lat0, lat1, lon0, lon1):
             R_EARTH * amax + _EPS_M)
 
 
-def plan_geo_cells(stats: pd.DataFrame, queries: pd.DataFrame, k: int,
-                   res: int, max_dist_m: float | None = None) \
-        -> pd.DataFrame:
-    """The counts-only planner: (cell, count) stats + (query_id, qlat,
-    qlon) queries → (query_id, cell) candidate pairs, losslessly
-    covering every possible great-circle top-k answer.
+def plan_geo_cells(stats: pd.DataFrame, queries: pd.DataFrame,
+                   k: int | None, res: int,
+                   max_dist_m: float | None = None, *,
+                   stats_res: int | None = None) -> pd.DataFrame:
+    """The counts-only planner: (cell, n) stats + (query_id, qlat, qlon)
+    queries → (query_id, cell, radius) rows at ``res``, losslessly
+    covering every possible great-circle top-k answer within ``radius``
+    (the row filter the candidate builder applies to the rounded dist_m).
 
     Fully vectorized over queries (the planar planner's discipline):
     one lock-step binary search over the SAT for all queries at once,
-    then one (Q, C) bounds matrix — no per-query Python loop, so large
-    query batches plan at NumPy speed (and the whole planner can run per
-    Arrow batch inside mapInPandas for distributed Q).
+    one (Q, C) bounds matrix, and one sort of (query, fine cell) pairs —
+    no per-query Python loop, so large query batches plan at NumPy speed
+    (and the whole planner can run per Arrow batch inside mapInPandas
+    for distributed Q).
+
+    ``stats`` may be at a finer ``stats_res`` (default ``res``): the k
+    bound is then tightened per fine cell, as the planar planner does
+    per cell. The k-covering box bounds the kth distance; every fine
+    cell of a res cell within that bound is sorted by exact MINDIST,
+    and the largest exact MAXDIST over the prefix holding ≥ k docs
+    bounds it again. On clustered or dense corpora the box alone
+    reaches far past the kth doc, and every row inside the radius
+    crosses the rank shuffle.
 
     ``max_dist_m`` (the radius-capped kNN contract — the spherical twin
     of the planar furthestDistance cap, RTree.cs:454-474) clamps every
     per-query radius: docs beyond the cap are excluded from the answer
-    by the caller's filter, so cells with MINDIST past cap+half-grain
-    cannot contribute — pruning stays lossless."""
-    n = 1 << res
+    by the row filter, so cells with MINDIST past cap+half-grain cannot
+    contribute — pruning stays lossless. ``k=None`` plans the range
+    query of radius ``max_dist_m`` alone (no k-covering box)."""
+    n, d = 1 << res, (stats_res or res) - res
+    nf = n << d
     dlat, dlon = 180.0 / n, 360.0 / n
-    cells = stats["cell"].to_numpy(np.int64)
-    counts = stats["count"].to_numpy(np.int64)
+    fcells = stats["cell"].to_numpy(np.int64)
+    fine = pd.DataFrame({"n": stats["n"].to_numpy(np.int64), "fcell": fcells,
+                         "cell": (fcells // nf >> d) * n
+                         + (fcells % nf >> d)})
+    by_cell = fine.groupby("cell", as_index=False)["n"].sum()
+    cells = by_cell["cell"].to_numpy(np.int64)
+    counts = by_cell["n"].to_numpy(np.int64)
     iy_all, ix_all = cells // n, cells % n
-    g = np.zeros((n, n), dtype=np.int64)
-    g[iy_all, ix_all] = counts
-    sat = np.zeros((n + 1, n + 1), dtype=np.int64)
-    sat[1:, 1:] = g.cumsum(0).cumsum(1)
-    total = int(counts.sum())
-
     lat0_all = -90.0 + iy_all * dlat
     lon0_all = -180.0 + ix_all * dlon
-
     qids = queries["query_id"].to_numpy()
     qlat = queries["qlat"].to_numpy(np.float64)
     qlon = queries["qlon"].to_numpy(np.float64)
-    nq = len(qids)
-    if nq == 0 or len(cells) == 0:
-        return pd.DataFrame({"query_id": [], "cell": []})
-    if total < k:
-        if max_dist_m is None:
-            keep = np.ones((nq, len(cells)), dtype=bool)
-        else:
-            mind, _ = _rect_haversine_bounds(
-                qlat[:, None], qlon[:, None],
-                lat0_all[None, :], lat0_all[None, :] + dlat,
-                lon0_all[None, :], lon0_all[None, :] + dlon)
-            keep = mind <= max_dist_m + _ROUND_PAD_M
-    else:
+    # (Q, C) exact-MINDIST matrix via broadcasting
+    mind, _ = _rect_haversine_bounds(
+        qlat[:, None], qlon[:, None],
+        lat0_all[None, :], lat0_all[None, :] + dlat,
+        lon0_all[None, :], lon0_all[None, :] + dlon)
+
+    cap = np.inf if max_dist_m is None else float(max_dist_m)
+    radius = np.full(len(qids), cap)
+    reach = radius + _ROUND_PAD_M     # the cap filters one rounded value
+    if k is not None and int(counts.sum()) >= k:
+        _, sat = count_grid(iy_all, ix_all, counts, n)
         cy = np.clip(((qlat + 90.0) / dlat).astype(np.int64), 0, n - 1)
         cx = np.clip(((qlon + 180.0) / dlon).astype(np.int64), 0, n - 1)
         bx0, by0, bx1, by1 = covering_box(sat, cx, cy, n, k)
-        radius = _rect_haversine_bounds(
+        kth = _rect_haversine_bounds(
             qlat, qlon,
             -90.0 + by0 * dlat, -90.0 + (by1 + 1) * dlat,
             -180.0 + bx0 * dlon, -180.0 + (bx1 + 1) * dlon)[1]
-        # Double rounding on the k-covering path: the radius bounds the
-        # kth doc's UNROUNDED distance, so the kth ROUNDED distance can be
-        # up to radius+half-grain, and a competitor that rounds into that
-        # same centimeter bucket (winning the doc_id tiebreak) sits at
-        # true distance up to radius+one full grain — pad by a FULL grain
-        # here. The max_dist_m cap filters a single rounded value, so its
-        # half-grain pad stays tight.
-        radius = radius + 2 * _ROUND_PAD_M
-        if max_dist_m is not None:
-            radius = np.minimum(radius, max_dist_m + _ROUND_PAD_M)
-        # (Q, C) exact-MINDIST matrix via broadcasting
-        mind, _ = _rect_haversine_bounds(
-            qlat[:, None], qlon[:, None],
-            lat0_all[None, :], lat0_all[None, :] + dlat,
-            lon0_all[None, :], lon0_all[None, :] + dlon)
-        keep = mind <= radius[:, None]
-    qi, ci = np.nonzero(keep)
-    return pd.DataFrame({"query_id": qids[qi], "cell": cells[ci]})
+        # every cell of the box is within the box bound, so each query's
+        # pairs hold ≥ k docs and the sorted prefix below is a k-bound
+        qi, ci = np.nonzero(mind <= kth[:, None])
+        pr = pd.DataFrame({"q": qi, "cell": cells[ci]}).merge(fine, on="cell")
+        q, fc = pr["q"].to_numpy(), pr["fcell"].to_numpy()
+        fy, fx = fc // nf, fc % nf
+        lo, hi = _rect_haversine_bounds(
+            qlat[q], qlon[q],
+            -90.0 + fy * (180.0 / nf), -90.0 + (fy + 1) * (180.0 / nf),
+            -180.0 + fx * (360.0 / nf), -180.0 + (fx + 1) * (360.0 / nf))
+        pr = pr.assign(lo=lo, hi=hi).sort_values(["q", "lo"], kind="stable")
+        before = pr.groupby("q")["n"].cumsum() - pr["n"]
+        tight = pr[before < k].groupby("q")["hi"].max()
+        kth[tight.index] = np.minimum(kth[tight.index], tight.to_numpy())
+        # Double rounding on the k-bound path: the bound covers the kth
+        # doc's UNROUNDED distance, so the kth ROUNDED distance can be up
+        # to kth+half-grain, and a competitor that rounds into that same
+        # centimeter bucket (winning the doc_id tiebreak) sits at true
+        # distance up to kth+one full grain — pad by a FULL grain here.
+        kth = kth + 2 * _ROUND_PAD_M
+        radius = np.minimum(kth, cap)
+        reach = np.minimum(kth, reach)
+    qi, ci = np.nonzero(mind <= reach[:, None])
+    return pd.DataFrame({"query_id": qids[qi], "cell": cells[ci],
+                         "radius": radius[qi]})
 
 
 def geo_cell_col(res: int) -> Column:
@@ -240,13 +260,6 @@ def geo_cell_col(res: int) -> Column:
     iy = F.floor((F.col("lat") + 90.0) / (180.0 / n)).cast("long")
     ix = F.floor((F.col("lon") + 180.0) / (360.0 / n)).cast("long")
     return F.least(iy, F.lit(n - 1)) * n + F.least(ix, F.lit(n - 1))
-
-
-def _geo_stats(d: DataFrame, *keys: str) -> pd.DataFrame:
-    """The geodetic tier's one bounded stats collect: per-(keys, cell)
-    doc counts (≤ 4^res·m rows) to the driver — the planner input."""
-    with bounded_shuffle(d.sparkSession):
-        return d.groupBy(*keys, "cell").count().toPandas()
 
 
 def _dist_m() -> Column:
@@ -260,46 +273,47 @@ def _query_df(spark: SparkSession, queries: pd.DataFrame) -> DataFrame:
                                  "query_id long, qlat double, qlon double")
 
 
-def _geo_candidates(spark: SparkSession, docs_ll: DataFrame,
-                    queries: pd.DataFrame | DataFrame, res: int, plan,
-                    by_category: bool = False) -> DataFrame:
-    """The candidate pipeline shared by knn, range and NGQ: the bounded
-    stats collect (per cell, and per category when ``by_category``) →
-    ``plan(stats, queries)`` → (query_id, cell[, category]) pairs → docs
-    join the pairs on those keys, queries re-join by query_id → docs
-    with ``qlat``/``qlon`` and the rounded haversine ``dist_m``.
-
-    Pandas queries are planned on the driver and both small tables are
-    broadcast, so the corpus is never shuffled. A DataFrame's plan runs
-    per Arrow batch (knn.plan_in_executors) and AQE picks both joins."""
-    d = docs_ll.withColumn("cell", geo_cell_col(res))
-    stats = _geo_stats(d, *(["category"] if by_category else []))
-    keys = ["cell", "category"] if by_category else ["cell"]
-    schema = "query_id long, cell long" + (", category int" if by_category
-                                           else "")
-    if isinstance(queries, DataFrame):
-        qdf = queries.select("query_id", "qlat", "qlon")
-        joined = (d.join(plan_in_executors(spark, stats, qdf, plan, schema),
-                         keys)
-                  .join(qdf, "query_id"))
-    else:
-        cand = spark.createDataFrame(plan(stats, queries), schema)
-        joined = (d.join(F.broadcast(cand), keys)
-                  .join(F.broadcast(_query_df(spark, queries)), "query_id"))
-    return joined.withColumn("dist_m", _dist_m())
+def _geo_pair_dists(lats: list[np.ndarray], lons: list[np.ndarray]
+                    ) -> dict[tuple[int, int], np.ndarray]:
+    """The 2-dp-rounded great-circle member-distance matrix of every
+    category pair i<j (rows = category i): each pairwise distance is
+    rounded BEFORE the refine's max/min/+, so scores are reproducible
+    across libms."""
+    return {(i, j): np.round(np_haversine(lats[i][:, None], lons[i][:, None],
+                                          lats[j][None, :], lons[j][None, :]),
+                             2)
+            for i, j in itertools.combinations(range(len(lats)), 2)}
 
 
-def _rank_knn(df: DataFrame, k: int, id_col: str,
-              max_dist_m: float | None) -> DataFrame:
-    """Top-k rows per query by (dist_m, id), beyond-cap rows dropped."""
-    if max_dist_m is not None:
-        df = df.filter(F.col("dist_m") <= max_dist_m)
-    w = Window.partitionBy("query_id").orderBy(F.col("dist_m").asc(),
-                                               F.col(id_col).asc())
-    return (df.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("query_id", id_col, "dist_m",
-                    F.col("rnk").cast("long").alias("rnk")))
+def _fine_res(res: int, cfg: EngineConfig) -> int:
+    """The geodetic planner's stats res: the planar planner's base res
+    when finer than ``res`` (plan_geo_cells tightens its k-bounds per
+    fine cell and rolls the counts up to ``res``)."""
+    return max(res, cfg.planner_base_res)
+
+
+def _fine_stats(docs_ll: DataFrame, res: int, cfg: EngineConfig,
+                *keys: str) -> pd.DataFrame:
+    return cell_counts(docs_ll.withColumn(
+        "cell", geo_cell_col(_fine_res(res, cfg))), *keys)
+
+
+GEO = Metric(
+    doc_xy=("lat", "lon"), query_xy=("qlat", "qlon"),
+    cell=lambda res, cfg: geo_cell_col(res),
+    stats=lambda docs, res, k, cfg: (_fine_stats(docs, res, cfg), res),
+    plan=lambda st, q, k, res, cfg, cap: plan_geo_cells(
+        st, q, k, res, cap, stats_res=_fine_res(res, cfg)),
+    dist=_dist_m, pairs=_geo_pair_dists,
+    # dq_i, d(i, c) and d_c are each rounded by ≤ half a grain, so a
+    # score can undercut its members' dq by three half-grains
+    slack=3 * _ROUND_PAD_M + _EPS_M)
+
+
+def _knn_edge(ranked: DataFrame, id_col: str) -> DataFrame:
+    """The geodetic kNN's public columns: dist_m, and rnk as long."""
+    return ranked.select("query_id", id_col, F.col("dist").alias("dist_m"),
+                         F.col("rank").cast("long").alias("rnk"))
 
 
 def geodetic_knn(spark: SparkSession, docs_ll: DataFrame,
@@ -316,10 +330,9 @@ def geodetic_knn(spark: SparkSession, docs_ll: DataFrame,
     prunes cells past the cap. Pruning is lossless: pytest asserts
     equality with the exhaustive scan; the gate's DuckDB oracle IS the
     exhaustive scan."""
-    cands = _geo_candidates(
-        spark, docs_ll, queries, res,
-        lambda st, q: plan_geo_cells(st, q, k, res, max_dist_m))
-    return _rank_knn(cands, k, id_col, max_dist_m)
+    return _knn_edge(_rank(_candidates(spark, docs_ll, queries, k, res,
+                                       DEFAULT, max_dist_m, GEO),
+                           k, id_col), id_col)
 
 
 def geodetic_knn_bruteforce(spark: SparkSession, docs_ll: DataFrame,
@@ -327,33 +340,11 @@ def geodetic_knn_bruteforce(spark: SparkSession, docs_ll: DataFrame,
                             id_col: str = "doc_id",
                             max_dist_m: float | None = None) -> DataFrame:
     """Exhaustive reference twin (broadcast cross join + rank)."""
-    bf = docs_ll.crossJoin(F.broadcast(_query_df(spark, queries)))
-    return _rank_knn(bf.withColumn("dist_m", _dist_m()), k, id_col,
-                     max_dist_m)
-
-
-def plan_geo_range_cells(stats: pd.DataFrame, queries: pd.DataFrame,
-                         radius_m: float, res: int) -> pd.DataFrame:
-    """Range-query planner: (query_id, cell) pairs for every non-empty
-    cell whose EXACT rect MINDIST ≤ radius (+ rounding half-grain) —
-    one (Q, C) bounds matrix, no per-query loop. Runs on the driver for
-    pandas queries and per Arrow batch for a DataFrame."""
-    n = 1 << res
-    dlat, dlon = 180.0 / n, 360.0 / n
-    cells = stats["cell"].to_numpy(np.int64)
-    qids = queries["query_id"].to_numpy()
-    if len(cells) == 0 or len(qids) == 0:
-        return pd.DataFrame({"query_id": [], "cell": []})
-    lat0 = -90.0 + (cells // n) * dlat
-    lon0 = -180.0 + (cells % n) * dlon
-    qlat = queries["qlat"].to_numpy(np.float64)
-    qlon = queries["qlon"].to_numpy(np.float64)
-    mind, _ = _rect_haversine_bounds(
-        qlat[:, None], qlon[:, None],
-        lat0[None, :], lat0[None, :] + dlat,
-        lon0[None, :], lon0[None, :] + dlon)
-    qi, ci = np.nonzero(mind <= radius_m + _ROUND_PAD_M)
-    return pd.DataFrame({"query_id": qids[qi], "cell": cells[ci]})
+    bf = docs_ll.crossJoin(F.broadcast(_query_df(spark, queries))) \
+        .withColumn("dist", _dist_m())
+    if max_dist_m is not None:
+        bf = bf.filter(F.col("dist") <= max_dist_m)
+    return _knn_edge(_rank(bf, k, id_col), id_col)
 
 
 def geodetic_range(spark: SparkSession, docs_ll: DataFrame,
@@ -365,68 +356,9 @@ def geodetic_range(spark: SparkSession, docs_ll: DataFrame,
     non-empty cells whose EXACT rect MINDIST ≤ radius (same lossless
     bound as geodetic_knn); the exact haversine filter finishes. Returns
     (query_id, doc_id, dist_m) with dist_m rounded to 2 dp."""
-    return (_geo_candidates(
-                spark, docs_ll, queries, res,
-                lambda st, q: plan_geo_range_cells(st, q, radius_m, res))
-            .filter(F.col("dist_m") <= radius_m)
-            .select("query_id", id_col, "dist_m"))
-
-
-def _top_per_category(df: DataFrame, L: int, id_col: str) -> DataFrame:
-    """Exactly L rows per (query, category) by (dist_m, id)."""
-    w = Window.partitionBy("query_id", "category") \
-              .orderBy(F.col("dist_m").asc(), F.col(id_col).asc())
-    return (df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= L)
-            .select("query_id", "category", id_col, "lat", "lon", "dist_m"))
-
-
-_GEO_NGQ_SCHEMA = pa.schema([("query_id", pa.int64()),
-                             ("group_rank", pa.int64()),
-                             ("members", pa.string()),
-                             ("min_dist", pa.float64())])
-
-
-def _geo_group_refine(cands: DataFrame, m: int, k: int,
-                      id_col: str = "doc_id") -> DataFrame:
-    """Top-L candidates (query_id, category, id, lat, lon, dist_m) → one
-    query_id exchange (explicit partition count) → per-query exact group
-    enumeration with the great-circle metric in Arrow: the 2-dp-rounded
-    haversine matrix of every category pair goes to ngq.group_topk, the
-    planar refine's enumeration core — every combination of one member
-    per category is scored with max-pairwise-rounded-haversine + min
-    member dist_m (GetGroupMinDist, RTree.cs:938-966), top-k by the
-    (score, id-tuple) total order. Fixed-L inputs keep L^m bounded (the
-    gate's oracle enumerates the same product); each pairwise distance is
-    rounded to 2 dp BEFORE max/min/+, so the score is reproducible across
-    libms."""
-    def refine(tbl):
-        per_cat = _by_category(tbl, m)
-        if per_cat is None:
-            return _GEO_NGQ_SCHEMA.empty_table()   # a category is empty
-        col = {n: tbl.column(n).to_numpy()
-               for n in ("lat", "lon", "dist_m", id_col)}
-        lats, lons, dqs, ids = ([col[n][r] for r in per_cat]
-                                for n in ("lat", "lon", "dist_m", id_col))
-        D = {(i, j): np.round(np_haversine(lats[i][:, None], lons[i][:, None],
-                                           lats[j][None, :], lons[j][None, :]),
-                              2)
-             for i, j in itertools.combinations(range(m), 2)}
-        top_ids, score = group_topk(D, dqs, ids, k)
-        n_out = len(score)
-        return pa.Table.from_arrays(
-            [pa.array(np.full(n_out, tbl.column("query_id")[0].as_py(),
-                              dtype=np.int64)),
-             pa.array(np.arange(1, n_out + 1, dtype=np.int64)),
-             pa.array([",".join(str(t[o]) for t in top_ids)
-                       for o in range(n_out)], type=pa.string()),
-             pa.array(np.round(score, 2))],
-            schema=_GEO_NGQ_SCHEMA)
-
-    return (cands.repartition(refine_partitions(cands.sparkSession),
-                              "query_id")
-            .groupBy("query_id")
-            .applyInArrow(refine, schema=from_arrow_schema(_GEO_NGQ_SCHEMA)))
+    return (_candidates(spark, docs_ll, queries, None, res, DEFAULT,
+                        radius_m, GEO)
+            .select("query_id", id_col, F.col("dist").alias("dist_m")))
 
 
 def geodetic_nearest_group(spark: SparkSession, docs_ll: DataFrame,
@@ -440,48 +372,38 @@ def geodetic_nearest_group(spark: SparkSession, docs_ll: DataFrame,
     np_haversine replacing the euclidean kernel). ``queries`` is a
     pandas frame or a Spark DataFrame (see the module doc).
 
-    Phase 1 reuses the planar NGQ shape on the geodetic planner: per
-    (query, category) the counts-only SAT box + EXACT analytic rect
-    bounds retrieve the top-L nearest docs per category (lossless — the
-    same argument as geodetic_knn with k=L, rounding half-grain
-    included); one plan covers every category, so a DataFrame's stats
-    broadcast once. Phase 2 is one query_id-keyed shuffle into an Arrow
-    refine that enumerates the cross-category product over np_haversine
-    pairwise matrices with the planar kernel's blocked sweep (m is small
-    by definition; L^m is the oracle's own enumeration bound).
+    One round of the planar NGQ pipeline with GEO
+    (ngq._nearest_group_once): per (query, category) the counts-only SAT
+    box + EXACT analytic rect bounds retrieve the top-L nearest docs per
+    category (lossless — the same argument as geodetic_knn with k=L,
+    rounding half-grain included); one query_id exchange feeds the top-L
+    window and the Arrow refine, which enumerates the cross-category
+    product over rounded np_haversine matrices with theta pruning (its
+    triangle bound allows GEO's rounding slack).
 
     FIXED-L contract (the gate semantics, ≡ planar max_rounds=1): each
     category truncates at exactly L by (dist_m, doc_id) — the DuckDB
     oracle replays the same truncation, so both enumerate the same L^m
-    product. Distances are rounded to 2 dp BEFORE ranking and scoring
-    (the module's cross-libm discipline); the score is a sum of one max
-    and one min over rounded values, deterministic across engines.
+    product, and the refine budget L^m never caps. Distances are rounded
+    to 2 dp BEFORE ranking and scoring (the module's cross-libm
+    discipline); the score is a sum of one max and one min over rounded
+    values, deterministic across engines.
 
     Returns (query_id, group_rank, members, min_dist): members =
     comma-joined member ids in category order (array-valued gate columns
     hash unreliably across engines)."""
-    def plan(st: pd.DataFrame, q: pd.DataFrame) -> pd.DataFrame:
-        return pd.concat(
-            [plan_geo_cells(st[st["category"] == c], q, L, res)
-             .assign(category=c) for c in range(m)], ignore_index=True)
-
-    cands = _geo_candidates(spark, docs_ll, queries, res, plan,
-                            by_category=True)
-    return _geo_group_refine(_top_per_category(cands, L, id_col), m, k,
-                             id_col)
-
-
-def geodetic_nearest_group_bruteforce(spark: SparkSession,
-                                      docs_ll: DataFrame,
-                                      queries: pd.DataFrame, m: int,
-                                      k: int = 5, L: int = 8,
-                                      id_col: str = "doc_id") -> DataFrame:
-    """Exhaustive fixed-L twin for pytest: same truncation and scoring
-    with the candidate stage replaced by a full crossJoin rank — pruning
-    must be invisible."""
-    bf = docs_ll.crossJoin(F.broadcast(_query_df(spark, queries))) \
-        .withColumn("dist_m", _dist_m())
-    return _geo_group_refine(_top_per_category(bf, L, id_col), m, k, id_col)
+    stats = _fine_stats(docs_ll, res, DEFAULT, "category")
+    groups = _nearest_group_once(spark, docs_ll, queries, k, L, res,
+                                 DEFAULT, stats, L ** m, GEO, m, id_col)
+    # concat, not concat_ws (never null): the column keeps its nullable
+    # schema
+    parts = [p for c in range(m)
+             for p in (F.lit(","), F.col(f"c{c}_id").cast("string"))]
+    members = F.concat(*parts[1:])
+    return groups.select("query_id",
+                         F.col("group_rank").cast("long").alias("group_rank"),
+                         members.alias("members"),
+                         F.round("min_dist", 2).alias("min_dist"))
 
 
 def plan_geo_pair_cells(probe_cells: np.ndarray, all_cells: np.ndarray,
@@ -531,7 +453,7 @@ def geodetic_pairs(spark: SparkSession, docs_ll: DataFrame, eps_m: float,
     cell — AQE picks the strategies — and the exact haversine predicate
     finishes."""
     d = docs_ll.withColumn("cell", geo_cell_col(res))
-    cells = _geo_stats(d)[["cell"]]
+    cells = cell_counts(d)[["cell"]]
     probe = spark.createDataFrame(cells, "cell long") \
         .repartition(max(2, len(cells) // 4096))
     pairs = plan_in_executors(

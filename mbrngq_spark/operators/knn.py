@@ -1,4 +1,5 @@
-"""kNN / nearest-neighbor join over the cell-grid index.
+"""kNN / nearest-neighbor join over the cell-grid index, and the spatial
+query core every planner-driven query shares.
 
 Re-expresses the reference's ``RTree.Nearest`` (mbR-NGQ/Data/RTree.cs:454-474
 public, :2428-2456 recursive descent — SURVEY.md Q3) and its generalization to
@@ -22,6 +23,17 @@ top-k, Spark-first:
                            rank per query. One shuffle, keyed by query_id;
                            AQE skew-join splits hot queries.
 
+Phases 0-3 are metric-free apart from a small ``Metric``: coordinate
+column names, the cell Column, the stats step, the one-category planner,
+the distance Column, the NumPy member-distance matrices and a rounding
+slack. ``PLANAR`` is defined here and ``geodetic.GEO`` next to the
+great-circle kernel; ONE candidate builder (_join_candidates), ONE kNN
+rank (_rank), ngq's one top-L window and one refine serve both metrics.
+The two planners stay separate algorithms (axis-aligned window search
+with per-cell tightening vs a wrap- and pole-safe (Q, C) bounds matrix)
+behind one contract: their cells hold every doc that can be an answer,
+and every such doc lies within its plan row's ``radius``.
+
 Tie-breaking: deterministic (dist, doc_id) order (SURVEY.md §7.4 — the
 reference's insertion-order heap ties, HeapPriorityQueue.cs:193-197, are not
 reproducible; the oracle compares sets at equal distance).
@@ -29,9 +41,13 @@ reproducible; the oracle compares sets at equal distance).
 
 from __future__ import annotations
 
+import itertools
+from dataclasses import dataclass
+from typing import Callable
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mbrngq_spark import geom, grid
@@ -140,9 +156,7 @@ def _half_width_radius_scalar(sat: np.ndarray, cx: int, cy: int,
         mid = (lo_h + hi_h) // 2
         x0, y0 = max(cx - mid, 0), max(cy - mid, 0)
         x1, y1 = min(cx + mid, n - 1), min(cy + mid, n - 1)
-        cnt = int(sat[y1 + 1, x1 + 1] - sat[y0, x1 + 1]
-                  - sat[y1 + 1, x0] + sat[y0, x0])
-        if cnt >= k:
+        if int(box_count(sat, x0, y0, x1, y1)) >= k:
             hi_h = mid
         else:
             lo_h = mid + 1
@@ -153,6 +167,27 @@ def _half_width_radius_scalar(sat: np.ndarray, cx: int, cy: int,
         qx, qy,
         cfg.min_x + bx0 * wx, cfg.min_y + by0 * wy,
         cfg.min_x + (bx1 + 1) * wx, cfg.min_y + (by1 + 1) * wy))
+
+
+def count_grid(iy: np.ndarray, ix: np.ndarray, counts: np.ndarray,
+               n: int) -> tuple[np.ndarray, np.ndarray]:
+    """The dense n×n count grid of the cells at grid rows ``iy`` and
+    columns ``ix`` (unique cells), and its summed-area table for O(1)
+    box counts (box_count). Both planners and certifying_L build theirs
+    here; the cell-id layout (Morton or row-major) is decoded by the
+    caller."""
+    g = np.zeros((n, n), dtype=np.int64)
+    g[iy, ix] = counts
+    sat = np.zeros((n + 1, n + 1), dtype=np.int64)
+    sat[1:, 1:] = g.cumsum(0).cumsum(1)
+    return g, sat
+
+
+def box_count(sat: np.ndarray, x0, y0, x1, y1):
+    """Docs in the inclusive cell box [x0, x1] × [y0, y1] by the
+    summed-area table ``sat`` (scalars or index arrays)."""
+    return (sat[y1 + 1, x1 + 1] - sat[y0, x1 + 1]
+            - sat[y1 + 1, x0] + sat[y0, x0])
 
 
 def covering_box(sat: np.ndarray, cx: np.ndarray, cy: np.ndarray, n: int,
@@ -174,9 +209,7 @@ def covering_box(sat: np.ndarray, cx: np.ndarray, cy: np.ndarray, n: int,
         y0 = np.maximum(cy - mid, 0)
         x1 = np.minimum(cx + mid, n - 1)
         y1 = np.minimum(cy + mid, n - 1)
-        cnt = (sat[y1 + 1, x1 + 1] - sat[y0, x1 + 1]
-               - sat[y1 + 1, x0] + sat[y0, x0])
-        ok = cnt >= k
+        ok = box_count(sat, x0, y0, x1, y1) >= k
         hi = np.where(act & ok, mid, hi)
         lo = np.where(act & ~ok, mid + 1, lo)
     return (np.maximum(cx - lo, 0), np.maximum(cy - lo, 0),
@@ -185,14 +218,13 @@ def covering_box(sat: np.ndarray, cx: np.ndarray, cy: np.ndarray, n: int,
 
 def plan_candidate_cells(stats: pd.DataFrame, queries: pd.DataFrame,
                          k: int, res: int, cfg: EngineConfig = DEFAULT,
-                         per_category: bool = False,
                          max_dist: float | None = None,
                          use_scalar_search: bool = False) -> pd.DataFrame:
     """Vectorized candidate-cell planner.
 
     ``stats``: (cell, [category,] n) — the tiny phase-0 table.
     ``queries``: (query_id, qx, qy).
-    Returns (query_id, [category,] cell, radius) rows covering every doc
+    Returns (query_id, cell, radius[, category]) rows covering every doc
     that could be a top-k answer; ``radius`` is the per-(query[, category])
     distance bound (any doc farther than it is provably outside the top-k),
     used to pre-filter rows BEFORE the rank shuffle. ``max_dist`` caps the
@@ -200,147 +232,141 @@ def plan_candidate_cells(stats: pd.DataFrame, queries: pd.DataFrame,
     with a cap the planner prunes whole cells beyond it even when fewer
     than k docs are reachable. Pure NumPy over the non-empty cells
     (C ≤ 4^res); for very large Q, pass the queries as a Spark DataFrame
-    and this planner runs per Arrow batch inside mapInPandas
-    (plan_cells_distributed).
+    to the operators and this planner runs per Arrow batch inside
+    mapInPandas (plan_in_executors). Per-category plans come from the
+    candidate builder's one loop (_per_category).
     """
     # accumulated as LISTS OF NUMPY ARRAYS, concatenated once at the end:
     # Python-list round-trips (tolist + object-dtype DataFrame inference)
     # cost ~0.5 s per plan at large L (driver-serial time)
-    out_q, out_c, out_cat, out_r = [], [], [], []
-    cats = sorted(stats["category"].unique()) if per_category else [None]
+    out_q, out_c, out_r = [], [], []
     qids = queries["query_id"].to_numpy()
     qxs = queries["qx"].to_numpy(dtype=np.float64)
     qys = queries["qy"].to_numpy(dtype=np.float64)
     n = 1 << res
     wx, wy = cfg.width / n, cfg.height / n
 
-    for cat in cats:
-        sub = stats if cat is None else stats[stats["category"] == cat]
-        # stats may be per-(cell, category): collapse to one row per cell so
-        # the emitted (query_id, cell) pairs are unique
-        sub = sub.groupby("cell", as_index=False)["n"].sum()
-        cells = sub["cell"].to_numpy(dtype=np.int64)
-        counts = sub["n"].to_numpy(dtype=np.int64)
-        if len(cells) == 0:
-            continue
-        total = int(counts.sum())
+    # stats may be per-(cell, category): collapse to one row per cell so
+    # the emitted (query_id, cell) pairs are unique
+    sub = stats.groupby("cell", as_index=False)["n"].sum()
+    cells = sub["cell"].to_numpy(dtype=np.int64)
+    counts = sub["n"].to_numpy(dtype=np.int64)
+    total = int(counts.sum())
 
-        # dense count grid + summed-area table → O(1) box counts, O(log n)
-        # radius search per query (a per-query sort over all cells would be
-        # a serial driver bottleneck at fine resolutions)
-        ix_all = grid.np_compact_bits(cells)
-        iy_all = grid.np_compact_bits(cells >> 1)
-        g = np.zeros((n, n), dtype=np.int64)
-        g[iy_all, ix_all] = counts
-        sat = np.zeros((n + 1, n + 1), dtype=np.int64)
-        sat[1:, 1:] = g.cumsum(0).cumsum(1)
+    # dense count grid + summed-area table → O(1) box counts, O(log n)
+    # radius search per query (a per-query sort over all cells would be
+    # a serial driver bottleneck at fine resolutions)
+    g, sat = count_grid(grid.np_compact_bits(cells >> 1),
+                        grid.np_compact_bits(cells), counts, n)
 
-        # --- per-query radius bounds, BATCHED over all queries ----------
-        # every query shares the summed-area table (covering_box)
-        cxs = np.clip(((qxs - cfg.min_x) / wx).astype(np.int64), 0, n - 1)
-        cys = np.clip(((qys - cfg.min_y) / wy).astype(np.int64), 0, n - 1)
-        if total < k:
-            radii = np.full(len(qids), np.inf)
-        elif use_scalar_search:
-            radii = np.array([_half_width_radius_scalar(
-                sat, int(cxs[qi]), int(cys[qi]), qxs[qi], qys[qi],
-                n, k, wx, wy, cfg) for qi in range(len(qids))])
-        else:
-            bx0, by0, bx1, by1 = covering_box(sat, cxs, cys, n, k)
-            # ≥ k docs inside the box ⇒ kth distance ≤ MAXDIST(q, box)
-            radii = geom.np_maxdist_point_rect(
-                qxs, qys,
-                cfg.min_x + bx0 * wx, cfg.min_y + by0 * wy,
-                cfg.min_x + (bx1 + 1) * wx, cfg.min_y + (by1 + 1) * wy)
-        # radius cap (Nearest's furthestDistance): answers beyond it are
-        # excluded by contract, so cells beyond it need not be shipped
-        if max_dist is not None:
-            radii = np.minimum(radii, float(max_dist))
+    # --- per-query radius bounds, BATCHED over all queries ----------
+    # every query shares the summed-area table (covering_box)
+    cxs = np.clip(((qxs - cfg.min_x) / wx).astype(np.int64), 0, n - 1)
+    cys = np.clip(((qys - cfg.min_y) / wy).astype(np.int64), 0, n - 1)
+    if total < k:
+        radii = np.full(len(qids), np.inf)
+    elif use_scalar_search:
+        radii = np.array([_half_width_radius_scalar(
+            sat, int(cxs[qi]), int(cys[qi]), qxs[qi], qys[qi],
+            n, k, wx, wy, cfg) for qi in range(len(qids))])
+    else:
+        bx0, by0, bx1, by1 = covering_box(sat, cxs, cys, n, k)
+        # ≥ k docs inside the box ⇒ kth distance ≤ MAXDIST(q, box)
+        radii = geom.np_maxdist_point_rect(
+            qxs, qys,
+            cfg.min_x + bx0 * wx, cfg.min_y + by0 * wy,
+            cfg.min_x + (bx1 + 1) * wx, cfg.min_y + (by1 + 1) * wy)
+    # radius cap (Nearest's furthestDistance): answers beyond it are
+    # excluded by contract, so cells beyond it need not be shipped
+    if max_dist is not None:
+        radii = np.minimum(radii, float(max_dist))
 
-        # --- candidate windows, BATCHED --------------------------------
-        # queries whose radius-reach window fits W×W (the common case:
-        # the window is ~the k-covering box) are processed as chunked 2-D
-        # NumPy batches — gather counts, MINDIST mask, and the per-cell
-        # tightening all run as axis-1 array ops instead of ~30
-        # interpreted calls per query. Oversized windows and infinite
-        # radii fall back to the per-query loop below (also the scalar
-        # reference under use_scalar_search).
-        done = np.zeros(len(qids), dtype=bool)
-        if not use_scalar_search and len(qids):
-            emitted = _plan_windows_batched(
+    # --- candidate windows, BATCHED --------------------------------
+    # queries whose radius-reach window fits W×W (the common case:
+    # the window is ~the k-covering box) are processed as chunked 2-D
+    # NumPy batches — gather counts, MINDIST mask, and the per-cell
+    # tightening all run as axis-1 array ops instead of ~30
+    # interpreted calls per query. Oversized windows and infinite
+    # radii fall back to the per-query loop below (also the scalar
+    # reference under use_scalar_search).
+    done = np.zeros(len(qids), dtype=bool)
+    if not use_scalar_search and len(qids):
+        for e_q, e_c, e_r in _plan_windows_batched(
                 g, qids, qxs, qys, cxs, cys, radii, n, wx, wy, k, cfg,
-                done)
-            for e_q, e_c, e_r in emitted:
-                out_q.append(e_q)
-                out_c.append(e_c)
-                out_r.append(e_r)
-                if cat is not None:
-                    out_cat.append(np.full(len(e_q), cat, dtype=np.int64))
+                done):
+            out_q.append(e_q)
+            out_c.append(e_c)
+            out_r.append(e_r)
 
-        for qi in np.nonzero(~done)[0]:
-            qx, qy = qxs[qi], qys[qi]
-            cx, cy = int(cxs[qi]), int(cys[qi])
-            radius = float(radii[qi])
-            if not np.isfinite(radius):
-                take = cells
-            else:
-                # candidates: non-empty cells with MINDIST ≤ radius, searched
-                # only inside the radius-reach box
-                rx = int(radius / wx) + 1
-                ry = int(radius / wy) + 1
-                sx0, sy0 = max(cx - rx, 0), max(cy - ry, 0)
-                sx1, sy1 = min(cx + rx, n - 1), min(cy + ry, n - 1)
-                sub_g = g[sy0:sy1 + 1, sx0:sx1 + 1]
-                yy, xx = np.nonzero(sub_g)
-                x0 = cfg.min_x + (xx + sx0) * wx
-                y0 = cfg.min_y + (yy + sy0) * wy
-                gx = np.maximum(np.maximum(x0 - qx, qx - (x0 + wx)), 0.0)
-                gy = np.maximum(np.maximum(y0 - qy, qy - (y0 + wy)), 0.0)
-                md = np.sqrt(gx * gx + gy * gy)
-                keep = md <= radius
-                # PER-CELL tightening: the box bound is brutally loose on
-                # concentrated data (a far query's box engulfs a whole dense
-                # island — measured 120M joined rows/NGQ batch on
-                # gaussian-island). Sort candidate cells by MINDIST, take
-                # the smallest prefix whose counts cover ≥ k, and shrink the
-                # radius to that prefix's max per-cell MAXDIST: ≥ k docs
-                # provably lie within it, so cells (and rows) beyond it
-                # cannot hold an answer.
-                if keep.any():
-                    cnt = sub_g[yy, xx][keep]
-                    if int(cnt.sum()) >= k:
-                        mdk = md[keep]
-                        fx = np.maximum(np.abs(qx - x0[keep]),
-                                        np.abs(qx - (x0[keep] + wx)))
-                        fy = np.maximum(np.abs(qy - y0[keep]),
-                                        np.abs(qy - (y0[keep] + wy)))
-                        maxd = np.sqrt(fx * fx + fy * fy)
-                        order = np.argsort(mdk, kind="stable")
-                        j = int(np.searchsorted(np.cumsum(cnt[order]), k))
-                        r2 = float(maxd[order[:j + 1]].max())
-                        if r2 < radius:
-                            radius = r2
-                            kk = np.zeros_like(keep)
-                            kk[np.nonzero(keep)[0][mdk <= r2]] = True
-                            keep = kk
-                take = (grid.np_spread_bits((xx[keep] + sx0).astype(np.int64))
-                        | (grid.np_spread_bits((yy[keep] + sy0).astype(np.int64)) << 1))
-            out_q.append(np.full(len(take), qids[qi], dtype=np.int64))
-            out_c.append(np.asarray(take, dtype=np.int64))
-            out_r.append(np.full(len(take), radius, dtype=np.float64))
-            if cat is not None:
-                out_cat.append(np.full(len(take), cat, dtype=np.int64))
+    for qi in np.nonzero(~done)[0]:
+        qx, qy = qxs[qi], qys[qi]
+        cx, cy = int(cxs[qi]), int(cys[qi])
+        radius = float(radii[qi])
+        if not np.isfinite(radius):
+            take = cells
+        else:
+            # candidates: non-empty cells with MINDIST ≤ radius, searched
+            # only inside the radius-reach box
+            rx = int(radius / wx) + 1
+            ry = int(radius / wy) + 1
+            sx0, sy0 = max(cx - rx, 0), max(cy - ry, 0)
+            sx1, sy1 = min(cx + rx, n - 1), min(cy + ry, n - 1)
+            sub_g = g[sy0:sy1 + 1, sx0:sx1 + 1]
+            yy, xx = np.nonzero(sub_g)
+            x0 = cfg.min_x + (xx + sx0) * wx
+            y0 = cfg.min_y + (yy + sy0) * wy
+            gx = np.maximum(np.maximum(x0 - qx, qx - (x0 + wx)), 0.0)
+            gy = np.maximum(np.maximum(y0 - qy, qy - (y0 + wy)), 0.0)
+            md = np.sqrt(gx * gx + gy * gy)
+            keep = md <= radius
+            # PER-CELL tightening: the box bound is brutally loose on
+            # concentrated data (a far query's box engulfs a whole dense
+            # island — measured 120M joined rows/NGQ batch on
+            # gaussian-island). Sort candidate cells by MINDIST, take
+            # the smallest prefix whose counts cover ≥ k, and shrink the
+            # radius to that prefix's max per-cell MAXDIST: ≥ k docs
+            # provably lie within it, so cells (and rows) beyond it
+            # cannot hold an answer.
+            if keep.any():
+                cnt = sub_g[yy, xx][keep]
+                if int(cnt.sum()) >= k:
+                    mdk = md[keep]
+                    fx = np.maximum(np.abs(qx - x0[keep]),
+                                    np.abs(qx - (x0[keep] + wx)))
+                    fy = np.maximum(np.abs(qy - y0[keep]),
+                                    np.abs(qy - (y0[keep] + wy)))
+                    maxd = np.sqrt(fx * fx + fy * fy)
+                    order = np.argsort(mdk, kind="stable")
+                    j = int(np.searchsorted(np.cumsum(cnt[order]), k))
+                    r2 = float(maxd[order[:j + 1]].max())
+                    if r2 < radius:
+                        radius = r2
+                        kk = np.zeros_like(keep)
+                        kk[np.nonzero(keep)[0][mdk <= r2]] = True
+                        keep = kk
+            take = (grid.np_spread_bits((xx[keep] + sx0).astype(np.int64))
+                    | (grid.np_spread_bits((yy[keep] + sy0).astype(np.int64)) << 1))
+        out_q.append(np.full(len(take), qids[qi], dtype=np.int64))
+        out_c.append(np.asarray(take, dtype=np.int64))
+        out_r.append(np.full(len(take), radius, dtype=np.float64))
 
     def cat_arrays(parts: list, dtype) -> np.ndarray:
         return (np.concatenate(parts) if parts
                 else np.array([], dtype=dtype))
 
-    data = {"query_id": cat_arrays(out_q, np.int64),
-            "cell": cat_arrays(out_c, np.int64),
-            "radius": cat_arrays(out_r, np.float64)}
-    if per_category:
-        data["category"] = cat_arrays(out_cat, np.int64)
-    return pd.DataFrame(data)
+    return pd.DataFrame({"query_id": cat_arrays(out_q, np.int64),
+                         "cell": cat_arrays(out_c, np.int64),
+                         "radius": cat_arrays(out_r, np.float64)})
+
+
+def _per_category(plan, stats: pd.DataFrame) -> pd.DataFrame:
+    """The one per-category planning loop of both metrics: the
+    one-category planner ``plan(stats slice)`` once per category in
+    ``stats``, its rows tagged with that category."""
+    parts = [plan(stats[stats["category"] == c]).assign(category=c)
+             for c in sorted(stats["category"].unique())]
+    return pd.concat(parts or [plan(stats).assign(category=0)],
+                     ignore_index=True)
 
 
 def with_cell(docs_geo: DataFrame, res: int, cfg: EngineConfig = DEFAULT) -> DataFrame:
@@ -371,24 +397,17 @@ def plan_in_executors(spark: SparkSession, stats: pd.DataFrame,
     return queries_df.mapInPandas(run, schema=schema)
 
 
-def plan_cells_distributed(spark: SparkSession, stats: pd.DataFrame,
-                           queries_df: DataFrame, k: int, res: int,
-                           cfg: EngineConfig = DEFAULT,
-                           per_category: bool = False,
-                           max_dist: float | None = None) -> DataFrame:
-    """Large-Q planner: plan_candidate_cells per Arrow batch of a
-    DISTRIBUTED query table (plan_in_executors). Driver work is O(1) in
-    Q — no per-query Python loop on the driver, no driver-side candidate
-    materialization. Each batch rebuilds the summed-area grid (O(4^res),
-    amortized over the ~10k queries per Arrow batch)."""
-    schema = "query_id long, cell long, radius double"
-    if per_category:
-        schema += ", category int"
-    return plan_in_executors(
-        spark, stats, queries_df.select("query_id", "qx", "qy"),
-        lambda st, q: plan_candidate_cells(st, q, k, res, cfg,
-                                           per_category, max_dist),
-        schema)
+def cell_counts(docs_c: DataFrame, *keys: str) -> pd.DataFrame:
+    """The one bounded stats collect of both metrics: per-(cell, *keys)
+    doc counts ``n`` of a frame carrying its ``cell`` column, to the
+    driver. Counts only: the planners never read the MBR columns, and a
+    slim frame keeps the driver collect + executor broadcast
+    proportional to what is actually consumed. The output is bounded
+    (≤ 4^res·m rows), so the exchange runs with a small constant
+    reduce-partition count (config.bounded_shuffle)."""
+    df = docs_c.groupBy("cell", *keys).agg(F.count("*").alias("n"))
+    with bounded_shuffle(docs_c.sparkSession):
+        return df.toPandas()
 
 
 def planner_stats(docs_geo: DataFrame, res: int | None, k_per_group: int,
@@ -399,17 +418,7 @@ def planner_stats(docs_geo: DataFrame, res: int | None, k_per_group: int,
     it, and the stats are rolled up to that res. Explicit res > base falls
     back to a direct aggregate at that res."""
     def counts(at_res: int) -> pd.DataFrame:
-        # counts-only aggregate: the planner never reads the MBR columns,
-        # and a slim frame keeps the driver collect + executor broadcast
-        # proportional to what is actually consumed. The output is bounded
-        # (≤ 4^res·m rows), so the exchange runs with a small constant
-        # reduce-partition count (config.bounded_shuffle).
-        df = (docs_geo
-              .withColumn("cell", grid.cell_encode_named(at_res, cfg))
-              .groupBy("cell", "category")
-              .agg(F.count("*").alias("n")))
-        with bounded_shuffle(docs_geo.sparkSession):
-            return df.toPandas()
+        return cell_counts(with_cell(docs_geo, at_res, cfg), "category")
 
     base = cfg.planner_base_res
     if res is not None and res > base:
@@ -453,15 +462,11 @@ def certifying_L(stats: pd.DataFrame, bad: pd.DataFrame, res: int,
     best = 1
     for cat in stats["category"].unique():
         sub = stats[stats["category"] == cat]
-        g = np.zeros((n, n), dtype=np.int64)
-        g[grid.np_compact_bits(sub["cell"].to_numpy() >> 1),
-          grid.np_compact_bits(sub["cell"].to_numpy())] = \
-            sub["n"].to_numpy(np.int64)
-        sat = np.zeros((n + 1, n + 1), dtype=np.int64)
-        sat[1:, 1:] = g.cumsum(0).cumsum(1)
-        cnt = (sat[y1 + 1, x1 + 1] - sat[y0, x1 + 1]
-               - sat[y1 + 1, x0] + sat[y0, x0])
-        best = max(best, int(cnt.max()) + 1)
+        cells = sub["cell"].to_numpy()
+        _, sat = count_grid(grid.np_compact_bits(cells >> 1),
+                            grid.np_compact_bits(cells),
+                            sub["n"].to_numpy(np.int64), n)
+        best = max(best, int(box_count(sat, x0, y0, x1, y1).max()) + 1)
     return best
 
 
@@ -470,7 +475,7 @@ def certifying_L_distributed(spark: SparkSession, stats: pd.DataFrame,
                              cfg: EngineConfig = DEFAULT) -> int:
     """certifying_L over a DISTRIBUTED bad-query set: the per-query box
     counts run in mapInPandas with the (bounded) stats broadcast — the same
-    shape as plan_cells_distributed — and the driver receives ONE scalar
+    shape as DataFrame-query planning — and the driver receives ONE scalar
     via F.max. This keeps the large-Q escalation path free of
     ``.toPandas()``: an adversarial clustered corpus can leave a huge
     fraction of a 100k-query batch inexact after round 1, and pulling that
@@ -494,13 +499,13 @@ def knn_join(spark: SparkSession, docs_geo: DataFrame,
     ``queries``: (query_id, qx, qy) — EITHER a small pandas frame (planned
     on the driver, broadcast-joined) OR a Spark DataFrame for large query
     batches: the planner then runs per Arrow batch inside mapInPandas with
-    the stats broadcast (plan_cells_distributed) and join strategies are
-    left to AQE — driver time is flat in Q. Returns
-    (query_id, doc_id, dist, rank) with rank 1..k ordered by (dist, doc_id).
+    the stats broadcast (plan_in_executors) and join strategies are left
+    to AQE — driver time is flat in Q. Returns (query_id, doc_id, dist,
+    rank) with rank 1..k ordered by (dist, doc_id).
 
     ``keep_ties=True`` reproduces the reference's Nearest contract of keeping
-    all co-minimal answers (RTree.cs:2440-2443) via RANK instead of
-    ROW_NUMBER.
+    all co-minimal answers (RTree.cs:2440-2443): RANK over dist alone, so
+    every doc tied with the k-th distance gets rank ≤ k.
 
     ``max_dist`` is the reference's radius-capped Nearest parameter
     (``RTree.Nearest(p, furthestDistance)``, RTree.cs:454-474): only
@@ -513,16 +518,26 @@ def knn_join(spark: SparkSession, docs_geo: DataFrame,
     per-query radius bound — the shuffle carries O(k·Q) rows regardless of
     corpus size (tools/explain_audit.py measures the constant).
     """
-    joined = knn_candidates(spark, docs_geo, queries, k, res, cfg, max_dist)
+    return _rank(knn_candidates(spark, docs_geo, queries, k, res, cfg,
+                                max_dist), k, id_col, keep_ties)
+
+
+def _rank(joined: DataFrame, k: int, id_col: str,
+          keep_ties: bool = False) -> DataFrame:
+    """The one kNN rank of both metrics: per query, the top-k candidate
+    rows by (dist, id) → (query_id, id, dist, rank); ``keep_ties`` ranks
+    by dist alone with RANK instead of ROW_NUMBER.
+
+    Explicit-count repartition: the rank exchange is byte-light, so the
+    AQE-coalesced ENSURE_REQUIREMENTS shuffle ran the sort+rank on ~1
+    task and added a re-optimization stage (interleaved A/B: full knn
+    1.46 s → 1.00 s); REPARTITION_BY_NUM keeps it parallel."""
+    order = [F.col("dist").asc()] + ([] if keep_ties
+                                     else [F.col(id_col).asc()])
+    w = Window.partitionBy("query_id").orderBy(*order)
     rank_fn = F.rank() if keep_ties else F.row_number()
-    w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(),
-                                               F.col(id_col).asc())
-    # explicit-count repartition: the rank exchange is byte-light, so the
-    # AQE-coalesced ENSURE_REQUIREMENTS shuffle ran the sort+rank on ~1
-    # task and added a re-optimization stage (interleaved A/B: full knn
-    # 1.46 s → 1.00 s); REPARTITION_BY_NUM keeps it parallel
     return (joined
-            .repartition(refine_partitions(spark), "query_id")
+            .repartition(refine_partitions(joined.sparkSession), "query_id")
             .withColumn("rank", rank_fn.over(w))
             .filter(F.col("rank") <= k)
             .select("query_id", id_col, "dist", "rank"))
@@ -537,44 +552,99 @@ def knn_candidates(spark: SparkSession, docs_geo: DataFrame,
     rows entering the query_id rank shuffle. Exposed so the plan audit can
     MEASURE shuffle volume (assert ≤ O(k·Q)) instead of only reading plan
     shapes."""
-    stats, res = planner_stats(docs_geo, res, k, cfg)
-    return _join_candidates(spark, docs_geo, queries, stats, k, res, cfg,
-                            max_dist=max_dist)
+    return _candidates(spark, docs_geo, queries, k, res, cfg, max_dist,
+                       PLANAR)
+
+
+def _pair_dists(xs: list[np.ndarray], ys: list[np.ndarray]
+                ) -> dict[tuple[int, int], np.ndarray]:
+    """Planar member-to-member distance matrix of every category pair i<j
+    (rows = category i) — the innerDist terms (RTree.cs:946-956)."""
+    out = {}
+    for i, j in itertools.combinations(range(len(xs)), 2):
+        dx = xs[i][:, None] - xs[j][None, :]
+        dy = ys[i][:, None] - ys[j][None, :]
+        out[(i, j)] = np.sqrt(dx * dx + dy * dy)
+    return out
+
+
+@dataclass(frozen=True)
+class Metric:
+    """What differs between the planar and the great-circle query
+    pipeline; every stage after the planner is written once over it."""
+    doc_xy: tuple[str, str]                      # doc coordinate columns
+    query_xy: tuple[str, str]                    # query coordinate columns
+    cell: Callable[[int, EngineConfig], Column]  # doc cell id at res
+    # (docs, res, k, cfg) → (per-cell stats with count n, res)
+    stats: Callable
+    # one-category planner (stats, queries, k, res, cfg, max_dist) →
+    # (query_id, cell, radius); k=None plans the max_dist range alone
+    plan: Callable
+    dist: Callable[[], Column]     # doc↔query distance over named columns
+    # per-category coordinate arrays → {(i, j): member distance matrix}
+    pairs: Callable
+    # how far rounding can break NGQ's triangle bound score ≥ dq
+    slack: float
+
+
+PLANAR = Metric(
+    doc_xy=("x", "y"), query_xy=("qx", "qy"),
+    cell=grid.cell_encode_named, stats=planner_stats,
+    plan=lambda st, q, k, res, cfg, cap: plan_candidate_cells(
+        st, q, k, res, cfg, max_dist=cap),
+    dist=lambda: geom.dist_point(F.col("x"), F.col("y"),
+                                 F.col("qx"), F.col("qy")),
+    pairs=_pair_dists, slack=0.0)
+
+
+def _candidates(spark: SparkSession, docs: DataFrame,
+                queries: pd.DataFrame | DataFrame, k: int | None,
+                res: int | None, cfg: EngineConfig,
+                max_dist: float | None, metric: Metric) -> DataFrame:
+    """kNN (k given) or range (k None, max_dist the radius) candidates:
+    the metric's stats step, then the one candidate builder."""
+    stats, res = metric.stats(docs, res, k, cfg)
+    return _join_candidates(spark, docs, queries, stats, k, res, cfg,
+                            max_dist=max_dist, metric=metric)
 
 
 def _join_candidates(spark: SparkSession, docs_geo: DataFrame,
                      queries: pd.DataFrame | DataFrame, stats: pd.DataFrame,
-                     k: int, res: int, cfg: EngineConfig,
+                     k: int | None, res: int, cfg: EngineConfig,
                      per_category: bool = False,
                      max_dist: float | None = None,
-                     dist: str = "dist") -> DataFrame:
-    """The planar candidate stage shared by knn_candidates and
-    ngq.candidate_topL: plan cells per query (on the driver for pandas
-    queries, per Arrow batch for a DataFrame), join the docs on the cell
-    keys, and keep only rows within their plan row's provable radius.
+                     dist: str = "dist", metric: Metric = PLANAR) -> DataFrame:
+    """The one candidate builder of kNN, range and NGQ's top-L, for both
+    metrics: plan cells per query with ``metric.plan`` (once per category
+    of ``stats`` when ``per_category``), attach each query's coordinates
+    to its plan rows, join the docs on the cell keys, and keep only rows
+    within their plan row's provable ``radius`` — before any shuffle.
 
-    Pandas queries get (qx, qy) attached driver-side, so ONE broadcast +
-    ONE join carries the plan (no second broadcast exchange + join), and
-    an explicit schema (an empty-corpus plan yields an empty frame,
-    where pandas schema inference would fail); the doc side is never
-    shuffled. A DataFrame's plan and query re-join are left to AQE."""
-    docs_c = with_cell(docs_geo, res, cfg)
+    Pandas queries are planned on the driver and the plan is broadcast
+    with an explicit schema (an empty-corpus plan yields an empty frame,
+    where pandas schema inference would fail): ONE broadcast join, the
+    doc side never shuffled. A DataFrame is planned per Arrow batch
+    (plan_in_executors) and AQE picks the join."""
+    qx, qy = metric.query_xy
     keys = ["cell", "category"] if per_category else ["cell"]
+    schema = ("query_id long, cell long, radius double"
+              + (", category int" if per_category else "")
+              + f", {qx} double, {qy} double")
+
+    def plan(st: pd.DataFrame, q: pd.DataFrame) -> pd.DataFrame:
+        def one(s: pd.DataFrame) -> pd.DataFrame:
+            return metric.plan(s, q, k, res, cfg, max_dist)
+        cells = _per_category(one, st) if per_category else one(st)
+        return cells.merge(q[["query_id", qx, qy]], on="query_id")
+
     if isinstance(queries, DataFrame):
-        cand_df = plan_cells_distributed(spark, stats, queries, k, res, cfg,
-                                         per_category, max_dist)
-        joined = (docs_c.join(cand_df, keys)
-                  .join(queries.select("query_id", "qx", "qy"), "query_id"))
+        cand = plan_in_executors(spark, stats,
+                                 queries.select("query_id", qx, qy), plan,
+                                 schema)
     else:
-        cand = plan_candidate_cells(stats, queries, k, res, cfg,
-                                    per_category, max_dist)
-        cand = cand.merge(queries[["query_id", "qx", "qy"]], on="query_id")
-        schema = ("query_id long, cell long, radius double"
-                  + (", category int" if per_category else "")
-                  + ", qx double, qy double")
-        joined = docs_c.join(F.broadcast(spark.createDataFrame(cand, schema)),
-                             keys)
-    return (joined
-            .withColumn(dist, geom.dist_point(F.col("x"), F.col("y"),
-                                              F.col("qx"), F.col("qy")))
+        cand = F.broadcast(spark.createDataFrame(plan(stats, queries),
+                                                 schema))
+    return (docs_geo.withColumn("cell", metric.cell(res, cfg))
+            .join(cand, keys)
+            .withColumn(dist, metric.dist())
             .filter(F.col(dist) <= F.col("radius")))

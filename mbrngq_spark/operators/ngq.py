@@ -44,6 +44,17 @@ corpora (each category its own dense blob — the GaussianIsland regime,
 where the bound is geometrically uncertifiable under any practical L)
 within a small constant of the uniform-data cost, with honesty flags.
 
+Both metrics run this pipeline: the planar one (knn.PLANAR) and the
+great-circle one (geodetic.GEO) share the top-L window (_topL), the
+refine kernel and _nearest_group_once through knn.Metric. The metric
+supplies the member-distance matrices and a slack for the triangle bound:
+geodetic distances are rounded to 2 dp, which can break score ≥ dq_i by up
+to three half-grains, so theta pruning keeps every member with dq ≤ T +
+slack, and a query is certified exact only when its k-th score ≤ dq_L −
+slack.
+The adaptive loops below stay planar (certifying_L reads the planar grid);
+geodetic NGQ keeps its fixed-L contract.
+
 Tie-break: (score, member-id tuple) — deterministic total order replacing
 the reference's heap-insertion-order ties (HeapPriorityQueue.cs:193-197).
 Skew: dense queries are bounded by construction (≤ m·L rows per query group);
@@ -52,8 +63,6 @@ heavy side stays in phase 1's broadcast join.
 """
 
 from __future__ import annotations
-
-import itertools
 
 import numpy as np
 import pandas as pd
@@ -64,8 +73,8 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from mbrngq_spark.config import DEFAULT, EngineConfig, refine_partitions
-from mbrngq_spark.operators.knn import _join_candidates, certifying_L, \
-    certifying_L_distributed, planner_stats
+from mbrngq_spark.operators.knn import PLANAR, Metric, _join_candidates, \
+    certifying_L, certifying_L_distributed, planner_stats
 
 
 def candidate_topL(spark: SparkSession, docs_geo: DataFrame,
@@ -79,26 +88,38 @@ def candidate_topL(spark: SparkSession, docs_geo: DataFrame,
     by (dq, doc_id). ``stats`` is planner_stats' table at ``res``. With
     pandas ``queries`` the doc side is only broadcast-joined on cell id —
     never shuffled; with a Spark-DataFrame ``queries`` (large batches)
-    the planner runs distributed per Arrow batch (plan_cells_distributed)
+    the planner runs distributed per Arrow batch (knn.plan_in_executors)
     and AQE picks the join strategy. Every row is pruned by its
     provably-sufficient per-(query, category) radius BEFORE the rank
     shuffle (≡ theta prune, RTree.cs:1391-1469)."""
-    joined = _join_candidates(spark, docs_geo, queries, stats, L, res, cfg,
-                              per_category=True, dist="dq")
+    return _topL(spark, docs_geo, queries, L, res, cfg, id_col, stats,
+                 PLANAR)
+
+
+def _topL(spark: SparkSession, docs: DataFrame,
+          queries: pd.DataFrame | DataFrame, L: int, res: int,
+          cfg: EngineConfig, id_col: str, stats: pd.DataFrame,
+          metric: Metric) -> DataFrame:
+    """candidate_topL for either metric: the one top-L window, rows
+    carrying the metric's doc coordinate columns."""
+    joined = _join_candidates(spark, docs, queries, stats, L, res, cfg,
+                              per_category=True, dist="dq", metric=metric)
     # ONE exchange serves both the rank window and the downstream refine
     # groupBy: hashpartitioning(query_id) satisfies the window's clustered
     # distribution on (query_id, category) AND the refine's on (query_id),
     # so neither inserts its own shuffle. The explicit partition count
-    # keeps AQE from coalescing the CPU-heavy refine to ~1 task, and the
-    # partial WindowGroupLimit still cuts per-map-partition input to L
-    # below this exchange (the degenerate-density volume guard).
+    # keeps AQE from coalescing the CPU-heavy refine to ~1 task. It also
+    # leaves no map-side partial WindowGroupLimit below the exchange, so
+    # the volume guard is the planners' per-(query, category) radius
+    # filter in _join_candidates (per-cell tightened for both metrics).
     w = Window.partitionBy("query_id", "category") \
               .orderBy(F.col("dq").asc(), F.col(id_col).asc())
     return (joined
             .repartition(refine_partitions(spark), "query_id")
             .withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= L)
-            .select("query_id", "category", id_col, "x", "y", "dq", "rn"))
+            .select("query_id", "category", id_col, *metric.doc_xy, "dq",
+                    "rn"))
 
 
 def _refine_schema(m: int, id_type: T.DataType | None = None) -> T.StructType:
@@ -120,29 +141,16 @@ def _refine_schema(m: int, id_type: T.DataType | None = None) -> T.StructType:
 _BLOCK_CELLS = 1 << 15
 
 
-def _by_category(tbl: pa.Table, m: int, *order: str) -> list[np.ndarray] | None:
-    """Row indices of each category 0..m-1 in one Arrow group, each sorted
-    by the ``order`` columns (one lexsort + searchsorted, no per-category
-    filter). None when a category is empty: no group exists then."""
+def _by_category(tbl: pa.Table, m: int) -> list[np.ndarray] | None:
+    """Row indices of each category 0..m-1 in one Arrow group, each in rn
+    order (one lexsort + searchsorted, no per-category filter). None
+    when a category is empty: no group exists then."""
     cat = tbl.column("category").to_numpy()
-    rows = np.lexsort(tuple(tbl.column(c).to_numpy() for c in order[::-1])
-                      + (cat,))
+    rows = np.lexsort((tbl.column("rn").to_numpy(), cat))
     cuts = np.searchsorted(cat[rows], np.arange(m + 1))
     if (np.diff(cuts) == 0).any():
         return None
     return [rows[cuts[c]:cuts[c + 1]] for c in range(m)]
-
-
-def _pair_dists(xs: list[np.ndarray], ys: list[np.ndarray]
-                ) -> dict[tuple[int, int], np.ndarray]:
-    """Planar member-to-member distance matrix of every category pair i<j
-    (rows = category i) — the innerDist terms (RTree.cs:946-956)."""
-    out = {}
-    for i, j in itertools.combinations(range(len(xs)), 2):
-        dx = xs[i][:, None] - xs[j][None, :]
-        dy = ys[i][:, None] - ys[j][None, :]
-        out[(i, j)] = np.sqrt(dx * dx + dy * dy)
-    return out
 
 
 def group_topk(D: dict[tuple[int, int], np.ndarray], dqs: list[np.ndarray],
@@ -267,40 +275,42 @@ def _theta_bounds(D: dict[tuple[int, int], np.ndarray], dqs: list[np.ndarray],
 
 
 def _make_refine(m: int, k: int, L: int, cat_totals: dict[int, int],
-                 budget: int, schema: pa.Schema):
+                 budget: int, schema: pa.Schema, metric: Metric = PLANAR,
+                 id_col: str = "doc_id"):
     """Build the per-query exact refine kernel: one Arrow table (a
     query's top-L candidates per category) in, its top-k groups as one
     Arrow table of ``schema`` out — no pandas anywhere.
 
-    Per group: one pairwise distance matrix per category pair, shared by
-    the theta bounds and the enumeration; theta pruning (≡
-    RTree.cs:1961-1970) and the ``budget`` cap select each category's
-    surviving members; group_topk enumerates their product exactly."""
+    Per group: one pairwise distance matrix per category pair
+    (``metric.pairs``), shared by the theta bounds and the enumeration;
+    theta pruning (≡ RTree.cs:1961-1970) and the ``budget`` cap select
+    each category's surviving members; group_topk enumerates their
+    product exactly."""
     id_types = [schema.field(f"c{c}_id").type for c in range(m)]
+    names = (*metric.doc_xy, "dq", id_col)
 
     def refine(tbl):
-        per_cat = _by_category(tbl, m, "rn")
+        per_cat = _by_category(tbl, m)
         if per_cat is None:
             return schema.empty_table()  # a category is empty → no groups
-        col = {n: tbl.column(n).to_numpy()
-               for n in ("x", "y", "dq", "doc_id")}
+        col = {n: tbl.column(n).to_numpy() for n in names}
         # rn order = (dq, doc_id) order; no id cast: int64 for long ids,
         # object for string ids — np.lexsort only needs orderable keys
-        xs, ys, dqs, ids = ([col[n][r] for r in per_cat]
-                            for n in ("x", "y", "dq", "doc_id"))
+        xs, ys, dqs, ids = ([col[n][r] for r in per_cat] for n in names)
         sizes = [len(d) for d in dqs]
-        D = _pair_dists(xs, ys)
+        D = metric.pairs(xs, ys)
 
         # theta tightening: prune candidates that provably cannot appear in
         # any top-k group — see _theta_bounds. Handles clustered data where
         # dq alone prunes nothing (each category in its own distant blob →
         # every score shares a large inter-blob innerDist; LB cuts the
-        # blob's far side).
+        # blob's far side). The dq test allows the metric's rounding
+        # slack: score ≥ dq_i only holds up to it.
         take = [np.arange(s) for s in sizes]
         if int(np.prod(sizes)) > 4096:
             T, LBs = _theta_bounds(D, dqs, k)
             if np.isfinite(T):
-                take = [np.flatnonzero((dq <= T) & (lb <= T))
+                take = [np.flatnonzero((dq <= T + metric.slack) & (lb <= T))
                         for dq, lb in zip(dqs, LBs)]
 
         # enumeration budget: the product is the exact kernel's cost; past
@@ -318,14 +328,15 @@ def _make_refine(m: int, k: int, L: int, cat_totals: dict[int, int],
             [i[t] for i, t in zip(ids, take)], k)
 
         # exactness: kth best truncated score must not exceed the L-th
-        # candidate distance of any truncated category (see module doc).
-        # Uses the ORIGINAL per-category lists' last dq (pruning only
-        # removed candidates that cannot affect kth)
+        # candidate distance of any truncated category (see module doc),
+        # less the metric's slack: an unretrieved member's group can score
+        # down to dq_L − slack. Uses the ORIGINAL per-category lists' last
+        # dq (pruning only removed candidates that cannot affect kth)
         kth = top_scores[-1] if len(top_scores) else np.inf
         exact = not capped   # a budget-truncated enumeration can't certify
         for c in range(m):
             truncated = sizes[c] >= L and cat_totals.get(c, 0) > sizes[c]
-            if truncated and kth > dqs[c][-1]:
+            if truncated and kth > dqs[c][-1] - metric.slack:
                 exact = False
 
         n_out = len(top_scores)
@@ -342,16 +353,22 @@ def _make_refine(m: int, k: int, L: int, cat_totals: dict[int, int],
 
 
 def _nearest_group_once(spark: SparkSession, docs_geo: DataFrame,
-                        queries: pd.DataFrame, k: int, L: int, res: int,
-                        cfg: EngineConfig, stats: pd.DataFrame,
-                        refine_budget: int = 1 << 22) -> DataFrame:
-    m = cfg.m
+                        queries: pd.DataFrame | DataFrame, k: int, L: int,
+                        res: int, cfg: EngineConfig, stats: pd.DataFrame,
+                        refine_budget: int = 1 << 22,
+                        metric: Metric = PLANAR, m: int | None = None,
+                        id_col: str = "doc_id") -> DataFrame:
+    """One NGQ round at depth L for either metric: the top-L window, then
+    the refine per query → _refine_schema rows (m categories, default
+    cfg.m)."""
+    m = m or cfg.m
     cat_totals = {int(c): int(v) for c, v in
                   stats.groupby("category")["n"].sum().items()}
-    cands = candidate_topL(spark, docs_geo, queries, L, res, cfg, stats=stats)
-    schema = _refine_schema(m, docs_geo.schema["doc_id"].dataType)
+    cands = _topL(spark, docs_geo, queries, L, res, cfg, id_col, stats,
+                  metric)
+    schema = _refine_schema(m, docs_geo.schema[id_col].dataType)
     refine = _make_refine(m, k, L, cat_totals, refine_budget,
-                          to_arrow_schema(schema))
+                          to_arrow_schema(schema), metric, id_col)
     # no repartition here: cands is already hash(query_id)-partitioned
     # with an explicit (non-coalescible) count — see candidate_topL
     return cands.groupBy("query_id").applyInArrow(refine, schema=schema)
@@ -380,8 +397,10 @@ def nearest_group(spark: SparkSession, docs_geo: DataFrame,
     bookkeeping and re-queries then all stay distributed (no driver loop,
     no collect of query ids).
 
-    Returns (query_id, group_rank, c0_id..c{m-1}_id, min_dist, exact),
-    group_rank 1..k ordered by (min_dist, id tuple).
+    Returns (query_id, group_rank, c0_id..c{m-1}_id, min_dist, exact,
+    capped), group_rank 1..k ordered by (min_dist, id tuple); ``capped``
+    marks queries whose refine hit ``refine_budget`` (their answer is
+    the best within the budget, exact=false).
 
     ADAPTIVE: queries whose L-truncation bound fails (dense-cluster inputs —
     the GaussianIsland regime, DataGenerators.cs:30-83) are retried, up to

@@ -17,8 +17,13 @@ import pandas as pd
 
 
 def ngq_bruteforce(docs: pd.DataFrame, qx: float, qy: float,
-                   m: int, k: int) -> pd.DataFrame:
-    """Exhaustive top-k NGQ for one query over (doc_id, x, y, category)."""
+                   m: int, k: int, dist=None) -> pd.DataFrame:
+    """Exhaustive top-k NGQ for one query over (doc_id, x, y, category).
+
+    ``dist(ax, ay, bx, by)`` is an optional broadcasting NumPy distance
+    for both the member pairs and member-to-query (e.g. the 2-dp-rounded
+    haversine with x/y read as lat/lon); the default is the planar
+    euclidean distance."""
     per_cat = [docs[docs.category == c] for c in range(m)]
     if any(len(p) == 0 for p in per_cat):
         return pd.DataFrame()
@@ -34,12 +39,18 @@ def ngq_bruteforce(docs: pd.DataFrame, qx: float, qy: float,
 
     inner = np.zeros(tuple(sizes))
     for i, j in itertools.combinations(range(m), 2):
-        dx = expand(xs[i], i) - expand(xs[j], j)
-        dy = expand(ys[i], i) - expand(ys[j], j)
-        np.maximum(inner, np.sqrt(dx * dx + dy * dy), out=inner)
+        if dist is None:
+            dx = expand(xs[i], i) - expand(xs[j], j)
+            dy = expand(ys[i], i) - expand(ys[j], j)
+            d = np.sqrt(dx * dx + dy * dy)
+        else:
+            d = dist(expand(xs[i], i), expand(ys[i], i),
+                     expand(xs[j], j), expand(ys[j], j))
+        np.maximum(inner, d, out=inner)
     inter = np.full(tuple(sizes), np.inf)
     for i in range(m):
-        dq = np.sqrt((xs[i] - qx) ** 2 + (ys[i] - qy) ** 2)
+        dq = (np.sqrt((xs[i] - qx) ** 2 + (ys[i] - qy) ** 2) if dist is None
+              else dist(xs[i], ys[i], qx, qy))
         np.minimum(inter, expand(dq, i), out=inter)
     score = (inner + inter).ravel()
     idx = np.unravel_index(np.arange(score.size), tuple(sizes))

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from mbrngq_spark.operators.geodetic import (
     R_EARTH, _rect_haversine_bounds, geodetic_knn, geodetic_knn_bruteforce,
     haversine_col, np_haversine)
+from mbrngq_spark.oracle import ngq_bruteforce
 
 
 def test_haversine_known_values():
@@ -111,10 +112,53 @@ def test_pruned_knn_ships_fraction_of_cells():
     ix = np.minimum(((docs_pd.lon + 180) // (360 / n)).astype(np.int64),
                     n - 1)
     stats = pd.DataFrame({"cell": iy * n + ix}).value_counts() \
-        .rename("count").reset_index()
+        .rename("n").reset_index()
     queries = pd.DataFrame({"query_id": [0], "qlat": [20.0], "qlon": [30.0]})
     plan = plan_geo_cells(stats, queries, k=5, res=res)
     assert 0 < len(plan) < 0.05 * stats.shape[0]
+
+
+def _cell_stats(docs_pd, res):
+    n = 1 << res
+    iy = np.minimum(((docs_pd.lat + 90) // (180 / n)).astype(np.int64),
+                    n - 1)
+    ix = np.minimum(((docs_pd.lon + 180) // (360 / n)).astype(np.int64),
+                    n - 1)
+    return pd.DataFrame({"cell": iy * n + ix}).value_counts() \
+        .rename("n").reset_index()
+
+
+@pytest.mark.parametrize("kind", ["uniform", "polar", "antimeridian"])
+def test_fine_stats_tighten_geo_radius_losslessly(kind):
+    """Stats finer than the plan's res tighten the k-bound per fine cell:
+    every query's radius still covers its kth rounded distance (the row
+    filter loses no answer), and on the clustered corpora most radii
+    shrink."""
+    from mbrngq_spark.operators.geodetic import np_haversine, plan_geo_cells
+
+    rng = np.random.default_rng(17)
+    docs_pd = _corpus(rng, kind)
+    queries = pd.DataFrame({
+        "query_id": np.arange(40),
+        "qlat": np.degrees(np.arcsin(rng.uniform(-1, 1, 40))),
+        "qlon": rng.uniform(-180, 180, 40)})
+    k, res = 7, 5
+
+    def radii(stats, stats_res=None):
+        plan = plan_geo_cells(stats, queries, k, res, stats_res=stats_res)
+        return plan.groupby("query_id")["radius"].first() \
+            .reindex(queries.query_id).to_numpy()
+
+    coarse = radii(_cell_stats(docs_pd, res))
+    fine = radii(_cell_stats(docs_pd, 8), stats_res=8)
+    d = np.round(np_haversine(queries.qlat.to_numpy()[:, None],
+                              queries.qlon.to_numpy()[:, None],
+                              docs_pd.lat.to_numpy()[None, :],
+                              docs_pd.lon.to_numpy()[None, :]), 2)
+    kth = np.sort(d, axis=1)[:, k - 1]
+    assert (fine >= kth).all() and (coarse >= kth).all()
+    if kind != "uniform":
+        assert (fine < coarse).mean() > 0.5
 
 
 @pytest.mark.parametrize("kind", ["uniform", "antimeridian"])
@@ -222,13 +266,43 @@ def test_geodetic_pairs_equals_exhaustive(spark, kind):
     assert got == exp
 
 
+def _rounded_haversine(alat, alon, blat, blon):
+    return np.round(np_haversine(alat, alon, blat, blon), 2)
+
+
+def _geo_ngq_oracle(docs_pd, queries, m, k, L):
+    """The fixed-L spherical NGQ reference, independent of the engine's
+    pruning: per query, each category truncated in pandas to its L
+    nearest by (rounded dq, doc_id), then the exhaustive
+    oracle.ngq_bruteforce with the 2-dp-rounded haversine."""
+    lat, lon = docs_pd.lat.to_numpy(), docs_pd.lon.to_numpy()
+    rows = []
+    for q in queries.itertuples(index=False):
+        top = (docs_pd.assign(dq=_rounded_haversine(lat, lon, q.qlat, q.qlon))
+               .sort_values(["dq", "doc_id"]).groupby("category").head(L)
+               .rename(columns={"lat": "x", "lon": "y"}))
+        exp = ngq_bruteforce(top, q.qlat, q.qlon, m, k,
+                             dist=_rounded_haversine)
+        for r in exp.itertuples(index=False):
+            rows.append((q.query_id, r.group_rank,
+                         ",".join(str(getattr(r, f"c{c}_id"))
+                                  for c in range(m)),
+                         float(np.round(r.min_dist, 2))))
+    return sorted(rows)
+
+
+def _geo_ngq_rows(out):
+    return sorted((r.query_id, r.group_rank, r.members, r.min_dist)
+                  for r in out.collect())
+
+
 @pytest.mark.parametrize("kind", ["uniform", "polar", "antimeridian"])
 def test_geo_ngq_equals_bruteforce(spark, kind):
     """Spherical NGQ (geodetic_nearest_group): the cell-pruned fixed-L
-    path must equal the exhaustive crossJoin twin on pole / antimeridian
-    corpora — pruning invisible, same (score, id-tuple) order."""
-    from mbrngq_spark.operators.geodetic import (
-        geodetic_nearest_group, geodetic_nearest_group_bruteforce)
+    path must equal the exhaustive pandas/NumPy reference on pole /
+    antimeridian corpora — pruning invisible, same (score, id-tuple)
+    order."""
+    from mbrngq_spark.operators.geodetic import geodetic_nearest_group
 
     rng = np.random.default_rng(hash(kind) % 2**31 + 7)
     docs_pd = _corpus(rng, kind, n=900)
@@ -238,15 +312,10 @@ def test_geo_ngq_equals_bruteforce(spark, kind):
         "query_id": np.arange(6),
         "qlat": [0.0, 89.5, -89.0, 45.0, 10.0, 60.0],
         "qlon": [0.0, 13.0, -100.0, 179.9, -179.9, 120.0]})
-    a = geodetic_nearest_group(spark, docs, queries, m=3, k=4, L=5,
-                               res=4).collect()
-    b = geodetic_nearest_group_bruteforce(spark, docs, queries, m=3, k=4,
-                                          L=5).collect()
-    ka = sorted((r.query_id, r.group_rank, r.members, r.min_dist)
-                for r in a)
-    kb = sorted((r.query_id, r.group_rank, r.members, r.min_dist)
-                for r in b)
-    assert ka == kb
+    got = _geo_ngq_rows(geodetic_nearest_group(spark, docs, queries, m=3,
+                                               k=4, L=5, res=4))
+    assert got == _geo_ngq_oracle(docs_pd, queries, 3, 4, 5)
+    assert len(got) == 4 * len(queries)
 
 
 def test_geo_ngq_empty_category(spark):
@@ -358,13 +427,7 @@ def test_geodetic_pip_matches_numpy_twin(spark):
     assert len(got) > 50   # both polygons actually catch points
 
 
-def test_geo_ngq_clustered_sweep(spark):
-    """Stress the spherical NGQ where pruning matters: three dense
-    clusters (one per category) far apart — the island regime on the
-    sphere. Pruned fixed-L path must still equal the exhaustive twin."""
-    from mbrngq_spark.operators.geodetic import (
-        geodetic_nearest_group, geodetic_nearest_group_bruteforce)
-
+def _clustered_geo():
     rng = np.random.default_rng(77)
     n = 3000
     centers = [(70.0, 170.0), (-40.0, -60.0), (5.0, 60.0)]
@@ -376,20 +439,41 @@ def test_geo_ngq_clustered_sweep(spark):
     docs_pd = pd.DataFrame({
         "doc_id": np.arange(n), "lat": lat, "lon": lon,
         "category": np.repeat([0, 1, 2], n // 3)})
-    docs = spark.createDataFrame(docs_pd)
     queries = pd.DataFrame({
         "query_id": np.arange(4),
         "qlat": [70.0, -40.0, 0.0, 89.0],
         "qlon": [170.0, -60.0, 0.0, -179.0]})
-    a = geodetic_nearest_group(spark, docs, queries, m=3, k=6, L=8,
-                               res=5).collect()
-    b = geodetic_nearest_group_bruteforce(spark, docs, queries, m=3,
-                                          k=6, L=8).collect()
-    ka = sorted((r.query_id, r.group_rank, r.members, r.min_dist)
-                for r in a)
-    kb = sorted((r.query_id, r.group_rank, r.members, r.min_dist)
-                for r in b)
-    assert ka == kb and len(ka) == 24
+    return docs_pd, queries
+
+
+def test_geo_ngq_clustered_sweep(spark):
+    """Stress the spherical NGQ where pruning matters: three dense
+    clusters (one per category) far apart — the island regime on the
+    sphere. Pruned fixed-L path must still equal the exhaustive
+    reference."""
+    from mbrngq_spark.operators.geodetic import geodetic_nearest_group
+
+    docs_pd, queries = _clustered_geo()
+    got = _geo_ngq_rows(geodetic_nearest_group(
+        spark, spark.createDataFrame(docs_pd), queries, m=3, k=6, L=8,
+        res=5))
+    assert got == _geo_ngq_oracle(docs_pd, queries, 3, 6, 8)
+    assert len(got) == 24
+
+
+def test_geo_ngq_clustered_theta_active(spark):
+    """The clustered corpus at L=20: L³ = 8000 candidate groups per
+    query exceed the refine's theta threshold (4096), so theta pruning
+    — with GEO's rounding slack — runs on every query and must stay
+    invisible against the exhaustive reference."""
+    from mbrngq_spark.operators.geodetic import geodetic_nearest_group
+
+    docs_pd, queries = _clustered_geo()
+    got = _geo_ngq_rows(geodetic_nearest_group(
+        spark, spark.createDataFrame(docs_pd), queries, m=3, k=6, L=20,
+        res=5))
+    assert got == _geo_ngq_oracle(docs_pd, queries, 3, 6, 20)
+    assert len(got) == 24
 
 
 @pytest.mark.parametrize("kind", ["uniform", "polar", "antimeridian"])

@@ -99,6 +99,23 @@ def test_knn_keep_ties_rank_semantics(spark, docs_geo):
            set(map(tuple, b[["query_id", "doc_id"]].values))
 
 
+def test_knn_keep_ties_keeps_every_co_minimal_doc(spark):
+    """keep_ties (RTree.Nearest keeps all co-minimal answers,
+    RTree.cs:2440-2443): four docs at distance 5 from the query, k=1 →
+    all four at rank 1, for pandas and for DataFrame queries."""
+    docs = spark.createDataFrame(pd.DataFrame({
+        "doc_id": [1, 2, 3, 4, 5, 6],
+        "x": [55.0, 45.0, 50.0, 50.0, 60.0, 10.0],
+        "y": [50.0, 50.0, 55.0, 45.0, 60.0, 10.0],
+        "category": [0, 1, 2, 0, 1, 2]}))
+    q = pd.DataFrame({"query_id": [0], "qx": [50.0], "qy": [50.0]})
+    for queries in (q, spark.createDataFrame(q)):
+        got = knn_op.knn_join(spark, docs, queries, k=1,
+                              keep_ties=True).toPandas()
+        assert sorted(got["doc_id"]) == [1, 2, 3, 4]
+        assert (got["rank"] == 1).all() and (got["dist"] == 5.0).all()
+
+
 RECTS = pd.DataFrame({
     "rect_id": [0, 1, 2],
     "xmin": [10.0, 0.0, 90.0], "ymin": [10.0, 0.0, 90.0],

@@ -149,3 +149,39 @@ def test_refine_budget_cap_flags_capped_and_inexact():
     per_cap = max(int(budget ** (1.0 / m)), k)
     exp = ngq_bruteforce(df[df["rn"] <= per_cap], QX, QY, m, k)
     _assert_same_groups(got, exp, m)
+
+
+def test_geo_refine_slack_keeps_group_past_rounded_triangle_bound():
+    """Geodetic distances are rounded to 2 dp, so a member's dq can
+    exceed its group's score (the triangle bound score ≥ dq_i) by up to
+    three half-grains. Here B's dq is 0.01 m past the score of the best
+    group (A, B), and 65² candidate groups put theta pruning in play: the
+    GEO refine keeps B within its slack, a zero-slack refine prunes B
+    and loses the group."""
+    from dataclasses import replace
+
+    from mbrngq_spark.operators.geodetic import GEO, np_haversine
+
+    n = 65                      # 65 * 65 > the 4096-group theta threshold
+    far = np.arange(1, n)
+    lat = np.r_[0.0, 10.0 + 0.5 * far, 0.0, -10.0 - 0.5 * far]
+    lon = np.r_[0.0, np.zeros(n - 1), 0.001, np.zeros(n - 1)]
+    dq = np.round(np_haversine(lat, lon, 0.0, 0.0), 2)   # query at A
+    d_ab = np.round(np_haversine(0.0, 0.0, 0.0, 0.001), 2)
+    dq[n] = d_ab + 0.01                                   # B
+    df = pd.DataFrame({"query_id": 7, "category": np.repeat([0, 1], n),
+                       "doc_id": np.arange(2 * n), "lat": lat, "lon": lon,
+                       "dq": dq})
+    df["rn"] = (df.groupby("category")["dq"].rank(method="first")
+                .astype(np.int32))
+    schema = to_arrow_schema(ngq._refine_schema(2))
+
+    def best(metric):
+        f = ngq._make_refine(2, 1, n, {0: n, 1: n}, 1 << 22, schema,
+                             metric, "doc_id")
+        out = f(pa.Table.from_pandas(df, preserve_index=False)).to_pandas()
+        return [tuple(r) for r in out[["c0_id", "c1_id", "min_dist"]]
+                .itertuples(index=False)]
+
+    assert best(GEO) == [(0, n, d_ab)]
+    assert best(replace(GEO, slack=0.0)) != [(0, n, d_ab)]

@@ -29,6 +29,14 @@ def check(name: str, ok: bool, detail: str = "") -> None:
     print(("PASS " if ok else "FAIL ") + name + ("" if ok else f" — {detail}"))
 
 
+def broadcast_only(p: str) -> bool:
+    """Every join in the plan is a broadcast hash join: the doc side is
+    never shuffled into a sort-merge, shuffled-hash or nested-loop join."""
+    return "BroadcastHashJoin" in p and not any(
+        j in p for j in ("SortMergeJoin", "ShuffledHashJoin",
+                         "BroadcastNestedLoopJoin", "CartesianProduct"))
+
+
 def plan_of(df, execute: bool = False) -> str:
     if execute:
         # AQE only finalizes (and annotates codegen: "*(n)") the plan of the
@@ -230,11 +238,16 @@ def main() -> int:
     p = plan_of(gk, execute=True)
     sections.append(("geodetic kNN", p))
     check("geo: candidates and queries join docs via broadcast",
-          p.count("BroadcastHashJoin") >= 2)
+          broadcast_only(p))
     geo_ex = re.findall(r"Exchange hashpartitioning\(([^)]+)\)", p)
     check("geo: the only row shuffle is the query_id rank window",
           len(geo_ex) >= 1 and all("query_id" in e for e in geo_ex),
           f"exchanges={geo_ex}")
+    geo_mode = re.findall(r"Exchange hashpartitioning\([^)]+\), (\w+)", p)
+    check("geo: rank exchange has an explicit partition count",
+          len(geo_mode) >= 1
+          and all(mo == "REPARTITION_BY_NUM" for mo in geo_mode),
+          f"modes={geo_mode}")
 
     # --- geodetic range (DataFrame queries) / ε-join -------------------------
     # large-Q forms: planning must run on executors (ArrowEvalPython /
@@ -648,11 +661,17 @@ def main() -> int:
     p = plan_of(gn, execute=True)
     sections.append(("geodetic NGQ", p))
     check("geo ngq: candidates and queries join docs via broadcast",
-          p.count("BroadcastHashJoin") >= 2)
+          broadcast_only(p))
     gn_ex = re.findall(r"Exchange hashpartitioning\(([^)]+)\)", p)
     check("geo ngq: every row shuffle is query_id-keyed",
           len(gn_ex) >= 1 and all("query_id" in e for e in gn_ex),
           f"exchanges={gn_ex}")
+    # the executed AQE plan also prints its Initial Plan: count the
+    # exchanges that ran, so a second same-key exchange cannot hide
+    final = p.split("== Initial Plan ==")[0]
+    gn_final = re.findall(r"Exchange hashpartitioning\(query_id", final)
+    check("geo ngq: one query_id exchange feeds the top-L window and the "
+          "refine", len(gn_final) == 1, f"exchanges={gn_ex}")
 
     # --- persisted IVF artifact: probe = partition pruning -------------------
     import shutil
