@@ -43,6 +43,17 @@ terminal (deeper L provably cannot certify them). This keeps clustered
 corpora (each category its own dense blob — the GaussianIsland regime,
 where the bound is geometrically uncertifiable under any practical L)
 within a small constant of the uniform-data cost, with honesty flags.
+On such corpora the loop's path is often decided before it starts: the
+occupancy stats bound every group's score from below (the category gap
+between occupied cells plus q's distance to the nearest occupied cell —
+GetGroupMinDist over MBRs, RTree.cs:938-966), and when that bound proves
+round 1 fails and the certifying depth reaches the refine budget's
+per-category cap, the pandas-query loop fetches the cap depth in round 1
+and refines each query at both depths from that one candidate set
+(_reaches_cap). Rows stay those of the two-round path: the escalation
+bookkeeping reads the depth-L answers as before, and a cap round, always
+the last, takes its answers from the cap-depth rows already fetched. This
+saves the second candidate join, exchange and collect.
 
 Both metrics run this pipeline: the planar one (knn.PLANAR) and the
 great-circle one (geodetic.GEO) share the top-L window (_topL), the
@@ -64,6 +75,8 @@ heavy side stays in phase 1's broadcast join.
 
 from __future__ import annotations
 
+import itertools
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -72,9 +85,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from mbrngq_spark import geom, grid
 from mbrngq_spark.config import DEFAULT, EngineConfig, refine_partitions
 from mbrngq_spark.operators.knn import PLANAR, Metric, _join_candidates, \
-    certifying_L, certifying_L_distributed, planner_stats
+    certifying_L, certifying_L_distributed, count_grid, covering_box, \
+    planner_stats
 
 
 def candidate_topL(spark: SparkSession, docs_geo: DataFrame,
@@ -122,10 +137,12 @@ def _topL(spark: SparkSession, docs: DataFrame,
                     "rn"))
 
 
-def _refine_schema(m: int, id_type: T.DataType | None = None) -> T.StructType:
+def _refine_schema(m: int, id_type: T.DataType | None = None,
+                   depth: bool = False) -> T.StructType:
     """Output schema; member-id columns inherit the input id type (the
     input_hint table carries STRING doc ids — int ids are just the common
-    case for the testdata tables)."""
+    case for the testdata tables). ``depth`` adds the internal column
+    tagging each row of a two-depth refine with the L it answers at."""
     id_type = id_type or T.LongType()
     fields = [T.StructField("query_id", T.LongType()),
               T.StructField("group_rank", T.IntegerType())]
@@ -133,6 +150,8 @@ def _refine_schema(m: int, id_type: T.DataType | None = None) -> T.StructType:
     fields += [T.StructField("min_dist", T.DoubleType()),
                T.StructField("exact", T.BooleanType()),
                T.StructField("capped", T.BooleanType())]
+    if depth:
+        fields.append(T.StructField("depth", T.IntegerType()))
     return T.StructType(fields)
 
 
@@ -276,7 +295,7 @@ def _theta_bounds(D: dict[tuple[int, int], np.ndarray], dqs: list[np.ndarray],
 
 def _make_refine(m: int, k: int, L: int, cat_totals: dict[int, int],
                  budget: int, schema: pa.Schema, metric: Metric = PLANAR,
-                 id_col: str = "doc_id"):
+                 id_col: str = "doc_id", prefix_L: int | None = None):
     """Build the per-query exact refine kernel: one Arrow table (a
     query's top-L candidates per category) in, its top-k groups as one
     Arrow table of ``schema`` out — no pandas anywhere.
@@ -285,15 +304,22 @@ def _make_refine(m: int, k: int, L: int, cat_totals: dict[int, int],
     (``metric.pairs``), shared by the theta bounds and the enumeration;
     theta pruning (≡ RTree.cs:1961-1970) and the ``budget`` cap select
     each category's surviving members; group_topk enumerates their
-    product exactly."""
+    product exactly.
+
+    With ``prefix_L`` the kernel answers every query twice from its one
+    candidate table: at depth ``prefix_L`` from each category's
+    rn ≤ prefix_L prefix — exactly the candidates a depth-prefix_L round
+    retrieves, since both windows hold every doc up to their radius and
+    rank by (dq, doc_id) — and at depth L from the full lists. Each row
+    carries its depth in ``schema``'s ``depth`` column."""
     id_types = [schema.field(f"c{c}_id").type for c in range(m)]
     names = (*metric.doc_xy, "dq", id_col)
 
-    def refine(tbl):
-        per_cat = _by_category(tbl, m)
-        if per_cat is None:
-            return schema.empty_table()  # a category is empty → no groups
-        col = {n: tbl.column(n).to_numpy() for n in names}
+    def solve(col: dict[str, np.ndarray], per_cat: list[np.ndarray],
+              L: int) -> list[pa.Array]:
+        """The top-k groups of one query at depth L as the output
+        columns after query_id: group_rank, member ids, min_dist, exact,
+        capped."""
         # rn order = (dq, doc_id) order; no id cast: int64 for long ids,
         # object for string ids — np.lexsort only needs orderable keys
         xs, ys, dqs, ids = ([col[n][r] for r in per_cat] for n in names)
@@ -340,14 +366,28 @@ def _make_refine(m: int, k: int, L: int, cat_totals: dict[int, int],
                 exact = False
 
         n_out = len(top_scores)
+        return ([pa.array(np.arange(1, n_out + 1, dtype=np.int32))]
+                + [pa.array(t, type=ty) for t, ty in zip(top_ids, id_types)]
+                + [pa.array(top_scores), pa.array(np.full(n_out, exact)),
+                   pa.array(np.full(n_out, capped))])
+
+    def refine(tbl):
+        per_cat = _by_category(tbl, m)
+        if per_cat is None:
+            return schema.empty_table()  # a category is empty → no groups
+        col = {n: tbl.column(n).to_numpy() for n in names}
         qid = tbl.column("query_id")[0].as_py()
-        return pa.Table.from_arrays(
-            [pa.array(np.full(n_out, qid, dtype=np.int64)),
-             pa.array(np.arange(1, n_out + 1, dtype=np.int32))]
-            + [pa.array(t, type=ty) for t, ty in zip(top_ids, id_types)]
-            + [pa.array(top_scores), pa.array(np.full(n_out, exact)),
-               pa.array(np.full(n_out, capped))],
-            schema=schema)
+        out = []
+        for depth in ([L] if prefix_L is None else [prefix_L, L]):
+            # each list holds ≤ L rows (rn ≤ L), so [:L] keeps it whole
+            cols = solve(col, [r[:depth] for r in per_cat], depth)
+            n_out = len(cols[0])
+            tag = [] if prefix_L is None else \
+                [pa.array(np.full(n_out, depth, dtype=np.int32))]
+            out.append(pa.Table.from_arrays(
+                [pa.array(np.full(n_out, qid, dtype=np.int64))] + cols + tag,
+                schema=schema))
+        return pa.concat_tables(out)
 
     return refine
 
@@ -357,18 +397,21 @@ def _nearest_group_once(spark: SparkSession, docs_geo: DataFrame,
                         res: int, cfg: EngineConfig, stats: pd.DataFrame,
                         refine_budget: int = 1 << 22,
                         metric: Metric = PLANAR, m: int | None = None,
-                        id_col: str = "doc_id") -> DataFrame:
+                        id_col: str = "doc_id",
+                        prefix_L: int | None = None) -> DataFrame:
     """One NGQ round at depth L for either metric: the top-L window, then
     the refine per query → _refine_schema rows (m categories, default
-    cfg.m)."""
+    cfg.m). ``prefix_L`` also answers every query at that smaller depth
+    from the same candidates (_make_refine), rows tagged by ``depth``."""
     m = m or cfg.m
     cat_totals = {int(c): int(v) for c, v in
                   stats.groupby("category")["n"].sum().items()}
     cands = _topL(spark, docs_geo, queries, L, res, cfg, id_col, stats,
                   metric)
-    schema = _refine_schema(m, docs_geo.schema[id_col].dataType)
+    schema = _refine_schema(m, docs_geo.schema[id_col].dataType,
+                            depth=prefix_L is not None)
     refine = _make_refine(m, k, L, cat_totals, refine_budget,
-                          to_arrow_schema(schema), metric, id_col)
+                          to_arrow_schema(schema), metric, id_col, prefix_L)
     # no repartition here: cands is already hash(query_id)-partitioned
     # with an explicit (non-coalescible) count — see candidate_topL
     return cands.groupBy("query_id").applyInArrow(refine, schema=schema)
@@ -382,6 +425,103 @@ def _next_L(L: int, cert: int, per_cap: int) -> int | None:
     answers are as good as the budget allows and are final."""
     nxt = min(max(cert, 2 * L), per_cap)
     return nxt if nxt > L else None
+
+
+# category cell pairs _category_gap compares at most per category pair;
+# past it the gap is read off coarser cells (smaller, still a lower bound)
+_GAP_PAIRS = 1 << 20
+
+
+def _category_gap(stats: pd.DataFrame, res: int, cfg: EngineConfig) -> float:
+    """A lower bound on every group's innerDist, query-independent: the
+    largest, over category pairs, minimum rect-to-rect gap between the
+    occupied cells of the two categories. The per-(cell, category) stats
+    play the reference's per-node category bitmap here, and the cells its
+    node MBRs (GetGroupMinDist, RTree.cs:938-966; SURVEY Q4a)."""
+    gap = 0.0
+    cats = sorted(stats["category"].unique())
+    for i, j in itertools.combinations(cats, 2):
+        a, b, r = (stats.loc[stats["category"] == i, "cell"].to_numpy(),
+                   stats.loc[stats["category"] == j, "cell"].to_numpy(), res)
+        while len(a) * len(b) > _GAP_PAIRS:
+            a, b, r = np.unique(a >> 2), np.unique(b >> 2), r - 1
+        w = (cfg.width / (1 << r), cfg.height / (1 << r))
+        sq = 0.0
+        for axis in (0, 1):      # Morton: x on even bits, y on odd
+            d = np.abs(grid.np_compact_bits(a >> axis)[:, None]
+                       - grid.np_compact_bits(b >> axis)[None, :])
+            sq = sq + (np.maximum(d - 1, 0) * w[axis]) ** 2
+        gap = max(gap, float(np.sqrt(sq.min())))
+    return gap
+
+
+def _provably_bad(stats: pd.DataFrame, queries: pd.DataFrame, L: int,
+                  res: int, cfg: EngineConfig
+                  ) -> tuple[np.ndarray, np.ndarray]:
+    """Per query q, from the planner stats alone: ``lb``, a lower bound
+    on every group's score, and ``bad``, whether round 1 at depth L
+    provably fails q's L-truncation bound.
+
+    lb = _category_gap (innerDist) + the MINDIST from q to its nearest
+    occupied cell (interDist) — GetGroupMinDist over MBRs (Q4a). q is
+    bad when a category holding > L docs has an L-covering-box radius,
+    which bounds its L-th candidate distance d_L from above, below lb:
+    round 1's k-th score is then ≥ lb > d_L."""
+    n = 1 << res
+    wx, wy = cfg.width / n, cfg.height / n
+    qx = queries["qx"].to_numpy(np.float64)
+    qy = queries["qy"].to_numpy(np.float64)
+    cx = np.clip(((qx - cfg.min_x) / wx).astype(np.int64), 0, n - 1)
+    cy = np.clip(((qy - cfg.min_y) / wy).astype(np.int64), 0, n - 1)
+
+    def sat_of(st: pd.DataFrame) -> np.ndarray:
+        cells = st["cell"].to_numpy()
+        return count_grid(grid.np_compact_bits(cells >> 1),
+                          grid.np_compact_bits(cells),
+                          st["n"].to_numpy(np.int64), n)[1]
+
+    # the smallest square around q's cell holding a doc (half-width h):
+    # the one of half-width h-1 inside it is empty, so every occupied
+    # cell lies at least q's distance to that empty square's border away
+    x0, y0, x1, y1 = covering_box(
+        sat_of(stats.groupby("cell", as_index=False)["n"].sum()),
+        cx, cy, n, 1)
+    h = np.maximum.reduce([cx - x0, x1 - cx, cy - y0, y1 - cy])
+    near = np.maximum(np.minimum.reduce([
+        qx - (cfg.min_x + (cx - h + 1) * wx),
+        cfg.min_x + (cx + h) * wx - qx,
+        qy - (cfg.min_y + (cy - h + 1) * wy),
+        cfg.min_y + (cy + h) * wy - qy]), 0.0)
+    lb = _category_gap(stats, res, cfg) + near
+
+    bad = np.zeros(len(queries), dtype=bool)
+    for _, st in stats.groupby("category"):
+        if int(st["n"].sum()) <= L:
+            continue   # never truncated at L
+        bx0, by0, bx1, by1 = covering_box(sat_of(st), cx, cy, n, L)
+        bad |= geom.np_maxdist_point_rect(
+            qx, qy, cfg.min_x + bx0 * wx, cfg.min_y + by0 * wy,
+            cfg.min_x + (bx1 + 1) * wx, cfg.min_y + (by1 + 1) * wy) < lb
+    return lb, bad
+
+
+def _reaches_cap(stats: pd.DataFrame, queries: pd.DataFrame, L: int,
+                 res: int, per_cap: int, cfg: EngineConfig) -> bool:
+    """Plan-time proof, from the planner stats alone (NumPy on the driver,
+    no Spark job), that the pandas-query loop escalates a batch from
+    round 1 at depth L straight to a round at ``per_cap``.
+
+    A provably-bad query (_provably_bad) fails round 1, and L < per_cap
+    keeps its L^m enumeration within the budget (per_cap^m ≤ budget
+    unless per_cap was raised to k), so it is bad, not capped. The
+    loop's certifying depth is a max over its bad set and
+    grows with the k-th score, which is ≥ lb, so one provably-bad query
+    with certifying_L(kth=lb) ≥ per_cap makes _next_L return per_cap.
+    Rows never depend on this answer; it only decides where the cap
+    depth is fetched."""
+    lb, bad = _provably_bad(stats, queries, L, res, cfg)
+    return bool(bad.any()) and certifying_L(
+        stats, queries[bad].assign(kth=lb[bad]), res, cfg) >= per_cap
 
 
 def nearest_group(spark: SparkSession, docs_geo: DataFrame,
@@ -411,7 +551,21 @@ def nearest_group(spark: SparkSession, docs_geo: DataFrame,
     whose refine was budget-capped are terminal (their answers carry
     exact=false, capped=true — deeper L cannot change them). This is the
     distributed analog of the reference widening its search until theta
-    certifies the answer."""
+    certifies the answer.
+
+    With pandas queries, when the occupancy stats prove that round 1 at L
+    fails and the loop then jumps straight to the refine budget's
+    per-category cap (_reaches_cap — the clustered-corpus case), round 1
+    retrieves the cap depth once and refines every query at both depths
+    from that one candidate set. The loop still decides everything from
+    the depth-L answers, and its cap round reads the cap-depth answers
+    already fetched, so the rows are those of the two-round path: a
+    query's top-L prefix of a deeper window is exactly its top-L window,
+    and no query's answer depends on the rest of the batch.
+
+    Raises ValueError when ``max_rounds`` < 1."""
+    if max_rounds < 1:
+        raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
     k = k or cfg.k
     L = L or cfg.ngq_candidates
     m = cfg.m
@@ -480,9 +634,21 @@ def _nearest_group_pandas(spark: SparkSession, docs_geo: DataFrame,
     schema = _refine_schema(cfg.m, docs_geo.schema["doc_id"].dataType)
     remaining = queries
     parts: list[pd.DataFrame] = []
+    at_cap: pd.DataFrame | None = None   # per_cap answers fetched early
     for rnd in range(max_rounds):
-        out = _nearest_group_once(spark, docs_geo, remaining, k, L, res,
-                                  cfg, stats, refine_budget).toPandas()
+        if at_cap is not None and L == per_cap:
+            out = at_cap[at_cap["query_id"].isin(remaining["query_id"])]
+        elif rnd == 0 and max_rounds > 1 and L < per_cap \
+                and _reaches_cap(stats, queries, L, res, per_cap, cfg):
+            # one round fetches the cap depth and answers at both depths
+            both = _nearest_group_once(
+                spark, docs_geo, remaining, k, per_cap, res, cfg, stats,
+                refine_budget, prefix_L=L).toPandas()
+            at_L = both.pop("depth").to_numpy() == L
+            out, at_cap = both[at_L], both[~at_L]
+        else:
+            out = _nearest_group_once(spark, docs_geo, remaining, k, L, res,
+                                      cfg, stats, refine_budget).toPandas()
         bad = ~out["exact"] & ~out["capped"]
         parts.append(out[~bad])
         if not bad.any():
@@ -499,5 +665,5 @@ def _nearest_group_pandas(spark: SparkSession, docs_geo: DataFrame,
             parts.append(bad_rows)
             break
         L = nxt
-    final = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame()
+    final = pd.concat(parts, ignore_index=True)   # max_rounds ≥ 1
     return spark.createDataFrame(final if len(final) else [], schema)

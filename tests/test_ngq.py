@@ -8,8 +8,10 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from mbrngq_spark.config import EngineConfig
+from mbrngq_spark.config import DEFAULT, EngineConfig
 from mbrngq_spark.functions import derive
+from mbrngq_spark.operators import ngq
+from mbrngq_spark.operators.knn import planner_stats
 from mbrngq_spark.operators.ngq import nearest_group
 from mbrngq_spark.oracle import ngq_bruteforce
 from tests.conftest import SF_DIR
@@ -140,3 +142,83 @@ def test_ngq_score_formula_spot_check(spark, docs_geo, docs_pdf):
                 for i, a in enumerate(mem) for b in mem[i + 1:])
     inter = min(np.hypot(a[0] - q.qx, a[1] - q.qy) for a in mem)
     assert row.min_dist == pytest.approx(inner + inter, abs=1e-9)
+
+
+@pytest.mark.parametrize("as_df", [False, True])
+def test_ngq_rejects_max_rounds_below_one(spark, docs_geo, as_df):
+    q = spark.createDataFrame(QUERIES) if as_df else QUERIES
+    with pytest.raises(ValueError, match="max_rounds"):
+        nearest_group(spark, docs_geo, q, k=5, L=16, max_rounds=0)
+
+
+def _jobs_and_rows(spark, group, *args, **kw):
+    """nearest_group's rows (pandas queries) and the Spark jobs they took."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = nearest_group(spark, *args, **kw).toPandas()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _forced(monkeypatch, value):
+    monkeypatch.setattr(ngq, "_reaches_cap", lambda *a: value)
+
+
+def test_ngq_cap_depth_round_on_islands(spark, monkeypatch):
+    """On a gaussian_island corpus the occupancy bound proves the batch
+    escalates from L to the refine budget's cap, so round 1 fetches the
+    cap depth once: the rows equal the two-round path's, in fewer jobs."""
+    from mbrngq_spark.sources.synth import documents_spans, query_points, \
+        with_geometry_spans
+
+    docs = (with_geometry_spans(documents_spans(spark, 6000),
+                                distribution="gaussian_island")
+            .withColumn("doc_id", F.substring("doc_id", 5, 8).cast("long"))
+            .select("doc_id", "x", "y", "category")).cache()
+    q = query_points(spark, 16).toPandas()
+    stats, res = planner_stats(docs, None, 32)
+    assert ngq._reaches_cap(stats, q, 32, res, 161, DEFAULT)
+    got, jobs = _jobs_and_rows(spark, "ngq-cap-round", docs, q, k=10, L=32)
+    _forced(monkeypatch, False)
+    exp, exp_jobs = _jobs_and_rows(spark, "ngq-two-rounds", docs, q, k=10,
+                                   L=32)
+    docs.unpersist()
+    assert not exp["exact"].all(), "the batch should escalate"
+    pd.testing.assert_frame_equal(got, exp)
+    assert jobs < exp_jobs
+
+
+@pytest.mark.parametrize("L,k,budget,first_step", [
+    (16, 5, 1 << 22, None),   # round 1 certifies: the cap rows go unused
+    (6, 3, 1 << 10, 10),      # some queries escalate, straight to the cap
+    (2, 5, 1 << 30, 23),      # a miss: _next_L stops short of the cap
+])
+def test_ngq_forced_cap_round_keeps_rows(spark, docs_geo, monkeypatch, L, k,
+                                         budget, first_step):
+    """Forced on where the bound would not fire, the cap-depth round
+    changes no row: the loop still escalates from the depth-L answers,
+    the cap round answers only the queries that escalated, and a round
+    short of the cap (per_cap 1023 here) runs as before."""
+    steps = []
+    next_L = ngq._next_L
+    monkeypatch.setattr(ngq, "_next_L",
+                        lambda *a: steps.append(next_L(*a)) or steps[-1])
+    _forced(monkeypatch, True)
+    got = nearest_group(spark, docs_geo, QUERIES, k=k, L=L,
+                        refine_budget=budget).toPandas()
+    assert (steps[:1] or [None])[0] == first_step
+    _forced(monkeypatch, False)
+    exp = nearest_group(spark, docs_geo, QUERIES, k=k, L=L,
+                        refine_budget=budget).toPandas()
+    pd.testing.assert_frame_equal(got, exp)
+
+
+def test_ngq_single_round_never_consults_the_bound(spark, docs_geo,
+                                                   monkeypatch):
+    def fail(*a):
+        raise AssertionError("_reaches_cap consulted with max_rounds=1")
+    monkeypatch.setattr(ngq, "_reaches_cap", fail)
+    out = nearest_group(spark, docs_geo, QUERIES, k=5, L=2, max_rounds=1)
+    assert out.count() == 5 * len(QUERIES)

@@ -15,6 +15,8 @@ import pytest
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from mbrngq_spark import grid
+from mbrngq_spark.config import DEFAULT
 from mbrngq_spark.operators import ngq
 from mbrngq_spark.oracle import ngq_bruteforce
 
@@ -185,3 +187,90 @@ def test_geo_refine_slack_keeps_group_past_rounded_triangle_bound():
 
     assert best(GEO) == [(0, n, d_ab)]
     assert best(replace(GEO, slack=0.0)) != [(0, n, d_ab)]
+
+
+def test_refine_two_depths_equal_two_refines():
+    """With prefix_L the kernel answers at both depths from one table:
+    the prefix_L rows equal a depth-prefix_L refine of the rn ≤ prefix_L
+    rows, the full-depth rows a plain refine, each tagged by depth."""
+    m, k, L, short = 3, 10, 60, 20
+    df = _cands(np.random.default_rng(5), [L] * m, blobs=True)
+    schema = to_arrow_schema(ngq._refine_schema(m, depth=True))
+    totals = {c: 10 ** 9 for c in range(m)}
+    both = ngq._make_refine(m, k, L, totals, 1 << 22, schema,
+                            prefix_L=short)(
+        pa.Table.from_pandas(df, preserve_index=False)).to_pandas()
+    assert set(both["depth"]) == {short, L}
+    for depth, rows in ((short, df[df["rn"] <= short]), (L, df)):
+        got = both[both["depth"] == depth].drop(columns="depth")
+        exp = _refine(rows, m, k, depth)
+        pd.testing.assert_frame_equal(got.reset_index(drop=True), exp)
+
+
+def _stats_of(docs, res):
+    cell = grid.np_cell_encode(docs["x"].to_numpy(), docs["y"].to_numpy(),
+                               res)
+    return (docs.assign(cell=cell).groupby(["cell", "category"])
+            .size().rename("n").reset_index())
+
+
+@pytest.mark.parametrize("clustered", [False, True])
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_group_bound_is_sound(clustered, seed):
+    """The plan-time NGQ bound (ngq._provably_bad) over stats built in
+    pandas: no group of any query scores below its lb, and every query
+    it flags bad at L gets exact=False from the refine on its
+    brute-force top-L candidates, as round 1 would."""
+    rng = np.random.default_rng(seed)
+    m, k, L, res, per_cat = 3, 5, 8, 4, 40
+    parts = []
+    for c in range(m):
+        if clustered:
+            cx, cy = rng.uniform(15, 85, 2)
+            x, y = rng.normal(cx, 4.0, per_cat), rng.normal(cy, 4.0, per_cat)
+        else:
+            x, y = rng.uniform(0, 100, per_cat), rng.uniform(0, 100, per_cat)
+        parts.append(pd.DataFrame({"x": np.clip(x, 0, 100),
+                                   "y": np.clip(y, 0, 100), "category": c}))
+    docs = pd.concat(parts, ignore_index=True)
+    docs["doc_id"] = np.arange(len(docs))
+    queries = pd.DataFrame({"query_id": np.arange(12),
+                            "qx": rng.uniform(0, 100, 12),
+                            "qy": rng.uniform(0, 100, 12)})
+    lb, bad = ngq._provably_bad(_stats_of(docs, res), queries, L, res,
+                                DEFAULT)
+    if clustered:
+        assert bad.any(), "the bound should fire on separated clusters"
+    schema = to_arrow_schema(ngq._refine_schema(m))
+    refine = ngq._make_refine(m, k, L, {c: per_cat for c in range(m)},
+                              1 << 22, schema)
+    for q, q_lb, q_bad in zip(queries.itertuples(), lb, bad):
+        best = ngq_bruteforce(docs, q.qx, q.qy, m, 1)["min_dist"].iloc[0]
+        assert q_lb <= best + 1e-9
+        if q_bad:
+            dq = np.hypot(docs["x"] - q.qx, docs["y"] - q.qy)
+            top = (docs.assign(dq=dq, query_id=q.query_id)
+                   .sort_values(["category", "dq", "doc_id"])
+                   .groupby("category").head(L))
+            top["rn"] = top.groupby("category").cumcount() + 1
+            out = refine(pa.Table.from_pandas(top, preserve_index=False))
+            assert not any(out.column("exact").to_pylist())
+
+
+def test_group_bound_is_tight_at_facing_cell_edges():
+    """Two one-doc categories just inside facing edges of cells two
+    columns apart (their gap is one cell), queried at the first doc and
+    just inside the cell three rows above it: lb equals the best score up
+    to the 1e-6 offsets from the cell edges, so neither the gap nor the
+    nearest-cell term gives up more than the grid forces."""
+    res, w, eps = 4, DEFAULT.width / 16, 1e-6
+    top = 9 * w - eps                      # just below row 8's top edge
+    docs = pd.DataFrame({"x": [2 * w - eps, 3 * w + eps], "y": [top, top],
+                         "category": [0, 1], "doc_id": [0, 1]})
+    queries = pd.DataFrame({"query_id": [0, 1], "qx": [2 * w - eps] * 2,
+                            "qy": [top, 11 * w + eps]})
+    lb, _ = ngq._provably_bad(_stats_of(docs, res), queries, 8, res, DEFAULT)
+    best = [ngq_bruteforce(docs, q.qx, q.qy, 2, 1)["min_dist"].iloc[0]
+            for q in queries.itertuples()]
+    np.testing.assert_allclose(lb, best, rtol=0, atol=1e-5)
+    assert (lb <= best).all()

@@ -123,6 +123,19 @@ def main() -> int:
           len(ngq_exchanges) >= 1
           and all("query_id" in e for e in ngq_exchanges),
           f"exchanges={ngq_exchanges}")
+    # the cap-depth round of a batch proven to escalate: one candidate
+    # set at the cap, refined at both depths in the same Arrow groups
+    ngq2 = _nearest_group_once(spark, docs_geo, qpts, 10, 161, ngq_res,
+                               H.CFG, stats, prefix_L=32)
+    p = plan_of(ngq2)
+    sections.append(("NGQ two-depth round", p))
+    ngq2_exchanges = re.findall(r"Exchange hashpartitioning\(([^)]+)\)", p)
+    check("ngq two-depth round: broadcast candidate join, Arrow refine, "
+          "every exchange keyed by query_id",
+          "BroadcastHashJoin" in p and "FlatMapGroupsInArrow" in p
+          and len(ngq2_exchanges) >= 1
+          and all("query_id" in e for e in ngq2_exchanges),
+          f"exchanges={ngq2_exchanges}")
 
     # --- kNN, large-Q distributed mode ---------------------------------------
     # queries as a Spark DataFrame: the planner itself must be distributed
