@@ -75,8 +75,12 @@ def refine_partitions(spark: SparkSession) -> int:
     return spark.sparkContext.defaultParallelism
 
 
+# reduce partitions for a bounded aggregate (see bounded_shuffle)
+BOUNDED_SHUFFLE_PARTITIONS = 8
+
+
 @contextmanager
-def bounded_shuffle(spark: SparkSession, n: int = 8):
+def bounded_shuffle(spark: SparkSession):
     """Temporarily lower the shuffle partition count around an EAGER
     aggregate whose output is bounded by design (the planner stats table
     is ≤ 4^res·m rows regardless of corpus size). With the cluster-sized
@@ -86,13 +90,18 @@ def bounded_shuffle(spark: SparkSession, n: int = 8):
     bench corpus); reduce parallelism for a bounded table does not need
     to scale with the corpus, so a small constant is correct at every
     scale. Map-side parallelism (input splits) is unaffected. Only valid
-    around eager actions — the conf is read at planning time."""
+    around eager actions — the conf is read at planning time.
+
+    The swap is SESSION-GLOBAL: it assumes one driver thread plans at a
+    time, since a query planned concurrently on another thread would see
+    the lowered conf. ROADMAP direction 5 (plan-scoped bounded aggregates)
+    replaces it."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
     old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     try:
-        target = min(int(old), n)
+        target = min(int(old), BOUNDED_SHUFFLE_PARTITIONS)
     except ValueError:
-        target = n
+        target = BOUNDED_SHUFFLE_PARTITIONS
     spark.conf.set("spark.sql.shuffle.partitions", str(target))
     # AQE has nothing to adapt on an 8-partition bounded aggregate; its
     # stage-level re-optimization pass costs ~0.1 s per collect here
@@ -105,7 +114,7 @@ def bounded_shuffle(spark: SparkSession, n: int = 8):
         spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
 
 
-def spread_small_input(df, min_parts: int | None = None):
+def spread_small_input(df):
     """Round-robin-repartition ``df`` ONLY when its scan parallelism is
     below the session's core count (a tiny table often arrives as one
     file split, serializing every map-side kernel downstream). The gate
@@ -113,7 +122,7 @@ def spread_small_input(df, min_parts: int | None = None):
     splits (the usual 100 TB case) are returned untouched, but a large
     input arriving in few splits (e.g. unsplittable files) pays a
     corpus-sized shuffle."""
-    n = min_parts or df.sparkSession.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < n:
         return df.repartition(n)
     return df

@@ -591,19 +591,22 @@ def nearest_group(spark: SparkSession, docs_geo: DataFrame,
         # budget-capped: for capped queries a deeper L hits the same cap,
         # so retrying burns rounds without changing the (flagged-inexact)
         # answer — clustered-corpus queries land here by geometry.
-        # ONE aggregate yields both the bad-query set and each query's kth
-        # score (exact/capped are per-query constants, so the filter keeps
-        # whole query groups) — previously a distinct + a semi-join +
-        # a second aggregate, i.e. two extra jobs per round.
-        bad_kth = (out.filter(~F.col("exact") & ~F.col("capped"))
-                   .groupBy("query_id").agg(F.max("min_dist").alias("kth"))
-                   .localCheckpoint(eager=True))
-        bad_df = bad_kth.select("query_id")
+        # exact/capped are per-query constants, so one filter splits the
+        # round into whole query groups: the answer is a union of filters
+        # over the round checkpoints, never a join against a per-round
+        # key table that the returned frame would keep pinned. ONE
+        # aggregate over the (checkpointed) bad rows yields both the
+        # bad-query set and each query's kth score.
+        is_bad = ~F.col("exact") & ~F.col("capped")
+        bad = out.filter(is_bad)
+        bad_kth = bad.groupBy("query_id").agg(
+            F.max("min_dist").alias("kth"))
         if bad_kth.isEmpty():
             return out if done is None else done.unionByName(out)
-        good = out.join(bad_df, "query_id", "left_anti")
+        good = out.filter(~is_bad)
         done = good if done is None else done.unionByName(good)
-        remaining = remaining.join(bad_df, "query_id", "left_semi")
+        remaining = remaining.join(bad_kth.select("query_id"), "query_id",
+                                   "left_semi")
         # bookkeeping stays distributed: per-batch certifying_L in
         # mapInPandas (stats broadcast), driver receives ONE scalar —
         # no .toPandas() of the (possibly huge) bad-query set
@@ -614,8 +617,7 @@ def nearest_group(spark: SparkSession, docs_geo: DataFrame,
         if not nxt:
             # rounds or budget exhausted: the rest is returned with
             # exact=False visible
-            return done.unionByName(
-                out.join(bad_df, "query_id", "left_semi"))
+            return done.unionByName(bad)
         L = nxt
 
 

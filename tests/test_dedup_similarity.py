@@ -120,7 +120,8 @@ def test_embedding_lsh_degenerate_bucket_guard(spark):
     """Same contract for the banded embedding-LSH: a constant-embedding
     cluster saturates one bucket per band; the cap drops those buckets and
     bounds candidate volume, while planted normal dups survive via their
-    own (small) band buckets."""
+    own (small) band buckets. The cap broadcasts the OVERFULL keys and
+    anti-joins them (the kept-key set grows with the corpus)."""
     rng = np.random.default_rng(3)
     dim = 32
     n_const = 500
@@ -135,8 +136,10 @@ def test_embedding_lsh_degenerate_bucket_guard(spark):
         + [v.astype("float32").tolist() for v in rand],
     })
     corpus = spark.createDataFrame(pdf)
-    got = similarity.embedding_near_dups(corpus, threshold=0.999, dim=dim,
-                                         max_bucket=100).toPandas()
+    out = similarity.embedding_near_dups(corpus, threshold=0.999, dim=dim,
+                                         max_bucket=100)
+    got = out.toPandas()
+    assert "LeftAnti" in out._jdf.queryExecution().executedPlan().toString()
     pairs = set(map(tuple, got[["id_a", "id_b"]].values))
     assert (600, 601) in pairs
     assert not any(a < n_const and b < n_const for a, b in pairs), \
@@ -475,6 +478,18 @@ def test_pq_chain_integer_exact_and_deterministic(spark, emb):
                 for t in range(dsub))
             for j in range(m))
         assert ad == expect, (q, v)
+
+
+def test_pq_topk_on_empty_query_batch(spark, tmp_path, emb):
+    """An empty query batch gives 0 rows from both PQ top-ks, as it does
+    from every cosine top-k (the LUT stack of Q = 0 queries is empty)."""
+    none = emb.limit(0).select(F.col("vec_id").alias("q_id"), "embedding")
+    cb = similarity.pq_codebook_pivots(emb)
+    assert similarity.pq_adc_topk(similarity.pq_encode(emb, cb), none, cb,
+                                  k=5).count() == 0
+    path = str(tmp_path / "ivfpq_empty")
+    similarity.build_ivfpq_index(emb, path, nlist=16)
+    assert similarity.probe_ivfpq_index(spark, path, none, k=5).count() == 0
 
 
 def test_pq_recall_and_self_hit(spark, emb):

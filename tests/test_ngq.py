@@ -87,9 +87,9 @@ def test_certifying_L_distributed_matches_driver(spark, docs_geo):
 
 def test_ngq_distributed_escalation_with_tiny_L(spark, docs_geo):
     """L=2 forces round-1 bound failures, so the DataFrame-queries run
-    exercises the distributed escalation (semi/anti joins + mapInPandas
-    certifying-L) end-to-end; both modes must converge to the same exact
-    answers."""
+    exercises the distributed escalation (flag filters, a semi-join of
+    the queries + mapInPandas certifying-L) end-to-end; both modes must
+    converge to the same exact answers."""
     a = (nearest_group(spark, docs_geo, QUERIES, k=5, L=2)
          .orderBy("query_id", "group_rank").toPandas())
     b = (nearest_group(spark, docs_geo,
@@ -99,6 +99,19 @@ def test_ngq_distributed_escalation_with_tiny_L(spark, docs_geo):
     assert a["exact"].all() and b["exact"].all()
     for c in ("query_id", "group_rank", "c0_id", "c1_id", "c2_id"):
         assert a[c].tolist() == b[c].tolist()
+
+
+@pytest.mark.parametrize("max_rounds", [1, 4])
+def test_ngq_distributed_result_is_join_free(spark, docs_geo, max_rounds):
+    """The DataFrame-query loop splits each checkpointed round on its
+    per-query exact/capped flags, so the returned frame is a union of
+    filtered round checkpoints: no join against a per-round key table
+    whose pinned blocks the answer would keep alive."""
+    out = nearest_group(spark, docs_geo, spark.createDataFrame(QUERIES),
+                        k=5, L=2, max_rounds=max_rounds)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan, plan
+    assert out.count() == 5 * len(QUERIES)
 
 
 @pytest.mark.parametrize("m", [2, 4, 5])

@@ -711,6 +711,29 @@ def main() -> int:
     finally:
         shutil.rmtree(ivf_tmp, ignore_errors=True)
 
+    # --- ANN top-k: one query side, one broadcast join, one q_id rank -------
+    from mbrngq_spark.operators.similarity import build_lsh_index, \
+        cosine_topk_ivf, cosine_topk_lsh, probe_lsh_index
+    dim = len(emb_t.select("embedding").first()[0])
+    lsh_tmp = tempfile.mkdtemp(prefix="plan_audit_lsh_")
+    try:
+        build_lsh_index(emb_t, lsh_tmp, dim=dim)
+        ann = {"lsh": cosine_topk_lsh(emb_t, q_emb, k=5, dim=dim),
+               "ivf": cosine_topk_ivf(emb_t, q_emb, k=5, nprobe=4),
+               "persisted lsh": probe_lsh_index(spark, lsh_tmp, q_emb, k=5)}
+        bad = []
+        for tag, df in ann.items():
+            p = plan_of(df, execute=True)
+            sections.append((f"ANN top-k ({tag})", p))
+            ex = re.findall(r"Exchange hashpartitioning\(([^)]+)\)", p)
+            if not (broadcast_only(p) and ex
+                    and all("q_id" in e for e in ex)):
+                bad.append(f"{tag}: exchanges={ex}")
+        check("ann top-k (lsh, ivf, persisted lsh): query side broadcast, "
+              "every exchange keyed by q_id", not bad, "; ".join(bad))
+    finally:
+        shutil.rmtree(lsh_tmp, ignore_errors=True)
+
     # --- HLL cardinality sketch: one register-keyed partial-agg shuffle ------
     from mbrngq_spark.operators.sketch import hll_sketch
     ev = spark.read.parquet(f"{SF}/events.parquet")
