@@ -43,6 +43,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mbrngq_spark.plans.snapshots import SnapshotTable
+
 
 def _dot(a: Column, b: Column) -> Column:
     """Σ a_i·b_i in array order (deterministic fold, double precision)."""
@@ -409,7 +411,6 @@ def build_ivf_snapshot(corpus: DataFrame, path: str, nlist: int = 16,
     the whole snapshot feature set for free: atomic commits, time travel,
     CoW delete of vectors, compaction. Returns (lists_table,
     pivots_used)."""
-    from mbrngq_spark.plans.snapshots import SnapshotTable
     spark = corpus.sparkSession
     pivots = _pivots(corpus, nlist, centroids, id_col, vec_col)
     t = SnapshotTable(spark, f"{path}/lists_t")
@@ -422,12 +423,16 @@ def build_ivf_snapshot(corpus: DataFrame, path: str, nlist: int = 16,
 def probe_ivf_snapshot(spark: SparkSession, path: str, queries: DataFrame,
                        k: int, nprobe: int = 4, id_col: str = "vec_id",
                        vec_col: str = "embedding",
-                       q_id_col: str = "q_id") -> DataFrame:
+                       q_id_col: str = "q_id"
+                       ) -> tuple[DataFrame, SnapshotTable]:
     """Probe the snapshot-backed IVF artifact: manifest-stat file
-    skipping via the pushed ``pivot IN`` predicate (the table's
-    ``last_scan`` records how many files were skipped — asserted by
-    pytest), then the same broadcast-join + rank as probe_ivf_index."""
-    from mbrngq_spark.plans.snapshots import SnapshotTable
+    skipping via the pushed ``pivot IN`` predicate, then the same
+    broadcast-join + rank as probe_ivf_index.
+
+    Returns ``(top-k rows, lists table)``. The second element is the
+    probed ``SnapshotTable``, returned so a caller can read its
+    ``last_scan`` ({files, skipped}: how many list files the predicate
+    skipped)."""
     q = _ivf_queries(queries, _read_pivots(spark, path), nprobe, q_id_col,
                      vec_col)
     t = SnapshotTable(spark, f"{path}/lists_t")

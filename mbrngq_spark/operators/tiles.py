@@ -194,9 +194,12 @@ def _splat3(base: DataFrame, res: int) -> DataFrame:
                           names=("tx", "ty", None))
 
 
+HEAT_QUANT = 1e9  # tile_heatmap's int64 weight scale: density = wq / quant
+
+
 def tile_heatmap(docs_geo: DataFrame, h: float, res: int,
                  cfg: EngineConfig = DEFAULT,
-                 quant: float = 1e9) -> DataFrame:
+                 quant: float = HEAT_QUANT) -> DataFrame:
     """Kernel-density heatmap per Morton cell: every doc splats the
     Epanechnikov-family biweight kernel w = (1 − d²/h²)² onto each cell
     whose CENTER lies within bandwidth ``h`` (d = doc→center distance).

@@ -28,6 +28,7 @@ from __future__ import annotations
 import time
 from collections.abc import Callable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -54,13 +55,18 @@ def lineage_checksum(df: DataFrame) -> int:
 
 
 def committed_units(spark: SparkSession, ckpt_path: str, run_id: str) -> set[int]:
+    """Units of ``run_id`` with a commit row. Only a missing checkpoint
+    table means "nothing committed"; an unreadable one raises, since
+    reading it as empty would silently re-run every unit."""
     try:
-        rows = (spark.read.schema(CKPT_SCHEMA).parquet(ckpt_path)
-                .filter((F.col("run_id") == run_id)
-                        & (F.col("status") == "committed"))
-                .select("unit_id").distinct().collect())
-    except Exception:
-        return set()
+        ck = spark.read.schema(CKPT_SCHEMA).parquet(ckpt_path)
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return set()
+        raise
+    rows = (ck.filter((F.col("run_id") == run_id)
+                      & (F.col("status") == "committed"))
+            .select("unit_id").distinct().collect())
     return {r.unit_id for r in rows}
 
 

@@ -17,9 +17,14 @@ the DELTA, not the table:
 - equality contract: append(A then B) == create(A ∪ B), row for row —
   pytest-held, the same merge==direct discipline as the HLL pyramid.
 
-Crash safety: the dynamic-overwrite commit is per-partition-atomic in
-the same sense as the snapshot layer's path idempotence — a replayed
-append recomputes the same dirty partitions to the same bytes.
+Crash safety: ``append`` is NOT idempotent. Once an append's dynamic
+overwrite has committed, a replay of the same rows re-reads the already
+merged partitions and sums the delta in again (counts double). A crash
+during the overwrite can also lose the partitions being rewritten.
+Exactly-once for this store is ROADMAP direction 2's work (one
+transactional index store); the streaming pyramid twin
+(``streaming/sketch_stream.merge_pyramid_into``) already commits through
+the snapshot layer's (run, batch) manifest check.
 """
 
 from __future__ import annotations

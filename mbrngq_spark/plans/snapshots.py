@@ -25,6 +25,8 @@ with an explicit mapping to the Iceberg features it stands in for:
 |                                     |   sort order (tight file bounds)   |
 | ``cluster_by=(a, b)`` Z-order write | OPTIMIZE ZORDER BY / Z-order sort  |
 |                                     |   transform (2-D file skipping)    |
+| ``append_batch`` / ``fold_batch``:  | exactly-once Structured Streaming  |
+|   run → last batch id in manifest   |   sink (commit per epoch)          |
 
 Single-writer is assumed (Iceberg arbitrates concurrent committers through
 the catalog's compare-and-swap; a filesystem sandbox has no catalog).
@@ -42,9 +44,11 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import urllib.parse
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -240,11 +244,13 @@ class SnapshotTable:
         none — the crash window leaves only orphan data files. The table
         schema rides in every manifest (passed for schema-bearing ops,
         inherited from the current snapshot otherwise) so an emptied table
-        stays readable."""
+        stays readable; the streaming ``runs`` map is inherited the same
+        way, so no operation or expiry loses a run's last batch id."""
         os.makedirs(self._snap_dir, exist_ok=True)
         cur_id = self.current_snapshot_id()
-        if schema is None and cur_id is not None:
-            schema = self._manifest(cur_id).get("schema")
+        cur = self._manifest(cur_id) if cur_id is not None else {}
+        if schema is None:
+            schema = cur.get("schema")
         snap_id = (cur_id or 0) + 1
         manifest = {
             "snapshot_id": snap_id,
@@ -254,6 +260,8 @@ class SnapshotTable:
             "files": files,                # [{path, n_rows, stats}]
             "n_rows": sum(f["n_rows"] for f in files),
         }
+        if cur.get("runs"):
+            manifest["runs"] = cur["runs"]
         if self._pending_extra:
             manifest.update(self._pending_extra)
             self._pending_extra = {}
@@ -321,42 +329,65 @@ class SnapshotTable:
         return self._commit(self._write_batch(df, "overwrite"), "overwrite",
                             schema=df.schema.jsonValue())
 
-    def append_batch(self, df: DataFrame, batch_id: int,
-                     run_id: str | None = None) -> int:
-        """Idempotent micro-batch append (the streaming-ingest commit
-        path, ≡ Iceberg's exactly-once Structured Streaming sink): the
-        committing manifest records ``(run_id, batch_id)``, and a
-        REPLAYED batch — foreachBatch is at-least-once on retry — finds
-        its id already in the snapshot history and no-ops instead of
-        appending a second copy. Creates the table on the first batch.
+    def _commit_batch(self, batch_id: int,
+                      write: Callable[[], int]) -> int:
+        """The one exactly-once micro-batch commit (≡ Iceberg's
+        Structured Streaming sink): ``write`` commits one snapshot whose
+        manifest records ``batch_id`` as its run's last committed batch,
+        and a REPLAYED batch — foreachBatch is at-least-once on retry —
+        finds an id at or past its own and no-ops instead of committing
+        twice.
 
-        ``run_id`` names the ingestion run (e.g. a hash of the streaming
-        checkpoint path): a RESTART against a FRESH checkpoint restarts
-        batch ids at 0, and without the run identity those new batches
-        would collide with old manifest ids and be silently dropped as
-        replays. Manifests written before this field existed have no
-        run_id and match only ``run_id=None`` callers (legacy
-        behavior)."""
-        # batch ids are monotonic WITHIN a run, so scanning newest-first
-        # the first same-run manifest decides: equal id → replay, smaller
-        # id → fresh. Other runs' manifests never match or terminate the
-        # scan, so a fresh checkpoint restarting at 0 commits normally.
-        for snap in reversed(self._snapshot_ids()):
-            m = self._manifest(snap)
-            b = m.get("batch_id")
-            if b is None or m.get("run_id") != run_id:
-                continue
-            if b == batch_id:
-                return snap                    # genuine replay — no-op
-            if b < batch_id:
-                break                          # fresh batch — commit it
-        self._pending_extra = {"batch_id": batch_id, "run_id": run_id}
+        The run is the streaming query id, which Spark sets as the
+        ``sql.streaming.queryId`` local property on the thread that runs
+        a foreachBatch function: stable across restarts on one checkpoint
+        (replays dedup) and new on a fresh checkpoint, whose batch ids
+        restart at 0 and so must not collide with an earlier run's ids.
+        Outside a stream the run is ``""``. Every manifest carries the
+        whole ``runs`` map (run → last committed batch id), so the check
+        reads only the current manifest, and it holds for every run that
+        ever committed — also after expired snapshots or other runs'
+        commits."""
+        run_id = self.spark.sparkContext.getLocalProperty(
+            "sql.streaming.queryId") or ""
+        cur_id = self.current_snapshot_id()
+        runs = self._manifest(cur_id).get("runs", {}) \
+            if cur_id is not None else {}
+        if batch_id <= runs.get(run_id, -1):
+            return cur_id                      # replay — no-op
+        self._pending_extra = {"batch_id": batch_id, "run_id": run_id,
+                               "runs": {**runs, run_id: batch_id}}
         try:
-            if self.current_snapshot_id() is None:
-                return self.create(df)
-            return self.append(df)
+            return write()
         finally:
             self._pending_extra = {}
+
+    def append_batch(self, df: DataFrame, batch_id: int) -> int:
+        """Exactly-once micro-batch APPEND (stream ingest and query
+        outputs): creates the table on the first batch."""
+        return self._commit_batch(
+            batch_id,
+            lambda: (self.create(df) if self.current_snapshot_id() is None
+                     else self.append(df)))
+
+    def fold_batch(self, df: DataFrame, batch_id: int,
+                   merge: Callable[[list[DataFrame]], DataFrame]) -> int:
+        """Exactly-once micro-batch FOLD (sketch states): the new state is
+        ``merge([current, df])``, committed as one overwrite snapshot under
+        the same replay check as ``append_batch``. Replay safety comes
+        from the manifest's ``runs`` map, not from the merge algebra, so
+        SUM states are exactly-once too. Each commit then expires all but
+        the two newest snapshots: the state stays bounded, and a reader
+        that resolved the previous snapshot can finish its scan while the
+        next micro-batch folds."""
+        def write() -> int:
+            parts = [df] if self.current_snapshot_id() is None \
+                else [self.read(), df]
+            return self.overwrite(merge(parts))
+
+        snap = self._commit_batch(batch_id, write)
+        self.expire_snapshots(keep_last=2)
+        return snap
 
     def metadata_count(self, snapshot_id: int | None = None,
                        where: list[tuple] | tuple | None = None) -> int:
@@ -480,12 +511,14 @@ class SnapshotTable:
             df = df.filter(_OPS[op](F.col(col), val))
         return df
 
-    def _touched_files(self, cond) -> tuple[list[str], list[dict]]:
-        """Split current files into (touched by cond, untouched entries)."""
+    def _touched_files(self, match: Callable[[DataFrame], DataFrame]
+                       ) -> tuple[list[str], list[dict]]:
+        """Split current files into (files holding a row of
+        ``match(table)``, untouched entries)."""
         cur = self._manifest(self.current_snapshot_id())
         df = self.read().withColumn("_f", F.input_file_name())
         touched = {_localpath(r._f) for r in
-                   df.filter(cond).select("_f").distinct().collect()}
+                   match(df).select("_f").distinct().collect()}
         untouched = [f for f in cur["files"] if f["path"] not in touched]
         return sorted(touched), untouched
 
@@ -493,8 +526,7 @@ class SnapshotTable:
         """Copy-on-write row-level DELETE: only files containing matches are
         rewritten (their survivors land in a new batch); untouched files are
         carried into the new snapshot verbatim."""
-        touched, untouched = self._touched_files(cond)
-        files = list(untouched)
+        touched, files = self._touched_files(lambda df: df.filter(cond))
         if touched:
             survivors = self.spark.read.parquet(*touched).filter(~cond)
             if survivors.limit(1).count():
@@ -505,12 +537,8 @@ class SnapshotTable:
         """Keyed row-level DELETE (the MERGE ... WHEN MATCHED THEN DELETE
         form): copy-on-write over only the files holding matching keys,
         probe and rewrite both as keyed joins."""
-        cur = self._manifest(self.current_snapshot_id())
-        df = self.read().withColumn("_f", F.input_file_name())
-        touched = sorted({_localpath(r._f) for r in
-                          df.join(F.broadcast(keys), key, "left_semi")
-                          .select("_f").distinct().collect()})
-        files = [f for f in cur["files"] if f["path"] not in touched]
+        touched, files = self._touched_files(
+            lambda df: df.join(F.broadcast(keys), key, "left_semi"))
         if touched:
             kept = (self.spark.read.parquet(*touched)
                     .join(F.broadcast(keys), key, "left_anti"))
@@ -524,12 +552,8 @@ class SnapshotTable:
         matched keys. The touched-file probe and the rewrite are both keyed
         joins (no driver-side key list)."""
         keys = updates.select(key)
-        cur = self._manifest(self.current_snapshot_id())
-        df = self.read().withColumn("_f", F.input_file_name())
-        touched = sorted({_localpath(r._f) for r in
-                          df.join(F.broadcast(keys), key, "left_semi")
-                          .select("_f").distinct().collect()})
-        files = [f for f in cur["files"] if f["path"] not in touched]
+        touched, files = self._touched_files(
+            lambda df: df.join(F.broadcast(keys), key, "left_semi"))
         if touched:
             kept = (self.spark.read.parquet(*touched)
                     .join(F.broadcast(keys), key, "left_anti"))
@@ -565,19 +589,30 @@ class SnapshotTable:
     def expire_snapshots(self, keep_last: int = 1) -> dict:
         """Iceberg's expire_snapshots + orphan-file vacuum: drop all but the
         newest ``keep_last`` manifests, then delete data files no kept
-        manifest references. Time travel to expired snapshots stops
-        resolving (by design); the current snapshot is untouched. Returns
-        {"snapshots_removed", "files_removed"}."""
+        manifest references. A batch directory no kept manifest references
+        goes whole (with its ``_SUCCESS`` marker and ``.crc`` sidecars).
+        Time travel to expired snapshots stops resolving (by design); the
+        current snapshot is untouched. Returns {"snapshots_removed",
+        "files_removed"} (parquet data files removed)."""
+        if keep_last < 1:
+            raise ValueError(f"keep_last must be >= 1, got {keep_last}")
         ids = self._snapshot_ids()
         kept, expired = ids[-keep_last:], ids[:-keep_last]
         live = {f["path"] for s in kept for f in self._manifest(s)["files"]}
+        live_dirs = {os.path.dirname(p) for p in live}
+        data_dir = os.path.abspath(self._data_dir)
         removed_files = 0
-        for root, _, files in os.walk(self._data_dir):
-            for f in files:
-                p = os.path.join(root, f)
-                if f.endswith(".parquet") and p not in live:
-                    os.remove(p)
-                    removed_files += 1
+        for d in os.listdir(data_dir) if os.path.isdir(data_dir) else []:
+            batch = os.path.join(data_dir, d)
+            dead = [p for p in (os.path.join(batch, f)
+                                for f in os.listdir(batch))
+                    if p.endswith(".parquet") and p not in live]
+            removed_files += len(dead)
+            if batch not in live_dirs:
+                shutil.rmtree(batch)
+                continue
+            for p in dead:
+                os.remove(p)
         for s in expired:
             os.remove(os.path.join(self._snap_dir, f"snap-{s}.json"))
         return {"snapshots_removed": len(expired),

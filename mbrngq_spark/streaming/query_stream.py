@@ -6,14 +6,25 @@ tree (RTreeViewer.cs drives one query per UI action); the engine's stream
 twin treats QUERIES as the unbounded side — each micro-batch of query
 points runs the SAME batch operators (knn_join / nearest_group with
 DataFrame queries, i.e. the distributed mapInPandas planner) via
-foreachBatch, writing results to an append sink. The doc side stays a
-static DataFrame: at scale it is the cell-partitioned index table, so each
-micro-batch join is the usual broadcast-candidate plan, and micro-batch
-latency is the batch operator's latency on Q = batch size.
+foreachBatch. The doc side stays a static DataFrame: at scale it is the
+cell-partitioned index table, so each micro-batch join is the usual
+broadcast-candidate plan, and micro-batch latency is the batch operator's
+latency on Q = batch size.
 
 foreachBatch (not a continuous join) is the right shape here: spatial
 planning needs the per-batch stats broadcast, and results are final per
 query — no watermark or state is involved.
+
+Every sink is a ``SnapshotTable`` at ``out_path``: each micro-batch's
+answer is APPENDED as one snapshot through the engine's one exactly-once
+commit (``snapshot_stream``): the checkpoint deduplicates triggers, and
+the manifest's run → last batch id map makes a retried micro-batch a
+no-op instead of a second copy (a plain append sink under foreachBatch
+is only at-least-once), while a stream restarted on a fresh checkpoint
+appends instead of overwriting the earlier run's batches. A sink keeps
+only its current manifest (the answers are a log, not a table to time
+travel in), so its metadata grows linearly with the batch count. Read
+the answers with ``SnapshotTable(spark, out_path).read()``.
 """
 
 from __future__ import annotations
@@ -24,6 +35,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from mbrngq_spark.config import DEFAULT, EngineConfig
+from mbrngq_spark.plans.snapshots import SnapshotTable
+from mbrngq_spark.streaming.snapshot_stream import _append_stream
+
+
+def _serve(stream: DataFrame, out_path: str, checkpoint: str,
+           trigger: dict | None,
+           answer: Callable[[DataFrame], DataFrame]) -> StreamingQuery:
+    """Append ``answer(batch)`` per micro-batch to the sink at
+    ``out_path``, which keeps only its current manifest."""
+    return _append_stream(stream, SnapshotTable(stream.sparkSession, out_path),
+                          checkpoint, trigger, answer, keep_history=False)
 
 
 def serve_knn_stream(docs_geo: DataFrame, query_stream: DataFrame,
@@ -32,22 +54,13 @@ def serve_knn_stream(docs_geo: DataFrame, query_stream: DataFrame,
                      max_dist: float | None = None,
                      trigger: dict | None = None) -> StreamingQuery:
     """Answer a stream of (query_id, qx, qy) with top-k joins per
-    micro-batch; results land in ``out_path`` parquet partitioned by
-    ``batch_id``. End-to-end EXACTLY-ONCE: the checkpoint deduplicates
-    triggers, and the per-batch dynamic partition overwrite makes a
-    retried micro-batch replace its own partition instead of appending a
-    second copy (a plain append sink under foreachBatch is only
-    at-least-once)."""
+    micro-batch, appended exactly once to the snapshot table at
+    ``out_path``."""
     from mbrngq_spark.operators.knn import knn_join
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        out = knn_join(batch_df.sparkSession, docs_geo, batch_df, k,
-                       cfg=cfg, max_dist=max_dist)
-        _write_idempotent(out, batch_id, out_path)
-
-    return _start(query_stream, handle, checkpoint, trigger)
+    return _serve(query_stream, out_path, checkpoint, trigger,
+                  lambda b: knn_join(b.sparkSession, docs_geo, b, k,
+                                     cfg=cfg, max_dist=max_dist))
 
 
 def serve_ngq_stream(docs_geo: DataFrame, query_stream: DataFrame,
@@ -58,14 +71,9 @@ def serve_ngq_stream(docs_geo: DataFrame, query_stream: DataFrame,
     escalation inside each batch)."""
     from mbrngq_spark.operators.ngq import nearest_group
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        out = nearest_group(batch_df.sparkSession, docs_geo, batch_df,
-                            k=k, L=L, cfg=cfg)
-        _write_idempotent(out, batch_id, out_path)
-
-    return _start(query_stream, handle, checkpoint, trigger)
+    return _serve(query_stream, out_path, checkpoint, trigger,
+                  lambda b: nearest_group(b.sparkSession, docs_geo, b,
+                                          k=k, L=L, cfg=cfg))
 
 
 def enrich_asof_stream(left_stream: DataFrame, right_static: DataFrame,
@@ -78,39 +86,10 @@ def enrich_asof_stream(left_stream: DataFrame, right_static: DataFrame,
     micro-batch runs the batch as-of join — correct because the right
     side is fixed, so a row's match never depends on which micro-batch
     carried it. (Stream-×-stream as-of would need event-time state and
-    watermark reasoning — deliberately not claimed here.) Same idempotent
-    batch_id-partitioned sink as the kNN/NGQ serving."""
+    watermark reasoning — deliberately not claimed here.) Same
+    exactly-once snapshot sink as the kNN/NGQ serving."""
     from mbrngq_spark.operators.asof import asof_join
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        out = asof_join(batch_df, right_static, on, left_ts, right_ts,
-                        tolerance_us)
-        _write_idempotent(out, batch_id, out_path)
-
-    return _start(left_stream, handle, checkpoint, trigger)
-
-
-def _write_idempotent(out: DataFrame, batch_id: int, out_path: str) -> None:
-    """Idempotent micro-batch sink: each batch owns the partition
-    ``batch_id=<n>`` and dynamic-overwrites exactly that partition, so a
-    replay after a partial write leaves one copy of the batch's rows."""
-    from pyspark.sql import functions as F
-
-    (out.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(out_path))
-
-
-def _start(query_stream: DataFrame,
-           handle: Callable[[DataFrame, int], None],
-           checkpoint: str, trigger: dict | None) -> StreamingQuery:
-    writer = (query_stream.writeStream
-              .foreachBatch(handle)
-              .option("checkpointLocation", checkpoint))
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _serve(left_stream, out_path, checkpoint, trigger,
+                  lambda b: asof_join(b, right_static, on, left_ts,
+                                      right_ts, tolerance_us))

@@ -1,238 +1,138 @@
-"""Streaming HLL cardinality sketches (the batch≡stream twin of
-``operators/sketch.py``).
+"""Streaming sketch states (the batch≡stream twins of
+``operators/sketch.py``, ``tiles.tile_heatmap`` and the rollup pyramid).
 
-Two shapes, both with BOUNDED state — the whole point of a register
-sketch on a stream:
+Two shapes, both with BOUNDED state — the whole point of a sketch on a
+stream:
 
-* ``hll_sketch_stream`` — a streaming groupBy(key, register).max(rho)
-  aggregation. State is ≤ keys × 256 rows FOREVER (no watermark needed:
-  the sketch never grows with item count), so ``complete``-mode output is
-  cheap and the final table equals the batch sketch row-for-row.
+* ``hll_sketch_stream`` / ``cm_sketch_stream`` — streaming aggregations
+  with the batch sketch's own expression tree. State is ≤ keys ×
+  registers (or counters) rows FOREVER (no watermark needed: the sketch
+  never grows with item count), so ``complete``-mode output is cheap and
+  the final table equals the batch sketch row-for-row.
 
-* ``merge_sketch_into`` — a foreachBatch handler that folds each
-  micro-batch's sketch into a persisted register-state table via
-  register-wise max. Because max-merge is an IDEMPOTENT commutative
-  monoid, a replayed batch (crash between write and checkpoint commit)
-  re-merges to the identical state — exactly-once falls out of the
-  algebra, with no (run_id, batch_id) bookkeeping. The injected-crash
-  pytest asserts exactly that.
+* ``merge_*_into`` — foreachBatch handler factories that FOLD each
+  micro-batch's sketch into a persisted state, a ``SnapshotTable`` at
+  ``state_path``: the new state is merge(current ∪ batch sketch) —
+  ``hll_merge``, ``kmv_merge``, ``cm_merge``, or a sum / ``bit_or`` for
+  the heatmap and pyramid — committed as one atomic snapshot by
+  ``SnapshotTable.fold_batch``. Exactly-once comes from the engine's one
+  streaming commit (``snapshot_stream``): the manifest's run → last
+  batch id map turns a crash-replayed batch into a no-op, so SUM states
+  (count-min, heatmap, pyramid) are as replay-safe as the idempotent
+  max / bottom-k merges, and a stream restarted on a fresh checkpoint
+  folds in instead of overwriting. A failed write never touches the
+  committed state; each commit expires all but the two newest snapshots,
+  so the state stays bounded while a reader of the previous snapshot
+  can still finish its scan. Read a state with
+  ``SnapshotTable(spark, state_path).read()``.
 
 At 10^12 docs this is the live-metrics path: the stream never stores
-items, only 256-register states per key, and the persisted state table
-is mergeable with batch/backfill sketches from ``operators.sketch``.
+items, only bounded per-key states, and a persisted state is mergeable
+with batch/backfill sketches from ``operators.sketch``.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mbrngq_spark.operators.sketch import hll_register_cols
-
-SKETCH_STATE_SCHEMA = "register long, rho long"
+from mbrngq_spark.operators import sketch as S
+from mbrngq_spark.plans.snapshots import SnapshotTable
 
 
 def hll_sketch_stream(stream: DataFrame, key_cols: list[str],
                       item_col: str) -> DataFrame:
-    """(key..., register, rho) as a streaming aggregation — identical
-    expression tree to the batch ``hll_sketch`` (same md5 register/rank
-    Columns), so batch≡stream equality is structural."""
-    reg, rho = hll_register_cols(F.col(item_col))
-    return (stream.select(*key_cols, reg.alias("register"),
-                          rho.alias("__rho"))
-            .groupBy(*key_cols, "register")
-            .agg(F.max("__rho").alias("rho")))
-
-
-def _state_keys(key_cols: list[str]) -> list[str]:
-    return [*key_cols, "register"]
-
-
-def merge_sketch_into(spark: SparkSession, state_path: str,
-                      key_cols: list[str], item_col: str,
-                      key_schema: str):
-    """foreachBatch handler factory: fold each micro-batch into the
-    register-state table at ``state_path``.
-
-    Read-merge-overwrite per batch; the merge (register-wise max) is
-    idempotent, so a crash-replayed batch leaves the state unchanged.
-    ``key_schema`` is the DDL for the key columns (e.g. ``"k string"``)
-    used to read an absent/empty state table."""
-    schema = f"{key_schema}, {SKETCH_STATE_SCHEMA}"
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        reg, rho = hll_register_cols(F.col(item_col))
-        batch_sk = (batch_df.select(*key_cols, reg.alias("register"),
-                                    rho.alias("__rho"))
-                    .groupBy(*key_cols, "register")
-                    .agg(F.max("__rho").alias("rho")))
-        try:
-            state = spark.read.schema(schema).parquet(state_path)
-        except Exception:
-            state = spark.createDataFrame([], schema)
-        merged = (state.unionByName(batch_sk)
-                  .groupBy(*_state_keys(key_cols))
-                  .agg(F.max("rho").alias("rho"))
-                  .localCheckpoint(eager=True))  # cut lineage before the
-        # overwrite reads-then-replaces the same files
-        merged.write.mode("overwrite").parquet(state_path)
-
-    return handle
-
-
-# --- streaming count-min: per-batch deltas, idempotent by PATH ---------------
-
-CM_STATE_SCHEMA = "row long, col long, cnt long"
+    """(key..., register, rho) as a streaming aggregation — the batch
+    ``hll_sketch`` itself, so batch≡stream equality is structural."""
+    return S.hll_sketch(stream, key_cols, item_col)
 
 
 def cm_sketch_stream(stream: DataFrame, key_cols: list[str],
                      item_col: str) -> DataFrame:
-    """(key..., row, col, cnt) as a streaming aggregation — identical
-    expression tree to the batch ``cm_sketch``, state bounded at
-    keys × D × W rows forever, so complete-mode output equals the batch
-    counters row-for-row."""
-    from mbrngq_spark.operators.sketch import cm_sketch
-    return cm_sketch(stream, key_cols, item_col)
+    """(key..., row, col, cnt) as a streaming aggregation — the batch
+    ``cm_sketch`` itself, state bounded at keys × D × W rows forever, so
+    complete-mode output equals the batch counters row-for-row."""
+    return S.cm_sketch(stream, key_cols, item_col)
+
+
+def _fold_into(spark: SparkSession, state_path: str,
+               sketch: Callable[[DataFrame], DataFrame],
+               merge: Callable[[list[DataFrame]], DataFrame]):
+    """foreachBatch handler: fold ``sketch(batch)`` into the state table
+    at ``state_path`` with ``merge``, exactly once per (run, batch)."""
+    table = SnapshotTable(spark, state_path)
+
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        table.fold_batch(sketch(batch_df), batch_id, merge)
+
+    return handle
+
+
+def merge_sketch_into(spark: SparkSession, state_path: str,
+                      key_cols: list[str], item_col: str):
+    """HLL register state (key..., register, rho); merge = register-wise
+    max."""
+    return _fold_into(spark, state_path,
+                      lambda df: S.hll_sketch(df, key_cols, item_col),
+                      lambda parts: S.hll_merge(parts, key_cols))
 
 
 def merge_cm_sketch_into(spark: SparkSession, state_path: str,
                          key_cols: list[str], item_col: str):
-    """foreachBatch handler factory for the count-min state.
-
-    CMS merge is SUM — NOT idempotent — so the HLL trick (re-merge a
-    replayed batch into one state table) would double-count after a
-    crash between merge and checkpoint commit. The honest shape is a
-    per-batch DELTA directory: each micro-batch's counter sketch is
-    written (mode=overwrite) to ``state_path/batch=<id>``; a replayed
-    batch overwrites its own directory with identical content, so
-    exactly-once falls out of PATH idempotence instead of algebra.
-    ``read_cm_state`` sums the deltas — itself a counter-wise merge, so
-    the rollup never re-reads items."""
-    from mbrngq_spark.operators.sketch import cm_sketch
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        (cm_sketch(batch_df, key_cols, item_col)
-         .write.mode("overwrite")
-         .parquet(f"{state_path}/batch={batch_id}"))
-
-    return handle
-
-
-def read_cm_state(spark: SparkSession, state_path: str, key_cols: list[str],
-                  key_schema: str) -> DataFrame:
-    """Fold the per-batch counter deltas into the live sketch
-    (counter-wise sum across batch directories)."""
-    df = (spark.read.schema(f"{key_schema}, {CM_STATE_SCHEMA}")
-          .option("basePath", state_path)
-          .parquet(f"{state_path}/batch=*"))
-    return (df.groupBy(*key_cols, "row", "col")
-            .agg(F.sum("cnt").alias("cnt")))
-
-
-# --- streaming KMV/theta: idempotent bottom-k merge --------------------------
-
-KMV_STATE_SCHEMA = "rk long, h long"
+    """Count-min counter state (key..., row, col, cnt); merge =
+    counter-wise sum."""
+    return _fold_into(spark, state_path,
+                      lambda df: S.cm_sketch(df, key_cols, item_col),
+                      lambda parts: S.cm_merge(parts, key_cols))
 
 
 def merge_kmv_sketch_into(spark: SparkSession, state_path: str,
                           key_cols: list[str], item_col: str,
-                          key_schema: str, k: int | None = None):
-    """foreachBatch handler factory for the KMV bottom-k state.
-
-    Bottom-k merge (union → distinct → re-rank → keep ≤ k) is IDEMPOTENT
-    like the HLL register max: a crash-replayed batch contributes hashes
-    the distinct already holds, so the re-merge is a no-op and
-    exactly-once falls out of the algebra (the HLL state-table shape,
-    not the CMS delta-dir shape). State is bounded at keys × k rows
+                          k: int | None = None):
+    """KMV bottom-k state (key..., h, rk), bounded at keys × k rows
     forever — the stream keeps set-intersection capability without ever
-    storing items."""
-    from mbrngq_spark.operators.sketch import KMV_K, kmv_merge, kmv_sketch
-    kk = k or KMV_K
-    schema = f"{key_schema}, {KMV_STATE_SCHEMA}"
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        batch_sk = kmv_sketch(batch_df, key_cols, item_col, kk)
-        try:
-            state = spark.read.schema(schema).parquet(state_path)
-        except Exception:
-            state = spark.createDataFrame([], schema)
-        merged = kmv_merge([state, batch_sk], key_cols, kk) \
-            .localCheckpoint(eager=True)   # cut lineage before overwrite
-        merged.write.mode("overwrite").parquet(state_path)
-
-    return handle
-
-
-# --- streaming KDE heatmap: per-batch deltas, idempotent by PATH --------------
-
-HEATMAP_STATE_SCHEMA = "cell long, ix long, iy long, n_docs long, wq long"
+    storing items; merge = distinct → re-rank → keep ≤ k."""
+    kk = k or S.KMV_K
+    return _fold_into(spark, state_path,
+                      lambda df: S.kmv_sketch(df, key_cols, item_col, kk),
+                      lambda parts: S.kmv_merge(parts, key_cols, kk))
 
 
 def merge_heatmap_into(spark: SparkSession, state_path: str,
                        h: float, res: int):
-    """foreachBatch handler factory for the biweight-KDE heatmap state
-    (tiles.tile_heatmap). The merge is int64 SUM — not idempotent — so
-    it takes the count-min shape: each micro-batch's (cell, n_docs, wq)
-    splat is overwritten to its own ``batch=<id>`` delta directory;
-    replay rewrites identical content and exactly-once falls out of
-    PATH idempotence. Quantize-before-sum makes the cross-batch rollup
-    exactly associative — the streamed state equals the batch heatmap
-    row-for-row regardless of batch boundaries."""
-    from mbrngq_spark.operators.tiles import tile_heatmap
+    """Biweight-KDE heatmap state (``tiles.tile_heatmap`` rows); merge =
+    cell-wise int64 sums with density re-derived from the exact sum.
+    Quantize-before-sum makes the fold exactly associative — the streamed
+    state equals the batch heatmap row-for-row regardless of batch
+    boundaries."""
+    from mbrngq_spark.operators.tiles import HEAT_QUANT, tile_heatmap
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        (tile_heatmap(batch_df, h, res)
-         .select("cell", "ix", "iy", "n_docs", "wq")
-         .write.mode("overwrite")
-         .parquet(f"{state_path}/batch={batch_id}"))
-
-    return handle
-
-
-def read_heatmap_state(spark: SparkSession, state_path: str,
-                       quant: float = 1e9) -> DataFrame:
-    """Fold the per-batch splat deltas into the live heatmap (cell-wise
-    int64 sums; density re-derived from the exact sum)."""
-    df = (spark.read.schema(HEATMAP_STATE_SCHEMA)
-          .option("basePath", state_path)
-          .parquet(f"{state_path}/batch=*"))
-    return (df.groupBy("cell", "ix", "iy")
-            .agg(F.sum("n_docs").alias("n_docs"),
-                 F.sum("wq").alias("wq"))
-            .withColumn("density", F.col("wq") / F.lit(quant)))
-
-
-# --- streaming cell-pyramid: per-batch delta dirs (sum/bit_or merge) ---------
-
-PYR_STATE_SCHEMA = "cell long, n_docs long, catmask long, res int"
+    return _fold_into(
+        spark, state_path, lambda df: tile_heatmap(df, h, res),
+        lambda parts: (reduce(DataFrame.unionByName, parts)
+                       .groupBy("cell", "ix", "iy")
+                       .agg(F.sum("n_docs").alias("n_docs"),
+                            F.sum("wq").alias("wq"))
+                       .withColumn("density",
+                                   F.col("wq") / F.lit(HEAT_QUANT))))
 
 
 def merge_pyramid_into(spark: SparkSession, state_path: str,
                        levels: tuple[int, ...] = (2, 4, 6), cfg=None):
-    """foreachBatch handler for the streaming cell-pyramid twin of
-    plans/rollup_store.py. The pyramid merge is SUM (+ bit_or) — not
-    idempotent — so exactly-once uses the count-min delta-dir shape:
-    each micro-batch's pyramid is overwritten to ``batch=<id>``; a
-    crash-replayed batch rewrites identical content (path idempotence),
-    and ``read_pyramid_state`` folds the deltas with the same exactly
+    """Streaming cell-pyramid twin of plans/rollup_store.py, state
+    (res, cell, n_docs, catmask); merge = sum + bit_or, the same exactly
     associative algebra the batch store uses."""
     from mbrngq_spark.config import DEFAULT
     from mbrngq_spark.plans.rollup_store import pyramid_agg
 
-    cfg = cfg or DEFAULT
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        (pyramid_agg(batch_df, levels, cfg)
-         .write.mode("overwrite")
-         .parquet(f"{state_path}/batch={batch_id}"))
-
-    return handle
-
-
-def read_pyramid_state(spark: SparkSession, state_path: str) -> DataFrame:
-    df = (spark.read.schema(PYR_STATE_SCHEMA)
-          .option("basePath", state_path)
-          .parquet(f"{state_path}/batch=*"))
-    return (df.groupBy("res", "cell")
-            .agg(F.sum("n_docs").cast("long").alias("n_docs"),
-                 F.bit_or("catmask").cast("long").alias("catmask")))
+    return _fold_into(
+        spark, state_path,
+        lambda df: pyramid_agg(df, levels, cfg or DEFAULT),
+        lambda parts: (reduce(DataFrame.unionByName, parts)
+                       .groupBy("res", "cell")
+                       .agg(F.sum("n_docs").cast("long").alias("n_docs"),
+                            F.bit_or("catmask").cast("long")
+                            .alias("catmask"))))

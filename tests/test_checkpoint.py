@@ -57,3 +57,14 @@ def test_runs_are_isolated(spark, docs, tmp_path):
     run_checkpointed(spark, "a", [0], _process(docs), out, ckpt)
     assert committed_units(spark, ckpt, "a") == {0}
     assert committed_units(spark, ckpt, "b") == set()
+
+
+def test_committed_units_raises_on_unreadable_log(spark, tmp_path):
+    """Only a MISSING checkpoint table reads as "nothing committed"; a
+    corrupt one must raise instead of silently re-running every unit."""
+    assert committed_units(spark, str(tmp_path / "absent"), "r1") == set()
+    ckpt = tmp_path / "ckpt"
+    ckpt.mkdir()
+    (ckpt / "part-0.parquet").write_text("not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        committed_units(spark, str(ckpt), "r1")

@@ -3,6 +3,7 @@ atomic commits, time travel, copy-on-write DELETE/MERGE, rollback, and the
 north-rule resume contract (interrupted run → table serves the last
 committed snapshot)."""
 
+import contextlib
 import os
 
 import pandas as pd
@@ -16,6 +17,28 @@ def _docs(spark, lo, hi, tag="a"):
     pdf = pd.DataFrame({"doc_id": range(lo, hi),
                         "text": [f"{tag}-{i}" for i in range(lo, hi)]})
     return spark.createDataFrame(pdf)
+
+
+@contextlib.contextmanager
+def _in_run(spark, run_id):
+    """Commit as streaming query ``run_id``: the local property Spark sets
+    on the thread that runs a foreachBatch function."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("sql.streaming.queryId", run_id)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("sql.streaming.queryId", None)
+
+
+def _fold_cm(spark, t, tag, batch_id):
+    """Fold a 20-item count-min batch sketch into state table ``t``."""
+    from mbrngq_spark.operators import sketch as S
+
+    batch = spark.createDataFrame(
+        pd.DataFrame({"item": [f"i{tag}-{i}" for i in range(20)]}))
+    t.fold_batch(S.cm_sketch(batch, [], "item"), batch_id,
+                 lambda parts: S.cm_merge(parts, []))
 
 
 @pytest.fixture()
@@ -158,6 +181,96 @@ def test_table_root_with_space_survives_vacuum(spark, tmp_path):
     assert got.count() == 80                       # live files untouched
     assert sorted(r.doc_id for r in got.select("doc_id").collect()) \
         == list(range(80))
+
+
+def test_expire_removes_dead_batch_dirs_and_rejects_keep_last_below_one(
+        spark, table):
+    """The vacuum removes every batch directory no kept manifest
+    references (with its _SUCCESS marker and .crc sidecars), and
+    ``keep_last < 1`` raises instead of expiring nothing (0: ``ids[-0:]``
+    is the whole list) or the oldest snapshots (negative)."""
+    table.append(_docs(spark, 100, 140))
+    table.delete_where(F.col("doc_id") < 20)
+    for bad in (0, -1):
+        with pytest.raises(ValueError):
+            table.expire_snapshots(keep_last=bad)
+    assert len(table.history()) == 3           # the bad calls expired none
+    table.compact(target_files=1)              # supersedes every batch dir
+    table.expire_snapshots(keep_last=1)
+    data = os.path.join(table.path, "data")
+    live = {os.path.dirname(f["path"]) for f in
+            table._manifest(table.current_snapshot_id())["files"]}
+    assert {os.path.join(data, d) for d in os.listdir(data)} == live
+    assert table.read().count() == 120
+
+
+def test_fold_state_stays_bounded(spark, tmp_path):
+    """fold_batch expires all but the two newest snapshots on every
+    commit: after 6 folds the state directory holds no more files than
+    after 3, and the state is the sum over all 6 batches."""
+    from mbrngq_spark.operators import sketch as S
+
+    t = SnapshotTable(spark, str(tmp_path / "state"))
+
+    def n_files():
+        return sum(len(fs) for _, _, fs in os.walk(t.path))
+
+    for b in range(3):
+        _fold_cm(spark, t, b, b)
+    after3 = n_files()
+    for b in range(3, 6):
+        _fold_cm(spark, t, b, b)
+    assert n_files() <= after3
+    assert len(t.history()) == 2
+    assert t.read().agg(F.sum("cnt")).first()[0] == 6 * 20 * S.CM_D
+
+
+def test_fold_keeps_previous_state_readable(spark, tmp_path):
+    """A reader that resolved the state before the next micro-batch folds
+    can still scan every row it resolved: the fold's vacuum keeps the
+    superseded snapshot's files until the fold after."""
+    from mbrngq_spark.operators import sketch as S
+
+    t = SnapshotTable(spark, str(tmp_path / "state"))
+    _fold_cm(spark, t, 0, 0)
+    _fold_cm(spark, t, 1, 1)
+    before = t.read()                      # resolves the current files
+    _fold_cm(spark, t, 2, 2)
+    assert before.agg(F.sum("cnt")).first()[0] == 2 * 20 * S.CM_D
+    assert t.read().agg(F.sum("cnt")).first()[0] == 3 * 20 * S.CM_D
+
+
+def test_fold_replay_after_another_run_is_a_noop(spark, tmp_path):
+    """Run A folds batch 0 and crashes before its checkpoint commit; run
+    B (a fresh checkpoint, batch ids from 0) then folds twice into the
+    same state, so A's manifest is expired; A restarts and replays batch
+    0. The replay must no-op — every manifest carries each run's last
+    batch id — so the SUM state counts A's batch once."""
+    from mbrngq_spark.operators import sketch as S
+
+    t = SnapshotTable(spark, str(tmp_path / "state"))
+    with _in_run(spark, "run-a"):
+        _fold_cm(spark, t, "a0", 0)
+    with _in_run(spark, "run-b"):
+        _fold_cm(spark, t, "b0", 0)
+        _fold_cm(spark, t, "b1", 1)
+    assert all(h.get("run_id") == "run-b" for h in t.history())
+    with _in_run(spark, "run-a"):
+        _fold_cm(spark, t, "a0", 0)        # replay of A's batch 0
+        _fold_cm(spark, t, "a1", 1)        # A's next batch commits
+    assert t.read().agg(F.sum("cnt")).first()[0] == 4 * 20 * S.CM_D
+
+
+def test_relative_table_root_survives_vacuum(spark, tmp_path):
+    """Manifest paths are absolute (input_file_name), so the vacuum must
+    walk the data directory by its absolute path: walking a RELATIVE
+    table root never matched a manifest path and deleted every live
+    file."""
+    t = SnapshotTable(spark, os.path.relpath(tmp_path / "rel_tbl"))
+    t.create(_docs(spark, 0, 50))
+    t.append(_docs(spark, 50, 80))
+    t.expire_snapshots(keep_last=1)
+    assert t.read().count() == 80
 
 
 def test_delete_all_then_merge_into_empty_table(spark, table):
@@ -304,8 +417,8 @@ def test_streaming_ingest_commits_batches_exactly_once(spark, tmp_path):
     batches no-op (manifest batch_id), restart resumes both cursors."""
     from pyspark.sql import types as T
 
-    from mbrngq_spark.streaming.snapshot_stream import (
-        ingest_snapshot_stream, run_id_for_checkpoint)
+    from mbrngq_spark.streaming.snapshot_stream import \
+        ingest_snapshot_stream
 
     schema = T.StructType([T.StructField("doc_id", T.LongType()),
                            T.StructField("text", T.StringType())])
@@ -329,16 +442,15 @@ def test_streaming_ingest_commits_batches_exactly_once(spark, tmp_path):
     replay = spark.createDataFrame(
         pd.DataFrame({"doc_id": [999], "text": ["dup"]}), schema)
     snap_before = t.current_snapshot_id()
-    rid = run_id_for_checkpoint(str(tmp_path / "ckpt"))
-    assert t.append_batch(replay, batch_id=1, run_id=rid) <= snap_before
+    with _in_run(spark, q.id):     # the run id is the streaming query id
+        assert t.append_batch(replay, batch_id=1) <= snap_before
     assert t.read().count() == 30
     # a DIFFERENT run (fresh checkpoint → batch ids restart at 0) must NOT
     # be swallowed as a replay of this run's batch ids
     other = spark.createDataFrame(
         pd.DataFrame({"doc_id": [1000], "text": ["other-run"]}), schema)
-    assert t.append_batch(other, batch_id=1,
-                          run_id=run_id_for_checkpoint(
-                              str(tmp_path / "ckpt-fresh"))) > snap_before
+    with _in_run(spark, "fresh-checkpoint-run"):
+        assert t.append_batch(other, batch_id=1) > snap_before
     assert t.read().count() == 31
     t.delete_where(F.col("doc_id") == 1000)   # restore for the restart leg
     # restart with the same checkpoint + one NEW source file → only the

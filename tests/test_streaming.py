@@ -6,6 +6,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mbrngq_spark.plans.snapshots import SnapshotTable
 from mbrngq_spark.streaming.cell_stream import windowed_cell_counts, \
     with_stream_geometry
 
@@ -88,7 +89,7 @@ def test_streaming_knn_serves_query_batches(spark, tmp_path):
                          trigger={"availableNow": True})
     q.awaitTermination(180)
 
-    got = (spark.read.parquet(out_path).toPandas()
+    got = (SnapshotTable(spark, out_path).read().toPandas()
            .sort_values(["query_id", "rank"]).reset_index(drop=True))
     exp = (knn_join(spark, docs_geo, all_q, k=5)
            .toPandas().sort_values(["query_id", "rank"])
@@ -126,7 +127,7 @@ def test_streaming_ngq_serves_query_batches(spark, tmp_path):
                          checkpoint=str(tmp_path / "ckpt_ngq"),
                          trigger={"availableNow": True})
     q.awaitTermination(180)
-    got = (spark.read.parquet(out_path).toPandas()
+    got = (SnapshotTable(spark, out_path).read().toPandas()
            .sort_values(["query_id", "group_rank"]).reset_index(drop=True))
     exp = (nearest_group(spark, docs_geo, all_q, k=5, L=16).toPandas()
            .sort_values(["query_id", "group_rank"]).reset_index(drop=True))
@@ -305,7 +306,7 @@ def test_streaming_asof_enrichment_matches_batch(spark, tmp_path):
                            checkpoint=str(tmp_path / "asof_ckpt"),
                            trigger={"availableNow": True})
     q.awaitTermination(180)
-    got = (spark.read.parquet(out_path).toPandas()
+    got = (SnapshotTable(spark, out_path).read().toPandas()
            .sort_values("lid").reset_index(drop=True))
     exp = (asof_join(spark.createDataFrame(left, l_schema), right, on="key",
                      tiebreak="rid")
@@ -320,13 +321,11 @@ def test_failure_injection_sink_exactly_once(spark, tmp_path):
     """Kill a foreachBatch query mid-batch — AFTER the batch's rows hit
     storage, BEFORE the checkpoint commits — then restart on the same
     checkpoint. The replay must leave exactly ONE copy of every row.
-    This test fails if _write_idempotent's dynamic partition overwrite is
+    This test fails if the sink's (run_id, batch_id) manifest check is
     replaced by a plain append (the replayed batch would double)."""
     import pyspark.errors
 
     import pytest
-
-    from mbrngq_spark.streaming.query_stream import _write_idempotent
 
     src = str(tmp_path / "src")
     for b in range(3):
@@ -338,7 +337,8 @@ def test_failure_injection_sink_exactly_once(spark, tmp_path):
     marker = tmp_path / "crashed-once"
 
     def handle(df, bid):
-        _write_idempotent(df.withColumn("n", F.lit(1)), bid, outp)
+        SnapshotTable(spark, outp).append_batch(
+            df.withColumn("n", F.lit(1)), bid)
         if bid == 1 and not marker.exists():
             marker.write_text("x")        # injected mid-batch crash:
             raise RuntimeError("injected") # rows written, commit never made
@@ -355,7 +355,7 @@ def test_failure_injection_sink_exactly_once(spark, tmp_path):
         run()
     assert marker.exists()                # the crash really happened
     run()                                 # restart: replays batch 1
-    got = spark.read.parquet(outp)
+    got = SnapshotTable(spark, outp).read()
     assert got.count() == 30              # one copy of every source row
     assert got.select("doc_id").distinct().count() == 30
 
@@ -369,8 +369,6 @@ def test_failure_injection_snapshot_exactly_once(spark, tmp_path):
 
     import pytest
 
-    from mbrngq_spark.plans.snapshots import SnapshotTable
-    from mbrngq_spark.streaming.snapshot_stream import run_id_for_checkpoint
 
     src = str(tmp_path / "src")
     for b in range(3):
@@ -380,11 +378,10 @@ def test_failure_injection_snapshot_exactly_once(spark, tmp_path):
             SRC_SCHEMA).coalesce(1).write.mode("append").parquet(src)
     ckpt = str(tmp_path / "ckpt")
     table = SnapshotTable(spark, str(tmp_path / "tbl"))
-    rid = run_id_for_checkpoint(ckpt)
     marker = tmp_path / "crashed-once"
 
     def handle(df, bid):
-        table.append_batch(df, bid, run_id=rid)
+        table.append_batch(df, bid)   # run id: the streaming query id
         if bid == 1 and not marker.exists():
             marker.write_text("x")
             raise RuntimeError("injected")
@@ -525,8 +522,8 @@ def test_streaming_substring_scrub_matches_batch(spark, tmp_path):
 def test_failure_injection_substring_scrub_exactly_once(spark, tmp_path):
     """Exactly-once under an injected mid-batch crash for the scrub
     path: rows hit storage, the checkpoint never commits, the restart
-    replays the batch — dynamic partition overwrite must leave exactly
-    one scrubbed copy of every source row."""
+    replays the batch — the sink's (run_id, batch_id) manifest check
+    must leave exactly one scrubbed copy of every source row."""
     import pandas as pd
     import pyspark.errors
     import pytest
@@ -534,7 +531,6 @@ def test_failure_injection_substring_scrub_exactly_once(spark, tmp_path):
 
     from mbrngq_spark.operators.dedup import (scrub_substring_spans,
                                               shared_substring_spans)
-    from mbrngq_spark.streaming.query_stream import _write_idempotent
 
     src = str(tmp_path / "src")
     boiler = "repeated boilerplate passage planted in every document here"
@@ -553,7 +549,8 @@ def test_failure_injection_substring_scrub_exactly_once(spark, tmp_path):
     marker = tmp_path / "crashed-once"
 
     def handle(df, bid):
-        _write_idempotent(scrub_substring_spans(df, spans), bid, outp)
+        SnapshotTable(spark, outp).append_batch(
+            scrub_substring_spans(df, spans), bid)
         if bid == 1 and not marker.exists():
             marker.write_text("x")
             raise RuntimeError("injected")
@@ -570,7 +567,7 @@ def test_failure_injection_substring_scrub_exactly_once(spark, tmp_path):
         run()
     assert marker.exists()
     run()
-    got = spark.read.parquet(outp)
+    got = SnapshotTable(spark, outp).read()
     assert got.count() == 30
     assert got.select("doc_id").distinct().count() == 30
     assert got.filter(F.col("text").contains(boiler)).count() == 0
