@@ -9,7 +9,11 @@ there is no tree surgery: cell ids are values, so
 - DELETE  = anti-join by id, rewriting ONLY the coarse-cell partitions that
             contain deleted rows (dynamic partition overwrite — the analog
             of condenseTree touching only the affected path);
-- stats refresh = re-aggregate only the touched partitions and merge.
+- STATS   = ``refresh_stats`` re-aggregates the WHOLE stored index
+            (every partition, not only the touched ones): no per-cell
+            counts are kept across writes yet. Folding count deltas
+            into each commit, and re-aggregating only touched files, is
+            ROADMAP direction 2 (one transactional index store).
 
 On Iceberg the same operations are ``MERGE INTO``/row-level DELETE with
 snapshot isolation; plain parquet + dynamic partition overwrite keeps the

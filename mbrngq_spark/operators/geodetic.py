@@ -294,8 +294,7 @@ def _fine_res(res: int, cfg: EngineConfig) -> int:
 
 def _fine_stats(docs_ll: DataFrame, res: int, cfg: EngineConfig,
                 *keys: str) -> pd.DataFrame:
-    return cell_counts(docs_ll.withColumn(
-        "cell", geo_cell_col(_fine_res(res, cfg))), *keys)
+    return cell_counts(docs_ll, geo_cell_col(_fine_res(res, cfg)), *keys)
 
 
 GEO = Metric(
@@ -452,8 +451,9 @@ def geodetic_pairs(spark: SparkSession, docs_ll: DataFrame, eps_m: float,
     broadcast as slim numpy. Both doc sides then join the pair table by
     cell — AQE picks the strategies — and the exact haversine predicate
     finishes."""
-    d = docs_ll.withColumn("cell", geo_cell_col(res))
-    cells = cell_counts(d)[["cell"]]
+    cell = geo_cell_col(res)
+    d = docs_ll.withColumn("cell", cell)
+    cells = cell_counts(docs_ll, cell)[["cell"]]
     probe = spark.createDataFrame(cells, "cell long") \
         .repartition(max(2, len(cells) // 4096))
     pairs = plan_in_executors(

@@ -7,7 +7,10 @@ top-k, Spark-first:
 
   phase 0  cell stats    — tiny per-(cell, category) aggregate table, bounded
                            by 4^res rows regardless of data size (at 100 TB it
-                           is still ≤ 4^res·m rows → always broadcastable).
+                           is still ≤ 4^res·m rows → always broadcastable);
+                           collected once per persisted corpus
+                           (cell_counts' memo), like the reference's
+                           build-time node counts.
   phase 1  plan          — per query, a *provably sufficient* search radius
                            from the stats (vectorized NumPy, no driver loop
                            per row): sort cells by MINDIST(cell, q), take
@@ -42,6 +45,7 @@ reproducible; the oracle compares sets at equal distance).
 from __future__ import annotations
 
 import itertools
+import threading
 from dataclasses import dataclass
 from typing import Callable
 
@@ -397,17 +401,78 @@ def plan_in_executors(spark: SparkSession, stats: pd.DataFrame,
     return queries_df.mapInPandas(run, schema=schema)
 
 
-def cell_counts(docs_c: DataFrame, *keys: str) -> pd.DataFrame:
+# persisted corpora whose planner stats stay memoized per SparkContext
+_STATS_MEMO_ENTRIES = 8
+
+
+def _cache_builder(docs: DataFrame):
+    """The CacheManager's cached-buffer builder serving ``docs`` (a
+    persisted frame, or one whose plan matches a persisted one), else
+    None."""
+    cd = docs.sparkSession._jsparkSession.sharedState().cacheManager() \
+        .lookupCachedData(docs._jdf)
+    return cd.get().cachedRepresentation().cacheBuilder() \
+        if cd.isDefined() else None
+
+
+def _buffers_id(builder) -> int | None:
+    """Id of a cache entry's materialized buffer RDD (None while it is
+    unmaterialized; asking earlier would run the cached plan). RDD ids
+    are never reused within a SparkContext, and every unpersist,
+    re-persist or source refresh of a frame makes a new entry, so the
+    id names one immutable snapshot of the corpus."""
+    if builder is None or not builder.isCachedColumnBuffersLoaded():
+        return None
+    return builder.cachedColumnBuffers().id()
+
+
+def cell_counts(docs: DataFrame, cell: Column, *keys: str) -> pd.DataFrame:
     """The one bounded stats collect of both metrics: per-(cell, *keys)
-    doc counts ``n`` of a frame carrying its ``cell`` column, to the
-    driver. Counts only: the planners never read the MBR columns, and a
-    slim frame keeps the driver collect + executor broadcast
-    proportional to what is actually consumed. The output is bounded
-    (≤ 4^res·m rows), so the exchange runs with a small constant
-    reduce-partition count (config.bounded_shuffle)."""
-    df = docs_c.groupBy("cell", *keys).agg(F.count("*").alias("n"))
-    with bounded_shuffle(docs_c.sparkSession):
-        return df.toPandas()
+    doc counts ``n`` of ``docs`` with its ``cell`` column set to
+    ``cell``, to the driver. Counts only: the planners never read the
+    MBR columns, and a slim frame keeps the driver collect + executor
+    broadcast proportional to what is actually consumed. The output is
+    bounded (≤ 4^res·m rows), so the exchange runs with a small constant
+    reduce-partition count (config.bounded_shuffle).
+
+    Memoized per PERSISTED corpus, the way the reference computes node
+    counts once at build time (CalculateBitArray, RTree.cs:209-247): the
+    key is the corpus's cached-buffer RDD (``_buffers_id``), the cell
+    expression (its string spells res and cfg as literals) and ``keys``.
+    Planner radii are provable only when the counts cover exactly the
+    docs the candidate join reads, so a frame without a materialized
+    cache entry (a stored index read from parquet) is rescanned on every
+    call, and a scan is memoized only when the entry serving ``docs``
+    is the same before and after it. The memo lives on the SparkContext
+    object (it dies with the context), holds ``_STATS_MEMO_ENTRIES``
+    corpora, and hands out copies: callers may mutate what they get.
+    Two threads may both scan a missing entry; both store equal
+    counts."""
+    sc = docs.sparkSession.sparkContext
+    lock, memo = sc.__dict__.setdefault("_mbrngq_statscache",
+                                        (threading.Lock(), {}))
+    builder = _cache_builder(docs)
+    key = (str(cell), keys)
+    rdd = _buffers_id(builder)
+    if rdd is not None:
+        with lock:
+            hit = memo.get((rdd, key))
+        if hit is not None:
+            return hit.copy()
+    df = docs.withColumn("cell", cell).groupBy("cell", *keys) \
+        .agg(F.count("*").alias("n"))
+    with bounded_shuffle(docs.sparkSession):
+        out = df.toPandas()
+    # the entry captured before the scan served it iff it is still the
+    # CacheManager's entry for docs, now materialized (by this scan at
+    # the latest)
+    rdd = _buffers_id(builder)
+    if rdd is not None and rdd == _buffers_id(_cache_builder(docs)):
+        with lock:
+            while len(memo) >= _STATS_MEMO_ENTRIES:
+                del memo[next(iter(memo))]
+            memo[(rdd, key)] = out.copy()
+    return out
 
 
 def planner_stats(docs_geo: DataFrame, res: int | None, k_per_group: int,
@@ -418,7 +483,8 @@ def planner_stats(docs_geo: DataFrame, res: int | None, k_per_group: int,
     it, and the stats are rolled up to that res. Explicit res > base falls
     back to a direct aggregate at that res."""
     def counts(at_res: int) -> pd.DataFrame:
-        return cell_counts(with_cell(docs_geo, at_res, cfg), "category")
+        return cell_counts(docs_geo, grid.cell_encode_named(at_res, cfg),
+                           "category")
 
     base = cfg.planner_base_res
     if res is not None and res > base:

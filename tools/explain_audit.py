@@ -8,8 +8,10 @@ Checks, for each core operator at sf0.01:
 - hot-path arithmetic sits inside WholeStageCodegen spans;
 - the partitioned index write prunes partitions under a cell_coarse filter.
 
-Writes docs/PLANS.md with the captured plan excerpts. Exit 1 on any failed
-assertion — run it like a test when touching operator plumbing.
+Writes docs/PLANS.md with the captured plan excerpts, their ids
+normalised (``stable``) so unchanged plans leave the file unchanged.
+Exit 1 on any failed assertion — run it like a test when touching
+operator plumbing.
 """
 
 from __future__ import annotations
@@ -35,6 +37,16 @@ def broadcast_only(p: str) -> bool:
     return "BroadcastHashJoin" in p and not any(
         j in p for j in ("SortMergeJoin", "ShuffledHashJoin",
                          "BroadcastNestedLoopJoin", "CartesianProduct"))
+
+
+def stable(plan: str) -> str:
+    """A plan with its run-dependent tokens normalised: expression ids
+    (``#123L`` → ``#NL``), exchange plan ids and temporary directories.
+    Only the excerpts written to docs/PLANS.md go through it (the checks
+    read the raw plan), so a rerun on unchanged code rewrites no line."""
+    plan = re.sub(r"#\d+", "#N", plan)
+    plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
+    return re.sub(r"/tmp/[^/\s,\]]+", "/tmp/<tmp>", plan)
 
 
 def plan_of(df, execute: bool = False) -> str:
@@ -799,7 +811,7 @@ def main() -> int:
             f.write(f"- {'✅' if ok else '❌'} {name}\n")
         f.write("\n")
         for title, plan in sections:
-            f.write(f"## {title}\n\n```\n{plan[:4000]}\n```\n\n")
+            f.write(f"## {title}\n\n```\n{stable(plan)[:4000]}\n```\n\n")
     spark.stop()
     return 0 if all(ok for _, ok, _ in checks) else 1
 
