@@ -55,7 +55,7 @@ from pyspark.sql import functions as F
 
 from mbrngq_spark.config import DEFAULT, EngineConfig
 from mbrngq_spark.operators.knn import Metric, _candidates, _rank, \
-    cell_counts, count_grid, covering_box, plan_in_executors
+    cell_counts, covering_box, plan_in_executors, summed_area
 from mbrngq_spark.operators.ngq import _nearest_group_once
 
 R_EARTH = 6_371_000.0
@@ -219,7 +219,7 @@ def plan_geo_cells(stats: pd.DataFrame, queries: pd.DataFrame,
     radius = np.full(len(qids), cap)
     reach = radius + _ROUND_PAD_M     # the cap filters one rounded value
     if k is not None and int(counts.sum()) >= k:
-        _, sat = count_grid(iy_all, ix_all, counts, n)
+        sat = summed_area(iy_all, ix_all, counts, n)
         cy = np.clip(((qlat + 90.0) / dlat).astype(np.int64), 0, n - 1)
         cx = np.clip(((qlon + 180.0) / dlon).astype(np.int64), 0, n - 1)
         bx0, by0, bx1, by1 = covering_box(sat, cx, cy, n, k)

@@ -12,13 +12,18 @@ top-k, Spark-first:
                            (cell_counts' memo), like the reference's
                            build-time node counts.
   phase 1  plan          — per query, a *provably sufficient* search radius
-                           from the stats (vectorized NumPy, no driver loop
-                           per row): sort cells by MINDIST(cell, q), take
-                           cells until ≥ k docs are covered, radius = max
-                           MAXDIST over taken cells. Any doc outside that
-                           radius cannot be a top-k answer — this is the
-                           distributed analog of the R-tree's best-first
-                           MINDIST pruning (RTree.cs:2448-2452).
+                           from the stats: sort cells by MINDIST(cell, q),
+                           take cells until ≥ k docs are covered, radius =
+                           max MAXDIST over taken cells. Any doc outside
+                           that radius cannot be a top-k answer — this is
+                           the distributed analog of the R-tree's
+                           best-first MINDIST pruning (RTree.cs:2448-2452).
+                           One window stage plans every query at once in
+                           NumPy, no driver loop per row: each (query,
+                           window row) is one searchsorted run over the
+                           row-major occupied cells, and the sort-and-take
+                           is segment operations over the flat (query,
+                           cell) entries.
   phase 2  candidates    — explode (query_id, cell) pairs for cells with
                            MINDIST ≤ radius, broadcast-hash-join to docs on
                            cell id (no shuffle of the big side).
@@ -71,120 +76,30 @@ def rollup_stats(stats: pd.DataFrame, from_res: int, to_res: int) -> pd.DataFram
     return out.groupby(keys, as_index=False)["n"].sum()
 
 
-_BATCH_WIN = 16          # max window side handled by the batched planner
-_BATCH_CHUNK = 2048      # queries per chunk (bounds the (B, W, W) arrays)
+# (query, occupied cell) entries one chunk of the window stage expands at
+# most: a query's window spans ≤ 2^res rows and ≤ every occupied cell
+_PLAN_ENTRIES = 1 << 17
 
 
-def _plan_windows_batched(g: np.ndarray, qids, qxs, qys, cxs, cys, radii,
-                          n: int, wx: float, wy: float, k: int,
-                          cfg: EngineConfig, done: np.ndarray) -> list:
-    """Chunked 2-D batch version of the per-query candidate-window stage:
-    identical arithmetic, comparisons and stable orderings to the scalar
-    loop (the equality test in test_knn_range drives both), emitted as
-    (query_ids, cells, radii) triples. Marks handled queries in ``done``;
-    infinite radii and windows wider than _BATCH_WIN stay unhandled."""
-    W = _BATCH_WIN
-    finite = np.isfinite(radii)
-    rx = np.zeros(len(qids), dtype=np.int64)
-    ry = np.zeros(len(qids), dtype=np.int64)
-    np.floor_divide(radii, wx, out=rx, where=finite, casting="unsafe")
-    np.floor_divide(radii, wy, out=ry, where=finite, casting="unsafe")
-    rx += 1
-    ry += 1
-    sx0 = np.maximum(cxs - rx, 0)
-    sy0 = np.maximum(cys - ry, 0)
-    sx1 = np.minimum(cxs + rx, n - 1)
-    sy1 = np.minimum(cys + ry, n - 1)
-    small = finite & (sx1 - sx0 < W) & (sy1 - sy0 < W)
-    idx = np.nonzero(small)[0]
-    done[idx] = True
-    out = []
-    off = np.arange(W, dtype=np.int64)
-    for s in range(0, len(idx), _BATCH_CHUNK):
-        ids = idx[s:s + _BATCH_CHUNK]
-        b = len(ids)
-        qx = qxs[ids][:, None]
-        qy = qys[ids][:, None]
-        colg = sx0[ids][:, None] + off[None, :]              # (B, W)
-        rowg = sy0[ids][:, None] + off[None, :]
-        vx = colg <= sx1[ids][:, None]
-        vy = rowg <= sy1[ids][:, None]
-        colc = np.minimum(colg, n - 1)
-        rowc = np.minimum(rowg, n - 1)
-        cnt = g[rowc[:, :, None], colc[:, None, :]]          # (B, W, W)
-        x0 = cfg.min_x + colc * wx                           # (B, W)
-        y0 = cfg.min_y + rowc * wy
-        gx = np.maximum(np.maximum(x0 - qx, qx - (x0 + wx)), 0.0)
-        gy = np.maximum(np.maximum(y0 - qy, qy - (y0 + wy)), 0.0)
-        md = np.sqrt(gy[:, :, None] ** 2 + gx[:, None, :] ** 2)
-        rad = radii[ids]
-        keep = vy[:, :, None] & vx[:, None, :] & (cnt > 0) \
-            & (md <= rad[:, None, None])
-        # per-cell tightening, row-wise (same semantics as the scalar
-        # branch): rows whose kept counts cover >= k shrink their radius
-        # to the MINDIST-sorted prefix's max per-cell MAXDIST
-        kept_cnt = np.where(keep, cnt, 0).reshape(b, W * W)
-        apply = kept_cnt.sum(axis=1) >= k
-        if apply.any():
-            fx = np.maximum(np.abs(qx - x0), np.abs(qx - (x0 + wx)))
-            fy = np.maximum(np.abs(qy - y0), np.abs(qy - (y0 + wy)))
-            maxd = np.sqrt(fy[:, :, None] ** 2
-                           + fx[:, None, :] ** 2).reshape(b, W * W)
-            md_flat = np.where(keep, md, np.inf).reshape(b, W * W)
-            order = np.argsort(md_flat, axis=1, kind="stable")
-            cum = np.take_along_axis(kept_cnt, order, axis=1).cumsum(axis=1)
-            j = (cum < k).sum(axis=1)                        # left searchsorted
-            pmax = np.maximum.accumulate(
-                np.take_along_axis(maxd, order, axis=1), axis=1)
-            r2 = pmax[np.arange(b), np.minimum(j, W * W - 1)]
-            shrink = apply & (r2 < rad)
-            rad = np.where(shrink, r2, rad)
-            keep &= md <= rad[:, None, None]
-        bi, wyi, wxi = np.nonzero(keep)
-        cell = (grid.np_spread_bits(colc[bi, wxi])
-                | (grid.np_spread_bits(rowc[bi, wyi]) << 1))
-        # raw arrays, not .tolist(): the planner's output frame is built
-        # from these — list round-trips cost ~0.5 s/plan at large L
-        out.append((qids[ids][bi], cell, rad[bi]))
-    return out
-
-
-def _half_width_radius_scalar(sat: np.ndarray, cx: int, cy: int,
-                              qx: float, qy: float, n: int, k: int,
-                              wx: float, wy: float,
-                              cfg: EngineConfig) -> float:
-    """Reference twin of the batched half-width search (one query at a
-    time) — kept for the vectorized-vs-scalar equality test."""
-    lo_h, hi_h = 0, n
-    while lo_h < hi_h:
-        mid = (lo_h + hi_h) // 2
-        x0, y0 = max(cx - mid, 0), max(cy - mid, 0)
-        x1, y1 = min(cx + mid, n - 1), min(cy + mid, n - 1)
-        if int(box_count(sat, x0, y0, x1, y1)) >= k:
-            hi_h = mid
-        else:
-            lo_h = mid + 1
-    h = lo_h
-    bx0, by0 = max(cx - h, 0), max(cy - h, 0)
-    bx1, by1 = min(cx + h, n - 1), min(cy + h, n - 1)
-    return float(geom.np_maxdist_point_rect(
-        qx, qy,
-        cfg.min_x + bx0 * wx, cfg.min_y + by0 * wy,
-        cfg.min_x + (bx1 + 1) * wx, cfg.min_y + (by1 + 1) * wy))
-
-
-def count_grid(iy: np.ndarray, ix: np.ndarray, counts: np.ndarray,
-               n: int) -> tuple[np.ndarray, np.ndarray]:
-    """The dense n×n count grid of the cells at grid rows ``iy`` and
-    columns ``ix`` (unique cells), and its summed-area table for O(1)
-    box counts (box_count). Both planners and certifying_L build theirs
-    here; the cell-id layout (Morton or row-major) is decoded by the
-    caller."""
+def summed_area(iy: np.ndarray, ix: np.ndarray, counts: np.ndarray,
+                n: int) -> np.ndarray:
+    """The summed-area table of the n×n count grid of the cells at grid
+    rows ``iy`` and columns ``ix`` (unique cells), for O(1) box counts
+    (box_count). Both planners and certifying_L build theirs here; the
+    cell-id layout (Morton or row-major) is decoded by the caller."""
     g = np.zeros((n, n), dtype=np.int64)
     g[iy, ix] = counts
     sat = np.zeros((n + 1, n + 1), dtype=np.int64)
     sat[1:, 1:] = g.cumsum(0).cumsum(1)
-    return g, sat
+    return sat
+
+
+def morton_summed_area(stats: pd.DataFrame, n: int) -> np.ndarray:
+    """summed_area of a (Morton cell, n) table of unique cells."""
+    cells = stats["cell"].to_numpy(np.int64)
+    return summed_area(grid.np_compact_bits(cells >> 1),
+                       grid.np_compact_bits(cells),
+                       stats["n"].to_numpy(np.int64), n)
 
 
 def box_count(sat: np.ndarray, x0, y0, x1, y1):
@@ -220,147 +135,135 @@ def covering_box(sat: np.ndarray, cx: np.ndarray, cy: np.ndarray, n: int,
             np.minimum(cx + lo, n - 1), np.minimum(cy + lo, n - 1))
 
 
+def query_cells(qx: np.ndarray, qy: np.ndarray, n: int,
+                cfg: EngineConfig) -> tuple[np.ndarray, np.ndarray]:
+    """Each planar query point's (column, row) on the n×n grid, clipped
+    into it: an out-of-domain query plans from a border cell."""
+    return (np.clip(((qx - cfg.min_x) / (cfg.width / n)).astype(np.int64),
+                    0, n - 1),
+            np.clip(((qy - cfg.min_y) / (cfg.height / n)).astype(np.int64),
+                    0, n - 1))
+
+
+def covering_radius(sat: np.ndarray, qx: np.ndarray, qy: np.ndarray,
+                    k: int, cfg: EngineConfig) -> np.ndarray:
+    """Per planar query, an upper bound on its k-th nearest doc distance
+    by the summed-area table ``sat``: the MAXDIST from q to the
+    k-covering box around q's cell (covering_box), which holds ≥ k
+    docs."""
+    n = len(sat) - 1
+    wx, wy = cfg.width / n, cfg.height / n
+    bx0, by0, bx1, by1 = covering_box(sat, *query_cells(qx, qy, n, cfg),
+                                      n, k)
+    return geom.np_maxdist_point_rect(
+        qx, qy, cfg.min_x + bx0 * wx, cfg.min_y + by0 * wy,
+        cfg.min_x + (bx1 + 1) * wx, cfg.min_y + (by1 + 1) * wy)
+
+
+def _runs(lo: np.ndarray, size: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Runs [lo, lo + size) expanded to flat (run index, value) arrays."""
+    run = np.repeat(np.arange(len(size)), size)
+    return run, (np.arange(len(run)) + np.repeat(lo - np.cumsum(size) + size,
+                                                 size))
+
+
 def plan_candidate_cells(stats: pd.DataFrame, queries: pd.DataFrame,
                          k: int, res: int, cfg: EngineConfig = DEFAULT,
-                         max_dist: float | None = None,
-                         use_scalar_search: bool = False) -> pd.DataFrame:
-    """Vectorized candidate-cell planner.
+                         max_dist: float | None = None) -> pd.DataFrame:
+    """The planar one-category planner: per query, every occupied cell
+    that can hold one of its k nearest docs.
 
     ``stats``: (cell, [category,] n) — the tiny phase-0 table.
     ``queries``: (query_id, qx, qy).
-    Returns (query_id, cell, radius[, category]) rows covering every doc
-    that could be a top-k answer; ``radius`` is the per-(query[, category])
-    distance bound (any doc farther than it is provably outside the top-k),
-    used to pre-filter rows BEFORE the rank shuffle. ``max_dist`` caps the
-    radius (the reference's furthestDistance parameter, RTree.cs:454-474):
-    with a cap the planner prunes whole cells beyond it even when fewer
-    than k docs are reachable. Pure NumPy over the non-empty cells
-    (C ≤ 4^res); for very large Q, pass the queries as a Spark DataFrame
-    to the operators and this planner runs per Arrow batch inside
-    mapInPandas (plan_in_executors). Per-category plans come from the
-    candidate builder's one loop (_per_category).
+    Returns (query_id, cell, radius) rows covering every doc that could
+    be a top-k answer; ``radius`` is the per-query distance bound (any doc
+    farther than it is provably outside the top-k), used to pre-filter
+    rows BEFORE the rank shuffle. ``max_dist`` caps the radius (the
+    reference's furthestDistance parameter, RTree.cs:454-474): with a cap
+    the planner prunes whole cells beyond it even when fewer than k docs
+    are reachable.
+
+    The radius starts at covering_radius (infinite below k docs, which
+    makes the window the whole grid). One window stage serves every
+    query: with the occupied cells sorted row-major once, each (query,
+    window row) of the radius-reach window is one searchsorted run; the
+    runs expand to flat (query, cell) entries, kept where MINDIST ≤
+    radius. Then PER-CELL tightening, as segment operations: in
+    (MINDIST, row-major) order, the smallest prefix whose counts cover
+    ≥ k docs bounds the radius by its max per-cell MAXDIST, since ≥ k
+    docs provably lie within it. The box bound alone is brutally loose
+    on concentrated data (a far query's box engulfs a whole dense island
+    — measured 120M joined rows per NGQ batch on gaussian-island).
+    Queries run in chunks of at most _PLAN_ENTRIES entries in the worst
+    case, so a large Arrow batch in plan_in_executors stays
+    memory-bounded. Per-category plans come from the candidate builder's
+    one loop (_per_category).
     """
-    # accumulated as LISTS OF NUMPY ARRAYS, concatenated once at the end:
-    # Python-list round-trips (tolist + object-dtype DataFrame inference)
-    # cost ~0.5 s per plan at large L (driver-serial time)
-    out_q, out_c, out_r = [], [], []
+    n = 1 << res
+    wx, wy = cfg.width / n, cfg.height / n
     qids = queries["query_id"].to_numpy()
     qxs = queries["qx"].to_numpy(dtype=np.float64)
     qys = queries["qy"].to_numpy(dtype=np.float64)
-    n = 1 << res
-    wx, wy = cfg.width / n, cfg.height / n
-
     # stats may be per-(cell, category): collapse to one row per cell so
     # the emitted (query_id, cell) pairs are unique
     sub = stats.groupby("cell", as_index=False)["n"].sum()
-    cells = sub["cell"].to_numpy(dtype=np.int64)
-    counts = sub["n"].to_numpy(dtype=np.int64)
-    total = int(counts.sum())
-
-    # dense count grid + summed-area table → O(1) box counts, O(log n)
-    # radius search per query (a per-query sort over all cells would be
-    # a serial driver bottleneck at fine resolutions)
-    g, sat = count_grid(grid.np_compact_bits(cells >> 1),
-                        grid.np_compact_bits(cells), counts, n)
-
-    # --- per-query radius bounds, BATCHED over all queries ----------
-    # every query shares the summed-area table (covering_box)
-    cxs = np.clip(((qxs - cfg.min_x) / wx).astype(np.int64), 0, n - 1)
-    cys = np.clip(((qys - cfg.min_y) / wy).astype(np.int64), 0, n - 1)
-    if total < k:
-        radii = np.full(len(qids), np.inf)
-    elif use_scalar_search:
-        radii = np.array([_half_width_radius_scalar(
-            sat, int(cxs[qi]), int(cys[qi]), qxs[qi], qys[qi],
-            n, k, wx, wy, cfg) for qi in range(len(qids))])
-    else:
-        bx0, by0, bx1, by1 = covering_box(sat, cxs, cys, n, k)
-        # ≥ k docs inside the box ⇒ kth distance ≤ MAXDIST(q, box)
-        radii = geom.np_maxdist_point_rect(
-            qxs, qys,
-            cfg.min_x + bx0 * wx, cfg.min_y + by0 * wy,
-            cfg.min_x + (bx1 + 1) * wx, cfg.min_y + (by1 + 1) * wy)
+    sat = morton_summed_area(sub, n)
+    radii = (covering_radius(sat, qxs, qys, k, cfg)
+             if sat[-1, -1] >= k    # the stats hold ≥ k docs
+             else np.full(len(qids), np.inf))
     # radius cap (Nearest's furthestDistance): answers beyond it are
     # excluded by contract, so cells beyond it need not be shipped
     if max_dist is not None:
         radii = np.minimum(radii, float(max_dist))
 
-    # --- candidate windows, BATCHED --------------------------------
-    # queries whose radius-reach window fits W×W (the common case:
-    # the window is ~the k-covering box) are processed as chunked 2-D
-    # NumPy batches — gather counts, MINDIST mask, and the per-cell
-    # tightening all run as axis-1 array ops instead of ~30
-    # interpreted calls per query. Oversized windows and infinite
-    # radii fall back to the per-query loop below (also the scalar
-    # reference under use_scalar_search).
-    done = np.zeros(len(qids), dtype=bool)
-    if not use_scalar_search and len(qids):
-        for e_q, e_c, e_r in _plan_windows_batched(
-                g, qids, qxs, qys, cxs, cys, radii, n, wx, wy, k, cfg,
-                done):
-            out_q.append(e_q)
-            out_c.append(e_c)
-            out_r.append(e_r)
+    cells = sub["cell"].to_numpy(np.int64)
+    ix, iy = grid.np_compact_bits(cells), grid.np_compact_bits(cells >> 1)
+    key = iy * n + ix                     # row-major cell order
+    order = np.argsort(key)
+    cells, counts, ix, iy, key = (
+        a[order] for a in (cells, sub["n"].to_numpy(np.int64), ix, iy, key))
+    x0, y0 = cfg.min_x + ix * wx, cfg.min_y + iy * wy
+    box = (x0, y0, x0 + wx, y0 + wy)      # per occupied cell
+    # window reach floor(r / w) + 1 cells around q's cell; a radius past
+    # the grid (an infinite one too) reaches all of it
+    cxs, cys = query_cells(qxs, qys, n, cfg)
+    rx = np.floor_divide(np.clip(radii, -wx, n * wx), wx).astype(np.int64) + 1
+    ry = np.floor_divide(np.clip(radii, -wy, n * wy), wy).astype(np.int64) + 1
+    sx0, sx1 = np.maximum(cxs - rx, 0), np.minimum(cxs + rx, n - 1)
+    sy0, sy1 = np.maximum(cys - ry, 0), np.minimum(cys + ry, n - 1)
 
-    for qi in np.nonzero(~done)[0]:
-        qx, qy = qxs[qi], qys[qi]
-        cx, cy = int(cxs[qi]), int(cys[qi])
-        radius = float(radii[qi])
-        if not np.isfinite(radius):
-            take = cells
-        else:
-            # candidates: non-empty cells with MINDIST ≤ radius, searched
-            # only inside the radius-reach box
-            rx = int(radius / wx) + 1
-            ry = int(radius / wy) + 1
-            sx0, sy0 = max(cx - rx, 0), max(cy - ry, 0)
-            sx1, sy1 = min(cx + rx, n - 1), min(cy + ry, n - 1)
-            sub_g = g[sy0:sy1 + 1, sx0:sx1 + 1]
-            yy, xx = np.nonzero(sub_g)
-            x0 = cfg.min_x + (xx + sx0) * wx
-            y0 = cfg.min_y + (yy + sy0) * wy
-            gx = np.maximum(np.maximum(x0 - qx, qx - (x0 + wx)), 0.0)
-            gy = np.maximum(np.maximum(y0 - qy, qy - (y0 + wy)), 0.0)
-            md = np.sqrt(gx * gx + gy * gy)
-            keep = md <= radius
-            # PER-CELL tightening: the box bound is brutally loose on
-            # concentrated data (a far query's box engulfs a whole dense
-            # island — measured 120M joined rows/NGQ batch on
-            # gaussian-island). Sort candidate cells by MINDIST, take
-            # the smallest prefix whose counts cover ≥ k, and shrink the
-            # radius to that prefix's max per-cell MAXDIST: ≥ k docs
-            # provably lie within it, so cells (and rows) beyond it
-            # cannot hold an answer.
-            if keep.any():
-                cnt = sub_g[yy, xx][keep]
-                if int(cnt.sum()) >= k:
-                    mdk = md[keep]
-                    fx = np.maximum(np.abs(qx - x0[keep]),
-                                    np.abs(qx - (x0[keep] + wx)))
-                    fy = np.maximum(np.abs(qy - y0[keep]),
-                                    np.abs(qy - (y0[keep] + wy)))
-                    maxd = np.sqrt(fx * fx + fy * fy)
-                    order = np.argsort(mdk, kind="stable")
-                    j = int(np.searchsorted(np.cumsum(cnt[order]), k))
-                    r2 = float(maxd[order[:j + 1]].max())
-                    if r2 < radius:
-                        radius = r2
-                        kk = np.zeros_like(keep)
-                        kk[np.nonzero(keep)[0][mdk <= r2]] = True
-                        keep = kk
-            take = (grid.np_spread_bits((xx[keep] + sx0).astype(np.int64))
-                    | (grid.np_spread_bits((yy[keep] + sy0).astype(np.int64)) << 1))
-        out_q.append(np.full(len(take), qids[qi], dtype=np.int64))
-        out_c.append(np.asarray(take, dtype=np.int64))
-        out_r.append(np.full(len(take), radius, dtype=np.float64))
-
-    def cat_arrays(parts: list, dtype) -> np.ndarray:
-        return (np.concatenate(parts) if parts
-                else np.array([], dtype=dtype))
-
-    return pd.DataFrame({"query_id": cat_arrays(out_q, np.int64),
-                         "cell": cat_arrays(out_c, np.int64),
-                         "radius": cat_arrays(out_r, np.float64)})
+    out = {"query_id": [], "cell": [], "radius": []}
+    step = max(1, _PLAN_ENTRIES // max(len(cells), n))
+    for c in (slice(s, s + step) for s in range(0, len(qids), step)):
+        # (query, window row) runs → flat (query, occupied cell) entries
+        wq, row = _runs(sy0[c], sy1[c] - sy0[c] + 1)
+        lo = np.searchsorted(key, row * n + sx0[c][wq])
+        hi = np.searchsorted(key, row * n + sx1[c][wq], "right")
+        run, e = _runs(lo, hi - lo)
+        q, qx, qy, rad = wq[run], qxs[c], qys[c], radii[c]
+        md = geom.np_mindist_point_rect(qx[q], qy[q], *(b[e] for b in box))
+        keep = md <= rad[q]
+        q, e, md = q[keep], e[keep], md[keep]
+        # per-cell tightening as segment operations: the prefix is every
+        # entry whose query's docs before it, in (MINDIST, row-major)
+        # order, number < k
+        o = np.lexsort((md, q))
+        before = np.cumsum(counts[e[o]]) - counts[e[o]]
+        p = o[before - before[np.searchsorted(q[o], q[o])] < k]
+        far = np.full(len(rad), -np.inf)
+        np.maximum.at(far, q[p], geom.np_maxdist_point_rect(
+            qx[q[p]], qy[q[p]], *(b[e[p]] for b in box)))
+        rad = np.where(np.bincount(q, counts[e], len(rad)) >= k,
+                       np.minimum(far, rad), rad)
+        keep = md <= rad[q]
+        out["query_id"].append(qids[c][q[keep]])
+        out["cell"].append(cells[e[keep]])
+        out["radius"].append(rad[q[keep]])
+    # one column at a time, each column's chunks freed as it is joined
+    for col, dtype in zip(out, (np.int64, np.int64, np.float64)):
+        out[col] = (np.concatenate(out[col]) if out[col]
+                    else np.array([], dtype=dtype))
+    return pd.DataFrame(out, copy=False)
 
 
 def _per_category(plan, stats: pd.DataFrame) -> pd.DataFrame:
@@ -517,21 +420,14 @@ def certifying_L(stats: pd.DataFrame, bad: pd.DataFrame, res: int,
     stats grid. Lets the adaptive loop jump straight to a useful L instead
     of blind doubling (each blind round is a full candidate join)."""
     n = 1 << res
-    wx, wy = cfg.width / n, cfg.height / n
     qx = bad["qx"].to_numpy(np.float64)
     qy = bad["qy"].to_numpy(np.float64)
     r = bad["kth"].to_numpy(np.float64)
-    x0 = np.clip(((qx - r - cfg.min_x) / wx).astype(np.int64), 0, n - 1)
-    x1 = np.clip(((qx + r - cfg.min_x) / wx).astype(np.int64), 0, n - 1)
-    y0 = np.clip(((qy - r - cfg.min_y) / wy).astype(np.int64), 0, n - 1)
-    y1 = np.clip(((qy + r - cfg.min_y) / wy).astype(np.int64), 0, n - 1)
+    x0, y0 = query_cells(qx - r, qy - r, n, cfg)
+    x1, y1 = query_cells(qx + r, qy + r, n, cfg)
     best = 1
     for cat in stats["category"].unique():
-        sub = stats[stats["category"] == cat]
-        cells = sub["cell"].to_numpy()
-        _, sat = count_grid(grid.np_compact_bits(cells >> 1),
-                            grid.np_compact_bits(cells),
-                            sub["n"].to_numpy(np.int64), n)
+        sat = morton_summed_area(stats[stats["category"] == cat], n)
         best = max(best, int(box_count(sat, x0, y0, x1, y1).max()) + 1)
     return best
 

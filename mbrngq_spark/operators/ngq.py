@@ -85,11 +85,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from mbrngq_spark import geom, grid
+from mbrngq_spark import grid
 from mbrngq_spark.config import DEFAULT, EngineConfig, refine_partitions
 from mbrngq_spark.operators.knn import PLANAR, Metric, _join_candidates, \
-    certifying_L, certifying_L_distributed, count_grid, covering_box, \
-    planner_stats
+    certifying_L, certifying_L_distributed, covering_box, covering_radius, \
+    morton_summed_area, planner_stats, query_cells
 
 
 def candidate_topL(spark: SparkSession, docs_geo: DataFrame,
@@ -471,21 +471,13 @@ def _provably_bad(stats: pd.DataFrame, queries: pd.DataFrame, L: int,
     wx, wy = cfg.width / n, cfg.height / n
     qx = queries["qx"].to_numpy(np.float64)
     qy = queries["qy"].to_numpy(np.float64)
-    cx = np.clip(((qx - cfg.min_x) / wx).astype(np.int64), 0, n - 1)
-    cy = np.clip(((qy - cfg.min_y) / wy).astype(np.int64), 0, n - 1)
-
-    def sat_of(st: pd.DataFrame) -> np.ndarray:
-        cells = st["cell"].to_numpy()
-        return count_grid(grid.np_compact_bits(cells >> 1),
-                          grid.np_compact_bits(cells),
-                          st["n"].to_numpy(np.int64), n)[1]
+    cx, cy = query_cells(qx, qy, n, cfg)
 
     # the smallest square around q's cell holding a doc (half-width h):
     # the one of half-width h-1 inside it is empty, so every occupied
     # cell lies at least q's distance to that empty square's border away
-    x0, y0, x1, y1 = covering_box(
-        sat_of(stats.groupby("cell", as_index=False)["n"].sum()),
-        cx, cy, n, 1)
+    x0, y0, x1, y1 = covering_box(morton_summed_area(
+        stats.groupby("cell", as_index=False)["n"].sum(), n), cx, cy, n, 1)
     h = np.maximum.reduce([cx - x0, x1 - cx, cy - y0, y1 - cy])
     near = np.maximum(np.minimum.reduce([
         qx - (cfg.min_x + (cx - h + 1) * wx),
@@ -498,10 +490,8 @@ def _provably_bad(stats: pd.DataFrame, queries: pd.DataFrame, L: int,
     for _, st in stats.groupby("category"):
         if int(st["n"].sum()) <= L:
             continue   # never truncated at L
-        bx0, by0, bx1, by1 = covering_box(sat_of(st), cx, cy, n, L)
-        bad |= geom.np_maxdist_point_rect(
-            qx, qy, cfg.min_x + bx0 * wx, cfg.min_y + by0 * wy,
-            cfg.min_x + (bx1 + 1) * wx, cfg.min_y + (by1 + 1) * wy) < lb
+        bad |= covering_radius(morton_summed_area(st, n), qx, qy, L,
+                               cfg) < lb
     return lb, bad
 
 

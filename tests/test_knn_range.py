@@ -242,35 +242,161 @@ def test_knn_distributed_mode_honors_radius_cap_and_ties(spark, docs_geo):
         assert len(a) == len(b)
 
 
-def test_vectorized_planner_equals_scalar_search(spark):
-    """The batched lock-step binary search must produce the identical
-    (query_id, cell, radius) plan as the per-query scalar search, across
-    resolutions, k values, and a max_dist cap."""
-    import numpy as np
-    import pandas as pd
+def _reference_plan(stats, queries, k, res, cfg, cap):
+    """The planar plan written without windows or batching: per query, the
+    radius is the MAXDIST to the smallest k-covering square around its
+    cell (a linear scan over half-widths; infinite below k docs), capped
+    at ``cap``; the cells are every occupied cell with MINDIST ≤ radius;
+    then the per-cell tightening: in (MINDIST, row-major) order, the
+    smallest prefix covering ≥ k docs bounds the radius by its max
+    per-cell MAXDIST."""
+    from mbrngq_spark import geom, grid
 
-    from mbrngq_spark.config import DEFAULT as cfg
-    from mbrngq_spark.operators.knn import plan_candidate_cells
+    n = 1 << res
+    wx, wy = cfg.width / n, cfg.height / n
+    sub = stats.groupby("cell", as_index=False)["n"].sum()
+    cells = sub["cell"].to_numpy(np.int64)
+    cnt = sub["n"].to_numpy(np.int64)
+    ix, iy = grid.np_compact_bits(cells), grid.np_compact_bits(cells >> 1)
+    x0, y0 = cfg.min_x + ix * wx, cfg.min_y + iy * wy
+    parts = [pd.DataFrame({"query_id": np.array([], np.int64),
+                           "cell": np.array([], np.int64),
+                           "radius": np.array([], np.float64)})]
+    for qid, qx, qy in queries[["query_id", "qx", "qy"]].itertuples(
+            index=False):
+        cx = min(max(int((qx - cfg.min_x) / wx), 0), n - 1)
+        cy = min(max(int((qy - cfg.min_y) / wy), 0), n - 1)
+        radius = np.inf
+        if cnt.sum() >= k:
+            for h in range(n):
+                bx0, by0 = max(cx - h, 0), max(cy - h, 0)
+                bx1, by1 = min(cx + h, n - 1), min(cy + h, n - 1)
+                if cnt[(ix >= bx0) & (ix <= bx1) & (iy >= by0)
+                       & (iy <= by1)].sum() >= k:
+                    break
+            radius = float(geom.np_maxdist_point_rect(
+                qx, qy, cfg.min_x + bx0 * wx, cfg.min_y + by0 * wy,
+                cfg.min_x + (bx1 + 1) * wx, cfg.min_y + (by1 + 1) * wy))
+        if cap is not None:
+            radius = min(radius, cap)
+        md = geom.np_mindist_point_rect(qx, qy, x0, y0, x0 + wx, y0 + wy)
+        keep = md <= radius
+        if cnt[keep].sum() >= k:
+            idx = np.nonzero(keep)[0]
+            order = idx[np.lexsort((ix[idx], iy[idx], md[idx]))]
+            j = int(np.searchsorted(np.cumsum(cnt[order]), k))
+            far = geom.np_maxdist_point_rect(
+                qx, qy, x0[order[:j + 1]], y0[order[:j + 1]],
+                x0[order[:j + 1]] + wx, y0[order[:j + 1]] + wy).max()
+            radius = min(radius, float(far))
+            keep = md <= radius
+        parts.append(pd.DataFrame({
+            "query_id": np.full(int(keep.sum()), qid, np.int64),
+            "cell": cells[keep], "radius": np.full(int(keep.sum()), radius)}))
+    return pd.concat(parts, ignore_index=True)
+
+
+def _sorted(plan):
+    return plan.sort_values(["query_id", "cell"]).reset_index(drop=True)
+
+
+def _planner_cases():
+    """(name, stats, queries, k, res, cap, cfg) cases for the planner
+    tests."""
+    from mbrngq_spark import grid
+    from mbrngq_spark.config import DEFAULT as cfg, EngineConfig
 
     rng = np.random.default_rng(17)
+
+    def queries(m, pad):
+        return pd.DataFrame({
+            "query_id": np.arange(m, dtype=np.int64),
+            "qx": rng.uniform(cfg.min_x - pad, cfg.min_x + cfg.width + pad, m),
+            "qy": rng.uniform(cfg.min_y - pad, cfg.min_y + cfg.height + pad,
+                              m)})
+
     for res, k, cap in [(4, 5, None), (5, 12, None), (6, 3, 7.5),
                         (3, 50, None)]:
         n = 1 << res
         n_cells = rng.integers(10, n * n // 2)
+        # any int64 < 4^res is a valid Morton cell at this res
         cells = rng.choice(n * n, size=n_cells, replace=False)
-        # spread_bits-free synthetic cells: any int64 < 4^res is a valid
-        # morton cell at this res
         stats = pd.DataFrame({"cell": cells.astype(np.int64),
                               "n": rng.integers(1, 9, n_cells)})
-        queries = pd.DataFrame({
-            "query_id": np.arange(40),
-            "qx": rng.uniform(cfg.min_x - 5, cfg.min_x + cfg.width + 5, 40),
-            "qy": rng.uniform(cfg.min_y - 5, cfg.min_y + cfg.height + 5, 40),
-        })
-        vec = plan_candidate_cells(stats, queries, k, res, cfg,
-                                   max_dist=cap)
-        ref = plan_candidate_cells(stats, queries, k, res, cfg,
-                                   max_dist=cap, use_scalar_search=True)
-        pd.testing.assert_frame_equal(
-            vec.sort_values(["query_id", "cell"]).reset_index(drop=True),
-            ref.sort_values(["query_id", "cell"]).reset_index(drop=True))
+        yield f"random-res{res}", stats, queries(40, 5), k, res, cap, cfg
+    # one dense island in a corner: far queries' windows span most of the
+    # grid, per category as in NGQ
+    res = 7
+    xs = np.clip(rng.normal(12, 4, 3000), 0, 127).astype(np.int64)
+    ys = np.clip(rng.normal(20, 4, 3000), 0, 127).astype(np.int64)
+    island = pd.DataFrame({
+        "cell": grid.np_spread_bits(xs) | (grid.np_spread_bits(ys) << 1),
+        "category": rng.integers(0, 3, 3000)}).value_counts().rename("n")
+    island = island.reset_index()
+    yield "clustered", island, queries(40, 0), 161, res, None, cfg
+    yield "clustered-cap", island, queries(40, 0), 32, res, 20.0, cfg
+    small = pd.DataFrame({"cell": np.array([3, 9, 40], np.int64),
+                          "n": np.array([2, 1, 4])})
+    yield "k-over-corpus", small, queries(40, 5), 8, 4, None, cfg
+    yield "k-over-corpus-cap", small, queries(40, 5), 8, 4, 30.0, cfg
+    yield "cap-excludes-all", small, queries(40, 5), 3, 4, -1.0, cfg
+    empty = pd.DataFrame({"cell": np.array([], np.int64),
+                          "n": np.array([], np.int64)})
+    yield "empty-stats", empty, queries(40, 5), 3, 4, None, cfg
+    yield "empty-stats-cap", empty, queries(40, 5), 3, 4, 5.0, cfg
+    yield "empty-queries", small, queries(0, 0), 3, 4, None, cfg
+    yield "out-of-domain", island, queries(40, 60), 10, res, None, cfg
+    # 4×2 cells: q sits 0.5 from its cell's right and top edges, so both
+    # neighbours tie on MINDIST with different MAXDISTs, and only the
+    # (MINDIST, row-major) order decides which one the prefix takes
+    wide = EngineConfig(max_x=64.0, max_y=32.0)
+    ixs, iys = np.meshgrid(np.arange(16), np.arange(16))
+    lattice = pd.DataFrame({
+        "cell": grid.np_spread_bits(ixs.ravel())
+        | (grid.np_spread_bits(iys.ravel()) << 1),
+        "n": rng.integers(1, 3, 256)})
+    cx, cy = rng.integers(1, 14, 40), rng.integers(1, 14, 40)
+    ties = pd.DataFrame({"query_id": np.arange(40, dtype=np.int64),
+                         "qx": cx * 4.0 + 3.5, "qy": cy * 2.0 + 1.5})
+    for k in (2, 3, 4):
+        yield f"mindist-ties-k{k}", lattice, ties, k, 4, None, wide
+
+
+def test_planner_equals_bruteforce_reference():
+    """The planner's one window stage yields exactly the plan of the
+    window-free reference above: out-of-domain queries, k past the corpus
+    (infinite radius), caps (one excluding every cell), empty stats,
+    empty queries and MINDIST ties at the prefix boundary included."""
+    from mbrngq_spark.operators.knn import plan_candidate_cells
+
+    for name, stats, queries, k, res, cap, cfg in _planner_cases():
+        got = plan_candidate_cells(stats, queries, k, res, cfg, max_dist=cap)
+        ref = _reference_plan(stats, queries, k, res, cfg, cap)
+        pd.testing.assert_frame_equal(_sorted(got), _sorted(ref),
+                                      check_exact=True, obj=name)
+        if name == "clustered":     # most windows are wider than 16 cells
+            wx = cfg.width / (1 << res)
+            assert (got.groupby("query_id")["radius"].first() / wx
+                    > 8).mean() > 0.5
+        if name in ("cap-excludes-all", "empty-stats", "empty-stats-cap",
+                    "empty-queries"):
+            assert got.empty
+
+
+def test_planner_chunks_do_not_change_the_plan(monkeypatch):
+    """Chunking the window stage by its entry budget leaves the plan
+    exactly as one chunk plans it, down to row order — with chunks of 3
+    queries (the last holding one) and of one query each."""
+    from mbrngq_spark.operators import knn
+
+    for name, stats, queries, k, res, cap, cfg in _planner_cases():
+        if len(queries) != 40:
+            continue
+        whole = knn.plan_candidate_cells(stats, queries, k, res, cfg, cap)
+        per_query = max(stats["cell"].nunique(), 1 << res)
+        for chunk in (3, 1):
+            monkeypatch.setattr(knn, "_PLAN_ENTRIES", chunk * per_query)
+            got = knn.plan_candidate_cells(stats, queries, k, res, cfg, cap)
+            pd.testing.assert_frame_equal(got, whole, check_exact=True,
+                                          obj=f"{name}, chunk {chunk}")
+        monkeypatch.undo()
