@@ -11,8 +11,8 @@ specialized to the reference's rectangular [minX,maxX]x[minY,maxY] space
 
 Resolution r means 2^r bins per axis → cell ids in [0, 4^r). A cell's parent
 at resolution r-1 is ``cell >> 2`` (Morton property). Everything has a NumPy
-twin for driver-side planning (ring expansion over the small cell-stats
-table) and in-UDF use.
+twin for driver-side planning (the planner's window over the small
+cell-stats table) and in-UDF use.
 
 "Which cells does this box cover" is decided in one place: ``box_cover``
 (index bounds, clipped to the grid) and its coordinate form
@@ -263,43 +263,3 @@ def np_cell_box(cell: np.ndarray, res: int, cfg: EngineConfig = DEFAULT):
     xmin = cfg.min_x + ix * wx
     ymin = cfg.min_y + iy * wy
     return xmin, ymin, xmin + wx, ymin + wy
-
-
-def np_cell_mindist(cell: np.ndarray, qx: float, qy: float, res: int,
-                    cfg: EngineConfig = DEFAULT) -> np.ndarray:
-    """Lower bound on dist(q, any point in cell) — same clamped-gap MINDIST
-    as Rectangle.distance (Rectangle.cs:249-262) applied to the cell box.
-    This is what lets ring expansion stop early (≡ R-tree MINDIST descent
-    pruning, RTree.cs:2448-2452)."""
-    xmin, ymin, xmax, ymax = np_cell_box(cell, res, cfg)
-    gx = np.maximum(np.maximum(xmin - qx, qx - xmax), 0.0)
-    gy = np.maximum(np.maximum(ymin - qy, qy - ymax), 0.0)
-    return np.sqrt(gx * gx + gy * gy)
-
-
-def np_ring_cells(qx: float, qy: float, ring: int, res: int,
-                  cfg: EngineConfig = DEFAULT) -> np.ndarray:
-    """Cell ids at Chebyshev grid-distance exactly ``ring`` from q's cell
-    (ring 0 = the cell itself), clipped to the grid. Used by the kNN planner
-    to expand candidates outward until ring MINDIST exceeds the k-th best —
-    the distributed analog of the reference's best-first NN descent
-    (RTree.cs:2428-2456)."""
-    n = 1 << res
-    cx = int(np_quantize(np.array([qx]), cfg.min_x, cfg.width, res)[0])
-    cy = int(np_quantize(np.array([qy]), cfg.min_y, cfg.height, res)[0])
-    if ring == 0:
-        coords = [(cx, cy)]
-    else:
-        coords = []
-        for dx in range(-ring, ring + 1):
-            for dy in (-ring, ring):
-                coords.append((cx + dx, cy + dy))
-        for dy in range(-ring + 1, ring):
-            for dx in (-ring, ring):
-                coords.append((cx + dx, cy + dy))
-    coords = [(x, y) for x, y in coords if 0 <= x < n and 0 <= y < n]
-    if not coords:
-        return np.empty(0, dtype=np.int64)
-    xs = np.array([c[0] for c in coords], dtype=np.int64)
-    ys = np.array([c[1] for c in coords], dtype=np.int64)
-    return np_spread_bits(xs) | (np_spread_bits(ys) << 1)

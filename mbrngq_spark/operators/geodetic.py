@@ -50,13 +50,15 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mbrngq_spark.config import DEFAULT, EngineConfig
 from mbrngq_spark.operators.knn import Metric, _candidates, _rank, \
     cell_counts, covering_box, plan_in_executors, summed_area
+from mbrngq_spark.operators.lines import _douglas_peucker, polyline_segments
 from mbrngq_spark.operators.ngq import _nearest_group_once
+from mbrngq_spark.operators.tiles import _edge_w, _gi_star
 
 R_EARTH = 6_371_000.0
 
@@ -254,12 +256,24 @@ def plan_geo_cells(stats: pd.DataFrame, queries: pd.DataFrame,
                          "radius": radius[qi]})
 
 
+def _lat_row(lat: Column, n: int) -> Column:
+    """Grid row of a latitude on the n×n lat/lon grid; lat 90 clamps
+    into row n − 1."""
+    return F.least(F.floor((lat + 90.0) / (180.0 / n)).cast("long"),
+                   F.lit(n - 1))
+
+
+def _lon_col(lon: Column, n: int) -> Column:
+    """Unclamped grid column of a longitude on the n×n lat/lon grid:
+    geo_cell_col clamps it, the celled covers wrap it by pmod."""
+    return F.floor((lon + 180.0) / (360.0 / n)).cast("long")
+
+
 def geo_cell_col(res: int) -> Column:
     """Row-major lat/lon cell id (reads columns ``lat``/``lon``)."""
     n = 1 << res
-    iy = F.floor((F.col("lat") + 90.0) / (180.0 / n)).cast("long")
-    ix = F.floor((F.col("lon") + 180.0) / (360.0 / n)).cast("long")
-    return F.least(iy, F.lit(n - 1)) * n + F.least(ix, F.lit(n - 1))
+    return (_lat_row(F.col("lat"), n) * n
+            + F.least(_lon_col(F.col("lon"), n), F.lit(n - 1)))
 
 
 def _dist_m() -> Column:
@@ -560,10 +574,8 @@ def _wrap_cell_col(res: int) -> Column:
     point at lon exactly ±180 lands in column 0 on BOTH sides, where
     geo_cell_col would clamp it to n−1."""
     n = 1 << res
-    iy = F.least(F.floor((F.col("lat") + 90.0) / (180.0 / n)).cast("long"),
-                 F.lit(n - 1))
-    ix = F.floor((F.col("lon") + 180.0) / (360.0 / n)).cast("long")
-    return iy * n + F.pmod(ix, F.lit(n))
+    return (_lat_row(F.col("lat"), n) * n
+            + F.pmod(_lon_col(F.col("lon"), n), F.lit(n)))
 
 
 def _geo_poly_cover(polygons_df: DataFrame, res: int) -> DataFrame:
@@ -577,12 +589,6 @@ def _geo_poly_cover(polygons_df: DataFrame, res: int) -> DataFrame:
     Keeps ``__iy``/``__ux`` (grid row / unwrapped column) for callers
     that need tile coordinates; join-only callers drop them."""
     n = 1 << res
-    wlat, wlon = 180.0 / n, 360.0 / n
-
-    def lat_row(lat):
-        return F.least(F.floor((lat + 90.0) / wlat).cast("long"),
-                       F.lit(n - 1))
-
     p = (polygons_df
          .withColumn("anchor", F.element_at(F.col("vlon"), 1))
          .withColumn("vlon", F.transform(
@@ -595,12 +601,10 @@ def _geo_poly_cover(polygons_df: DataFrame, res: int) -> DataFrame:
          .withColumn("lon1", F.array_max("vlon")))
     return (p
             .withColumn("__iy", F.explode(F.sequence(
-                lat_row(F.col("lat0")), lat_row(F.col("lat1")))))
+                _lat_row(F.col("lat0"), n), _lat_row(F.col("lat1"), n))))
             .withColumn("__ux", F.explode(F.sequence(
-                F.floor((F.col("anchor") + F.col("lon0") + 180.0) / wlon)
-                .cast("long"),
-                F.floor((F.col("anchor") + F.col("lon1") + 180.0) / wlon)
-                .cast("long"))))
+                _lon_col(F.col("anchor") + F.col("lon0"), n),
+                _lon_col(F.col("anchor") + F.col("lon1"), n))))
             .withColumn("cell",
                         F.col("__iy") * n + F.pmod(F.col("__ux"),
                                                    F.lit(n))))
@@ -838,18 +842,9 @@ def geodetic_polyline_join(docs_ll: DataFrame, lines_df: DataFrame,
     cover, so min-over-candidates == min-over-all-segments for every
     emitted pair."""
     n = 1 << res
-    wlat, wlon = 180.0 / n, 360.0 / n
     deg = 180.0 / math.pi
-
-    seg = (lines_df
-           .select("line_id", "vlat", "vlon",
-                   F.posexplode(F.sequence(
-                       F.lit(1), F.size("vlat") - 1)).alias("seg_idx", "i"))
-           .select("line_id", "seg_idx",
-                   F.element_at("vlat", F.col("i")).alias("alat"),
-                   F.element_at("vlon", F.col("i")).alias("alon"),
-                   F.element_at("vlat", F.col("i") + 1).alias("blat"),
-                   F.element_at("vlon", F.col("i") + 1).alias("blon")))
+    seg = polyline_segments(lines_df, "vlat", "vlon",
+                            ("alat", "alon", "blat", "blon"))
 
     rad_pad = radius_m + _ROUND_PAD_M          # rounded-filter half-grain
     raddeg = rad_pad / R_EARTH * deg
@@ -873,13 +868,12 @@ def geodetic_polyline_join(docs_ll: DataFrame, lines_df: DataFrame,
 
     cover = (seg
              .withColumn("__iy", F.explode(F.sequence(
-                 F.greatest(F.floor((lat0 + 90.0) / wlat).cast("long"),
-                            F.lit(0)),
-                 F.least(F.floor((lat1 + 90.0) / wlat).cast("long"),
-                         F.lit(n - 1)))))
+                 F.greatest(F.floor((lat0 + 90.0) / (180.0 / n))
+                            .cast("long"), F.lit(0)),
+                 _lat_row(lat1, n))))
              .withColumn("__ux", F.explode(F.sequence(
-                 F.floor((F.col("alon") + lon0 + 180.0) / wlon).cast("long"),
-                 F.floor((F.col("alon") + lon1 + 180.0) / wlon).cast("long"))))
+                 _lon_col(F.col("alon") + lon0, n),
+                 _lon_col(F.col("alon") + lon1, n))))
              .withColumn("cell", F.col("__iy") * n
                          + F.pmod(F.col("__ux"), F.lit(n)))
              .select("line_id", "alat", "alon", "blat", "blon", "cell"))
@@ -996,45 +990,35 @@ def geodetic_hotspot_gi(docs_ll: DataFrame, res: int) -> DataFrame:
     clamps at the poles, so W_i = 3·(3 − lat-edge clamps); everything
     else is the same exact-int64 / fixed-double-dag discipline.
 
-    Returns (ix, iy, w_i, s_i, gi) over the 2^res × 2^res lat/lon grid
-    (geo_cell_col's binning). Requires res ≥ 2: at n ≤ 2 the lon
-    wrap would alias a cell into its own neighborhood and
+    The score is tiles.hotspot_gi's (tiles._gi_star) over the wrapping
+    splat. Returns (ix, iy, w_i, s_i, gi) over the 2^res × 2^res lat/lon
+    grid (geo_cell_col's binning). Raises ValueError below res 2: at
+    n ≤ 2 the lon wrap would alias a cell into its own neighborhood and
     double-count."""
-    assert res >= 2, "geodetic_hotspot_gi needs res >= 2 (wrap aliasing)"
+    if res < 2:
+        raise ValueError(f"geodetic_hotspot_gi needs res >= 2, got {res} "
+                         "(the longitude wrap would double-count)")
     n = 1 << res
-    nn = float(n * n)
-    iy = F.least(F.floor((F.col("lat") + 90.0)
-                         / (180.0 / n)).cast("long"), F.lit(n - 1))
-    ix = F.least(F.floor((F.col("lon") + 180.0)
-                         / (360.0 / n)).cast("long"), F.lit(n - 1))
-    base = (docs_ll.select(ix.alias("ix"), iy.alias("iy"))
+    base = (docs_ll.select(F.least(_lon_col(F.col("lon"), n),
+                                   F.lit(n - 1)).alias("ix"),
+                           _lat_row(F.col("lat"), n).alias("iy"))
             .groupBy("ix", "iy").agg(F.count(F.lit(1)).alias("n_docs")))
-    glob = base.agg(
-        F.sum("n_docs").cast("long").alias("total"),
-        F.sum(F.col("n_docs") * F.col("n_docs")).cast("long")
-        .alias("sumsq"))
-    focal = (base
-             .withColumn("txr", F.explode(F.sequence(F.col("ix") - 1,
-                                                     F.col("ix") + 1)))
-             .withColumn("ty", F.explode(F.sequence(F.col("iy") - 1,
-                                                    F.col("iy") + 1)))
-             .withColumn("tx", (F.col("txr") + F.lit(n)) % F.lit(n))
-             .filter((F.col("ty") >= 0) & (F.col("ty") <= n - 1))
-             .groupBy("tx", "ty")
-             .agg(F.sum("n_docs").cast("long").alias("s_i")))
-    wy = (F.lit(3) - (F.col("ty") == 0).cast("int")
-          - (F.col("ty") == n - 1).cast("int"))
-    out = (focal.crossJoin(F.broadcast(glob))
-           .withColumn("w_i", (F.lit(3) * wy).cast("long")))
-    xbar = F.col("total").cast("double") / F.lit(nn)
-    s_dev = F.sqrt(F.col("sumsq").cast("double") / F.lit(nn)
-                   - xbar * xbar)
-    w_d = F.col("w_i").cast("double")
-    denom = s_dev * F.sqrt((F.lit(nn) * w_d - w_d * w_d)
-                           / F.lit(nn - 1.0))
-    gi = (F.col("s_i").cast("double") - xbar * w_d) / denom
-    return out.select(F.col("tx").alias("ix"), F.col("ty").alias("iy"),
-                      "w_i", "s_i", gi.alias("gi"))
+    gi = _gi_star(base, _wrap_splat3(base, n), F.lit(3) * _edge_w("ty", n),
+                  n)
+    return gi.select(F.col("tx").alias("ix"), F.col("ty").alias("iy"),
+                     "w_i", "s_i", "gi")
+
+
+def _wrap_splat3(base: DataFrame, n: int) -> DataFrame:
+    """Each lat/lon raster row × its 3×3 neighbourhood ``tx``/``ty``:
+    columns wrap across the antimeridian, rows clip at the poles."""
+    return (base
+            .withColumn("txr", F.explode(F.sequence(F.col("ix") - 1,
+                                                    F.col("ix") + 1)))
+            .withColumn("ty", F.explode(F.sequence(F.col("iy") - 1,
+                                                   F.col("iy") + 1)))
+            .withColumn("tx", (F.col("txr") + F.lit(n)) % F.lit(n))
+            .filter((F.col("ty") >= 0) & (F.col("ty") <= n - 1)))
 
 
 def geodetic_simplify(lines_ll: DataFrame, eps_m: float,
@@ -1047,54 +1031,6 @@ def geodetic_simplify(lines_ll: DataFrame, eps_m: float,
     engines — the geodetic 2-dp discipline; argmax ties on the smaller
     idx) and splits iff dq > eps_m·100. ``lines_ll`` carries
     (line_id, vlat, vlon). Returns (line_id, idx, vlat, vlon)."""
-    epsq = int(round(eps_m * 100.0))
-    verts = (lines_ll
-             .select("line_id", F.size("vlat").alias("__n"),
-                     F.posexplode(F.col("vlat")).alias("idx", "vlat"),
-                     F.col("vlon").alias("__vlons"))
-             .withColumn("vlon", F.element_at(F.col("__vlons"),
-                                              F.col("idx") + F.lit(1)))
-             .select("line_id", "idx", "vlat", "vlon", "__n")
-             .localCheckpoint(eager=True))
-    v = verts.select("line_id", "idx", "vlat", "vlon")
-    anchors = (verts.filter(F.col("idx") == 0)
-               .select("line_id", F.lit(0).cast("long").alias("i"),
-                       (F.col("__n") - 1).cast("long").alias("j"))
-               .filter(F.col("j") > 0))
-    # endpoints are ALWAYS kept — including single-vertex lines, which
-    # have no anchor (idx 0 == n−1) but must survive simplification
-    kept = (verts.filter((F.col("idx") == 0)
-                         | (F.col("idx") == F.col("__n") - 1))
-            .select("line_id", F.col("idx").cast("long").alias("idx")))
-    d = geodetic_segment_dist_m(
-        F.col("vlat"), F.col("vlon"), F.col("alat"), F.col("alon"),
-        F.col("blat"), F.col("blon"))
-    for _ in range(int(max_rounds)):
-        pi = v.select("line_id", F.col("idx").alias("i"),
-                      F.col("vlat").alias("alat"),
-                      F.col("vlon").alias("alon"))
-        pj = v.select("line_id", F.col("idx").alias("j"),
-                      F.col("vlat").alias("blat"),
-                      F.col("vlon").alias("blon"))
-        cand = (anchors.join(pi, ["line_id", "i"])
-                .join(pj, ["line_id", "j"])
-                .join(v, "line_id")
-                .filter((F.col("idx") > F.col("i"))
-                        & (F.col("idx") < F.col("j")))
-                .withColumn("dq", F.round(d * F.lit(100.0)).cast("long")))
-        w = Window.partitionBy("line_id", "i", "j") \
-            .orderBy(F.col("dq").desc(), F.col("idx").asc())
-        split = (cand.withColumn("__rn", F.row_number().over(w))
-                 .filter((F.col("__rn") == 1) & (F.col("dq") > epsq))
-                 .select("line_id", "i", "j", F.col("idx").alias("m")))
-        anchors = (split.select("line_id", "i", F.col("m").alias("j"))
-                   .unionByName(split.select("line_id",
-                                             F.col("m").alias("i"), "j"))
-                   .localCheckpoint(eager=True))
-        kept = kept.unionByName(
-            split.select("line_id", F.col("m").alias("idx")))
-        if anchors.isEmpty():
-            break
-    return (kept.distinct()
-            .join(v, ["line_id", "idx"])
-            .select("line_id", "idx", "vlat", "vlon"))
+    return _douglas_peucker(lines_ll, "vlat", "vlon",
+                            geodetic_segment_dist_m, eps_m, max_rounds,
+                            100.0)

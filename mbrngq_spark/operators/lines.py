@@ -49,18 +49,27 @@ def segment_distance(px: Column, py: Column, ax: Column, ay: Column,
     return F.sqrt((px - qx) * (px - qx) + (py - qy) * (py - qy))
 
 
-def polyline_segments(lines: DataFrame) -> DataFrame:
-    """(line_id, seg_idx, ax, ay, bx, by) from (line_id, vx, vy) — JVM
-    sequence/explode over vertex indices, no Python."""
+def polyline_segments(lines: DataFrame, vx: str = "vx", vy: str = "vy",
+                      ends: tuple[str, str, str, str] = ("ax", "ay", "bx",
+                                                         "by")) -> DataFrame:
+    """(line_id, seg_idx, *ends) from (line_id, vx, vy) — JVM
+    sequence/explode over vertex indices, no Python. ``vx``/``vy`` name
+    the vertex arrays and ``ends`` the segment endpoint columns
+    (a's two coordinates, then b's), so the geodetic corridor explodes
+    its (vlat, vlon) lines here too."""
+    ax, ay, bx, by = ends
+    n = F.size(vx)
+    # Spark's sequence counts DOWN for lines under two vertices: explode
+    # a null array instead, so such a line has no segments
     return (lines
-            .select("line_id", "vx", "vy",
-                    F.posexplode(F.sequence(
-                        F.lit(1), F.size("vx") - 1)).alias("seg_idx", "i"))
+            .select("line_id", vx, vy,
+                    F.posexplode(F.when(n > 1, F.sequence(F.lit(1), n - 1)))
+                    .alias("seg_idx", "i"))
             .select("line_id", "seg_idx",
-                    F.element_at("vx", F.col("i")).alias("ax"),
-                    F.element_at("vy", F.col("i")).alias("ay"),
-                    F.element_at("vx", F.col("i") + 1).alias("bx"),
-                    F.element_at("vy", F.col("i") + 1).alias("by")))
+                    F.element_at(vx, F.col("i")).alias(ax),
+                    F.element_at(vy, F.col("i")).alias(ay),
+                    F.element_at(vx, F.col("i") + 1).alias(bx),
+                    F.element_at(vy, F.col("i") + 1).alias(by)))
 
 
 def polyline_distance_join(docs_geo: DataFrame, lines: DataFrame,
@@ -262,19 +271,31 @@ def simplify_polylines(lines: DataFrame, eps: float, max_rounds: int = 5,
     is one line-keyed join + one windowed argmax over the shrinking
     anchor set, localCheckpoint per round. Returns
     (line_id, idx, vx, vy) — the kept vertices in index order."""
+    return _douglas_peucker(lines, "vx", "vy", segment_distance, eps,
+                            max_rounds, quant)
+
+
+def _douglas_peucker(lines: DataFrame, vx: str, vy: str, seg_dist,
+                     eps: float, max_rounds: int,
+                     quant: float) -> DataFrame:
+    """The Douglas-Peucker BFS rounds of both metrics (see
+    simplify_polylines): ``vx``/``vy`` name the vertex-array columns,
+    ``seg_dist(px, py, ax, ay, bx, by)`` builds the point-to-segment
+    distance Column, and ``quant`` scales it to the int64 grain the
+    argmax and the ``eps`` test compare. Returns (line_id, idx, vx, vy)."""
     from pyspark.sql import Window
 
     epsq = int(round(eps * quant))
     # posexplode gives (pos, value) for vx; vy fetched by position
     verts = (lines
-             .select("line_id", F.size("vx").alias("__n"),
-                     F.posexplode(F.col("vx")).alias("idx", "vx"),
-                     F.col("vy").alias("__vys"))
-             .withColumn("vy", F.element_at(F.col("__vys"),
-                                            F.col("idx") + F.lit(1)))
-             .select("line_id", "idx", "vx", "vy", "__n")
+             .select("line_id", F.size(vx).alias("__n"),
+                     F.posexplode(F.col(vx)).alias("idx", vx),
+                     F.col(vy).alias("__vys"))
+             .withColumn(vy, F.element_at(F.col("__vys"),
+                                          F.col("idx") + F.lit(1)))
+             .select("line_id", "idx", vx, vy, "__n")
              .localCheckpoint(eager=True))
-    v = verts.select("line_id", "idx", "vx", "vy")
+    v = verts.select("line_id", "idx", vx, vy)
     anchors = (verts.filter(F.col("idx") == 0)
                .select("line_id", F.lit(0).cast("long").alias("i"),
                        (F.col("__n") - 1).cast("long").alias("j"))
@@ -284,13 +305,13 @@ def simplify_polylines(lines: DataFrame, eps: float, max_rounds: int = 5,
     kept = (verts.filter((F.col("idx") == 0)
                          | (F.col("idx") == F.col("__n") - 1))
             .select("line_id", F.col("idx").cast("long").alias("idx")))
-    d = segment_distance(F.col("vx"), F.col("vy"), F.col("xi"),
-                         F.col("yi"), F.col("xj"), F.col("yj"))
+    d = seg_dist(F.col(vx), F.col(vy), F.col("xi"), F.col("yi"),
+                 F.col("xj"), F.col("yj"))
     for _ in range(int(max_rounds)):
         pi = v.select("line_id", F.col("idx").alias("i"),
-                      F.col("vx").alias("xi"), F.col("vy").alias("yi"))
+                      F.col(vx).alias("xi"), F.col(vy).alias("yi"))
         pj = v.select("line_id", F.col("idx").alias("j"),
-                      F.col("vx").alias("xj"), F.col("vy").alias("yj"))
+                      F.col(vx).alias("xj"), F.col(vy).alias("yj"))
         cand = (anchors.join(pi, ["line_id", "i"])
                 .join(pj, ["line_id", "j"])
                 .join(v, "line_id")
@@ -312,4 +333,4 @@ def simplify_polylines(lines: DataFrame, eps: float, max_rounds: int = 5,
             break
     return (kept.distinct()
             .join(v, ["line_id", "idx"])
-            .select("line_id", "idx", "vx", "vy"))
+            .select("line_id", "idx", vx, vy))

@@ -81,32 +81,28 @@ def build_bm25_artifact(docs: DataFrame, path: str, n_buckets: int = 64,
      .write.mode("overwrite").parquet(f"{path}/stats"))
 
 
-def bm25_topk_from_artifact(spark, path: str, queries: DataFrame,
-                            k: int = 10, k1: float = K1, b: float = B,
-                            id_col: str = "doc_id", q_id_col: str = "q_id",
-                            q_text_col: str = "q_text") -> DataFrame:
-    """BM25 over the persisted artifact: reads the 1-row stats table,
-    prunes the postings scan to the query terms' hash buckets (static
-    ``tb IN`` partition filter — ≤ n_buckets ids regardless of |Q|),
-    broadcast-joins the query terms, scores and ranks. NO corpus-sized
-    job anywhere; result contract identical to bm25_topk (pytest)."""
-    srow = spark.read.parquet(f"{path}/stats").first()
-    n_docs, avgdl, n_buckets = srow["n_docs"], srow["avgdl"], \
-        srow["n_buckets"]
-    qterms = (queries
-              .select(F.col(q_id_col),
-                      F.explode(F.split(F.col(q_text_col), " "))
-                      .alias("term"))
-              .filter(F.col("term") != "")
-              .groupBy(q_id_col, "term")
-              .agg(F.count("*").alias("qtf")))
-    probed = sorted({int(r.tb) for r in
-                     qterms.select(
-                         F.pmod(F.xxhash64("term"), F.lit(int(n_buckets)))
-                         .alias("tb")).distinct().collect()})
-    matched = (spark.read.parquet(f"{path}/postings")
-               .filter(F.col("tb").isin(probed))
-               .join(F.broadcast(qterms), "term"))
+def _query_terms(queries: DataFrame, q_id_col: str,
+                 q_text_col: str) -> DataFrame:
+    """(q_id, term, qtf): qtf counts repeated terms in the query
+    (standard BM25 multiplies the term's contribution by its query
+    frequency)."""
+    return (queries
+            .select(F.col(q_id_col),
+                    F.explode(F.split(F.col(q_text_col), " "))
+                    .alias("term"))
+            .filter(F.col("term") != "")
+            .groupBy(q_id_col, "term")
+            .agg(F.count("*").alias("qtf")))
+
+
+def _bm25_rank(matched: DataFrame, n_docs, avgdl, k: int, k1: float,
+               b: float, id_col: str, q_id_col: str) -> DataFrame:
+    """Score and rank of both BM25 paths: ``matched`` holds one row per
+    (query term, posting) with qtf, tf, dl and df; returns the top-k
+    (q_id, doc_id, score, rnk) per query."""
+    # idf rounded to 6 dp before use: ln() is only 1-ulp-accurate and
+    # differs between libm implementations — pinning it keeps the score
+    # bit-reproducible across engines (same trick as the ANN oracles)
     idf = F.round(
         F.log(F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5)
               / (F.col("df") + 0.5)), 6)
@@ -123,6 +119,29 @@ def bm25_topk_from_artifact(spark, path: str, queries: DataFrame,
             .filter(F.col("rnk") <= k)
             .select(q_id_col, id_col, "score",
                     F.col("rnk").cast("long").alias("rnk")))
+
+
+def bm25_topk_from_artifact(spark, path: str, queries: DataFrame,
+                            k: int = 10, k1: float = K1, b: float = B,
+                            id_col: str = "doc_id", q_id_col: str = "q_id",
+                            q_text_col: str = "q_text") -> DataFrame:
+    """BM25 over the persisted artifact: reads the 1-row stats table,
+    prunes the postings scan to the query terms' hash buckets (static
+    ``tb IN`` partition filter — ≤ n_buckets ids regardless of |Q|),
+    broadcast-joins the query terms, scores and ranks. NO corpus-sized
+    job anywhere; result contract identical to bm25_topk (pytest)."""
+    srow = spark.read.parquet(f"{path}/stats").first()
+    n_docs, avgdl, n_buckets = srow["n_docs"], srow["avgdl"], \
+        srow["n_buckets"]
+    qterms = _query_terms(queries, q_id_col, q_text_col)
+    probed = sorted({int(r.tb) for r in
+                     qterms.select(
+                         F.pmod(F.xxhash64("term"), F.lit(int(n_buckets)))
+                         .alias("tb")).distinct().collect()})
+    matched = (spark.read.parquet(f"{path}/postings")
+               .filter(F.col("tb").isin(probed))
+               .join(F.broadcast(qterms), "term"))
+    return _bm25_rank(matched, n_docs, avgdl, k, k1, b, id_col, q_id_col)
 
 
 def bm25_topk(docs: DataFrame, queries: DataFrame, k: int = 10,
@@ -145,16 +164,7 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, k: int = 10,
 
     postings = build_inverted_index(docs, text_col, id_col)
     df_ = postings.groupBy("term").agg(F.countDistinct(id_col).alias("df"))
-
-    # query terms: qtf counts repeated terms in the query (standard BM25
-    # multiplies the term's contribution by its query frequency)
-    qterms = (queries
-              .select(F.col(q_id_col),
-                      F.explode(F.split(F.col(q_text_col), " "))
-                      .alias("term"))
-              .filter(F.col("term") != "")
-              .groupBy(q_id_col, "term")
-              .agg(F.count("*").alias("qtf")))
+    qterms = _query_terms(queries, q_id_col, q_text_col)
 
     # broadcast the query-term set: postings are filtered to matching
     # terms BEFORE any aggregation — the corpus-sized side is never
@@ -163,22 +173,4 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, k: int = 10,
     qdf = df_.join(F.broadcast(qterms.select("term").distinct()), "term")
     matched = postings.join(F.broadcast(qterms), "term") \
         .join(F.broadcast(qdf), "term")
-    # idf rounded to 6 dp before use: ln() is only 1-ulp-accurate and
-    # differs between libm implementations — pinning it keeps the score
-    # bit-reproducible across engines (same trick as the ANN oracles)
-    idf = F.round(
-        F.log(F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5)
-              / (F.col("df") + 0.5)), 6)
-    tf = F.col("tf").cast("double")
-    denom = tf + F.lit(k1) * (F.lit(1.0 - b)
-                              + F.lit(b) * F.col("dl") / F.lit(float(avgdl)))
-    contrib = F.col("qtf") * idf * tf * F.lit(k1 + 1.0) / denom
-    scored = (matched
-              .groupBy(q_id_col, id_col)
-              .agg(F.round(F.sum(contrib), 6).alias("score")))
-    w = Window.partitionBy(q_id_col).orderBy(F.col("score").desc(),
-                                             F.col(id_col).asc())
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select(q_id_col, id_col, "score",
-                    F.col("rnk").cast("long").alias("rnk")))
+    return _bm25_rank(matched, n_docs, avgdl, k, k1, b, id_col, q_id_col)

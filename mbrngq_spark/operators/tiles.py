@@ -297,30 +297,45 @@ def hotspot_gi(docs_geo: DataFrame, res: int,
     neighborhoods have the constant score −x̄·W_i/denom that nobody maps.
     Returns (cell, ix, iy, w_i, s_i, gi)."""
     n = 1 << res
-    nn = float(n * n)
     base = _count_raster(docs_geo, res, cfg)
+    gi = _gi_star(base, _splat3(base, res),
+                  _edge_w("tx", n) * _edge_w("ty", n), n)
+    return gi.select(
+        grid.cell_from_indices(F.col("tx"), F.col("ty")).alias("cell"),
+        F.col("tx").alias("ix"), F.col("ty").alias("iy"),
+        "w_i", "s_i", "gi")
+
+
+def _edge_w(c: str, n: int) -> Column:
+    """The in-grid width of a 3-cell neighbourhood along one axis of an
+    n-cell grid: 3 minus the clamps at index 0 and n − 1 of column ``c``."""
+    return (F.lit(3) - (F.col(c) == 0).cast("int")
+            - (F.col(c) == n - 1).cast("int"))
+
+
+def _gi_star(base: DataFrame, splat: DataFrame, w_i: Column,
+             n: int) -> DataFrame:
+    """The Gi* score of both metrics (see hotspot_gi) over an n×n count
+    raster: ``base`` is the (ix, iy, n_docs) raster, ``splat`` its rows
+    × their neighbourhood targets ``tx``/``ty`` (the metric's topology),
+    ``w_i`` the neighbourhood size as a Column over ``tx``/``ty``.
+    Returns (tx, ty, w_i, s_i, gi)."""
+    nn = float(n * n)
     glob = base.agg(
         F.sum("n_docs").cast("long").alias("total"),
         F.sum(F.col("n_docs") * F.col("n_docs")).cast("long").alias("sumsq"))
-    focal = (_splat3(base, res)
+    focal = (splat
              .groupBy("tx", "ty")
              .agg(F.sum("n_docs").cast("long").alias("s_i")))
-    wx = (F.lit(3) - (F.col("tx") == 0).cast("int")
-          - (F.col("tx") == n - 1).cast("int"))
-    wy = (F.lit(3) - (F.col("ty") == 0).cast("int")
-          - (F.col("ty") == n - 1).cast("int"))
     out = (focal.crossJoin(F.broadcast(glob))
-           .withColumn("w_i", (wx * wy).cast("long")))
+           .withColumn("w_i", w_i.cast("long")))
     xbar = F.col("total").cast("double") / F.lit(nn)
     s_dev = F.sqrt(F.col("sumsq").cast("double") / F.lit(nn) - xbar * xbar)
     w_d = F.col("w_i").cast("double")
     denom = s_dev * F.sqrt((F.lit(nn) * w_d - w_d * w_d)
                            / F.lit(nn - 1.0))
     gi = (F.col("s_i").cast("double") - xbar * w_d) / denom
-    return out.select(
-        grid.cell_from_indices(F.col("tx"), F.col("ty")).alias("cell"),
-        F.col("tx").alias("ix"), F.col("ty").alias("iy"),
-        "w_i", "s_i", gi.alias("gi"))
+    return out.select("tx", "ty", "w_i", "s_i", gi.alias("gi"))
 
 
 def moran_i(docs_geo: DataFrame, res: int,
@@ -347,14 +362,12 @@ def moran_i(docs_geo: DataFrame, res: int,
     nn = float(n * n)
     w_tot = (3 * n - 2) ** 2 - n * n
     base = _count_raster(docs_geo, res, cfg)
-    wx = (F.lit(3) - (F.col("ix") == 0).cast("int")
-          - (F.col("ix") == n - 1).cast("int"))
-    wy = (F.lit(3) - (F.col("iy") == 0).cast("int")
-          - (F.col("iy") == n - 1).cast("int"))
     glob = base.agg(
         F.sum("n_docs").cast("long").alias("total"),
         F.sum(F.col("n_docs") * F.col("n_docs")).cast("long").alias("sumsq"),
-        F.sum(F.col("n_docs") * (wx * wy - F.lit(1)).cast("long"))
+        F.sum(F.col("n_docs")
+              * (_edge_w("ix", n) * _edge_w("iy", n) - F.lit(1))
+              .cast("long"))
         .cast("long").alias("sumxw"))
     spl = _splat3(base, res).filter((F.col("tx") != F.col("ix"))
                                     | (F.col("ty") != F.col("iy")))

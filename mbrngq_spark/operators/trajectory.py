@@ -17,6 +17,8 @@ Cross-engine determinism contracts (same as the rest of the repo):
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -352,11 +354,20 @@ def frechet_join(lines_a: DataFrame, lines_b: DataFrame,
     policy (broadcast the smaller side, or cell-prefilter first); the
     matrix explode is |Va|·|Vb| per pair, one groupBy(a,b) into the
     kernel."""
-    import numpy as np
-    import pandas as pd
-
     mat = _pair_dist_matrix(lines_a, lines_b, quant, geodetic,
                             self_join)
+    return _warp_dp(mat, max, "dfq", "frechet", quant)
+
+
+def _warp_dp(mat: DataFrame, step, q_col: str, name: str,
+             quant: float) -> DataFrame:
+    """The Fréchet/DTW dynamic programme over the quantized matrix:
+    dp[i][j] = step(d(i, j), min(dp[i−1][j], dp[i][j−1], dp[i−1][j−1]))
+    with ``step`` = max (Fréchet) or + (DTW), the borders folding one
+    neighbour. One int64 Arrow kernel per (a, b) pair; returns
+    (a_id, b_id, q_col, name) with name = q_col / quant."""
+    import numpy as np
+    import pandas as pd
 
     def dp_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         out = []
@@ -368,20 +379,20 @@ def frechet_join(lines_a: DataFrame, lines_b: DataFrame,
             dp = np.zeros((n, m), dtype=np.int64)
             dp[0, 0] = dmat[0, 0]
             for j in range(1, m):
-                dp[0, j] = max(dmat[0, j], dp[0, j - 1])
+                dp[0, j] = step(dmat[0, j], dp[0, j - 1])
             for i in range(1, n):
-                dp[i, 0] = max(dmat[i, 0], dp[i - 1, 0])
+                dp[i, 0] = step(dmat[i, 0], dp[i - 1, 0])
                 for j in range(1, m):
-                    dp[i, j] = max(dmat[i, j],
-                                   min(dp[i - 1, j], dp[i, j - 1],
-                                       dp[i - 1, j - 1]))
+                    dp[i, j] = step(dmat[i, j],
+                                    min(dp[i - 1, j], dp[i, j - 1],
+                                        dp[i - 1, j - 1]))
             out.append((int(aid), int(bid), int(dp[n - 1, m - 1])))
-        return pd.DataFrame(out, columns=["a_id", "b_id", "dfq"])
+        return pd.DataFrame(out, columns=["a_id", "b_id", q_col])
 
     res = mat.groupBy("a_id", "b_id").applyInPandas(
-        dp_kernel, "a_id long, b_id long, dfq long")
-    return res.withColumn("frechet",
-                          F.col("dfq").cast("double") / F.lit(quant))
+        dp_kernel, f"a_id long, b_id long, {q_col} long")
+    return res.withColumn(name,
+                          F.col(q_col).cast("double") / F.lit(quant))
 
 
 def _pair_dist_matrix(lines_a: DataFrame, lines_b: DataFrame,
@@ -453,33 +464,6 @@ def dtw_join(lines_a: DataFrame, lines_b: DataFrame,
     the SUM variant of the Fréchet DP, same JVM-quantized matrix, same
     int64 Arrow kernel (sums of int64 stay exact — ≤ V²·max_dq per
     pair, far under 2^63)."""
-    import numpy as np
-    import pandas as pd
-
     mat = _pair_dist_matrix(lines_a, lines_b, quant, geodetic,
                             self_join)
-
-    def dp_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for (aid, bid), g in pdf.groupby(["a_id", "b_id"]):
-            n = int(g["i"].max()) + 1
-            m = int(g["j"].max()) + 1
-            dmat = np.zeros((n, m), dtype=np.int64)
-            dmat[g["i"].to_numpy(), g["j"].to_numpy()] = g["dq"].to_numpy()
-            dp = np.zeros((n, m), dtype=np.int64)
-            dp[0, 0] = dmat[0, 0]
-            for j in range(1, m):
-                dp[0, j] = dmat[0, j] + dp[0, j - 1]
-            for i in range(1, n):
-                dp[i, 0] = dmat[i, 0] + dp[i - 1, 0]
-                for j in range(1, m):
-                    dp[i, j] = dmat[i, j] + min(dp[i - 1, j],
-                                                dp[i, j - 1],
-                                                dp[i - 1, j - 1])
-            out.append((int(aid), int(bid), int(dp[n - 1, m - 1])))
-        return pd.DataFrame(out, columns=["a_id", "b_id", "dtwq"])
-
-    res = mat.groupBy("a_id", "b_id").applyInPandas(
-        dp_kernel, "a_id long, b_id long, dtwq long")
-    return res.withColumn("dtw",
-                          F.col("dtwq").cast("double") / F.lit(quant))
+    return _warp_dp(mat, operator.add, "dtwq", "dtw", quant)

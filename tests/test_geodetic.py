@@ -848,3 +848,38 @@ def test_geodetic_simplify_matches_python_dp(spark):
     assert got == exp
     ns = [len(v) for v in got.values()]
     assert min(ns) >= 2 and max(ns) > 2
+
+
+def test_geodetic_polyline_join_skips_short_lines(spark):
+    """0- and 1-vertex lines have no segments and no rows (they used to
+    raise INVALID_ARRAY_INDEX under ANSI); the 2-vertex line keeps its
+    corridor."""
+    from mbrngq_spark.operators.geodetic import (geodetic_polyline_join,
+                                                 np_geodetic_segment_dist)
+    docs = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [0, 1, 2], "lat": [10.0, 11.0, -40.0],
+                      "lon": [20.0, 25.0, 100.0]}))
+    lines_df = spark.createDataFrame(
+        pd.DataFrame({"line_id": [0, 1, 2],
+                      "vlat": [[], [10.0], [10.0, 12.0]],
+                      "vlon": [[], [20.0], [18.0, 28.0]]}),
+        "line_id long, vlat array<double>, vlon array<double>")
+    got = {(int(r.line_id), int(r.doc_id)): r.dist_m
+           for r in geodetic_polyline_join(docs, lines_df,
+                                           300_000.0).collect()}
+    exp = np.round(np_geodetic_segment_dist(
+        np.array([10.0, 11.0]), np.array([20.0, 25.0]),
+        10.0, 18.0, 12.0, 28.0), 2)
+    assert set(got) == {(2, 0), (2, 1)}
+    for j in (0, 1):
+        assert abs(got[(2, j)] - exp[j]) <= 0.011
+
+
+def test_geodetic_hotspot_gi_rejects_res_below_2(spark):
+    """res 1 would alias the longitude wrap (a cell in its own 3×3
+    neighbourhood twice): a ValueError, which ``python -O`` keeps."""
+    from mbrngq_spark.operators.geodetic import geodetic_hotspot_gi
+    docs = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [0], "lat": [0.0], "lon": [0.0]}))
+    with pytest.raises(ValueError, match="res >= 2"):
+        geodetic_hotspot_gi(docs, 1)

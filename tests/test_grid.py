@@ -1,6 +1,6 @@
 """Cell-grid invariants (SURVEY.md §5d): encode/decode bijectivity per
-resolution, parent truncation, Column↔NumPy twin agreement, ring coverage,
-MINDIST lower-bound validity."""
+resolution, parent truncation, Column↔NumPy twin agreement, cell boxes
+and the box cover."""
 
 import numpy as np
 import pandas as pd
@@ -61,31 +61,6 @@ def test_cell_box_contains_point():
     xmin, ymin, xmax, ymax = grid.np_cell_box(cell, res)
     assert (x >= xmin).all() and (x <= xmax).all()
     assert (y >= ymin).all() and (y <= ymax).all()
-
-
-def test_cell_mindist_is_lower_bound():
-    rng = np.random.default_rng(5)
-    qx, qy = 13.0, 77.0
-    x = rng.uniform(0, 100, 500)
-    y = rng.uniform(0, 100, 500)
-    res = 6
-    cell = grid.np_cell_encode(x, y, res)
-    lb = grid.np_cell_mindist(cell, qx, qy, res)
-    true = np.sqrt((x - qx) ** 2 + (y - qy) ** 2)
-    assert (lb <= true + 1e-9).all()
-
-
-def test_rings_partition_neighborhood():
-    # rings 0..R around a central point must tile the whole grid exactly once
-    res = 4
-    n = 1 << res
-    all_cells = set()
-    for ring in range(0, 2 * n):
-        cells = grid.np_ring_cells(50.0, 50.0, ring, res)
-        s = set(int(c) for c in cells)
-        assert not (s & all_cells), "ring overlap"
-        all_cells |= s
-    assert len(all_cells) == n * n
 
 
 def test_row_major_tile_id(spark):

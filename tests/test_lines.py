@@ -276,3 +276,26 @@ def test_simplify_keeps_single_vertex_lines(spark):
     got = {(int(r.line_id), int(r.idx)) for r in
            simplify_polylines(df, 1.0, 3).collect()}
     assert got == {(1, 0), (2, 0), (2, 1)}
+
+
+def test_short_polylines_have_no_segments(spark, docs_geo):
+    """0- and 1-vertex lines have no segments, so every segment operator
+    skips them instead of raising INVALID_ARRAY_INDEX under ANSI; the
+    2-vertex line beside them keeps its rows."""
+    from mbrngq_spark.operators.lines import points_along, polyline_segments
+
+    df = spark.createDataFrame(
+        pd.DataFrame({"line_id": [0, 1, 2],
+                      "vx": [[], [40.0], [40.0, 60.0]],
+                      "vy": [[], [40.0], [50.0, 50.0]]}),
+        "line_id long, vx array<double>, vy array<double>")
+    segs = polyline_segments(df).collect()
+    assert [(r.line_id, r.seg_idx, r.ax, r.ay, r.bx, r.by) for r in segs] \
+        == [(2, 0, 40.0, 50.0, 60.0, 50.0)]
+    got = {(int(r.line_id), int(r.doc_id)): r.dist
+           for r in polyline_distance_join(docs_geo, df, 5.0).collect()}
+    two = df.filter(F.col("line_id") == 2)
+    exp = {(int(r.line_id), int(r.doc_id)): r.dist
+           for r in polyline_distance_join(docs_geo, two, 5.0).collect()}
+    assert got == exp and len(exp) > 0
+    assert {int(r.line_id) for r in points_along(df, 5.0).collect()} == {2}

@@ -42,37 +42,6 @@ def test_morton_parent_contains_child(res, data):
     assert cxmax <= pxmax and cymax <= pymax
 
 
-@settings(max_examples=200, deadline=None)
-@given(res=RES, data=st.data())
-def test_cell_mindist_is_a_lower_bound(res, data):
-    """MINDIST(cell, q) ≤ dist(q, p) for every p that encodes to the cell."""
-    px = data.draw(st.floats(0.0, 100.0, allow_nan=False))
-    py = data.draw(st.floats(0.0, 100.0, allow_nan=False))
-    qx = data.draw(st.floats(-50.0, 150.0, allow_nan=False))
-    qy = data.draw(st.floats(-50.0, 150.0, allow_nan=False))
-    cell = grid.np_cell_encode(np.array([px]), np.array([py]), res)
-    lo = float(grid.np_cell_mindist(cell, qx, qy, res)[0])
-    d = float(np.hypot(px - qx, py - qy))
-    assert lo <= d + 1e-9
-
-
-@settings(max_examples=50, deadline=None)
-@given(res=st.integers(1, 8), ring=st.integers(0, 3), data=st.data())
-def test_ring_cells_have_exact_chebyshev_distance(res, ring, data):
-    qx = data.draw(st.floats(0.0, 100.0, allow_nan=False))
-    qy = data.draw(st.floats(0.0, 100.0, allow_nan=False))
-    n = 1 << res
-    cells = grid.np_ring_cells(qx, qy, ring, res)
-    cx = int(grid.np_quantize(np.array([qx]), 0.0, 100.0, res)[0])
-    cy = int(grid.np_quantize(np.array([qy]), 0.0, 100.0, res)[0])
-    assert len(set(cells.tolist())) == len(cells)     # no duplicates
-    for c in cells:
-        ix = int(grid.np_compact_bits(np.array([c]))[0])
-        iy = int(grid.np_compact_bits(np.array([c]) >> 1)[0])
-        assert max(abs(ix - cx), abs(iy - cy)) == ring
-        assert 0 <= ix < n and 0 <= iy < n
-
-
 @settings(max_examples=100, deadline=None)
 @given(h=st.lists(st.integers(-2**63, 2**63 - 1), min_size=1, max_size=50,
                   unique=True))

@@ -41,11 +41,15 @@ def broadcast_only(p: str) -> bool:
 
 def stable(plan: str) -> str:
     """A plan with its run-dependent tokens normalised: expression ids
-    (``#123L`` → ``#NL``), exchange plan ids and temporary directories.
-    Only the excerpts written to docs/PLANS.md go through it (the checks
-    read the raw plan), so a rerun on unchanged code rewrites no line."""
+    (``#123L`` → ``#NL``), exchange plan ids, AQE query-stage ids
+    (``ShuffleQueryStage 3`` → ``ShuffleQueryStage N``), whole-stage
+    codegen ids (``*(4)`` → ``*(N)``) and temporary directories. Only
+    the excerpts written to docs/PLANS.md go through it (the checks read
+    the raw plan), so a rerun on unchanged code rewrites no line."""
     plan = re.sub(r"#\d+", "#N", plan)
     plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
+    plan = re.sub(r"QueryStage \d+", "QueryStage N", plan)
+    plan = re.sub(r"\*\(\d+\)", "*(N)", plan)
     return re.sub(r"/tmp/[^/\s,\]]+", "/tmp/<tmp>", plan)
 
 
