@@ -179,28 +179,10 @@ def main() -> None:
         sk = tdocs.select(F.col("doc_id").alias("id"),
                           dedup.simhash_col(F.col("text")).alias("sh"))
         stage("simhash:sketch_noop", lambda: noop(sk))
-        # _simhash_pairs is eager; capture the banded-join DAG shape
-        bounds = dedup.simhash_chunk_bounds(3)
-        chunks = F.array(*[
-            F.shiftrightunsigned(F.col("sh"), bounds[c]).bitwiseAND(
-                F.lit((1 << (bounds[c + 1] - bounds[c])) - 1))
-            for c in range(len(bounds) - 1)])
-        bucketed = sk.select("id", "sh",
-                             F.posexplode(chunks).alias("ci", "ck"))
-        ok = (bucketed.groupBy("ci", "ck").count()
-              .filter(F.col("count") <= 1000).select("ci", "ck"))
-        keyed = bucketed.join(F.broadcast(ok), ["ci", "ck"])
-        other = keyed.select(F.col("id").alias("id_b"),
-                             F.col("sh").alias("sh_b"), "ci", "ck")
-        pairs_plan = (keyed.join(other, ["ci", "ck"])
-                      .filter(F.col("id") < F.col("id_b"))
-                      .select(F.col("id").alias("id_a"), "id_b",
-                              F.col("sh").alias("sh_a"), "sh_b")
-                      .distinct()
-                      .withColumn("hamming", F.bit_count(
-                          F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
-                      .filter(F.col("hamming") <= 3)
-                      .select("id_a", "id_b", "hamming"))
+        # _simhash_pairs is eager; capture its lazy candidate join, built
+        # from the engine's own chunk keys
+        pairs_plan = dedup.band_pairs(dedup.simhash_chunk_keys(sk, 3), 1000,
+                                      "sh")
         save_explain("simhash", pairs_plan)
         out = dedup.simhash_near_dups(tdocs, max_hamming=3)
         stage("simhash:full", lambda: out.count())

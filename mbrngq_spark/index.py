@@ -46,6 +46,19 @@ class IndexLayout:
     salt_buckets: int = 16  # shuffle salt for hot cells
 
 
+def cell_stats(docs: DataFrame) -> DataFrame:
+    """Per-cell aggregates of (cell, category, x, y) rows: (cell, n,
+    catmask, xmin, ymin, xmax, ymax) — the bottom-up CalculateBitArray
+    pass (RTree.cs:209-247) as one groupBy."""
+    return (docs
+            .groupBy("cell")
+            .agg(F.count("*").alias("n"),
+                 F.bit_or(F.expr("shiftleft(1, category)")).cast("long")
+                 .alias("catmask"),
+                 F.min("x").alias("xmin"), F.min("y").alias("ymin"),
+                 F.max("x").alias("xmax"), F.max("y").alias("ymax")))
+
+
 def build_index(docs_geo: DataFrame, layout: IndexLayout = IndexLayout(),
                 cfg: EngineConfig = DEFAULT) -> tuple[DataFrame, DataFrame]:
     """→ (indexed docs, cell stats). Pure Column math + one aggregate."""
@@ -60,13 +73,7 @@ def build_index(docs_geo: DataFrame, layout: IndexLayout = IndexLayout(),
     if "spans" in docs_geo.columns:
         indexed = indexed.withColumn("span_ck", span_checksum(F.col("spans")))
 
-    stats = (base
-             .groupBy("cell")
-             .agg(F.count("*").alias("n"),
-                  F.bit_or(F.expr("shiftleft(1, category)")).cast("long")
-                  .alias("catmask"),
-                  F.min("x").alias("xmin"), F.min("y").alias("ymin"),
-                  F.max("x").alias("xmax"), F.max("y").alias("ymax")))
+    stats = cell_stats(base)
 
     # adaptive split: hot cells get a finer cell id + a salt bucket.
     # Hot-cell DETECTION runs eagerly as a counts-only bounded aggregate

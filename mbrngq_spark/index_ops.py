@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mbrngq_spark.config import DEFAULT, EngineConfig
-from mbrngq_spark.index import IndexLayout, build_index
+from mbrngq_spark.index import IndexLayout, build_index, cell_stats
 
 
 def insert_docs(spark: SparkSession, path: str, new_docs_geo: DataFrame,
@@ -107,12 +107,6 @@ def delete_docs_snapshot(table, ids: DataFrame, id_col: str = "doc_id") -> int:
 
 def refresh_stats(spark: SparkSession, path: str,
                   cfg: EngineConfig = DEFAULT) -> DataFrame:
-    """Recompute per-cell aggregates from the stored index — the bottom-up
-    CalculateBitArray pass (RTree.cs:209-247) as one groupBy."""
-    idx = spark.read.parquet(path)
-    return (idx.groupBy("cell")
-            .agg(F.count("*").alias("n"),
-                 F.bit_or(F.expr("shiftleft(1, category)")).cast("long")
-                 .alias("catmask"),
-                 F.min("x").alias("xmin"), F.min("y").alias("ymin"),
-                 F.max("x").alias("xmax"), F.max("y").alias("ymax")))
+    """Recompute per-cell aggregates from the stored index
+    (``index.cell_stats``, the same aggregate build_index returns)."""
+    return cell_stats(spark.read.parquet(path))

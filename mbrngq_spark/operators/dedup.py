@@ -5,12 +5,13 @@ Four tiers, all shuffle-disciplined:
 - exact          — hash-groupBy on the normalized text (one shuffle on a
                    64/128-bit digest, never on the raw text bytes).
 - MinHash + LSH  — word-shingle → H minhashes → B bands → bucket equi-join.
-                   Signatures are built ENTIRELY JVM-side (split / transform /
-                   slice / xxhash64 / array_min — no Python), so the map side
-                   is codegen'd; the only shuffles are the band-bucket
+                   Shingles are hashed once JVM-side (xxhash64), the H
+                   families are one NumPy affine pass in an Arrow UDF
+                   (map-only); the only shuffles are the band-bucket
                    self-join and the final verify.
-- SimHash        — 64-bit sign-of-sum sketch over token hashes; near-dups =
-                   small hamming distance, candidates via 16-bit chunk bands.
+- SimHash        — 64-bit sign-of-sum sketch over token hashes (NumPy
+                   Arrow UDF); near-dups = small hamming distance,
+                   candidates via h+1 sketch chunks (pigeonhole).
 - n-gram Jaccard — exact similarity used to VERIFY candidate pairs (explode
                    shingles → count intersection / union). Only runs on LSH
                    survivors, so the quadratic blowup never touches the full
@@ -18,7 +19,10 @@ Four tiers, all shuffle-disciplined:
 
 Scale: the corpus is only ever shuffled by digest/bucket keys; candidate
 pairs are a tiny fraction of n². Banding parameters (H, B) trade recall vs
-candidate volume the standard MinHash-LSH way.
+candidate volume the standard MinHash-LSH way. Every LSH detector — MinHash,
+SimHash, their md5 twins and the embedding LSH in similarity.py — differs
+only in its sketch: the capped (band, bucket) self-join after it is
+``band_pairs``.
 """
 
 from __future__ import annotations
@@ -89,6 +93,21 @@ def shingle_hashes_col(text: Column, n: int = SHINGLE_N) -> Column:
     return F.transform(shingles_col(text, n), lambda s: F.xxhash64(s))
 
 
+def _ragged(h: pd.Series) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """A non-empty batch of array<long> cells flattened for ``reduceat``:
+    (flat uint64 values, row offsets, raw row lengths). An empty row
+    contributes one 0 so no reduceat segment is empty; its raw length
+    stays 0."""
+    arrs = [np.asarray(x, dtype=np.int64).view(np.uint64) for x in h]
+    lengths = np.fromiter((len(x) for x in arrs), dtype=np.int64,
+                          count=len(arrs))
+    if (lengths == 0).any():
+        arrs = [x if len(x) else np.zeros(1, dtype=np.uint64) for x in arrs]
+    offsets = np.zeros(len(arrs), dtype=np.int64)
+    np.cumsum(np.maximum(lengths, 1)[:-1], out=offsets[1:])
+    return np.concatenate(arrs), offsets, lengths
+
+
 def minhash_mix_udf(num_hashes: int = 16):
     """Vectorized Arrow UDF: array<long> shingle hashes → array<long>[H]
     MinHash signature, sig[i] = min over shingles of a[i]*h+b[i] (mod 2^64).
@@ -106,20 +125,11 @@ def minhash_mix_udf(num_hashes: int = 16):
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def mix(h: pd.Series) -> pd.Series:
-        n = len(h)
-        if n == 0:
+        if len(h) == 0:
             return pd.Series([], dtype=object)
-        arrs = [np.asarray(x, dtype=np.int64).view(np.uint64) for x in h]
-        lengths = np.fromiter((len(x) for x in arrs), dtype=np.int64, count=n)
-        # shingles_col guarantees ≥1 shingle/row; guard reduceat regardless
-        if (lengths == 0).any():
-            arrs = [x if len(x) else np.array([0], dtype=np.uint64)
-                    for x in arrs]
-            lengths = np.maximum(lengths, 1)
-        flat = np.concatenate(arrs)
-        offsets = np.zeros(n, dtype=np.int64)
-        np.cumsum(lengths[:-1], out=offsets[1:])
-        sigs = np.empty((n, num_hashes), dtype=np.uint64)
+        # shingles_col guarantees ≥1 shingle/row; _ragged guards regardless
+        flat, offsets, _ = _ragged(h)
+        sigs = np.empty((len(h), num_hashes), dtype=np.uint64)
         with np.errstate(over="ignore"):
             for i in range(num_hashes):
                 sigs[:, i] = np.minimum.reduceat(a[i] * flat + b[i], offsets)
@@ -143,36 +153,51 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 16,
 def lsh_candidate_pairs(sigs: DataFrame, num_hashes: int = 16, bands: int = 4,
                         id_col: str = "doc_id",
                         max_bucket: int = 1000) -> DataFrame:
-    """Band the signature array, bucket-join per band, union distinct pairs
-    (a<b). Caller should persist ``sigs`` (each band re-reads it).
-
-    ``max_bucket`` drops degenerate buckets (boilerplate/empty-text clusters
-    whose quadratic pair blowup would dominate at corpus scale — the
-    standard production-dedup guard; dropped buckets are near-identical
-    families better handled by exact dedup first)."""
+    """Band the signature array and join on the band buckets
+    (``band_pairs``): distinct (id_a, id_b) pairs, id_a < id_b, sharing a
+    bucket of at most ``max_bucket`` rows. Caller should persist ``sigs``
+    (the bucket count and both join sides re-read it)."""
     rows = num_hashes // bands
     band_hashes = F.array(*[
         F.xxhash64(F.slice(F.col("sig"), b * rows + 1, rows), F.lit(b))
         for b in range(bands)])
     # ONE pass over the signatures: explode bands → (band, bucket) keys →
-    # one degenerate-bucket filter → one self-join (instead of a per-band
-    # loop of join pipelines — bands× fewer shuffles and jobs).
-    # The degenerate filter broadcasts the OVERFULL bucket keys (≤
-    # rows/max_bucket of them by construction — kB-scale at any corpus
-    # size) and anti-joins, instead of broadcasting the OK keys, whose
-    # count grows with the corpus and would breach the broadcast cap at
-    # scale. Identical kept rows.
-    bucketed = sigs.select(F.col(id_col).alias("id"),
-                           F.posexplode(band_hashes).alias("band", "bucket"))
-    overfull = (bucketed.groupBy("band", "bucket").count()
+    # one capped self-join (instead of a per-band loop of join pipelines —
+    # bands× fewer shuffles and jobs)
+    return band_pairs(
+        sigs.select(F.col(id_col).alias("id"),
+                    F.posexplode(band_hashes).alias("band", "bucket")),
+        max_bucket)
+
+
+def band_pairs(keyed: DataFrame, max_bucket: int, *payload: str) -> DataFrame:
+    """The candidate stage of every LSH near-duplicate detector, lazy:
+    ``keyed`` rows (id, band, bucket, *payload) → distinct pairs
+    (id_a, id_b, <p>_a…, <p>_b…) with id_a < id_b that share a
+    (band, bucket) key.
+
+    A bucket with more than ``max_bucket`` rows is dropped (boilerplate
+    or empty-text clusters whose quadratic pair blowup would dominate at
+    corpus scale — the standard production-dedup guard; dropped buckets
+    are near-identical families better handled by exact dedup first).
+    The filter broadcasts the OVERFULL keys (≤ rows/max_bucket of them —
+    kB-scale at any corpus size) and anti-joins them, instead of
+    broadcasting the kept keys, whose count grows with the corpus and
+    would breach the broadcast cap at scale. ``keyed`` is read three
+    times (the bucket count and both join sides): a caller whose keys are
+    expensive persists it."""
+    overfull = (keyed.groupBy("band", "bucket").count()
                 .filter(F.col("count") > max_bucket)
                 .select("band", "bucket"))
-    bucketed = bucketed.join(F.broadcast(overfull), ["band", "bucket"],
-                             "left_anti")
-    other = bucketed.select(F.col("id").alias("id_b"), "band", "bucket")
-    return (bucketed.join(other, ["band", "bucket"])
+    kept = keyed.join(F.broadcast(overfull), ["band", "bucket"], "left_anti")
+    other = kept.select(F.col("id").alias("id_b"),
+                        *[F.col(p).alias(f"{p}_b") for p in payload],
+                        "band", "bucket")
+    return (kept.join(other, ["band", "bucket"])
             .filter(F.col("id") < F.col("id_b"))
-            .select(F.col("id").alias("id_a"), "id_b")
+            .select(F.col("id").alias("id_a"), "id_b",
+                    *[F.col(p).alias(f"{p}_a") for p in payload],
+                    *[f"{p}_b" for p in payload])
             .distinct())
 
 
@@ -186,13 +211,14 @@ def lsh_candidates_md5(docs: DataFrame, num_hashes: int = 16, bands: int = 4,
     lexicographic MIN is the family minimum in both engines; the band bucket
     is the '|'-join of the band's family minima in family order. Candidates
     are therefore bit-reproducible in ANSI SQL — this is the DuckDB twin of
-    the production xxhash64 path (same banding/bucket/join shape, hash
-    family swapped), giving the LSH candidate STAGE itself an oracle (the
-    production entry oracles only the verified output).
+    the production xxhash64 path (same banding, the same ``band_pairs``
+    join with the production bucket cap of 1000, hash family swapped),
+    giving the LSH candidate STAGE itself an oracle (the production entry
+    oracles only the verified output).
 
     Shape: explode shingles → flat 16-way md5 projection (plain codegen'd
     expressions — no nested HOF tree, see minhash_mix_udf) → two keyed aggs
-    → band self-join. The two aggregations shuffle by (id) — acceptable for
+    → ``band_pairs``. The two aggregations shuffle by (id) — acceptable for
     a verification-tier operator; the production path is map-only."""
     rows = num_hashes // bands
     sh = docs.select(F.col(id_col).alias("id"),
@@ -207,11 +233,7 @@ def lsh_candidates_md5(docs: DataFrame, num_hashes: int = 16, bands: int = 4,
             .agg(F.array_join(
                 F.transform(F.array_sort(F.collect_list(F.struct("fam", "mv"))),
                             lambda st: st["mv"]), "|").alias("bucket")))
-    other = band.select(F.col("id").alias("id_b"), "band", "bucket")
-    return (band.join(other, ["band", "bucket"])
-            .filter(F.col("id") < F.col("id_b"))
-            .select(F.col("id").alias("id_a"), "id_b")
-            .distinct())
+    return band_pairs(band, 1000)
 
 
 def jaccard_pairs(docs: DataFrame, pairs: DataFrame, text_col: str = "text",
@@ -360,18 +382,11 @@ def simhash_sketch_udf():
 
     @F.pandas_udf(T.LongType())
     def sketch(h: pd.Series) -> pd.Series:
-        n = len(h)
-        if n == 0:
+        if len(h) == 0:
             return pd.Series([], dtype="int64")
-        arrs = [np.asarray(x, dtype=np.int64).view(np.uint64) for x in h]
-        lengths = np.fromiter((len(x) for x in arrs), dtype=np.int64, count=n)
-        if (lengths == 0).any():
-            # empty token list → all-zero sketch (sum of nothing is 0 → bit 0)
-            arrs = [x if len(x) else np.array([0], dtype=np.uint64)
-                    for x in arrs]
-        flat = np.concatenate(arrs)
-        offsets = np.zeros(n, dtype=np.int64)
-        np.cumsum(np.maximum(lengths, 1)[:-1], out=offsets[1:])
+        # an empty token list has raw length 0 → all-zero sketch (sum of
+        # nothing is 0 → bit 0)
+        flat, offsets, lengths = _ragged(h)
         # (flat_len, 64) bit matrix, column b == bit b of the uint64
         bits = np.unpackbits(flat.view(np.uint8).reshape(-1, 8),
                              axis=1, bitorder="little").reshape(-1, 64)
@@ -401,6 +416,24 @@ def simhash_chunk_bounds(max_hamming: int) -> list[int]:
     return [round(64 * i / n) for i in range(n + 1)]
 
 
+def simhash_chunk_keys(sk: DataFrame, max_hamming: int) -> DataFrame:
+    """Sketch table (id, sh) → ``band_pairs`` input (id, sh, band,
+    bucket): one row per chunk, band = chunk index, bucket = the chunk's
+    bits, cut at simhash_chunk_bounds."""
+    bounds = simhash_chunk_bounds(max_hamming)
+
+    def chunk(c: int) -> Column:
+        shifted = F.shiftrightunsigned(F.col("sh"), bounds[c])
+        width = bounds[c + 1] - bounds[c]
+        if width >= 64:                    # single whole-sketch chunk
+            return shifted
+        return shifted.bitwiseAND(F.lit((1 << width) - 1))
+
+    chunks = F.array(*[chunk(c) for c in range(len(bounds) - 1)])
+    return sk.select("id", "sh",
+                     F.posexplode(chunks).alias("band", "bucket"))
+
+
 def simhash_near_dups(docs: DataFrame, max_hamming: int = 3,
                       text_col: str = "text", id_col: str = "doc_id",
                       max_bucket: int = 1000) -> DataFrame:
@@ -410,12 +443,12 @@ def simhash_near_dups(docs: DataFrame, max_hamming: int = 3,
     (id_a, id_b, hamming).
 
     Shape mirrors lsh_candidate_pairs: ONE posexplode pass over the
-    sketches (h+1 chunk keys/row), a degenerate-bucket count + broadcast
-    filter, one self-join. ``max_bucket`` is the skew guard: a boilerplate
+    sketches (h+1 chunk keys/row, simhash_chunk_keys) into
+    ``band_pairs``. ``max_bucket`` is the skew guard: a boilerplate
     cluster — or the all-zero sketch every empty/short text produces —
-    lands thousands of rows on one (chunk_idx, chunk_value) key, and an
-    unguarded self-join goes quadratic on exactly that key at corpus scale
-    (one straggler/OOM task). Dropped buckets are near-identical families
+    lands thousands of rows on one (band, bucket) key, and an unguarded
+    self-join goes quadratic on exactly that key at corpus scale (one
+    straggler/OOM task). Dropped buckets are near-identical families
     better handled by exact dedup first — same contract as the MinHash
     guard."""
     from mbrngq_spark.config import spread_small_input
@@ -431,48 +464,22 @@ def _simhash_pairs(sk: DataFrame, max_hamming: int,
     table (id, sh) — shared by the xxhash64 production family and the
     md5 oracle family.
 
-    The bucketed sketch table is PERSISTED across its three consumers
-    (the degenerate-bucket count and both sides of the self-join) — the
-    sketch UDF + token hashing otherwise re-execute once per consumer
-    (measured 3× the sketch cost per run); the small verified-pair
-    output is pinned before the persist is released."""
-    bounds = simhash_chunk_bounds(max_hamming)
-
-    def chunk(c: int) -> Column:
-        shifted = F.shiftrightunsigned(F.col("sh"), bounds[c])
-        width = bounds[c + 1] - bounds[c]
-        if width >= 64:                    # single whole-sketch chunk
-            return shifted
-        return shifted.bitwiseAND(F.lit((1 << width) - 1))
-
-    chunks = F.array(*[chunk(c) for c in range(len(bounds) - 1)])
-    bucketed = sk.select("id", "sh",
-                         F.posexplode(chunks).alias("ci", "ck")).persist()
+    The keyed sketch table is PERSISTED across its three consumers in
+    ``band_pairs`` (the degenerate-bucket count and both sides of the
+    self-join) — the sketch UDF + token hashing otherwise re-execute once
+    per consumer (measured 3× the sketch cost per run); the small
+    verified-pair output is pinned before the persist is released."""
+    keyed = simhash_chunk_keys(sk, max_hamming).persist()
     try:
-        # broadcast the OVERFULL keys (≤ rows/max_bucket — kB at any
-        # scale) and anti-join; broadcasting the OK keys would grow with
-        # the corpus (see lsh_candidate_pairs)
-        overfull = (bucketed.groupBy("ci", "ck").count()
-                    .filter(F.col("count") > max_bucket)
-                    .select("ci", "ck"))
-        keyed = bucketed.join(F.broadcast(overfull), ["ci", "ck"],
-                              "left_anti")
-        other = keyed.select(F.col("id").alias("id_b"),
-                             F.col("sh").alias("sh_b"), "ci", "ck")
-        pairs = (keyed.join(other, ["ci", "ck"])
-                 .filter(F.col("id") < F.col("id_b"))
-                 .select(F.col("id").alias("id_a"), "id_b",
-                         F.col("sh").alias("sh_a"), "sh_b")
-                 .distinct())
         ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-        out = (pairs
+        out = (band_pairs(keyed, max_bucket, "sh")
                .withColumn("hamming", ham)
                .filter(F.col("hamming") <= max_hamming)
                .select("id_a", "id_b", "hamming"))
         # pin results before releasing the persisted sketch
         out = out.localCheckpoint(eager=True)
     finally:
-        bucketed.unpersist()
+        keyed.unpersist()
     return out
 
 

@@ -239,9 +239,15 @@ def points_along(lines: DataFrame, step: float,
 
 def polyline_length(lines: DataFrame) -> DataFrame:
     """(line_id, length): sum of segment lengths — one aggregate fold
-    inside the array (no explode, no shuffle beyond the input layout)."""
+    inside the array (no explode, no shuffle beyond the input layout).
+    A line under two vertices has no segments, so length 0.0; a null
+    vertex array keeps a null length."""
+    # Spark's sequence counts DOWN for lines under two vertices (see
+    # polyline_segments): fold an empty index array instead
     seg_len = F.expr("""
-        aggregate(sequence(1, size(vx) - 1), CAST(0.0 AS DOUBLE),
+        aggregate(CASE WHEN size(vx) > 1 THEN sequence(1, size(vx) - 1)
+                       WHEN vx IS NOT NULL THEN array() END,
+                  CAST(0.0 AS DOUBLE),
                   (acc, i) -> acc + sqrt(
                     (element_at(vx, i + 1) - element_at(vx, i))
                       * (element_at(vx, i + 1) - element_at(vx, i))

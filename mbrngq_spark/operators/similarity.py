@@ -43,6 +43,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mbrngq_spark.operators.dedup import band_pairs
 from mbrngq_spark.plans.snapshots import SnapshotTable
 
 
@@ -483,28 +484,15 @@ def embedding_near_dups(corpus: DataFrame, threshold: float, dim: int,
     (1-(1-(1-θ/π)^P)^B ≈ 0.93 at cos 0.99 for B=4, P=16 — and exactly 1
     for identical vectors, the near-dup regime). ``max_bucket`` then drops
     the buckets data skew still degenerates (e.g. a constant embedding from
-    an empty-document encoder) — the same guard/contract as the MinHash and
-    SimHash candidate stages: capped families are exact-dedup territory."""
+    an empty-document encoder): the candidates come from the same capped
+    ``dedup.band_pairs`` join as MinHash and SimHash, so capped families
+    are exact-dedup territory here too."""
     planes = _hyperplanes(dim, bands * planes_per_band, seed)
     c = (corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
          .withColumn("bb", _band_buckets_udf(planes, bands)(F.col("v"))))
-    bucketed = c.select("id", "v", F.posexplode("bb").alias("band", "bucket"))
-    # broadcast the OVERFULL keys (≤ rows/max_bucket of them — kB-scale at
-    # any corpus size) and anti-join, as dedup.lsh_candidate_pairs does:
-    # the kept keys grow with the corpus and would breach the broadcast
-    # cap at scale. A bucket is kept exactly when its count ≤ max_bucket.
-    overfull = (bucketed.groupBy("band", "bucket").count()
-                .filter(F.col("count") > max_bucket)
-                .select("band", "bucket"))
-    bucketed = bucketed.join(F.broadcast(overfull), ["band", "bucket"],
-                             "left_anti")
-    other = bucketed.select(F.col("id").alias("id_b"),
-                            F.col("v").alias("v_b"), "band", "bucket")
-    pairs = (bucketed.join(other, ["band", "bucket"])
-             .filter(F.col("id") < F.col("id_b"))
-             .select(F.col("id").alias("id_a"), "id_b",
-                     F.col("v").alias("v_a"), "v_b")
-             .dropDuplicates(["id_a", "id_b"]))
+    pairs = band_pairs(
+        c.select("id", "v", F.posexplode("bb").alias("band", "bucket")),
+        max_bucket, "v")
     cos = _dot(F.col("v_a"), F.col("v_b")) / \
         (_norm(F.col("v_a")) * _norm(F.col("v_b")))
     return (pairs

@@ -439,21 +439,19 @@ def hausdorff_join(lines_a: DataFrame, lines_b: DataFrame,
     """Symmetric (discrete) Hausdorff distance per polyline pair —
     max over each side's vertices of the min distance to the other
     side: greatest(maxᵢ minⱼ, maxⱼ minᵢ) over the shared quantized
-    matrix. NO kernel at all: two keyed min aggregations + two maxes +
-    one greatest — pure Column, exact int64 end to end."""
+    matrix. NO kernel at all: two keyed min aggregations (per vertex i,
+    per vertex j), one union and one (a, b)-keyed max — pure Column,
+    exact int64 end to end. The max over both sides' mins is the
+    greatest of the two directed distances, so no join (and no AQE
+    build-side choice between two equal-sized sides) is needed."""
     mat = _pair_dist_matrix(lines_a, lines_b, quant, geodetic,
                             self_join)
-    ab = (mat.groupBy("a_id", "b_id", "i")
-          .agg(F.min("dq").alias("mn"))
-          .groupBy("a_id", "b_id").agg(F.max("mn").alias("h_ab")))
-    ba = (mat.groupBy("a_id", "b_id", "j")
-          .agg(F.min("dq").alias("mn"))
-          .groupBy("a_id", "b_id").agg(F.max("mn").alias("h_ba")))
-    return (ab.join(ba, ["a_id", "b_id"])
-            .select("a_id", "b_id",
-                    F.greatest("h_ab", "h_ba").alias("dhq"),
-                    (F.greatest("h_ab", "h_ba").cast("double")
-                     / F.lit(quant)).alias("hausdorff")))
+    mins = [mat.groupBy("a_id", "b_id", v).agg(F.min("dq").alias("mn"))
+            .select("a_id", "b_id", "mn") for v in ("i", "j")]
+    return (mins[0].unionByName(mins[1])
+            .groupBy("a_id", "b_id").agg(F.max("mn").alias("dhq"))
+            .withColumn("hausdorff",
+                        F.col("dhq").cast("double") / F.lit(quant)))
 
 
 def dtw_join(lines_a: DataFrame, lines_b: DataFrame,

@@ -116,6 +116,41 @@ def test_simhash_degenerate_bucket_guard(spark):
     assert len(uncapped) == 40 * 39 // 2
 
 
+def test_band_pairs_cap_boundary(spark):
+    """The shared LSH candidate join keeps a bucket of exactly
+    ``max_bucket`` rows and drops one of ``max_bucket + 1``; pairs are
+    unique with id_a < id_b (two shared buckets give one pair), and each
+    payload column arrives as <p>_a / <p>_b."""
+    cap = 4
+    rows = ([(i, 0, 7, f"p{i}") for i in range(cap)]            # = cap
+            + [(10 + i, 0, 8, f"p{10 + i}") for i in range(cap + 1)]
+            + [(20, 1, 9, "p20"), (21, 1, 9, "p21"),              # two
+               (20, 2, 9, "p20"), (21, 2, 9, "p21")])             # bands
+    keyed = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["id", "band", "bucket", "p"]),
+        "id long, band int, bucket long, p string")
+    got = dedup.band_pairs(keyed, cap, "p").toPandas()
+    assert list(got.columns) == ["id_a", "id_b", "p_a", "p_b"]
+    exp = {(a, b) for a in range(cap) for b in range(cap) if a < b} \
+        | {(20, 21)}
+    pairs = list(map(tuple, got[["id_a", "id_b"]].values))
+    assert len(pairs) == len(set(pairs)) and set(pairs) == exp
+    assert (got["p_a"] == "p" + got["id_a"].astype(str)).all()
+    assert (got["p_b"] == "p" + got["id_b"].astype(str)).all()
+
+    # the same boundary through lsh_candidate_pairs: every signature of a
+    # family is identical, so the family fills one bucket in every band
+    sigs = spark.createDataFrame(
+        pd.DataFrame({"doc_id": list(range(2 * cap + 1)),
+                      "sig": [[1] * 16] * cap + [[2] * 16] * (cap + 1)}),
+        "doc_id long, sig array<long>")
+    got = dedup.lsh_candidate_pairs(sigs, 16, 4, max_bucket=cap).toPandas()
+    pairs = list(map(tuple, got[["id_a", "id_b"]].values))
+    assert len(pairs) == len(set(pairs))
+    assert set(pairs) == {(a, b) for a in range(cap) for b in range(cap)
+                          if a < b}
+
+
 def test_embedding_lsh_degenerate_bucket_guard(spark):
     """Same contract for the banded embedding-LSH: a constant-embedding
     cluster saturates one bucket per band; the cap drops those buckets and

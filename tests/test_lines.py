@@ -75,11 +75,23 @@ def test_polyline_join_degenerate_segment(spark, docs_geo):
 
 
 def test_polyline_length(spark, lines_df):
-    got = {int(r.line_id): r.length for r in polyline_length(lines_df).collect()}
-    for lid, vx, vy in H.POLYLINES:
+    """Sum of segment lengths. A 0-, 1- or 2-vertex line sums over its
+    0, 0 or 1 segments (no INVALID_ARRAY_INDEX under ANSI); a null vertex
+    array keeps a null length."""
+    short = [(10, [], []), (11, [40.0], [40.0]),
+             (12, [40.0, 43.0], [50.0, 54.0])]
+    more = spark.createDataFrame(
+        pd.DataFrame({"line_id": [10, 11, 12, 13],
+                      "vx": [l[1] for l in short] + [None],
+                      "vy": [l[2] for l in short] + [None]}),
+        "line_id long, vx array<double>, vy array<double>")
+    got = {int(r.line_id): r.length
+           for r in polyline_length(lines_df.unionByName(more)).collect()}
+    for lid, vx, vy in list(H.POLYLINES) + short:
         exp = sum(np.sqrt((vx[i + 1] - vx[i]) ** 2 + (vy[i + 1] - vy[i]) ** 2)
                   for i in range(len(vx) - 1))
         assert got[lid] == pytest.approx(exp, rel=1e-12)
+    assert (got[10], got[11], got[12], got[13]) == (0.0, 0.0, 5.0, None)
 
 
 def test_nearest_polyline_matches_numpy(spark, docs_geo, lines_df):
